@@ -8,9 +8,9 @@ import graft.sources.{DirectoryListing, Tsv}
 /** CLI verbs mirroring the reference's entry points (SURVEY.md §3, flags
   * from video_metadata_db.py:849-915):
   *
-  *   build  <dir>... --db out.tsv [--nomedia] [--verbose] [--stub-probe]
-  *                    [--probe-concurrency N]
-  *   update <dir>... --db existing.tsv [--stub-probe]
+  *   build  <dir>... --db out.tsv [--manifest] [--nomedia] [--verbose]
+  *                    [--stub-probe] [--probe-concurrency N]
+  *   update <dir>... --db existing.tsv [--manifest] [--stub-probe]
   *   merge  <in.tsv>... --db merged.tsv
   *   report --db db.tsv                      (the -v variant report)
   *
@@ -88,15 +88,16 @@ object Cli {
 
   /** The file listing + sibling-srt listing for the configured source:
     * a recursive walk of the roots, or (--manifest, S1 at scale) manifest
-    * parquet tables read distributed — same downstream pipeline. */
-  private def listings(spark: SparkSession, a: Args): (DataFrame, DataFrame) =
-    if (a.manifest) {
-      val all = a.inputs.map(DirectoryListing.fromManifest(spark, _))
-        .reduce(_ unionByName _)
-      (all, DirectoryListing.srtOf(all))
-    } else
-      (DirectoryListing.walk(spark, a.inputs),
-       DirectoryListing.srtListing(spark, a.inputs))
+    * parquet tables read distributed — same downstream pipeline. The srt
+    * listing is a filter of the same listing, so each verb lists the
+    * tree once. */
+  private def listings(spark: SparkSession, a: Args): (DataFrame, DataFrame) = {
+    val all =
+      if (a.manifest)
+        a.inputs.map(DirectoryListing.fromManifest(spark, _)).reduce(_ unionByName _)
+      else DirectoryListing.walk(spark, a.inputs)
+    (all, DirectoryListing.srtOf(all))
+  }
 
   private def buildLines(spark: SparkSession, a: Args): DataFrame = {
     val (listing, srt) = listings(spark, a)
@@ -136,28 +137,19 @@ object Cli {
       case "update" =>
         val existing = Tsv.readReferenceTsv(spark, a.db)
           .select(col("path_on_volume").as("path"))
-        val listing = VideoPipeline.scanFilters(
-          DirectoryListing.walk(spark, a.inputs))
-        val novel = VideoPipeline.novelFiles(listing, existing)
-        val srt = DirectoryListing.srtListing(spark, a.inputs)
+        val (listing, srt) = listings(spark, a)
+        val novel = VideoPipeline.novelFiles(VideoPipeline.scanFilters(listing), existing)
         val builtNovel = VideoPipeline.withSubtitles(
           VideoPipeline.deriveColumns(
             VideoPipeline.probeStage(novel, prober(a))
               .filter(col("probe_error").isNull)), srt)
-        val oldLines = spark.read.text(a.db)
-          .select(regexp_replace(col("value"), "^﻿", "").as("line"))
-          .filter(col("line") =!= Tsv.headerLine) // updating a merged db
-        val all = oldLines.unionByName(Tsv.renderLines(builtNovel))
+        val all = Tsv.dbLines(spark, a.db).unionByName(Tsv.renderLines(builtNovel))
         Tsv.writeSingleFile(Tsv.sortLinesDesc(all), a.db)
         println(s"[graft] appended novel files into ${a.db}")
 
       case "merge" =>
-        val lines = a.inputs.map { p =>
-          spark.read.text(p)
-            .select(regexp_replace(col("value"), "^﻿", "").as("line"))
-            .filter(col("line") =!= Tsv.headerLine)
-        }.reduce(_ unionByName _)
-        Tsv.writeSingleFile(Tsv.sortLinesDesc(lines), a.db, withHeader = true)
+        Tsv.writeSingleFile(Tsv.sortLinesDesc(Tsv.dbLines(spark, a.inputs: _*)), a.db,
+          withHeader = true)
         println(s"[graft] merged ${a.inputs.length} inputs into ${a.db}")
 
       case "report" =>

@@ -135,6 +135,14 @@ object VideoFns {
   def siblingPath(path: Column, sibSuffix: String): Column =
     concat(regexp_replace(path, "\\.[^./]*$", ""), lit(sibSuffix))
 
+  /** F9 input: the filename stem — the last path segment without its
+    * final extension. `substring_index` finds the segment in one pass;
+    * the equivalent `regexp_extract(path, "([^/]+)$", 1)` restarts its
+    * match at every character and rescans each directory segment to its
+    * end, quadratic in the segment lengths. */
+  def fileStem(path: Column): Column =
+    regexp_replace(substring_index(path, "/", -1), "\\.[^.]*$", "")
+
   /** F8: Windows drive-letter strip (portable no-op on POSIX paths). */
   def stripDrive(path: Column): Column =
     regexp_replace(path, "^[A-Za-z]:", "")

@@ -155,12 +155,17 @@ object VideoPipeline {
     * (SURVEY.md §2.5 U1). Returns only the novel listing rows; callers
     * probe + append them.
     *
+    * `existing.path` is a db's `path_on_volume`, which the build stored
+    * drive-stripped (F8), so the incoming side is compared on
+    * `stripDrive(path)`: a `D:/...` listing must match its own db rows.
+    *
     * Scale: the existing-db side projects a single column before the
     * join, so the shuffle moves paths only. When the incoming listing is
     * small (typical nightly delta), broadcast it instead.
     */
   def novelFiles(incoming: DataFrame, existing: DataFrame): DataFrame =
-    incoming.join(existing.select("path"), Seq("path"), "left_anti")
+    incoming.join(existing.select(col("path").as("known_path")),
+      stripDrive(col("path")) === col("known_path"), "left_anti")
 
   /** A1+A2: variant report — group by title parsed from the filename,
     * keep groups with >1 member (duplicate/variant detection,
@@ -168,8 +173,7 @@ object VideoPipeline {
     * AQE's skew-join/partition-coalescing handles it at scale.
     */
   def variants(built: DataFrame): DataFrame = {
-    val base = regexp_replace(
-      regexp_extract(col("path"), "([^/]+)$", 1), "\\.[^.]*$", "")
+    val base = fileStem(col("path"))
     built
       .withColumn("parsed_title", parseTitleUdf(base))
       .withColumn("release_year", parseYearUdf(base))
@@ -199,8 +203,7 @@ object VideoPipeline {
     * window over the title partition — one shuffle, no group-then-rejoin. */
   def variantDetails(built: DataFrame,
                      durationCol: String = "duration_s"): DataFrame = {
-    val base = regexp_replace(
-      regexp_extract(col("path"), "([^/]+)$", 1), "\\.[^.]*$", "")
+    val base = fileStem(col("path"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("parsed_title"))
     built
       .withColumn("parsed_title", parseTitleUdf(base))

@@ -38,11 +38,8 @@ object DirectoryListing {
         col("length").as("sizeBytes"),
         lit(volumeLabel()).as("volume"))
 
-  /** The sibling subtitle listing for the same roots (feeds the U2 join). */
-  def srtListing(spark: SparkSession, roots: Seq[String]): DataFrame =
-    srtOf(walk(spark, roots))
-
-  /** The .srt subset of any listing, in the srt-join shape. */
+  /** The .srt subset of any listing, in the srt-join shape (feeds the U2
+    * join). */
   def srtOf(listing: DataFrame): DataFrame =
     listing
       .filter(lower(col("path")).endsWith(".srt"))

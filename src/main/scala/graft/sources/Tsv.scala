@@ -89,9 +89,19 @@ object Tsv {
 
   /** O1 byte-parity mode: whole-line lexicographic sort, descending (the
     * documented intent; the reference's Unix branch accidentally sorts
-    * ascending — we implement the intent, README.md:89). */
+    * ascending — we implement the intent, README.md:89).
+    *
+    * One-partition contract: the result is ONE partition, in the order of
+    * `orderBy(col("line").desc)`. Its consumer is [[writeSingleFile]],
+    * whose single writer task would merge any range partitions back
+    * anyway, so the lines are shuffled to one partition and sorted there.
+    * A global `orderBy` would first run a RangePartitioner sampling job
+    * that evaluates the whole input a second time (every db line read
+    * twice on update and merge) only to pick range bounds; a plain
+    * `coalesce(1)` would instead pull the upstream stage (scan, probe,
+    * joins) into that one task, where the shuffle keeps it parallel. */
   def sortLinesDesc(lines: DataFrame): DataFrame =
-    lines.orderBy(col("line").desc)
+    lines.repartition(1).sortWithinPartitions(col("line").desc)
 
   /** Single-file TSV export with utf-8-sig BOM and optional header,
     * assembled entirely through the Hadoop FileSystem API — `outFile`
@@ -144,8 +154,15 @@ object Tsv {
     * star-unpack (video_metadata_db.py:1124), strips the BOM, trims every
     * field (F11). */
   def readReferenceTsv(spark: SparkSession, path: String): DataFrame =
-    parseLines(spark.read.text(path)
-      .select(regexp_replace(col("value"), "^﻿", "").as("value")))
+    parseLines(dbLines(spark, path).select(col("line").as("value")))
+
+  /** The rows of TSV dbs as a `line` column: the utf-8-sig BOM stripped
+    * and a merge header dropped, so a merged db reads like a built one.
+    * Feeds the update and merge rewrites and [[readReferenceTsv]]. */
+  def dbLines(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.text(paths: _*)
+      .select(regexp_replace(col("value"), "^\uFEFF", "").as("line"))
+      .filter(col("line") =!= headerLine)
 
   /** Parse reference-format lines (a `value` string column) to typed
     * columns; header lines are dropped. */

@@ -123,4 +123,48 @@ class CliSpec extends SparkSpec {
     val m = new String(Files.readAllBytes(Paths.get(dbM)), "UTF-8")
     assert(w == m, "CLI --manifest build must byte-match the walk build")
   }
+
+  /** A manifest table in the inventory shape (path, size_bytes, volume). */
+  private def writeManifest(rows: Seq[(String, Long)], dir: String, mode: String): Unit = {
+    import spark.implicits._
+    rows.map { case (p, n) => (p, n, "vol0") }.toDF("path", "size_bytes", "volume")
+      .write.mode(mode).parquet(dir)
+  }
+
+  test("update --manifest reads the manifest and appends the row it gained") {
+    val root = Files.createTempDirectory("graft-update-manifest").toString
+    val mdir = s"$root/listing"
+    writeManifest(Seq(
+      "/lib/f1/[1999] Alpha.mkv" -> 2048L,
+      "/lib/f2/[2001] Beta.mp4" -> 4096L,
+      "/lib/f2/[2001] Beta.en.srt" -> 100L), mdir, "overwrite")
+    val db = s"$root/db.tsv"
+    Cli.main(Array("build", mdir, "--manifest", "--db", db, "--stub-probe"))
+    assert(Tsv.readReferenceTsv(spark, db).count() == 2)
+
+    writeManifest(Seq("/lib/f3/[2002] Gamma.avi" -> 1024L), mdir, "append")
+    Cli.main(Array("update", mdir, "--manifest", "--db", db, "--stub-probe"))
+    val rows = Tsv.readReferenceTsv(spark, db).collect()
+    assert(rows.length == 3)
+    assert(rows.count(_.getAs[String]("path_on_volume").contains("Gamma")) == 1)
+    val beta = rows.find(_.getAs[String]("path_on_volume").contains("Beta")).get
+    assert(beta.getAs[String]("srt_avail") == "Y", "the srt join must still see the manifest")
+  }
+
+  test("update from the same drive-letter listing adds no rows") {
+    val root = Files.createTempDirectory("graft-drive-letter").toString
+    val mdir = s"$root/listing"
+    writeManifest(Seq(
+      "D:/lib/f1/[1999] Alpha.mkv" -> 2048L,
+      "D:/lib/f2/[2001] Beta.mp4" -> 4096L), mdir, "overwrite")
+    val db = s"$root/db.tsv"
+    Cli.main(Array("build", mdir, "--manifest", "--db", db, "--stub-probe"))
+    val before = Files.readAllBytes(Paths.get(db))
+    assert(Tsv.readReferenceTsv(spark, db).collect()
+      .map(_.getAs[String]("path_on_volume")).sorted.toSeq ==
+      Seq("/lib/f1/[1999] Alpha.mkv", "/lib/f2/[2001] Beta.mp4"))
+    Cli.main(Array("update", mdir, "--manifest", "--db", db, "--stub-probe"))
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(db)), before),
+      "an update with nothing new must leave the db as it was")
+  }
 }

@@ -104,6 +104,61 @@ class PipelinePropertySpec extends SparkSpec {
       == incoming.count())
   }
 
+  test("fileStem equals the regexp_extract stem on edge paths") {
+    import spark.implicits._
+    val paths = Seq("Movie.mkv", "/vol0/d1/", "/vol0/.hidden", "/a/b.c.d.mkv",
+      "/v/d/f7/[2001] Film [4K][3D][AV1].mkv",
+      "/vol/\u0424\u0438\u043b\u044c\u043c/[1999] \u00cblan \u6771\u4eac.mp4",
+      "", null, "/a/b/noext", "D:/x/y.avi", "/a//b.mkv", "/a/b.", "/a.b/c")
+    val old = regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "\\.[^.]*$", "")
+    val rows = paths.toDF("path").repartition(2)
+      .select(col("path"), graft.functions.VideoFns.fileStem(col("path")), old).collect()
+    assert(rows.length == paths.length)
+    rows.foreach(r => assert(r.get(1) == r.get(2), s"path ${r.get(0)}"))
+  }
+
+  test("anti-join matches drive-letter listings against their stripped db paths") {
+    import spark.implicits._
+    val incoming = Seq("D:/lib/f1/a.mkv", "c:/lib/f2/b.mkv", "/lib/f3/c.mkv", "E:/lib/f4/d.mkv")
+      .toDF("path")
+    val existing = Seq("/lib/f1/a.mkv", "/lib/f2/b.mkv", "/lib/f3/c.mkv").toDF("path")
+    assert(VideoPipeline.novelFiles(incoming, existing).collect().map(_.getString(0))
+      .toSeq == Seq("E:/lib/f4/d.mkv"))
+  }
+
+  test("variant reports on fileStem equal their regexp_extract forms") {
+    import spark.implicits._
+    import graft.functions.VideoFns._
+    val built = VideoPipeline.build(randomListing(500), Seq.empty[(String, Long)]
+      .toDF("path", "size_bytes"), new StubProber).repartition(3)
+    val base = regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1), "\\.[^.]*$", "")
+    val wantGroups = built
+      .withColumn("parsed_title", parseTitleUdf(base))
+      .withColumn("release_year", parseYearUdf(base))
+      .groupBy(col("parsed_title"))
+      .agg(count(lit(1)).as("n_variants"), min(col("size_bytes")).as("min_size"),
+           max(col("size_bytes")).as("max_size"),
+           countDistinct(col("release_year")).as("n_years"))
+      .filter(col("n_variants") > 1)
+      .orderBy(col("parsed_title"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("parsed_title"))
+    val wantRows = built
+      .withColumn("parsed_title", parseTitleUdf(base))
+      .withColumn("n_variants", count(lit(1)).over(w))
+      .filter(col("n_variants") > 1)
+      .select(col("parsed_title"), col("width"), col("height"),
+              col("duration_s"), col("size_bytes"), col("volume"), col("path"))
+      .orderBy(col("parsed_title"), col("width").asc_nulls_first,
+        col("height").asc_nulls_first, col("path").desc)
+    val groups = VideoPipeline.variants(built)
+    val rows = VideoPipeline.variantDetails(built)
+    assert(groups.schema == wantGroups.schema)
+    assert(groups.collect().toSeq == wantGroups.collect().toSeq)
+    assert(rows.collect().toSeq == wantRows.collect().toSeq)
+    assert(groups.count() > 1 && groups.filter(col("n_years") > 1).count() > 0,
+      "the fixture must hold titles with several variants and years")
+  }
+
   test("merge preserves row multiplicity (union all)") {
     val a = randomListing(150)
     val b = randomListing(100)

@@ -154,4 +154,43 @@ class TsvGoldenSpec extends SparkSpec {
       .stripPrefix("﻿")
     assert(lns.drop(1).mkString("\n") + "\n" == golden)
   }
+
+  test("sortLinesDesc: one partition, no range sampling, orderBy(line desc) order") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    object Nodes extends AdaptiveSparkPlanHelper
+    def rangeShuffles(df: org.apache.spark.sql.DataFrame): Int = Nodes.collect(
+      df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.length
+
+    val rnd = new scala.util.Random(20261017L)
+    // duplicates, non-ASCII (multi-byte UTF-8 orders by bytes), tabs,
+    // empty lines and lines that prefix each other
+    val words = Seq("Alpha", "alpha", "Zeta", "\u00c9lan", "\u6771\u4eac", "\u00e9",
+      "d\u00e9j\u00e0", "a\tb", "", "1999", "[4K]")
+    val seeded = (1 to 600).map(_ =>
+      Seq.fill(rnd.nextInt(4))(words(rnd.nextInt(words.length))).mkString(" "))
+    for (lines <- Seq(seeded, Seq.empty[String])) {
+      val df = lines.toDF("line").repartition(4)
+      val sorted = Tsv.sortLinesDesc(df)
+      val want = df.orderBy(col("line").desc)
+      assert(sorted.collect().toSeq == want.collect().toSeq, s"${lines.length} lines")
+      assert(rangeShuffles(sorted) == 0, sorted.queryExecution.executedPlan.toString)
+      if (lines.nonEmpty) assert(rangeShuffles(want) == 1,
+        "the guard must see the sampling shuffle a global sort plans")
+    }
+    assert(Tsv.sortLinesDesc(seeded.toDF("line").repartition(4)).rdd.getNumPartitions == 1)
+  }
+
+  test("dbLines strips the BOM and the merge header of every input") {
+    val a = Files.createTempFile("graft-dblines-a", ".tsv")
+    val b = Files.createTempFile("graft-dblines-b", ".tsv")
+    Files.write(a, "\uFEFFrow a1\nrow a2\n".getBytes("UTF-8"))
+    Files.write(b, ("\uFEFF" + Tsv.headerLine + "\nrow b1\n").getBytes("UTF-8"))
+    val got = Tsv.dbLines(spark, a.toString, b.toString).collect().map(_.getString(0))
+    assert(got.sorted.toSeq == Seq("row a1", "row a2", "row b1"))
+  }
 }

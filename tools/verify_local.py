@@ -1,8 +1,14 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 tools/verify_local.py <sfDir> <outDir>
-  (run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
+Usage: python3 tools/verify_local.py <sfDir> <outDir> [names]
+  (run `sbt "runMain graft.Verify <sfDir> <outDir> [names]"` first)
+
+`names` is the same comma-separated query filter Verify takes as its
+third argument: queries outside it are reported as skipped, not failed.
+A name in the filter with no oracle entry fails the run as UNKNOWN, and
+so does a filter that selects no query. Without a filter, a query with
+no result parquet fails as MISSING.
 
 For each <outDir>/<name> parquet dir with an entry in oracle_sql.json:
 run the SQL in DuckDB with views over <sfDir>/*.parquet, then compare
@@ -33,15 +39,21 @@ def canon(df):
         return str(v)
     return [tuple(render(v) for v in row) for row in df.itertuples(index=False)]
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=None):
+    keep = set(names.split(",")) if names is not None else None
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_skip = 0
+    if keep is not None:
+        for name in sorted(keep - set(oracle)):
+            print(f"UNKNOWN  {name}: not in oracle_sql.json"); n_fail += 1
     for name in sorted(oracle):
+        if keep is not None and name not in keep:
+            n_skip += 1; continue
         res_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
@@ -66,7 +78,10 @@ def main(sf_dir, out_dir):
             n_fail += 1; continue
         print(f"OK       {name}: {len(got)} rows")
         n_pass += 1
-    print(f"\n{n_pass} passed, {n_fail} failed")
+    print(f"\n{n_pass} passed, {n_fail} failed"
+          + (f", {n_skip} skipped" if keep is not None else ""))
+    if n_pass + n_fail == 0:
+        print("no query checked"); return 1
     return 1 if n_fail else 0
 
 def ratio(bench_path, anchor_path, out_path="BENCH_RATIO.md"):
@@ -159,4 +174,4 @@ def ratio(bench_path, anchor_path, out_path="BENCH_RATIO.md"):
 if __name__ == "__main__":
     if sys.argv[1] == "--ratio":
         sys.exit(ratio(*sys.argv[2:]))
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
