@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line.
   *
@@ -89,26 +87,13 @@ object Bench {
     // columns (q118 exact_tokens, q129 ndv_exact) stay in verify runs
     // but are dropped here unless SPARK_GRAFT_WITNESS=on (A/B hatch).
     Witness.enabled = sys.env.get("SPARK_GRAFT_WITNESS").contains("on")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B hatch mirroring StreamDiag's GRAFT_DIAG_CONF: arbitrary
-    // session confs ("k=v;k=v") for knob experiments without a
-    // recompile each; the driver never sets it, so the measured
-    // configuration is the committed one.
-    val spark = sys.env.get("GRAFT_BENCH_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("="))
-      .foldLeft(builder) { (bb, kv) =>
-        val Array(k, v) = kv.split("=", 2); bb.config(k, v) }
-      .getOrCreate()
-    // ERROR, not WARN: benign per-query warnings (function re-registration,
-    // plan-string truncation) would interleave with the one JSON metric
-    // line this main exists to emit.
-    spark.sparkContext.setLogLevel("ERROR")
+    // the JVM's spark.* properties are the run's only conf overrides
+    // (Harness applies its defaults under them); recorded in the
+    // artifact so a non-default run can't masquerade as the default
+    val sparkProps = sys.props.toSeq.filter(_._1.startsWith("spark.")).sorted
+      .map { case (k, v) => Harness.jsonString(k) + ":" + Harness.jsonString(v) }
+      .mkString("{", ",", "}")
+    val spark = Harness.session(s"local[$cpus]", "graft-bench", cpus.toInt)
 
     def materialize(name: String): Double = {
       val t0 = System.nanoTime()
@@ -165,11 +150,6 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    case class Attr(sec: Double, otherCpu: Double, ownCpu: Double,
-                    ioWait: Double, load: Double, retries: Int,
-                    psiCpu: Double = -1.0, psiIo: Double = -1.0,
-                    psiIoFull: Double = -1.0, psiMem: Double = -1.0,
-                    stallFrac: Double = 0.0, stallSite: String = "")
     // ROW-WISE QUIET (round-14 verdict item 2): a row whose own /proc
     // window shows co-tenant CPU > 0.05 or io_wait > 0.02 impeaches
     // itself — three rounds running such rows were published, then
@@ -182,29 +162,23 @@ object Bench {
     // also carrying the evidence that quieter attempts were tried.
     val MaxRowAttempts = 3
     val results = names.map { n =>
-      def attempt(retries: Int): Attr = {
-        val (sec, w) = ProcStat.windowed(median3(n))
-        Attr(sec, w.otherCpu, w.ownCpu, w.ioWait, w.load, retries,
-          w.psiCpu, w.psiIo, w.psiIoFull, w.psiMem,
-          w.stallFrac, w.stallSite)
-      }
-      def impeached(a: Attr): Boolean =
-        a.sec >= 0 && (a.otherCpu > ProcStat.ImpeachOtherCpu ||
-          a.ioWait > ProcStat.ImpeachIoWait)
-      var best = attempt(0)
+      def attempt(): (Double, ProcStat.Window) = ProcStat.windowed(median3(n))
+      def impeached(sec: Double, w: ProcStat.Window): Boolean =
+        sec >= 0 && w.impeached
+      var (sec, w) = attempt()
       var tries = 1
-      while (impeached(best) && tries < MaxRowAttempts) {
-        val next = attempt(tries)
+      while (impeached(sec, w) && tries < MaxRowAttempts) {
+        val (nSec, nW) = attempt()
         tries += 1
         // cleaner window wins; both contaminated -> the quieter one
-        if (!impeached(next) ||
-            next.otherCpu + next.ioWait < best.otherCpu + best.ioWait)
-          best = next.copy(retries = tries - 1)
-        else best = best.copy(retries = tries - 1)
+        if (!impeached(nSec, nW) ||
+            nW.otherCpu + nW.ioWait < w.otherCpu + w.ioWait) {
+          sec = nSec; w = nW
+        }
       }
-      n -> best
+      (n, sec, w, tries - 1)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.sec }
+    val qs = results.map { case (k, sec, _, _) => "\"" + k + "\":" + sec }
       .mkString("{", ",", "}")
     // the attribution sidecar: same keys, window-scoped cpu shares +
     // the round-16 wait-attribution columns (PSI stall shares and the
@@ -216,20 +190,20 @@ object Bench {
     // so the contract line carries the contract fields + the sec map
     // and nothing else; the sidecars stay committed via
     // bench_result.json.
-    val loadMap = results.map { case (k, v) =>
-      "\"" + k + "\":{\"other_cpu\":" + f"${v.otherCpu}%.3f" +
-        ",\"own_cpu\":" + f"${v.ownCpu}%.3f" +
-        ",\"io_wait\":" + f"${v.ioWait}%.3f" +
-        ",\"loadavg\":" + f"${v.load}%.2f" +
-        ",\"psi_cpu\":" + f"${v.psiCpu}%.3f" +
-        ",\"psi_io\":" + f"${v.psiIo}%.3f" +
-        ",\"psi_io_full\":" + f"${v.psiIoFull}%.3f" +
-        ",\"psi_mem\":" + f"${v.psiMem}%.3f" +
-        ",\"stall_frac\":" + f"${v.stallFrac}%.3f" +
-        ",\"stall_site\":\"" + v.stallSite + "\"" +
-        ",\"retries\":" + v.retries + "}"
+    val loadMap = results.map { case (k, _, w, retries) =>
+      "\"" + k + "\":{\"other_cpu\":" + f"${w.otherCpu}%.3f" +
+        ",\"own_cpu\":" + f"${w.ownCpu}%.3f" +
+        ",\"io_wait\":" + f"${w.ioWait}%.3f" +
+        ",\"loadavg\":" + f"${w.load}%.2f" +
+        ",\"psi_cpu\":" + f"${w.psiCpu}%.3f" +
+        ",\"psi_io\":" + f"${w.psiIo}%.3f" +
+        ",\"psi_io_full\":" + f"${w.psiIoFull}%.3f" +
+        ",\"psi_mem\":" + f"${w.psiMem}%.3f" +
+        ",\"stall_frac\":" + f"${w.stallFrac}%.3f" +
+        ",\"stall_site\":" + Harness.jsonString(w.stallSite) +
+        ",\"retries\":" + retries + "}"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2.sec).filter(_ >= 0).sum
+    val total = results.map(_._2).filter(_ >= 0).sum
     val calPost = calibrateSec()
     val loadPost = loadAvg()
     // reps + witness recorded so a nonstandard run can't masquerade as
@@ -245,7 +219,8 @@ object Bench {
     // The full artifact (stdout contract line's fields + the
     // attribution sidecar map) — committed at round close; consumers
     // that need per-query wait attribution read THIS, never stdout.
-    val artifact = line.dropRight(1) + s""","query_load":$loadMap}"""
+    val artifact = line.dropRight(1) +
+      s""","query_load":$loadMap,"spark_props":$sparkProps}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
       (artifact + "\n").getBytes("UTF-8"))
     spark.stop()

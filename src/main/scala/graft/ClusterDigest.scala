@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** MULTI-JVM DIGEST PASS — the round-11 verdict's item 2, and the last
   * never-exercised seam in the 100 TB story: every artifact so far
@@ -48,7 +47,7 @@ import org.apache.spark.sql.functions._
   *     null-emission bookkeeping does not survive executor-side state
   *     store round-trips.
   *
-  * The digest is the spill rehearsal's (count, xor, modular-sum) over
+  * The digest is [[Harness.resultDigest]]'s (count, xor, modular-sum) over
   * xxhash64 of name-sorted stringified columns — order-independent, so
   * the only thing the compare can see is a VALUE difference introduced
   * by the process boundary. Every subset query is oracle-hash-stable
@@ -70,39 +69,13 @@ object ClusterDigest {
     "q230_audio_energy", "q01_build", "q186_incremental_neardup",
     "q58_stream_dedup", "q106_stream_outer_join")
 
-  /** Order-independent digest, computed on the executors (same
-    * construction as SpillRehearsal's — duplicated only because that
-    * object's is private and the two artifacts version independently). */
-  private def resultDigest(df: DataFrame): String = {
-    val cols = df.columns.sorted.map(c => coalesce(col(c).cast("string"), lit("\u0000null")))
-    val h = df.select(xxhash64(cols.toSeq: _*).as("h"))
-    val r = h.agg(
-      count(lit(1)).as("n"),
-      expr("bit_xor(h)").as("x"),
-      sum(pmod(col("h"), lit(1000000007L))).as("s")).head()
-    val n = r.getLong(0)
-    if (n == 0) "0:0:0" else s"$n:${r.getLong(1)}:${r.getLong(2)}"
-  }
-
-  private def session(master: String, extra: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-cluster-digest")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
-
   /** One timed digest per subset row — the SAME body for both passes,
     * so a change to the digest or timing logic can never drift into
     * only one of them. */
   private def runPass(spark: SparkSession, sfDir: String): Seq[(String, (String, Double))] =
     Subset.map { q =>
       val t0 = System.nanoTime()
-      val d = resultDigest(SparkEntry.queries(q)(spark, sfDir))
+      val d = Harness.resultDigest(SparkEntry.queries(q)(spark, sfDir))
       q -> (d, (System.nanoTime() - t0) / 1e9)
     }
 
@@ -119,20 +92,19 @@ object ClusterDigest {
     val executorCp = s"$classesDir:$sparkHome/jars/*"
 
     // ---- pass 1: single JVM (the baseline every artifact measured) ----
-    val spark1 = session("local[32]", Map.empty)
-    spark1.sparkContext.setLogLevel("ERROR")
+    val spark1 = Harness.session("local[32]", "graft-cluster-digest", 32)
     val local = runPass(spark1, sfDir)
     spark1.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
 
     // ---- pass 2: real executor processes ----
-    val spark2 = session("local-cluster[2,16,4096]", Map(
+    val spark2 = Harness.session("local-cluster[2,16,4096]",
+      "graft-cluster-digest", 32, extra = Map(
       "spark.executor.extraClassPath" -> executorCp,
       // the x100-style overload knobs stay OFF: this pass isolates the
       // process boundary, nothing else
       "spark.executor.memory" -> "4g"))
-    spark2.sparkContext.setLogLevel("ERROR")
     // Wait for BOTH workers' executors to register BEFORE running (and
     // timing) anything: digests are correct regardless, but an
     // unsettled cluster would bill executor-JVM startup to the first

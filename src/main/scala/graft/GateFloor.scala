@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** STREAMING-GATE MACHINERY FLOOR (round-14 verdict stretch item): the
   * top bench rows are all streaming gates whose cost is micro-batch
   * honesty — checkpointed state, watermark bookkeeping, per-batch job
@@ -47,17 +45,9 @@ object GateFloor {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     sys.props("graft.stream.floor") = "on"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gate-floor")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.index.root",
-        graft.TempDirs.create("graft-floor-catalog").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", "graft-gate-floor", cpus.toInt,
+      extra = Map("spark.graft.index.root" ->
+        graft.TempDirs.create("graft-floor-catalog").toString))
 
     // the committed full-suite bench at the SAME sf is the ceiling a
     // floor may never cross (floor + work = engine time, work >= 0)
@@ -137,7 +127,7 @@ object GateFloor {
         ",\"retries\":" + v.retries + "}"
     }.mkString("{", ",", "}")
     val er = errors.map { case (k, v) =>
-      "\"" + k + "\":" + "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      "\"" + k + "\":" + Harness.jsonString(v)
     }.mkString("{", ",", "}")
     val su = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"gate_floor","sf":"$sfDir","reps":${Bench.Reps},""" +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch plan inspector for local iteration (not part of the query
   * surface): runs a named SparkEntry query and prints exchange/reuse
@@ -9,12 +8,7 @@ object PlanCheck {
     val name = args(0)
     val dir = if (args.length > 1 && !args(1).startsWith("--")) args(1)
               else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("local[8]", "graft-plan-check", 8)
     val df = SparkEntry.queries(name)(spark, dir)
     df.write.format("noop").mode("overwrite").save()
     val p = df.queryExecution.executedPlan.toString

@@ -194,32 +194,47 @@ object ProcStat {
   val ImpeachOtherCpu = 0.05
   val ImpeachIoWait = 0.02
 
-  /** Run `body`, returning (its result, the window's attribution). */
+  /** The procfs counters one end of a window is cut from: (busy, total,
+    * iowait) jiffies, this JVM's jiffies, and the PSI stall totals. */
+  final case class Counters(busy: Long, total: Long, ioWait: Long,
+                            self: Long, psi: (Long, Long, Long, Long))
+
+  def counters(): Counters = {
+    val (b, t, w) = busyTotalIoWait()
+    Counters(b, t, w, selfJiffies(), psiTotals())
+  }
+
+  /** The attribution of the window between `c0` and `c1`. Unreadable
+    * jiffy counters void only the three CPU shares (-1); the PSI shares
+    * and the sampler's stall columns are kept whenever they were read. */
+  def window(c0: Counters, c1: Counters, wallUs: Double, load: Double,
+             stallFrac: Double, stallSite: String): Window = {
+    def psiShare(a: Long, b: Long): Double =
+      if (a < 0 || b < 0) -1.0 else math.max(0L, b - a) / wallUs
+    val bad = c0.busy < 0 || c1.busy < 0 || c0.self < 0 || c1.self < 0 ||
+      c1.total <= c0.total
+    val tot = (c1.total - c0.total).toDouble
+    val (other, own, io) =
+      if (bad) (-1.0, -1.0, -1.0)
+      else (math.max(0L, (c1.busy - c0.busy) - (c1.self - c0.self)) / tot,
+            math.max(0L, c1.self - c0.self) / tot,
+            math.max(0L, c1.ioWait - c0.ioWait) / tot)
+    Window(other, own, io, load,
+      psiShare(c0.psi._1, c1.psi._1), psiShare(c0.psi._2, c1.psi._2),
+      psiShare(c0.psi._3, c1.psi._3), psiShare(c0.psi._4, c1.psi._4),
+      stallFrac, stallSite)
+  }
+
+  /** Run `body`, returning (its result, the window's attribution). The
+    * stall sampler stops even when `body` throws. */
   def windowed[A](body: => A): (A, Window) = {
-    val (b0, t0, w0) = busyTotalIoWait(); val s0 = selfJiffies()
-    val (pc0, pi0, pf0, pm0) = psiTotals()
+    val c0 = counters()
     val wall0 = System.nanoTime()
     val sampler = new StallSampler
     sampler.start()
-    val r = try body finally ()
-    val (stallFrac, stallSite) = sampler.finish()
+    var stall = (0.0, "")
+    val r = try body finally stall = sampler.finish()
     val wallUs = math.max(1L, (System.nanoTime() - wall0) / 1000L).toDouble
-    val (pc1, pi1, pf1, pm1) = psiTotals()
-    val (b1, t1, w1) = busyTotalIoWait(); val s1 = selfJiffies()
-    def psiShare(a: Long, b: Long): Double =
-      if (a < 0 || b < 0) -1.0 else math.max(0L, b - a) / wallUs
-    val bad = b0 < 0 || b1 < 0 || s0 < 0 || s1 < 0 || t1 <= t0
-    val win =
-      if (bad) Window(-1.0, -1.0, -1.0, loadAvg())
-      else {
-        val tot = (t1 - t0).toDouble
-        Window(math.max(0L, (b1 - b0) - (s1 - s0)) / tot,
-               math.max(0L, s1 - s0) / tot,
-               math.max(0L, w1 - w0) / tot, loadAvg(),
-               psiShare(pc0, pc1), psiShare(pi0, pi1),
-               psiShare(pf0, pf1), psiShare(pm0, pm1),
-               stallFrac, stallSite)
-      }
-    (r, win)
+    (r, window(c0, counters(), wallUs, loadAvg(), stall._1, stall._2))
   }
 }

@@ -339,15 +339,7 @@ object ScaleRehearsal {
       .toAbsolutePath.normalize.toString
     val outDir = args.lift(1).getOrElse("/tmp/graft-sf1-rehearsal")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", "graft-scale-rehearsal", cpus.toInt)
 
     synthesize(spark, baseDir, outDir)
     linkBaseTables(baseDir, outDir)

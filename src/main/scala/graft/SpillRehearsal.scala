@@ -172,24 +172,6 @@ object SpillRehearsal {
     * task) so every sizable sort/aggregate MUST externalize. */
   val ConstrainedFraction = 0.01
 
-  /** Order-independent result digest, computed on the executors:
-    * row count, xor of per-row xxhash64, and a modular sum of the same
-    * hashes (xor alone cancels duplicate row PAIRS; the modular sum —
-    * kept far under Long overflow so ANSI mode can't object — restores
-    * multiplicity sensitivity). Columns are name-sorted and stringified
-    * so the digest is schema-order- and partitioning-invariant. */
-  private def resultDigest(df: DataFrame): String = {
-    val cols = df.columns.sorted.map(c => coalesce(col(c).cast("string"), lit("\u0000null")))
-    val h = df.select(xxhash64(cols.toSeq: _*).as("h"))
-    val r = h.agg(
-      count(lit(1)).as("n"),
-      expr("bit_xor(h)").as("x"),
-      sum(pmod(col("h"), lit(1000000007L))).as("s")).head()
-    val n = r.getLong(0)
-    if (n == 0) s"0:0:0"
-    else s"$n:${r.getLong(1)}:${r.getLong(2)}"
-  }
-
   /** Order-SENSITIVE digest for the external-sort row: per partition,
     * one executor-side fold over the partition iterator emits (count,
     * xor, modular sum, min/max of `key`, within-partition-sorted flag);
@@ -248,7 +230,7 @@ object SpillRehearsal {
         case "q06_join5_smj" => SparkEntry.queries("q06_join5")(spark, dir)
         case n => SparkEntry.queries(n)(spark, dir)
       }
-      q.sortKey.fold(resultDigest(df))(sortedDigest(df, _))
+      q.sortKey.fold(Harness.resultDigest(df))(sortedDigest(df, _))
     } finally saved.foreach { case (k, prev) =>
       prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
@@ -267,19 +249,12 @@ object SpillRehearsal {
     * externalizes. */
   val SpillPartitions = 8
 
-  private def session(constrained: Boolean, cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-spill-${if (constrained) "constrained" else "base"}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", SpillPartitions.toString)
-    if (constrained)
-      b.config("spark.memory.fraction", ConstrainedFraction.toString)
-        .getOrCreate()
-    else b.getOrCreate()
-  }
+  private def session(constrained: Boolean, cpus: String): SparkSession =
+    Harness.session(s"local[$cpus]",
+      s"graft-spill-${if (constrained) "constrained" else "base"}",
+      SpillPartitions, extra =
+        if (constrained) Map("spark.memory.fraction" -> ConstrainedFraction.toString)
+        else Map.empty)
 
   def main(args: Array[String]): Unit = {
     val baseDir = java.nio.file.Paths.get(
@@ -297,7 +272,6 @@ object SpillRehearsal {
 
     // ---- pass 1: unconstrained (the plans' normal environment) ----
     val spark1 = session(constrained = false, cpus)
-    spark1.sparkContext.setLogLevel("ERROR")
     ScaleRehearsal.synthesize(spark1, baseDir, outDir)
     ScaleRehearsal.linkBaseTables(baseDir, outDir)
     ScaleRehearsal.synthesize(spark1, baseDir, out100,
@@ -322,7 +296,6 @@ object SpillRehearsal {
 
     // ---- pass 2: constrained pool, same fixture, same plans ----
     val spark2 = session(constrained = true, cpus)
-    spark2.sparkContext.setLogLevel("ERROR")
     val perQuerySpill = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     val mem = new AtomicLong(0)
     val disk = new AtomicLong(0)

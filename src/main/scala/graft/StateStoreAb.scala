@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** STATE-STORE I/O A/B (round-12 verdict item 4): the post-reboot
   * "I/O tax" concentrated in checkpoint/state-store-heavy streaming
   * gates (q98 went 2.3 s → 44.5 s driver-to-driver), but that was an
@@ -20,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * — median-of-[[Reps]] each, SAME session, SAME staged inputs (the
   * staging caches are per-dir and provider-independent), and digests
-  * every result with the ClusterDigest construction so the A/B also
+  * every result with [[Harness.resultDigest]] so the A/B also
   * proves the two providers land on the IDENTICAL relation (a provider
   * that dropped or duplicated state rows would flip the digest, not
   * just the timing). Three transformWithState gates pin RocksDB
@@ -73,35 +70,11 @@ object StateStoreAb {
     "q76_stream_max_state", "q79_stream_initial_state",
     "q78_stream_session_close")
 
-  /** Order-independent digest (the ClusterDigest construction — count,
-    * xor, modular sum over xxhash64 of name-sorted stringified
-    * columns): the only thing a compare can see is a VALUE difference
-    * between providers. */
-  private def resultDigest(df: DataFrame): String = {
-    val cols = df.columns.sorted
-      .map(c => coalesce(col(c).cast("string"), lit("\u0000null")))
-    val h = df.select(xxhash64(cols.toSeq: _*).as("h"))
-    val r = h.agg(
-      count(lit(1)).as("n"),
-      expr("bit_xor(h)").as("x"),
-      sum(pmod(col("h"), lit(1000000007L))).as("s")).head()
-    val n = r.getLong(0)
-    if (n == 0) "0:0:0" else s"$n:${r.getLong(1)}:${r.getLong(2)}"
-  }
-
   def main(args: Array[String]): Unit = {
     val roundClose = args.contains("--roundclose")
     val sfDir = args.filterNot(_ == "--roundclose").headOption
       .getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-state-store-ab")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("local[32]", "graft-state-store-ab", 32)
 
     val gates = graft.streaming.StreamingGate.queries.keys.toSeq.sorted
 
@@ -110,7 +83,7 @@ object StateStoreAb {
       spark.conf.set(ProviderKey, provider)
       try {
         val t0 = System.nanoTime()
-        val d = resultDigest(
+        val d = Harness.resultDigest(
           graft.streaming.StreamingGate.queries(g)(spark, sfDir))
         (d, (System.nanoTime() - t0) / 1e9)
       } finally spark.conf.unset(ProviderKey)
@@ -119,7 +92,7 @@ object StateStoreAb {
     if (roundClose) {
       // cheap per-round provider guard: warmup, then one digest per
       // provider for each big-state gate; one COVERAGE.md line out
-      resultDigest(
+      Harness.resultDigest(
         graft.streaming.StreamingGate.queries(BigStateGates.head)(spark, sfDir))
       val cells = BigStateGates.map { g =>
         // untimed PER-GATE warmup (round-14 ADVICE): the full A/B path
@@ -147,7 +120,7 @@ object StateStoreAb {
 
     // warmup (untimed): heat codegen/staging caches so the first gate
     // doesn't bill session startup
-    resultDigest(graft.streaming.StreamingGate.queries(gates.head)(spark, sfDir))
+    Harness.resultDigest(graft.streaming.StreamingGate.queries(gates.head)(spark, sfDir))
 
     // INTERLEAVED per gate (H,R,H,R,...): a split-pass design leaked a
     // ~10-20% warm-cache drift into the ratio (the second full pass ran

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch diagnostic for the streaming gates (not part of the query
   * surface): run one gate and print the engine's own per-batch
   * telemetry — batch id, input rows, the durationMs breakdown
@@ -18,21 +16,7 @@ object StreamDiag {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-diag")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B hatch: GRAFT_DIAG_CONF="k=v;k=v" applies arbitrary session
-    // confs so knob experiments don't need a recompile each.
-    val withConf = sys.env.get("GRAFT_DIAG_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("="))
-      .foldLeft(b) { (bb, kv) =>
-        val Array(k, v) = kv.split("=", 2); bb.config(k, v) }
-    val spark = withConf.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", "graft-stream-diag", cpus.toInt)
     val t0 = System.nanoTime()
     SparkEntry.queries(name)(spark, dir)
       .write.format("noop").mode("overwrite").save()

@@ -25,16 +25,8 @@ object Cli {
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       String.valueOf(Runtime.getRuntime.availableProcessors))
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-vmdb")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    graft.Harness.session(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"),
+      "graft-vmdb", cpus.toInt, "WARN")
   }
 
   private case class Args(
@@ -138,11 +130,8 @@ object Cli {
         val existing = Tsv.readReferenceTsv(spark, a.db)
           .select(col("path_on_volume").as("path"))
         val (listing, srt) = listings(spark, a)
-        val novel = VideoPipeline.novelFiles(VideoPipeline.scanFilters(listing), existing)
-        val builtNovel = VideoPipeline.withSubtitles(
-          VideoPipeline.deriveColumns(
-            VideoPipeline.probeStage(novel, prober(a))
-              .filter(col("probe_error").isNull)), srt)
+        val builtNovel = VideoPipeline.build(
+          VideoPipeline.novelFiles(listing, existing), srt, prober(a))
         val all = Tsv.dbLines(spark, a.db).unionByName(Tsv.renderLines(builtNovel))
         Tsv.writeSingleFile(Tsv.sortLinesDesc(all), a.db)
         println(s"[graft] appended novel files into ${a.db}")

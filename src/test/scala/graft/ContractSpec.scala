@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract guards: wiring mistakes here would zero a round. */
 class ContractSpec extends SparkSpec {
 
@@ -33,5 +35,24 @@ class ContractSpec extends SparkSpec {
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows at sf0.001")
     }
+  }
+
+  test("Harness.scala is the only session builder under src/") {
+    val builder = """SparkSession\.builder\(\)""".r
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val offenders = try {
+      it.iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Harness.scala")
+        .filter { p =>
+          java.nio.file.Files.readAllLines(p).asScala.exists { l =>
+            val t = l.trim
+            // scaladoc and line comments (usage examples) are exempt
+            !(t.startsWith("*") || t.startsWith("/**") || t.startsWith("//")) &&
+              builder.findFirstIn(l).isDefined
+          }
+        }
+    } finally it.close()
+    assert(offenders.isEmpty, s"build sessions through graft.Harness: $offenders")
   }
 }

@@ -5,20 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one local JVM session, UTC, AQE on. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("local[4]", "graft-test", 4,
+    "WARN", extra = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
   /** Fixture root — overridable so the suite runs on hosts with a
     * different testdata layout. */
   val root: String = sys.env.getOrElse("GRAFT_TESTDATA", "/root/testdata")
