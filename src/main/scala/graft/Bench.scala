@@ -43,27 +43,6 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def loadAvg(): Double = ProcStat.loadAvg()
-
-  /** Per-query load attribution (round-12 verdict item 3): the suite's
-    * endpoint LCG probes BOUND co-tenancy, they can't bracket a load
-    * band that arrives mid-run — r12's q85–q111 / q230–q231 bands read
-    * 2.5–44x quiet values with quiet endpoints and cost an hour of
-    * forensics. These snapshots turn that into a one-line dismissal: a
-    * /proc/stat jiffies window around each query, split into THIS
-    * process's share (utime+stime from /proc/self/stat — in local mode
-    * the executors are this JVM) and everyone else's.
-    * `other_cpu` = (busy − own) / total jiffies in the query's window:
-    * ~0 on a quiet box regardless of our own parallelism, and the
-    * direct co-tenant signal when a row's wall time spikes. Reads are
-    * plain procfs text (Linux-only, the only driver environment);
-    * any read failure degrades to -1 fields, never a crash. */
-  // the /proc window reads live in [[ProcStat]] (shared with GateFloor
-  // since round 15, so the floors carry the same sidecar discipline as
-  // the suite rows they are subtracted from)
-  private def procBusyTotal(): (Long, Long, Long) = ProcStat.busyTotalIoWait()
-  private def selfJiffies(): Long = ProcStat.selfJiffies()
-
   /** Bit-coherence field (round-11 verdict blemish 1): the commit the
     * bench actually measured, read from .git at run time so "is the
     * committed bench the committed code?" is a mechanical field
@@ -107,30 +86,31 @@ object Bench {
     }
 
     // SPARK_GRAFT_PER_REP=on → one stderr line per rep with the rep's
-    // own /proc window attribution: the isolated-forensics mode the
+    // own /proc window attribution (ProcStat.window's CPU shares, -1
+    // when procfs is unreadable): the isolated-forensics mode the
     // q155 round-14 investigation standardized (a median hides whether
     // rep 1's index build or a steady-state cost moved the row; the
     // driver never sets it).
     val perRep = sys.env.get("SPARK_GRAFT_PER_REP").contains("on")
     def median3(name: String): Double = {
       val ts = Seq.tabulate(Reps) { i =>
-        val (b0, t0, w0) = if (perRep) procBusyTotal() else (0L, 0L, 0L)
-        val s0 = if (perRep) selfJiffies() else 0L
-        val sec = materialize(name)
-        if (perRep) {
-          val (b1, t1, w1) = procBusyTotal(); val s1 = selfJiffies()
-          val tot = math.max(1L, t1 - t0).toDouble
+        if (!perRep) materialize(name)
+        else {
+          val c0 = ProcStat.counters()
+          val wall0 = System.nanoTime()
+          val sec = materialize(name)
+          val wallUs = math.max(1L, (System.nanoTime() - wall0) / 1000L).toDouble
+          val w = ProcStat.window(c0, ProcStat.counters(), wallUs, ProcStat.loadAvg(),
+            stallFrac = 0.0, stallSite = "")
           System.err.println(f"[bench-rep] $name rep=$i sec=$sec%.3f " +
-            f"other_cpu=${math.max(0L, (b1 - b0) - (s1 - s0)) / tot}%.3f " +
-            f"own_cpu=${math.max(0L, s1 - s0) / tot}%.3f " +
-            f"io_wait=${math.max(0L, w1 - w0) / tot}%.3f")
+            f"other_cpu=${w.otherCpu}%.3f own_cpu=${w.ownCpu}%.3f io_wait=${w.ioWait}%.3f")
+          sec
         }
-        sec
       }
       if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(Reps / 2)
     }
 
-    val loadPre = loadAvg()
+    val loadPre = ProcStat.loadAvg()
     // one untimed warm-up so pre and post time the SAME compiled code:
     // the first LCG invocation otherwise runs interpreted/OSR while the
     // post call runs fully JIT'd — a built-in pre>post skew in the very
@@ -205,7 +185,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val calPost = calibrateSec()
-    val loadPost = loadAvg()
+    val loadPost = ProcStat.loadAvg()
     // reps + witness recorded so a nonstandard run can't masquerade as
     // the default methodology when the artifact is read later;
     // calibration = the co-tenancy probe (see calibrateSec) so a

@@ -34,17 +34,23 @@ object Harness {
     c.setAll(extra)
   }
 
-  /** Get or create the session for `conf(master, appName, ...)` and set
-    * its log level. ERROR by default: the measurement mains print one
-    * machine-parsed line that benign warnings would interleave with. */
+  /** The running session, left exactly as it is (no conf, no log
+    * level: a caller that shares it, such as `Cli.main` in a notebook or
+    * the spec suite, must not change what runs after it); else a new
+    * session for `conf(master, appName, ...)` at `logLevel`. ERROR by
+    * default: the measurement mains print one machine-parsed line that
+    * benign warnings would interleave with. */
   def session(master: String, appName: String, shufflePartitions: Int,
               logLevel: String = "ERROR",
-              extra: Map[String, String] = Map.empty): SparkSession = {
-    val s = SparkSession.builder()
-      .config(conf(master, appName, shufflePartitions, extra)).getOrCreate()
-    s.sparkContext.setLogLevel(logLevel)
-    s
-  }
+              extra: Map[String, String] = Map.empty): SparkSession =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .getOrElse {
+        val s = SparkSession.builder()
+          .config(conf(master, appName, shufflePartitions, extra)).getOrCreate()
+        s.sparkContext.setLogLevel(logLevel)
+        s
+      }
 
   /** Order-independent result digest, computed on the executors:
     * row count, xor of per-row xxhash64, and a modular sum of the same

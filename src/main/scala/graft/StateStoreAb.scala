@@ -35,7 +35,8 @@ package graft
   * fixed costs dominate, the fix is the provider/checkpoint-placement
   * knob, not a plan change.
   *
-  * Usage: runMain graft.StateStoreAb [sfDir] — writes
+  * Usage: runMain graft.StateStoreAb [sfDir] — on `local[N]` with N
+  * shuffle partitions, N = SPARK_GRAFT_CPUS (default 32); writes
   * state_store_ab.json (one line) and prints it; exits nonzero on any
   * cross-provider digest mismatch.
   *
@@ -74,7 +75,12 @@ object StateStoreAb {
     val roundClose = args.contains("--roundclose")
     val sfDir = args.filterNot(_ == "--roundclose").headOption
       .getOrElse("/root/testdata/sf0.01")
-    val spark = Harness.session("local[32]", "graft-state-store-ab", 32)
+    // sized from the host like the other mains: every stateful
+    // operator opens one state store per shuffle partition, so the
+    // partition count is part of what each provider is timed on
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val master = s"local[$cpus]"
+    val spark = Harness.session(master, "graft-state-store-ab", cpus.toInt)
 
     val gates = graft.streaming.StreamingGate.queries.keys.toSeq.sorted
 
@@ -106,7 +112,8 @@ object StateStoreAb {
         (g, dh, dr, th, tr)
       }
       val bad = cells.filter(c => c._2 != c._3)
-      val line = s"rocksdb-roundclose sf=$sfDir gates=${cells.size} " +
+      val line = s"rocksdb-roundclose sf=$sfDir master=$master partitions=$cpus " +
+        s"gates=${cells.size} " +
         s"identical=${bad.isEmpty}" +
         (if (bad.isEmpty) "" else s" MISMATCH=${bad.map(_._1).mkString(",")}") +
         " " + cells.map(c => f"${c._1}=${c._5 / math.max(1e-9, c._4)}%.2fx")
@@ -162,6 +169,7 @@ object StateStoreAb {
     val line =
       s"""{"sf":"$sfDir","reps":$Reps,"pinned_rocksdb":[${
         PinnedRocks.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
+      s""""master":"$master","partitions":$cpus,""" +
       s""""digests_identical":${mismatches.isEmpty},""" +
       s""""digests_unstable":[${
         unstable.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +

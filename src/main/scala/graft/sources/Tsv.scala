@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.BufferedOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, Options, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import graft.functions.VideoFns
 
 /** The reference's at-rest format: headerless tab-separated text,
@@ -93,8 +99,9 @@ object Tsv {
     *
     * One-partition contract: the result is ONE partition, in the order of
     * `orderBy(col("line").desc)`. Its consumer is [[writeSingleFile]],
-    * whose single writer task would merge any range partitions back
-    * anyway, so the lines are shuffled to one partition and sorted there.
+    * whose one writer task streams that partition straight into the
+    * staged db file, so the lines are shuffled to one partition and
+    * sorted there.
     * A global `orderBy` would first run a RangePartitioner sampling job
     * that evaluates the whole input a second time (every db line read
     * twice on update and merge) only to pick range bounds; a plain
@@ -104,49 +111,86 @@ object Tsv {
     lines.repartition(1).sortWithinPartitions(col("line").desc)
 
   /** Single-file TSV export with utf-8-sig BOM and optional header,
-    * assembled entirely through the Hadoop FileSystem API — `outFile`
-    * may live on ANY configured store (`file:`, `hdfs:`, `s3a:`,
-    * `abfs:`, ...): the distributed write lands its part files in a
-    * hidden temp dir NEXT TO the destination (so parts and output share
-    * a filesystem — never the driver's local disk), then the BOM +
-    * header + parts are streamed through one `fs.create` output stream
-    * (on an object store that is a multipart upload managed by the
-    * connector) and the temp dir is deleted. The driver streams bytes
-    * but never requires a local filesystem path.
+    * written once, by one Spark task, and published by rename. Every
+    * step goes through the Hadoop FS API, so `outFile` may live on ANY
+    * configured store (`file:`, `hdfs:`, `s3a:`, `abfs:`, ...):
+    *
+    *  - Staged write: `lines.coalesce(1)` runs as a Dataset action whose
+    *    single task streams the BOM, the header and every line (a null
+    *    line as an empty one) into `attempt-<stage attempt>-<task attempt>`
+    *    in a hidden dir NEXT TO the destination, so the staged file and
+    *    the db share a filesystem. No part file, no commit protocol, and
+    *    no driver-side copy of the db's bytes.
+    *  - Publish: the driver renames the staged file over `outFile`
+    *    (`FileContext.rename` with `OVERWRITE`) and deletes the hidden
+    *    dir in a `finally`. The live db is never truncated: until the
+    *    rename, it is the old db, so a failed write leaves it intact (an
+    *    update reads the very file it replaces). HDFS swaps atomically;
+    *    the local FS deletes the old file just before its rename; on an
+    *    object store a rename is a server-side copy plus delete, so the
+    *    db is written twice there, both times by the store.
+    *
+    * No `.crc` sidecar is written next to the artifact, and a stale one
+    * is removed: the checksum shadow file is a LocalFileSystem quirk
+    * (object-store FSes checksum server-side), and a stale sidecar would
+    * fail later reads of the re-exported db. The staged file is written
+    * through the checksum filesystem's raw one, so the JVM-wide cached
+    * filesystem keeps writing checksums for everything else.
     *
     * The TSV db is a reference-parity presentation artifact, not the
     * engine's at-rest format (that's parquet) — single-file assembly is
-    * inherently a one-writer step; stores with a native server-side
-    * concat (HDFS `concat`, S3 multipart-copy) could skip the driver
-    * byte stream, at the cost of per-store code paths. */
+    * inherently a one-writer step. */
   def writeSingleFile(lines: DataFrame, outFile: String,
                       withHeader: Boolean = false, withBom: Boolean = true): Unit = {
-    import org.apache.hadoop.fs.Path
     val conf = lines.sparkSession.sparkContext.hadoopConfiguration
-    val out = new Path(outFile)
-    val fs = out.getFileSystem(conf)
-    // no .crc sidecar next to the artifact: the checksum shadow file is
-    // a LocalFileSystem quirk (object-store FSes checksum server-side),
-    // and a stale sidecar would fail later reads of the re-exported db
-    fs.setWriteChecksum(false)
-    val parent = Option(out.getParent).getOrElse(new Path("."))
-    val tmp = new Path(parent, s".${out.getName}.__graft_tmp__")
+    val fs = new Path(outFile).getFileSystem(conf)
+    val out = fs.makeQualified(new Path(outFile))
+    val tmp = new Path(out.getParent, s".${out.getName}.__graft_tmp__")
+    val prefix =
+      (if (withBom) Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) else Array.empty[Byte]) ++
+      (if (withHeader) (headerLine + "\n").getBytes(UTF_8) else Array.empty[Byte])
+    val taskConf = new SerializableConfiguration(conf)
     fs.delete(tmp, true)
     try {
-      lines.coalesce(1).write.mode("overwrite").text(tmp.toString)
-      val parts = fs.listStatus(tmp).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val os = fs.create(out, true)
-      try {
-        if (withBom) os.write(Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte))
-        if (withHeader) os.write((headerLine + "\n").getBytes("UTF-8"))
-        parts.foreach { p =>
-          val is = fs.open(p)
-          try org.apache.hadoop.io.IOUtils.copyBytes(is, os, 65536, false)
-          finally is.close()
-        }
-      } finally os.close()
+      val staged = lines.coalesce(1).as(Encoders.STRING).mapPartitions { it =>
+        val ctx = TaskContext.get()
+        Iterator(writeStaged(new Path(tmp,
+          s"attempt-${ctx.stageAttemptNumber()}-${ctx.taskAttemptId()}"),
+          taskConf.value, prefix, it))
+      }(Encoders.STRING).collect()
+      val name = staged match {
+        case Array(n) => n
+        // a plan with no partitions (an empty local relation) runs no
+        // task: the db is then the BOM and header alone
+        case Array() => writeStaged(new Path(tmp, "empty"), conf, prefix, Iterator.empty)
+        case many => sys.error(s"one writer task expected, got ${many.length}")
+      }
+      FileContext.getFileContext(out.toUri, conf)
+        .rename(new Path(tmp, name), out, Options.Rename.OVERWRITE)
+      fs match {
+        case c: ChecksumFileSystem => c.getRawFileSystem.delete(c.getChecksumFile(out), false)
+        case _ =>
+      }
     } finally fs.delete(tmp, true)
+  }
+
+  /** Write `prefix`, then each line and `\n`, to a new file at `p`
+    * with no `.crc` sidecar; returns its name. */
+  private def writeStaged(p: Path, conf: Configuration, prefix: Array[Byte],
+                          lines: Iterator[String]): String = {
+    val fs = p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    val os = new BufferedOutputStream(fs.create(p, false), 1 << 16)
+    try {
+      os.write(prefix)
+      lines.foreach { l =>
+        if (l != null) os.write(l.getBytes(UTF_8))
+        os.write('\n')
+      }
+    } finally os.close()
+    p.getName
   }
 
   /** S6: read a reference-format TSV back to typed columns. Tolerates the

@@ -167,4 +167,27 @@ class CliSpec extends SparkSpec {
     assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(db)), before),
       "an update with nothing new must leave the db as it was")
   }
+
+  test("Cli.main leaves a running session's confs and log level as it found them") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    val root = Files.createTempDirectory("graft-cli-session").toString
+    touch(s"$root/m/f1/[2010] Zeta.mkv", 4096)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val savedLevel = LogManager.getRootLogger.getLevel
+    // two sentinels: the core count Cli would apply to a session it
+    // creates cannot equal both, whatever the host
+    try for (sentinel <- Seq("3", "5")) {
+      spark.conf.set(key, sentinel)
+      spark.sparkContext.setLogLevel("ERROR")
+      val before = spark.conf.getAll
+      Cli.main(Array("build", root, "--db", s"$root/db-$sentinel.tsv", "--stub-probe"))
+      assert(spark.conf.get(key) == sentinel)
+      assert(spark.conf.getAll == before)
+      assert(LogManager.getRootLogger.getLevel == Level.ERROR)
+    } finally {
+      spark.conf.set(key, saved)
+      spark.sparkContext.setLogLevel(savedLevel.toString)
+    }
+  }
 }

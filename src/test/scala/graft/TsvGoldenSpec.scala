@@ -68,6 +68,108 @@ class TsvGoldenSpec extends SparkSpec {
     assert(names.toSeq == Seq("db.tsv"), s"staging leaked: $names")
   }
 
+  private val Bom = "\uFEFF"
+
+  /** File bytes as a UTF-8 string (the BOM kept as U+FEFF). */
+  private def text(p: java.nio.file.Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+
+  /** The names in `dir`, sorted. */
+  private def names(dir: java.nio.file.Path): Seq[String] = {
+    val it = Files.list(dir).iterator()
+    val b = new scala.collection.mutable.ArrayBuffer[String]
+    while (it.hasNext) b += it.next().getFileName.toString
+    b.sorted.toSeq
+  }
+
+  // The writer cases below pin the bytes the part-file writer (Spark's
+  // text source, then a driver copy) produced; each leaves the
+  // destination's dir holding the db alone: no part file, no _SUCCESS,
+  // no staging dir, no .crc.
+
+  test("writer: a null line is written as an empty line") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-null")
+    val lines = Seq("b", null, "a").toDF("line").coalesce(1)
+    Tsv.writeSingleFile(lines, s"$dir/db.tsv")
+    assert(text(dir.resolve("db.tsv")) == Bom + "b\n\na\n")
+    assert(names(dir) == Seq("db.tsv"))
+  }
+
+  test("writer: empty input gives the BOM, the BOM and header, or nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-empty")
+    val empty = Seq.empty[String].toDF("line")
+    for ((lines, tag) <- Seq(empty -> "local", Tsv.sortLinesDesc(empty) -> "sorted",
+                             // two partitions, no rows: one task, nothing to write
+                             spark.range(0, 5, 1, 2).filter(col("id") > 100)
+                               .select(col("id").cast("string").as("line")) -> "filtered")) {
+      Tsv.writeSingleFile(lines, s"$dir/$tag-bom.tsv")
+      Tsv.writeSingleFile(lines, s"$dir/$tag-header.tsv", withHeader = true)
+      Tsv.writeSingleFile(lines, s"$dir/$tag-bare.tsv", withBom = false)
+      assert(text(dir.resolve(s"$tag-bom.tsv")) == Bom, tag)
+      assert(text(dir.resolve(s"$tag-header.tsv")) == Bom + Tsv.headerLine + "\n", tag)
+      assert(Files.size(dir.resolve(s"$tag-bare.tsv")) == 0L, tag)
+    }
+    assert(names(dir).length == 9, names(dir))
+  }
+
+  test("writer: an existing destination is replaced, by a plain path and a file:// URI") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-replace")
+    val db = dir.resolve("db.tsv")
+    Files.write(db, ("\uFEFFold longer line 1\nold longer line 2\nold 3\n").getBytes("UTF-8"))
+    // a stale checksum sidecar would fail the next read of the new db
+    Files.write(dir.resolve(".db.tsv.crc"), Array[Byte](1, 2, 3))
+    Tsv.writeSingleFile(Seq("new").toDF("line"), db.toString)
+    assert(text(db) == Bom + "new\n")
+    assert(names(dir) == Seq("db.tsv"))
+    Tsv.writeSingleFile(Seq("newer 2", "newer 1").toDF("line").coalesce(1),
+      s"file://$db", withHeader = true)
+    assert(text(db) == Bom + Tsv.headerLine + "\nnewer 2\nnewer 1\n")
+    assert(names(dir) == Seq("db.tsv"))
+  }
+
+  test("writer: an update reads and rewrites the same path") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-update")
+    val db = s"$dir/db.tsv"
+    Tsv.writeSingleFile(Tsv.sortLinesDesc(Seq("m", "z", "c").toDF("line")), db)
+    assert(text(dir.resolve("db.tsv")) == Bom + "z\nm\nc\n")
+    // the Cli update shape: the db's own lines plus the novel ones,
+    // sorted, written back over the file they were read from
+    val all = Tsv.dbLines(spark, db).unionByName(Seq("q", "a").toDF("line"))
+    Tsv.writeSingleFile(Tsv.sortLinesDesc(all), db)
+    assert(text(dir.resolve("db.tsv")) == Bom + "z\nq\nm\nc\na\n")
+    assert(names(dir) == Seq("db.tsv"))
+  }
+
+  test("writer: a failing writer task rethrows and leaves the old db intact") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-fail")
+    val db = dir.resolve("db.tsv")
+    val old = (Bom + "kept 2\nkept 1\n").getBytes("UTF-8")
+    Files.write(db, old)
+    val lines = Seq("a", "boom", "c").toDF("line").select(
+      when(col("line") === "boom", raise_error(lit("writer spec failure")))
+        .otherwise(col("line")).as("line"))
+    val e = intercept[Exception](Tsv.writeSingleFile(Tsv.sortLinesDesc(lines), db.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("writer spec failure")), e)
+    assert(java.util.Arrays.equals(Files.readAllBytes(db), old))
+    assert(names(dir) == Seq("db.tsv"), "no staging dir may be left behind")
+  }
+
+  test("writer: later Hadoop writes in the JVM still get their checksums") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-writer-checksums")
+    Tsv.writeSingleFile(Seq("x").toDF("line"), s"$dir/db.tsv")
+    Seq(1, 2).toDF("a").write.parquet(s"$dir/after")
+    assert(Files.walk(dir.resolve("after"))
+        .filter(_.getFileName.toString.endsWith(".crc")).count() > 0,
+      "a db export must not switch checksums off for the cached local filesystem")
+  }
+
   test("readReferenceTsv round-trips ragged rows") {
     val df = Tsv.readReferenceTsv(spark, "src/test/resources/golden_build.tsv")
     assert(df.count() == ids.length)
