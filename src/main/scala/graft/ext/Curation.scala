@@ -770,7 +770,7 @@ object Curation {
 
   /** The per-doc labeling [[clusterAwareSplit]] aggregates (spec hook). */
   private[graft] def clusterSplitLabels(docs: DataFrame, seed: Long = 777L): DataFrame =
-    Dedup.dedupClusters(docs, Dedup.minhashPairs(docs))
+    Dedup.minhashClusters(docs)
       .select(col("doc_id"), col("cluster_id"),
         expr(s"(${lcgKeySql("cluster_id", seed)}) % 1000").as("pm"))
       .withColumn("split",
@@ -818,7 +818,7 @@ object Curation {
     * Rides the q33 clustering pass; the join back to doc metadata is by
     * doc_id, broadcast-able when the cluster relation is small. */
   def canonicalDocs(docs: DataFrame): DataFrame = {
-    val clusters = Dedup.dedupClusters(docs, Dedup.minhashPairs(docs))
+    val clusters = Dedup.minhashClusters(docs)
     clusters
       .join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .groupBy("cluster_id")

@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Deduplication operators for large-scale corpus curation (builder
@@ -155,7 +158,18 @@ object Dedup {
     * stage; disable AQE for the reading query (the spec pins this). */
   def minhashPairs(docs: DataFrame, maxLshBucket: Int = MaxLshBucket,
                    dropObs: Option[org.apache.spark.sql.Observation] = None)
-      : DataFrame = {
+      : DataFrame =
+    candidatePairs(docs, maxLshBucket, dropObs)
+      .distinct()
+      .orderBy("doc_a", "doc_b")
+
+  /** [[minhashPairs]] before its `distinct().orderBy(...)`: every
+    * (doc_a, doc_b) a bucket expands, once per band that shares it.
+    * Clustering ([[minhashClusters]]) reads this directly, since
+    * connectivity ignores pair order and duplicate pairs, so it pays no
+    * range sort (a sampling job plus a shuffle) and no distinct. */
+  private[graft] def candidatePairs(docs: DataFrame, maxLshBucket: Int = MaxLshBucket,
+      dropObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
     val buckets = minhashBands(docs)
       .groupBy("band", "band_key")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -172,8 +186,6 @@ object Dedup {
           |    j -> named_struct('doc_a', element_at(ids, i),
           |                      'doc_b', element_at(ids, j)))))""".stripMargin)).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
-      .orderBy("doc_a", "doc_b")
   }
 
   def minhashPairsSql: String = minhashPairsSqlFrom("documents")
@@ -819,118 +831,153 @@ object Dedup {
     * connected components over the candidate-pair graph, so each
     * near-dup group gets ONE representative (cluster_id = min doc_id in
     * the component; docs in no pair are their own singleton cluster).
+    * Pair order and duplicate pairs do not matter, nor does a self-pair.
     *
-    * Distributed min-label propagation with a DELTA FRONTIER: every doc
-    * starts labeled with itself; each round, only labels that CHANGED
-    * last round are joined against the edge list (min-propagation is
-    * monotone, so a label can only improve when a neighbor's label
-    * improved — the unchanged majority can't contribute anything new).
-    * Each round is one broadcast-able join + hash agg over
-    * (edges ⋈ frontier) — the classic Spark shape for iterative graph
-    * algorithms — and `localCheckpoint` cuts the growing lineage so
-    * round N doesn't recompute rounds 1..N-1 (materialized on
-    * executors, never the driver). Rounds needed = component diameter;
-    * near-dup clusters are clone groups, so convergence is 2-4 rounds,
-    * and the frontier collapses to the few still-merging components
-    * after round 1 — per-round cost tracks the work remaining, not the
-    * corpus. This is why label-prop is the industry-standard dedup
-    * clustering pass at corpus scale.
+    * Distributed min-label propagation with a DELTA FRONTIER over the
+    * INDUCED SUBGRAPH: only pair endpoints enter the loop (a doc in no
+    * pair can never change its label), and the corpus joins the
+    * converged labels once at the end (singletons label themselves via
+    * coalesce). The state is one row per endpoint — its label, its
+    * deduplicated neighbour list and whether the last round lowered its
+    * label — hash-partitioned by id and locally checkpointed with that
+    * partitioner. Each round, only the nodes that moved send
+    * (neighbour, label) messages (min-propagation is monotone: an
+    * unchanged label was already known to every neighbour). The
+    * messages take ONE shuffle by receiver with a map-side min, and
+    * join the co-partitioned state partition by partition, so the state
+    * itself is never re-shuffled.
     *
-    * The iteration runs over the INDUCED SUBGRAPH only: a doc in no
-    * pair can never change its label, so labels start from the edge
-    * endpoints (|V(pairs)| rows — a small fraction of any deduped
-    * corpus), and the corpus joins the converged labels exactly once at
-    * the end (singletons label themselves via coalesce). Iterating
-    * corpus-sized label relations instead would shuffle the whole
-    * corpus once per round for rows that by construction cannot move. */
-  /** First propagation round at which pointer-halving engages (see the
-    * loop comment): below it, rounds are pure neighbor-min. Calibrated
-    * one past the fixture's convergence depth (sf0.1 empties its
-    * frontier in 5 rounds; the 10x skewed rehearsal takes 8) so
+    * Spark jobs: the seeded init is one job (plus one per exchange of
+    * the `pairs` plan, if it has any), and every round is ONE job — two
+    * stages, or four from [[HalveFromRound]] on. The corpus's ids then
+    * take one shuffle to the labels' partitions, inside the first of
+    * the three jobs the final `doc_id` sort runs (range sampling,
+    * shuffle, result). Rounds needed ≈ component diameter; near-dup
+    * clusters are clone groups, so the frontier empties in a few rounds.
+    *
+    * Convergence signal: the job that materializes a round also counts
+    * that round's moved nodes — each partition returns its tally as the
+    * job's result. The scheduler keeps exactly one result per
+    * partition, so a retried or speculative task can neither count a
+    * node twice nor drop one, and the loop ends only after a round in
+    * which no node moved. No separate `count()` job runs, at init or in
+    * the loop. */
+  def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val labels = labelRounds(pairs)._1
+    val ids = docs.select(col("doc_id").cast("long")).rdd
+      .keyBy(_.get(0)).partitionBy(labels.partitioner.get)
+    val rows = ids.zipPartitions(labels) { (ds, ls) =>
+      val label = ls.toMap
+      ds.map { case (_, r) =>
+        if (r.isNullAt(0)) Row(null, null)
+        else Row(r.getLong(0), label.getOrElse(r.getLong(0), r.getLong(0)))
+      }
+    }
+    val nullable = docs.schema("doc_id").nullable
+    docs.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("doc_id", LongType, nullable),
+        StructField("cluster_id", LongType, nullable))))
+      .orderBy("doc_id")
+  }
+
+  /** First propagation round at which pointer-halving engages (see
+    * [[halve]]): below it, rounds are pure neighbor-min.
+    * Calibrated one past the fixture's convergence depth (sf0.1 empties
+    * its frontier in 5 rounds; the 10x skewed rehearsal takes 8) so
     * shallow real-world graphs pay nothing and only genuinely deep
     * chains buy the compression. */
   val HalveFromRound = 6
 
-  def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("id"), col("doc_b").as("nbr"))
-      .unionByName(pairs.select(col("doc_b").as("id"), col("doc_a").as("nbr")))
-      .localCheckpoint(true)
-    // Seeded round 0 (r15, guide §1.2: remove passes): labels start at
-    // least(id, min neighbor) — bit-identical to what the old identity
-    // init produced AFTER its first propagate round (frontier = identity
-    // labels ⇒ nbr_min = min neighbor id), so one full
-    // propagate+checkpoint+count round is folded into the init aggregate
-    // at no extra shuffle (the groupBy replaces the old distinct()).
-    var labels = edges.groupBy("id").agg(min(col("nbr")).as("nbr_min"))
-      .select(col("id"), least(col("id"), col("nbr_min")).as("label"))
-      .localCheckpoint(true)
+  /** One endpoint's propagation state. */
+  private final case class Node(label: Long, nbrs: Array[Long], moved: Boolean)
+
+  /** The converged (id, label) of every pair endpoint, and the number of
+    * propagation rounds run after the seeded init: 0 only when the init
+    * moved no node (no pairs, or only self-pairs), and the last round
+    * is always one in which nothing moved. */
+  private[graft] def labelRounds(pairs: DataFrame): (RDD[(Long, Long)], Int) = {
+    val ends = pairs.select(col("doc_a"), col("doc_b")).rdd.flatMap { r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) Nil
+      else Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0))
+    }
+    // the pairs' own (AQE-sized) partition count sizes the state
+    val part = new HashPartitioner(math.max(1, ends.getNumPartitions))
+    // materializes `state` in one job, which also returns its moved count
+    def settle(state: RDD[(Long, Node)]): Long = {
+      state.localCheckpoint()
+      state.sparkContext.runJob(state,
+        (it: Iterator[(Long, Node)]) => it.count(_._2.moved).toLong).sum
+    }
+    // Seeded round 0: labels start at least(id, min neighbour) and the
+    // node has moved iff that beat its own id, in the one aggregate
+    // that also collects (and deduplicates) the neighbour lists.
+    var state = ends.aggregateByKey(Set.empty[Long], part)(_ + _, _ ++ _)
+      .mapPartitions(_.map { case (id, ns) =>
+        val m = ns.min
+        id -> Node(math.min(id, m), ns.toArray, m < id)
+      }, preservesPartitioning = true)
+    var moved = settle(state)
     // Runs to CONVERGENCE (empty frontier), not to an iteration cap:
     // min-propagation is monotone over a finite label set, so every
     // round either strictly lowers at least one label or empties the
     // frontier — termination is guaranteed, and a cap would silently
     // return unconverged labels on a chain longer than the cap
     // (breaking transitive-closure parity with the oracle).
-    //
-    // Each round is propagate + POINTER-HALVING: after taking the min
-    // over neighbor labels, every node jumps to its label's label.
-    // Labels only ever decrease and always name a node of the same
-    // component, so the jump is sound (label(label(x)) <= label(x) by
-    // the start-at-own-id invariant) and it compresses label-chain
-    // distances geometrically: convergence in O(log(chain)) rounds
-    // instead of O(chain) — on a 10x near-dup fixture this halves the
-    // round count; on a crawl with million-doc mirror chains it is the
-    // difference between ~20 and ~10^6-round termination. Fixpoint of
-    // the propagate phase alone already implies labels are constant on
-    // each component (for every edge (u,v): label(u) <= label(v) and
-    // vice versa), so the halving never changes WHERE the loop stops,
-    // only how fast it gets there.
-    //
-    // The jump phase starts at round [[HalveFromRound]]: a shallow
-    // graph (clone groups, short chains) converges before it ever pays
-    // the extra join, while a deep chain — the case where linear rounds
-    // would hurt at corpus scale — still gets geometric compression
-    // from that round on. Frontiers that survive that many rounds are
-    // exactly the ones with real depth.
-    // round 0's announcement is folded into the seeded init: only nodes
-    // whose seeded label improved on their id can have anything new to
-    // tell a neighbor (an unchanged label was already known to all)
-    var frontier = labels.filter(col("label") < col("id"))
-    var frontierSize = frontier.count()
     var round = 1
-    while (frontierSize > 0) {
+    while (moved > 0) {
       round += 1
-      val nbrMin = edges
-        .join(frontier.select(col("id").as("nbr"), col("label").as("nbr_label")), "nbr")
-        .groupBy("id").agg(min(col("nbr_label")).as("nbr_min"))
-      val prop = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-          (col("nbr_min") < col("label")).as("moved"))
-        .localCheckpoint(true)
-      val next = if (round < HalveFromRound) prop else prop
-        .join(prop.select(col("id").as("label"), col("label").as("gl")),
-          Seq("label"), "left")
-        .select(col("id"),
-          coalesce(col("gl"), col("label")).as("label"),
-          (col("moved") || coalesce(col("gl") < col("label"), lit(false)))
-            .as("moved"))
-        .localCheckpoint(true)
-      frontier = next.filter(col("moved")).select("id", "label")
-      frontierSize = frontier.count()
-      labels = next.select("id", "label")
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[dedupClusters] round $round frontier=$frontierSize")
+      val inbox = state.flatMap { case (_, n) =>
+        if (n.moved) n.nbrs.iterator.map(_ -> n.label) else Iterator.empty
+      }.reduceByKey(part, math.min(_, _))
+      val prop = state.zipPartitions(inbox, preservesPartitioning = true) {
+        (nodes, msgs) =>
+          val best = msgs.toMap
+          nodes.map { case (id, n) =>
+            val m = best.getOrElse(id, n.label)
+            id -> n.copy(label = math.min(n.label, m), moved = m < n.label)
+          }
+      }
+      val next = if (round < HalveFromRound) prop else halve(prop, part)
+      moved = settle(next)
+      state = next
     }
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"))
-      .orderBy("doc_id")
+    (state.mapValues(_.label), round - 1)
+  }
+
+  /** POINTER-HALVING after a propagate step: every node jumps to its
+    * label's label (one shuffle asks the label's node, one brings the
+    * answer back). Labels only ever decrease and always name a node of
+    * the same component, so the jump is sound (label(label(x)) <=
+    * label(x) by the start-at-own-id invariant) and it compresses
+    * label-chain distances geometrically: convergence in
+    * O(log(chain)) rounds instead of O(chain) — on a crawl with
+    * million-doc mirror chains it is the difference between ~20 and
+    * ~10^6-round termination. Fixpoint of the propagate phase alone
+    * already implies labels are constant on each component, so the
+    * halving never changes WHERE the loop stops, only how fast it gets
+    * there. It starts at [[HalveFromRound]]: a shallow graph (clone
+    * groups, short chains) converges before it ever pays the extra
+    * shuffles, while a deep chain still gets geometric compression. */
+  private def halve(prop: RDD[(Long, Node)], part: HashPartitioner): RDD[(Long, Node)] = {
+    val asks = prop.flatMap { case (id, n) =>
+      if (n.label < id) Iterator(n.label -> id) else Iterator.empty
+    }.partitionBy(part)
+    val answers = prop.zipPartitions(asks) { (nodes, qs) =>
+      val label = nodes.map { case (id, n) => id -> n.label }.toMap
+      qs.map { case (l, x) => x -> label.getOrElse(l, l) }
+    }.partitionBy(part)
+    prop.zipPartitions(answers, preservesPartitioning = true) { (nodes, as) =>
+      val jump = as.toMap
+      nodes.map { case (id, n) =>
+        jump.get(id).filter(_ < n.label)
+          .fold(id -> n)(g => id -> n.copy(label = g, moved = true))
+      }
+    }
   }
 
   /** q33: cluster assignment over the MinHash-LSH candidate pairs. */
   def minhashClusters(docs: DataFrame): DataFrame =
-    dedupClusters(docs, minhashPairs(docs))
+    dedupClusters(docs, candidatePairs(docs))
 
   /** Oracle: transitive closure by recursive CTE over the same pair
     * relation (min reachable id, self included). */
@@ -959,7 +1006,7 @@ object Dedup {
     * whole report is the cluster relation joined back to doc metadata +
     * one aggregation — at corpus scale it rides the clustering pass. */
   def crossSourceClusters(docs: DataFrame): DataFrame = {
-    val clusters = dedupClusters(docs, minhashPairs(docs))
+    val clusters = minhashClusters(docs)
     clusters
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .groupBy("cluster_id")
