@@ -196,7 +196,7 @@ object ScaleRehearsal {
   /** Recursive delete that never follows symlinks (a fixture dir holds
     * links into the base testdata — deleting THROUGH one would destroy
     * the source). */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, Path, FileVisitResult, SimpleFileVisitor}
     import java.nio.file.attribute.BasicFileAttributes
     Files.walkFileTree(root, new SimpleFileVisitor[Path] {

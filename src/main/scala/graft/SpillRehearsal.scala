@@ -135,17 +135,7 @@ object SpillRehearsal {
     if (java.nio.file.Files.isRegularFile(marker) &&
         new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == want)
       return
-    if (java.nio.file.Files.exists(p)) {
-      import java.nio.file._
-      Files.walkFileTree(p, new SimpleFileVisitor[Path] {
-        override def visitFile(f: Path, a: attribute.BasicFileAttributes) = {
-          Files.delete(f); FileVisitResult.CONTINUE
-        }
-        override def postVisitDirectory(d: Path, e: java.io.IOException) = {
-          Files.delete(d); FileVisitResult.CONTINUE
-        }
-      })
-    }
+    if (java.nio.file.Files.exists(p)) ScaleRehearsal.deleteTree(p)
     java.nio.file.Files.createDirectories(p)
     val reps = explode(sequence(lit(0), lit(FactsCopies - 1))).as("rep")
     graft.Tables.lineitem(spark, baseDir)

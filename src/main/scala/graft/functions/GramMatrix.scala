@@ -29,10 +29,6 @@ object GramMatrix {
   /** Buffer length for dimension d. */
   def bufLen(d: Int): Int = 1 + d + d * (d + 1) / 2
 
-  /** Offset of gram(i, j), i <= j, within the buffer. */
-  def gramOffset(d: Int, i: Int, j: Int): Int =
-    1 + d + i * d - i * (i - 1) / 2 + (j - i)
-
   /** Aggregator over int-quantized embedding arrays. The dimension is
     * fixed per corpus; a row with a different length fails loudly
     * rather than silently mis-indexing. */

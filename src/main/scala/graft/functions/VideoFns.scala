@@ -75,9 +75,6 @@ object VideoFns {
       (if (minutes != 0) s"$minutes minute(s) " else "") + secStr + " second(s)"
   }
 
-  def hmsMicros(us: Double, concise: Boolean): String = hms(us / 1e6, concise)
-  def hmsNanos(ns: Double, concise: Boolean): String = hms(ns / 1e9, concise)
-
   // ------------------------------------------------------------ F9
   /** Filename (sans extension, sans path) → (title, releaseYear)
     * (video_metadata_db.py:1073-1103). Exact partition() semantics,

@@ -118,17 +118,12 @@ object Skew {
     }
   }
 
-  /** Output DIRS cached per fixture (one tree in /tmp per fixture,
-    * registered for exit cleanup) — but the join itself re-executes on
+  /** One output DIR per fixture — but the join itself re-executes on
     * EVERY call, overwriting that dir. Caching the result instead would
     * make bench repetitions time a tiny parquet read-back while
     * reporting it as the runtime AQE skew split. */
-  private val skewOutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def skewJoinStats(spark: SparkSession, dir: String): DataFrame = {
-    val out = skewOutCache.computeIfAbsent(dir,
-      _ => graft.TempDirs.create("graft-skewjoin").toString)
+    val out = graft.TempDirs.staged("skewjoin", dir)(_ => ()).toString
     // the frame is materialized INSIDE the conf window — a lazily
     // returned frame would execute after the restore, under the
     // session's normal confs

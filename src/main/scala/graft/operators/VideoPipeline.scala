@@ -40,13 +40,11 @@ object VideoPipeline {
     * of 1 is plain sequential forking.
     */
   def probeStage(listing: DataFrame, prober: Prober,
-                 probePartitions: Option[Int] = None,
                  probeConcurrency: Int = 1): DataFrame = {
     val spark = listing.sparkSession
     import spark.implicits._
-    val src = probePartitions.fold(listing)(n => listing.repartition(n))
     val probed: Dataset[(FileListing, ProbeResult)] =
-      src.select("path", "sizeBytes", "volume").as[FileListing]
+      listing.select("path", "sizeBytes", "volume").as[FileListing]
         .mapPartitions { it =>
           // duplicate: one stream feeds the pool, the other re-pairs
           // results with their listing rows (lockstep — the buffer
@@ -108,10 +106,8 @@ object VideoPipeline {
     * with [[failures]] (A5).
     */
   def build(listing: DataFrame, srtListing: DataFrame, prober: Prober,
-            probePartitions: Option[Int] = None,
             probeConcurrency: Int = 1): DataFrame = {
-    val probed = probeStage(scanFilters(listing), prober, probePartitions,
-      probeConcurrency)
+    val probed = probeStage(scanFilters(listing), prober, probeConcurrency)
     val ok = probed.filter(col("probe_error").isNull)
     withSubtitles(deriveColumns(ok), srtListing)
   }

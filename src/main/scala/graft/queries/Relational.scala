@@ -1331,9 +1331,6 @@ object Relational {
       |ORDER BY from_type, to_type""".stripMargin
 
   // ---------------------------------------------- retraction IVM (q159)
-  private val retractSnapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q159: RETRACTION — the negative half of incremental view
     * maintenance (q90 proves additions fold in; this proves DELETIONS
     * fold OUT), and the mechanics behind a "right to be forgotten"
@@ -1353,13 +1350,11 @@ object Relational {
   def q159RetractionIvm(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"),
       round(col("value") * 100).cast("long").as("cents"))
-    val snapPath = retractSnapCache.computeIfAbsent(dir, { _ =>
-      val p = graft.TempDirs.create("graft-retract-snap").toString
+    val snapPath = graft.TempDirs.staged("retract-snap", dir) { p =>
       ev.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+        .write.mode("overwrite").parquet(p.toString)
+    }.toString
     val minU = ev.agg(min(col("user_id")).as("mu"))
     val delta = ev.crossJoin(broadcast(minU))
       .filter(col("user_id") === col("mu"))

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Path
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,19 +48,18 @@ object Compaction {
     * shape this operator exists to repair. */
   val FragmentSplits = 8
 
-  private val rootCache = new ConcurrentHashMap[String, Path]()
+  /** Write documents into `root/v0`, deliberately FRAGMENTED (many
+    * small files per `source=` dir). */
+  private def writeFragmentedV0(spark: SparkSession, dir: String,
+                                root: Path): Unit =
+    Tables.documents(spark, dir)
+      .repartition(FragmentSplits)
+      .write.mode("overwrite").partitionBy("source")
+      .parquet(root.resolve("v0").toString)
 
-  /** Versioned table root whose v0 is deliberately FRAGMENTED (many
-    * small files per `source=` dir); idempotent per fixture. */
+  /** Versioned table root whose v0 is fragmented. */
   def fragmentedRoot(spark: SparkSession, dir: String): Path =
-    rootCache.computeIfAbsent(dir, { _ =>
-      val root = graft.TempDirs.create("graft-compact")
-      Tables.documents(spark, dir)
-        .repartition(FragmentSplits)
-        .write.mode("overwrite").partitionBy("source")
-        .parquet(root.resolve("v0").toString)
-      root
-    })
+    graft.TempDirs.staged("compact", dir)(writeFragmentedV0(spark, dir, _))
 
   /** Last-write-wins version resolution — q98's lookup at id = ∞. */
   def latestVersion(root: Path): Path = Path.of(
@@ -96,16 +94,14 @@ object Compaction {
     * compactor sizes to a byte target — a fixed fixture constant would
     * mis-size at any other scale (at 10x the fixture, 10-records-a-file
     * would FRAGMENT the table it is meant to repair). */
-  private val rowsCache = new ConcurrentHashMap[String, java.lang.Long]()
-
   def compactedDocs(spark: SparkSession, dir: String): DataFrame = {
     val root = fragmentedRoot(spark, dir)
     // Sizing input memoized per fixture (r15): compaction preserves
     // content, so every version's row count equals v0's — the count is
     // table METADATA for the sizing heuristic, not part of the gated
     // work (the real compact + full read-back still run every call).
-    val rows: Long = rowsCache.computeIfAbsent(dir, _ =>
-      Long.box(spark.read.parquet(latestVersion(root).toString).count()))
+    val rows = graft.TempDirs.memo("compact-rows", dir)(
+      spark.read.parquet(latestVersion(root).toString).count())
     compact(spark, root, math.max(TargetRecords, rows / 100))
     spark.read.parquet(latestVersion(root).toString)
       .select("doc_id", "text", "lang", "source", "n_chars")
@@ -146,21 +142,12 @@ object Compaction {
     doomed
   }
 
-  private val vacuumRootCache = new ConcurrentHashMap[String, Path]()
-
   /** q142's own versioned tree — DELIBERATELY not [[fragmentedRoot]]:
     * vacuum destroys old versions, and q115's gate/spec assert v0 stays
     * byte-untouched on ITS tree; a shared root would make the two
     * maintenance ops' results depend on execution order. */
   def vacuumRoot(spark: SparkSession, dir: String): Path =
-    vacuumRootCache.computeIfAbsent(dir, { _ =>
-      val root = graft.TempDirs.create("graft-vacuum")
-      Tables.documents(spark, dir)
-        .repartition(FragmentSplits)
-        .write.mode("overwrite").partitionBy("source")
-        .parquet(root.resolve("v0").toString)
-      root
-    })
+    graft.TempDirs.staged("vacuum", dir)(writeFragmentedV0(spark, dir, _))
 
   /** The q142 gate: compact (so at least two versions exist and, from
     * the second call on, the pass has something to reclaim), vacuum to
@@ -179,8 +166,6 @@ object Compaction {
   }
 
   // ------------------------------------------------- q144 time travel
-  private val travelRootCache = new ConcurrentHashMap[String, Path]()
-
   /** Versioned tree with real HISTORY — unlike q115/q142's trees, the
     * versions here differ in CONTENT: v0 is the full corpus, v1 is a
     * copy-on-write DELETE of the lexicographically-first source (the
@@ -188,16 +173,14 @@ object Compaction {
     * the oracle can mirror it). v0 is only ever read — the delete
     * writes a new version, never touches history. */
   def travelRoot(spark: SparkSession, dir: String): Path =
-    travelRootCache.computeIfAbsent(dir, { _ =>
-      val root = graft.TempDirs.create("graft-travel")
+    graft.TempDirs.staged("travel", dir) { root =>
       val docs = Tables.documents(spark, dir)
       docs.write.mode("overwrite").parquet(root.resolve("v0").toString)
       val doomed = docs.agg(min(col("source"))).head().getString(0)
       spark.read.parquet(root.resolve("v0").toString)
         .filter(col("source") =!= doomed)
         .write.mode("overwrite").parquet(root.resolve("v1").toString)
-      root
-    })
+    }
 
   /** Read the table AS OF a pinned version — the rollback / audit /
     * reproduce-last-week's-training-set read. Same resolver family as
@@ -268,19 +251,12 @@ object Compaction {
       |ORDER BY version""".stripMargin
 
   // ---------------------------------------------- q160 orphan-file GC
-  private val orphanRootCache = new ConcurrentHashMap[String, Path]()
-
   /** q160's own versioned tree (two live versions via a real compact). */
   def orphanRoot(spark: SparkSession, dir: String): Path =
-    orphanRootCache.computeIfAbsent(dir, { _ =>
-      val root = graft.TempDirs.create("graft-orphangc")
-      Tables.documents(spark, dir)
-        .repartition(FragmentSplits)
-        .write.mode("overwrite").partitionBy("source")
-        .parquet(root.resolve("v0").toString)
+    graft.TempDirs.staged("orphangc", dir) { root =>
+      writeFragmentedV0(spark, dir, root)
       compact(spark, root)
-      root
-    })
+    }
 
   /** Plant the crash debris a long-running table accumulates: a failed
     * job's `_temporary` attempt tree at the root, a half-published
@@ -344,8 +320,6 @@ object Compaction {
   }
 
   // ------------------------------------- q178 multi-table transaction
-  private val txnRootCache = new ConcurrentHashMap[String, Path]()
-
   /** Write one transaction's DATA for both tables (no commit yet). */
   private def writeTxnData(spark: SparkSession, root: Path, n: Long,
                            docs: DataFrame): Unit = {
@@ -388,8 +362,7 @@ object Compaction {
     * renamed). Rebuilt on EVERY gate call — the crash must be replanted
     * per repetition (q160's bench-honesty lesson). */
   private[graft] def txnRoot(spark: SparkSession, dir: String): Path = {
-    val root = txnRootCache.computeIfAbsent(dir,
-      _ => graft.TempDirs.create("graft-txn"))
+    val root = graft.TempDirs.staged("txn", dir)(_ => ())
     graft.TempDirs.deleteTree(root.resolve("manifests"))
     val docs = Tables.documents(spark, dir)
     val doomed = docs.agg(min(col("source"))).head().getString(0)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,22 +36,21 @@ object DynamicOverwrite {
   /** The partition whose ingest is re-run. */
   val BackfillSource = "src3"
 
-  private val rootCache = new ConcurrentHashMap[String, Path]()
+  def tableRoot(spark: SparkSession, dir: String): Path =
+    backfilled(spark, dir)._1
 
   /** Build the partitioned table + run the backfill once per fixture;
-    * [[siblingStamps]] records (file, mtime) of every non-backfill
-    * partition file between the two writes so the spec can prove
+    * the stamps are (file, mtime) of every non-backfill partition file
+    * between the two writes, so [[siblingStamps]] can prove
     * non-interference. */
-  private val stampCache =
-    new ConcurrentHashMap[String, Map[String, Long]]()
-
-  def tableRoot(spark: SparkSession, dir: String): Path =
-    rootCache.computeIfAbsent(dir, { _ =>
+  private def backfilled(spark: SparkSession,
+                         dir: String): (Path, Map[String, Long]) =
+    graft.TempDirs.memo("dynoverwrite", dir) {
       val root = graft.TempDirs.create("graft-dynoverwrite")
       val docs = Tables.documents(spark, dir)
       docs.write.partitionBy("source").mode("overwrite")
         .parquet(root.toString)
-      stampCache.put(dir, listStamps(root))
+      val stamps = listStamps(root)
       // the corrected re-run of ONE source's ingest: dynamic mode scopes
       // the overwrite to the partitions present in the job's output.
       // Keep predicate: even row-index WITHIN the source ((doc_id div
@@ -68,8 +66,8 @@ object DynamicOverwrite {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
-      root
-    })
+      (root, stamps)
+    }
 
   /** (relative path -> mtime) of every parquet file OUTSIDE the
     * backfilled partition dir. */
@@ -88,8 +86,8 @@ object DynamicOverwrite {
   /** Spec hook: stamps recorded between build and backfill vs now. */
   private[graft] def siblingStamps(spark: SparkSession, dir: String)
       : (Map[String, Long], Map[String, Long]) = {
-    val root = tableRoot(spark, dir)
-    (stampCache.get(dir), listStamps(root))
+    val (root, stamps) = backfilled(spark, dir)
+    (stamps, listStamps(root))
   }
 
   /** Spec hook: run the IDENTICAL backfill job a second time against

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,19 +29,14 @@ import graft.Tables
   */
 object Jsonl {
 
-  /** One staged export per fixture dir per JVM (bench reps and the
-    * verify run share it; the export is deterministic so reuse is
-    * safe). */
-  private val staged = new ConcurrentHashMap[String, Path]()
-
-  /** Write `documents` as JSONL into a temp dir, return the dir. */
+  /** Write `documents` as JSONL into a temp dir, return the dir (the
+    * export is deterministic, so bench reps and the verify run share
+    * it). */
   def export(spark: SparkSession, dir: String): Path =
-    staged.computeIfAbsent(dir, { _ =>
-      val out = graft.TempDirs.create("graft-jsonl-export")
+    graft.TempDirs.staged("jsonl-export", dir) { out =>
       Tables.documents(spark, dir)
         .write.mode("overwrite").json(out.resolve("documents").toString)
-      out
-    })
+    }
 
   /** q81: the full write → read round trip, schema pinned. */
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,12 +27,9 @@ object Partitioned {
   /** The sources the gate keeps — 2 of the fixture's 20. */
   val KeepSources: Seq[String] = Seq("src3", "src7")
 
-  private val layoutCache = new ConcurrentHashMap[String, String]()
-
-  /** Write documents partitioned by source; idempotent per fixture dir. */
+  /** Write documents partitioned by source. */
   def partitionedLayout(spark: SparkSession, dir: String): String =
-    layoutCache.computeIfAbsent(dir, { _ =>
-      val out = graft.TempDirs.create("graft-docs-by-source")
+    graft.TempDirs.staged("docs-by-source", dir) { out =>
       // repartition on the partition column first: one shuffle partition
       // per source → exactly one file per partition directory, whatever
       // the input split count (also the at-scale idiom — partitionBy on
@@ -43,8 +39,7 @@ object Partitioned {
         .write.mode("overwrite")
         .partitionBy("source")
         .parquet(out.toString)
-      out.toString
-    })
+    }.toString
 
   /** Pruned scan + aggregate over the partitioned layout. The filter is
     * on the PARTITION column, so it resolves during file listing —
@@ -76,21 +71,17 @@ object Partitioned {
     * 7 of the fixture's 20). */
   val DppGroup = 1
 
-  private val dimCache = new ConcurrentHashMap[String, String]()
-
   /** Tiny source-dimension table (source, grp), written as its OWN
     * parquet relation: the q107 fact prune can then only come from the
     * join — Catalyst cannot fold the dim filter into a static
     * partition predicate the way q92's literal IN-list folds. */
   def dimLayout(spark: SparkSession, dir: String): String =
-    dimCache.computeIfAbsent(dir, { _ =>
-      val out = graft.TempDirs.create("graft-source-dim")
+    graft.TempDirs.staged("source-dim", dir) { out =>
       Tables.documents(spark, dir).select("source").distinct()
         .withColumn("grp", expr("CAST(substring(source, 4) AS INT) % 3"))
         .coalesce(1)
         .write.mode("overwrite").parquet(out.toString)
-      out.toString
-    })
+    }.toString
 
   /** q107: JOIN-DRIVEN dynamic partition pruning — the 100 TB fact-table
     * pattern. q92 proves the static case (a literal predicate on the

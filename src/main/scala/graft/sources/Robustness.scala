@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, StandardOpenOption}
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,13 +30,10 @@ import graft.Tables
 object Robustness {
 
   // ---------------------------------------------------------- q102
-  private val evolvedCache = new ConcurrentHashMap[String, Path]()
-
   /** Two-batch layout: batch 1 (even doc_ids) lacks lang/n_chars —
     * the "old writer"; batch 2 (odd doc_ids) has the full schema. */
   def evolvedLayout(spark: SparkSession, dir: String): Path =
-    evolvedCache.computeIfAbsent(dir, { _ =>
-      val out = graft.TempDirs.create("graft-evolved")
+    graft.TempDirs.staged("evolved", dir) { out =>
       val docs = Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "source")
@@ -45,8 +41,7 @@ object Robustness {
       docs.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text", "source", "lang", "n_chars")
         .write.mode("overwrite").parquet(out.resolve("b2").toString)
-      out
-    })
+    }
 
   /** Merged-schema read + per-source accounting. Rows from the old
     * batch carry null lang/n_chars; counts and sums must reflect that
@@ -75,14 +70,11 @@ object Robustness {
   // ---------------------------------------------------------- q103
   val CorruptLines = 7
 
-  private val saltedCache = new ConcurrentHashMap[String, Path]()
-
   /** JSONL export of documents plus a shard of deterministic malformed
     * lines (unterminated objects, bare text, truncated escapes). */
   def saltedJsonl(spark: SparkSession, dir: String): Path =
-    saltedCache.computeIfAbsent(dir, { _ =>
+    graft.TempDirs.staged("jsonl-salted", dir) { out =>
       val src = Jsonl.export(spark, dir).resolve("documents")
-      val out = graft.TempDirs.create("graft-jsonl-salted")
       val dst = out.resolve("data")
       Files.createDirectories(dst)
       import scala.jdk.CollectionConverters._
@@ -97,8 +89,7 @@ object Robustness {
       Files.write(dst.resolve("part-zz-corrupt.json"),
         bad.mkString("", "\n", "\n").getBytes("UTF-8"),
         StandardOpenOption.CREATE)
-      out
-    })
+    }
 
   /** PERMISSIVE read of the salted export: good rows bucket by source,
     * malformed lines bucket as CORRUPT via `_corrupt_record`. Nothing

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -74,8 +72,6 @@ object ZOrder {
       s"(shiftleft((ub div ${1 << i}) % 2, ${2 * i + 1})" +
       s" + shiftleft((db div ${1 << i}) % 2, ${2 * i}))").mkString(" + ")
 
-  private val layoutCache = new ConcurrentHashMap[String, (String, String)]()
-
   /** Write the two layouts once per fixture: z-clustered and
     * user-linear (the comparison baseline). The min/max range scan is
     * the tiny pre-pass every OPTIMIZE job runs to size its buckets.
@@ -90,7 +86,7 @@ object ZOrder {
     * identical runs). Static cells make the layout — and the pruning
     * numbers — a pure function of the data. */
   def layouts(spark: SparkSession, dir: String): (String, String) =
-    layoutCache.computeIfAbsent(dir, { _ =>
+    graft.TempDirs.memo("zorder", dir) {
       val ev = dims(spark, dir)
       val mm = ev.agg(min("user_id"), max("user_id"), min("day"), max("day")).head()
       val (ulo, uhi, dlo, dhi) =
@@ -110,7 +106,7 @@ object ZOrder {
         .repartition(NFiles, col("cell"))
         .write.partitionBy("cell").mode("overwrite").parquet(linPath)
       (zPath, linPath)
-    })
+    }
 
   /** The planning-side stats index: per-file min/max of both dims (the
     * txn-log analogue, collected to the driver — O(#files) rows). */

@@ -41,13 +41,6 @@ case class BandLink(doc_id: Long, band: Int, partner: Option[Long])
   */
 object StreamingGate {
 
-  /** Staged dirs are immutable once built — cache per source dir so
-    * repeated gate runs (bench reps, spec + verify in one JVM) skip the
-    * copy + max-scan. Checkpoints are NOT cached: every run gets a
-    * fresh one (offsets/state must never leak between runs). */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
   /** MACHINERY-FLOOR mode (round-14 stretch): with the
     * `graft.stream.floor` system property set to `on`, every staging
     * site sources a ONE-ROW canonical fixture instead of the real one —
@@ -59,36 +52,35 @@ object StreamingGate {
     * gate runs unmodified. Only [[graft.GateFloor]] sets it, in a
     * dedicated JVM with a redirected IndexCatalog root (a floor-built
     * register under the real fixture's fingerprint would poison the
-    * real catalog). Every staging cache keys on the mode so floor and
+    * real catalog). Every staging memo keys on the mode so floor and
     * real stagings never alias. */
   private def floorMode: Boolean =
     sys.props.get("graft.stream.floor").contains("on")
   private def floorKey: String = if (floorMode) "#floor" else ""
 
+  /** Checkpoints are NOT staged: every run gets a fresh one
+    * (offsets/state must never leak between runs). */
   private def stageWithSentinel(spark: SparkSession, dir: String,
                                 copies: Int = 1): Path =
-    stagedCache.computeIfAbsent(s"$dir#$copies$floorKey",
-      _ => buildStagedDir(spark, dir, copies))
-
-  private val canonicalCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+    graft.TempDirs.staged("stream-gate", s"$dir#$copies$floorKey")(
+      writeStagedDir(spark, dir, copies, _))
 
   /** The events fixture as ONE parquet file in the long-ns raw encoding
     * ([[EventsStreaming.rawSchema]]) every staging site copies from. The
     * fixture has shipped `ts` both as INT64 nanos (usable verbatim) and
     * as µs timestamps; rewriting the latter ONCE per JVM keeps every
     * sentinel write, `rawSchema` readback and replay mtime game
-    * encoding-independent. Cached per source dir; the rewrite is one
-    * coalesce(1) job over a fixture-sized file. */
+    * encoding-independent. The rewrite is one coalesce(1) job over a
+    * fixture-sized file. */
   private[graft] def canonicalEventsFile(spark: SparkSession, dir: String): Path = {
     // the returned path may be the ORIGINAL fixture in INT64-nanos
     // encoding, which only reads back under this conf — set it on
     // EVERY call for the CALLER's session, not just inside the miss
-    // lambda: the cache is JVM-global but the conf is per-session, so
-    // a second SparkSession hitting a warm cache would otherwise read
+    // build: the memo is JVM-global but the conf is per-session, so
+    // a second SparkSession hitting a warm memo would otherwise read
     // the nanos file without the conf and crash
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    canonicalCache.computeIfAbsent(s"$dir$floorKey", { _ =>
+    graft.TempDirs.memo("events-canon", s"$dir$floorKey") {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val canon0 =
         if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
@@ -123,7 +115,7 @@ object StreamingGate {
         canon0.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         onlyPartFile(tmp)
       }
-    })
+    }
   }
 
   /** The single .parquet part file of `dir`, with the directory stream
@@ -139,11 +131,15 @@ object StreamingGate {
   /** One-file parquet staging: write `df` as a single part, move it to
     * `dst`, pin the mtime (the replay-order lever every gate plays).
     * ONE definition for the staging sites that used to copy-paste the
-    * write/find/move/set-mtime sequence. */
+    * write/find/move/set-mtime sequence. The scratch tree (the
+    * writer's `_SUCCESS` and `.crc` husk) is deleted once the part has
+    * moved out. */
   private def writeSingleParquet(df: DataFrame, dst: Path, mtimeMs: Long): Unit = {
     val tmp = graft.TempDirs.create("graft-stage-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Files.move(onlyPartFile(tmp), dst, StandardCopyOption.REPLACE_EXISTING)
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      Files.move(onlyPartFile(tmp), dst, StandardCopyOption.REPLACE_EXISTING)
+    } finally graft.TempDirs.deleteTree(tmp)
     Files.setLastModifiedTime(dst, FileTime.fromMillis(mtimeMs))
   }
 
@@ -166,17 +162,13 @@ object StreamingGate {
 
   /** Copy the events fixture (`copies` identical files — the dedup gate
     * stages it twice to manufacture a duplicated arrival) + write the
-    * sentinel row into a fresh temp dir, mtimes ordered (fixture copies
+    * sentinel row into `staged`, mtimes ordered (fixture copies
     * oldest-first, sentinel new) so `latestFirst = false` +
     * `maxFilesPerTrigger = 1` replays real data in arrival order with
     * the sentinel last. */
-  private def buildStagedDir(spark: SparkSession, dir: String,
-                             copies: Int): Path = {
+  private def writeStagedDir(spark: SparkSession, dir: String,
+                             copies: Int, staged: Path): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // TempDirs, not deleteOnExit: File.deleteOnExit is a silent no-op
-    // on non-empty directories, so these fixture copies would strand in
-    // /tmp; TempDirs' shutdown hook deletes recursively
-    val staged = graft.TempDirs.create("graft-stream-gate")
     val fixture = staged.resolve("00-events.parquet")
     for (c <- 0 until copies) {
       val f = staged.resolve(f"$c%02d-events.parquet")
@@ -194,7 +186,6 @@ object StreamingGate {
     // windows to finalize) — use epoch rather than NPE on the null max
     val maxNs = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     writeSentinel(spark, staged, maxNs)
-    staged
   }
 
   /** readStream over the staged dir, ts normalized exactly like the
@@ -205,7 +196,7 @@ object StreamingGate {
     * final watermark, not on batch boundaries). */
   private def stream(spark: SparkSession, staged: Path,
                      filesPerTrigger: Option[Int]): DataFrame = {
-    // set at the READ site, not in buildStagedDir: the staged-dir cache
+    // set at the READ site, not in writeStagedDir: the staged-dir memo
     // is JVM-global but this conf is per-SparkSession — a second
     // session hitting the cache must still get the nanos read path
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -485,18 +476,14 @@ object StreamingGate {
     *   4. the watermark sentinel.
     * Splitting by TIME (not id) keeps replay order aligned with event
     * time, so the delta's first delivery is never late-dropped by the
-    * watermark the redelivery batch advanced. Cached per content
+    * watermark the redelivery batch advanced. Keyed on the content
     * fingerprint like the q126 staging. */
-  private val dedupStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
   private def stageDedupRedelivery(spark: SparkSession, dir: String,
                                    fingerprint: String,
                                    splitNs: Long, maxNs: Long): Path =
-    dedupStagedCache.computeIfAbsent(s"$fingerprint$floorKey", { _ =>
+    graft.TempDirs.staged("dedup-stage", s"$fingerprint$floorKey") { staged =>
       val raw = spark.read.schema(EventsStreaming.rawSchema)
         .parquet(canonicalEventsFile(spark, dir).toString)
-      val staged = graft.TempDirs.create("graft-dedup-stage")
       val now = System.currentTimeMillis()
       writeSingleParquet(raw.filter(col("ts") <= splitNs),
         staged.resolve("00-redelivery.parquet"), now - 180000L)
@@ -509,8 +496,7 @@ object StreamingGate {
       Files.copy(deltaA, deltaB, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(deltaB, FileTime.fromMillis(now - 60000L))
       writeSentinel(spark, staged, maxNs)
-      staged
-    })
+    }
 
   /** The shared body of the two CATALOG-BOOTSTRAPPED dedup gates
     * (q58/q140): production incremental ingest does not replay history
@@ -697,7 +683,7 @@ object StreamingGate {
     *    shuffle partition per stateful operator per batch) far more
     *    than with a bounded replay's data volume; 8 instead of the
     *    session's core count. A production job sizes this to its own
-    *    key cardinality (`GRAFT_STREAM_PARTS` overrides).
+    *    key cardinality.
     *
     *  - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false` —
     *    Spark 4.1 writes a sidecar checksum file for every checkpoint
@@ -710,16 +696,12 @@ object StreamingGate {
     *    PUT rate on the latency-critical commit path. The gates'
     *    correctness story never reads them: every gate is
     *    oracle-hash-gated end-to-end and q82 proves restart recovery
-    *    directly. `GRAFT_CKPT_CHECKSUM=true` restores the default for
-    *    deployments that want storage-corruption detection on
-    *    checkpoint reads (guide §1.2: config after algorithm — this is
-    *    an I/O-op-count change, measured per batch). */
+    *    directly (guide §1.2: config after algorithm — this is an
+    *    I/O-op-count change, measured per batch). */
   private def withGateConfs[A](spark: SparkSession)(body: => A): A = {
     val wanted = Seq(
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "8"),
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"),
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       // q214's dataTriggers/lastProcTimeRun counters read
       // q.recentProgress, which Spark caps at ~100 entries by default —
       // at the 150 ms proc-time cadence a loaded run can evict the
@@ -1350,18 +1332,15 @@ object StreamingGate {
       |ORDER BY user_id""".stripMargin
 
   // ------------------------------------------------ q135 streaming SCD2
-  private val eventsTimeSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
   /** The events fixture staged as TWO parquet halves split at the mid
     * timestamp, older half first by mtime, plus the +1-day sentinel:
     * under `maxFilesPerTrigger = 1` every user's interval state machine
     * genuinely SUSPENDS at the batch boundary and resumes from the state
     * store (a run straddling the time split must re-read its open run),
     * and the sentinel's watermark advance fires the event-time timeouts
-    * that flush open intervals. Immutable once built; cached per dir. */
+    * that flush open intervals. */
   private def stageEventsTimeSplit(spark: SparkSession, dir: String): Path =
-    eventsTimeSplitCache.computeIfAbsent(s"$dir$floorKey", { _ =>
+    graft.TempDirs.staged("events-timesplit", s"$dir$floorKey") { staged =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.schema(EventsStreaming.rawSchema)
         .parquet(canonicalEventsFile(spark, dir).toString)
@@ -1369,7 +1348,6 @@ object StreamingGate {
       val (mnNs, mxNs) =
         if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
       val midNs = mnNs + (mxNs - mnNs) / 2
-      val staged = graft.TempDirs.create("graft-events-timesplit")
       Seq(("00-events.parquet", col("ts") <= midNs, 120000L),
           ("01-events.parquet", col("ts") > midNs, 60000L))
         .foreach { case (name, pred, ageMs) =>
@@ -1377,8 +1355,7 @@ object StreamingGate {
             System.currentTimeMillis() - ageMs)
         }
       writeSentinel(spark, staged, mxNs)
-      staged
-    })
+    }
 
   /** q135: STREAMING SCD2 DIMENSION MAINTENANCE — the 17th gate: q132's
     * gaps-and-islands build run as a live CDC consumer through
@@ -1419,25 +1396,21 @@ object StreamingGate {
     * two micro-batches, so "earlier in the stream" coincides with
     * "smaller doc_id" and the batch oracle can express arrival order
     * relationally. The BASE half never streams: its band registers are
-    * a stored catalog index (see [[q126StreamNearDup]]). Immutable once
-    * built; cached per CONTENT FINGERPRINT, not per dir — data
-    * regenerated in place within one JVM re-stages instead of streaming
-    * a stale delta against fresh base registers (the same staleness
-    * class the round-11 fingerprint re-stat closed in IndexCatalog). */
-  private val docsStagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
+    * a stored catalog index (see [[q126StreamNearDup]]). Keyed on the
+    * CONTENT FINGERPRINT, not the dir — data regenerated in place
+    * within one JVM re-stages instead of streaming a stale delta
+    * against fresh base registers (the same staleness class the
+    * round-11 fingerprint re-stat closed in IndexCatalog). */
   private def stageDeltaDocuments(spark: SparkSession, dir: String,
                                   fingerprint: String,
                                   half: Long, q3: Long): Path =
-    docsStagedCache.computeIfAbsent(s"$fingerprint$floorKey", { _ =>
+    graft.TempDirs.staged("docs-stage", s"$fingerprint$floorKey") { staged =>
       val docs0 = graft.Tables.documents(spark, dir)
       // floor: one streamed document per staged file — machinery only
       val docs = if (floorMode)
         docs0.orderBy(col("doc_id")).limit(1).unionByName(
           docs0.orderBy(col("doc_id").desc).limit(1))
       else docs0
-      val staged = graft.TempDirs.create("graft-docs-stage")
       Seq(("00-docs.parquet",
             col("doc_id") >= half && col("doc_id") < q3, 120000L),
           ("01-docs.parquet", col("doc_id") >= q3, 60000L))
@@ -1445,8 +1418,7 @@ object StreamingGate {
           writeSingleParquet(docs.filter(pred), staged.resolve(name),
             System.currentTimeMillis() - ageMs)
         }
-      staged
-    })
+    }
 
   /** Catalog kind for q126's base band registers — version suffix
     * fingerprints the FORMAT (banding arithmetic + register layout). */
@@ -1651,11 +1623,11 @@ object StreamingGate {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = graft.TempDirs.create("graft-proctime-src")
     val ckpt = graft.TempDirs.create("graft-proctime-ckpt")
-    // Third-split staging cached per fixture (r15) — staging-cache
-    // parity with every other gate (stageWithSentinel et al.): the
-    // three delivery files and their row counts are a pure function of
-    // the fixture, so the filter+write jobs and the count aggregate run
-    // once per JVM instead of once per bench rep. Each call still
+    // Third-split staging memoized per fixture (r15), like every other
+    // gate's staging (stageWithSentinel et al.): the three delivery
+    // files and their row counts are a pure function of the fixture, so
+    // the filter+write jobs and the count aggregate run once per JVM
+    // instead of once per bench rep. Each call still
     // delivers into ITS OWN fresh source dir with fresh mtimes; the
     // move keeps per-delivery publication atomic (a wall-clock trigger
     // must never list a half-copied file).
@@ -1691,10 +1663,8 @@ object StreamingGate {
         // wall-clock cadence yields the same ≥3 data triggers and the
         // same final aggregate; the shorter interval just stops the
         // gate idling between a delivery and the trigger that sees it.
-        // A production deployment tunes this to its arrival rate
-        // (GRAFT_PROCTIME_MS overrides).
-        .trigger(Trigger.ProcessingTime(
-          sys.env.getOrElse("GRAFT_PROCTIME_MS", "150") + " milliseconds"))
+        // A production deployment tunes this to its arrival rate.
+        .trigger(Trigger.ProcessingTime("150 milliseconds"))
         .start()
       def sinkTotal(): Long = {
         val r = spark.table(name).agg(sum("n_events")).head()
@@ -1727,16 +1697,12 @@ object StreamingGate {
     spark.table(name).orderBy("event_type")
   }
 
-  private val thirdsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Map[Long, Long], IndexedSeq[Path])]()
-
   /** q214's delivery units: the fixture split into three disjoint
     * thirds by event_id mod 3, one part file each, plus each third's
-    * row count — a pure function of the fixture, built once per JVM
-    * (keyed on the floor mode like every staging cache). */
+    * row count (keyed on the floor mode like every staging memo). */
   private def stagedThirds(spark: SparkSession,
                            dir: String): (Map[Long, Long], IndexedSeq[Path]) =
-    thirdsCache.computeIfAbsent(s"$dir$floorKey", { _ =>
+    graft.TempDirs.memo("proctime-thirds", s"$dir$floorKey") {
       val all = spark.read.schema(EventsStreaming.rawSchema)
         .parquet(canonicalEventsFile(spark, dir).toString)
       val third = pmod(col("event_id"), lit(3))
@@ -1749,7 +1715,7 @@ object StreamingGate {
         f
       }
       (counts, files)
-    })
+    }
 
   /** Wall-clock-scheduled replay must land on the batch aggregate. */
   val q214Sql: String =

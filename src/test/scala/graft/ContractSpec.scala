@@ -55,4 +55,21 @@ class ContractSpec extends SparkSpec {
     } finally it.close()
     assert(offenders.isEmpty, s"build sessions through graft.Harness: $offenders")
   }
+
+  test("TempDirs.memo is the only staging memo under src/main") {
+    // the maps that stay are the persistent IndexCatalog's front, the
+    // cached counts and token sets it serves, and the per-path schema
+    // cache on every query's read path
+    val allowed = Set("TempDirs.scala", "IndexCatalog.scala",
+      "Similarity.scala", "TokenIndex.scala", "Tables.scala")
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try {
+      it.iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") &&
+          !allowed(p.getFileName.toString))
+        .filter(p => java.nio.file.Files.readAllLines(p).asScala
+          .exists(_.contains("computeIfAbsent")))
+    } finally it.close()
+    assert(offenders.isEmpty, s"stage through graft.TempDirs.memo/staged: $offenders")
+  }
 }

@@ -887,4 +887,23 @@ class StreamingSpec extends SparkSpec {
     info(s"runs straddling the batch boundary: $straddling")
     assert(straddling > 0, "staging must make at least one run resume from state")
   }
+
+  test("floor mode stages the canonical events file under its own key") {
+    val gate = graft.streaming.StreamingGate
+    val prev = sys.props.get("graft.stream.floor")
+    try {
+      sys.props -= "graft.stream.floor"
+      val real = gate.canonicalEventsFile(spark, sf)
+      sys.props("graft.stream.floor") = "on"
+      val floor = gate.canonicalEventsFile(spark, sf)
+      assert(real != floor, "floor and real stagings must never alias")
+      assert(spark.read.schema(EventsStreaming.rawSchema)
+        .parquet(floor.toString).count() <= 6)
+      sys.props -= "graft.stream.floor"
+      assert(gate.canonicalEventsFile(spark, sf) == real)
+    } finally prev match {
+      case Some(v) => sys.props("graft.stream.floor") = v
+      case None => sys.props -= "graft.stream.floor"
+    }
+  }
 }
