@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{PolyHash, RollingHashes, SignLshSig, VecDist2, VecDot, VecDotInt, VecDotPrune, VecSuffixNorms}
+import graft.functions.{PolyHash, RollingHashes, SignLshSig, VecDist2, VecDot, VecDotInt}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * functions at session build time so ANY session (including pure-SQL
@@ -54,13 +54,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SignLshSig(exprs.head,
           exprs(1).eval().asInstanceOf[Number].intValue())
       }))
-    ext.injectFunction((
-      FunctionIdentifier("vec_suffix_norms"),
-      new ExpressionInfo(classOf[VecSuffixNorms].getName, "vec_suffix_norms"),
-      (exprs: Seq[Expression]) => VecSuffixNorms(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_prune"),
-      new ExpressionInfo(classOf[VecDotPrune].getName, "vec_dot_prune"),
-      (exprs: Seq[Expression]) => VecDotPrune(exprs)))
   }
 }

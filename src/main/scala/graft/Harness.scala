@@ -52,6 +52,19 @@ object Harness {
         s
       }
 
+  /** Run `body` with each of `kvs` set in `spark`'s session conf, then
+    * put every key back as it was before — its old value, or unset
+    * again if it was not set — also when `body` throws. */
+  def withConfs[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val before = spark.conf.getAll
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally kvs.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** Order-independent result digest, computed on the executors:
     * row count, xor of per-row xxhash64, and a modular sum of the same
     * hashes (xor alone cancels duplicate row PAIRS; the modular sum —

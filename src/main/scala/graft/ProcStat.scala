@@ -80,8 +80,7 @@ object ProcStat {
        total("/proc/pressure/memory", "some"))
     } catch { case scala.util.control.NonFatal(_) => (-1L, -1L, -1L, -1L) }
 
-  /** The batch-side twin of StreamDiag (round-15 verdict item 1): a
-    * daemon thread that samples every live thread's state twice a
+  /** A daemon thread that samples every live thread's state twice a
     * second while a measurement window runs and answers "when the wall
     * burned with idle CPUs, WHERE were the task threads parked?" —
     * the one question the CPU-share sidecars cannot (a parked thread

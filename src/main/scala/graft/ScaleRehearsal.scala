@@ -280,11 +280,9 @@ object ScaleRehearsal {
     * metrics, the round-3 lesson). */
   private def dropMetrics(spark: SparkSession, dir: String,
                           withEmbeddings: Boolean = true): Map[String, Long] = {
-    // restore whatever was set BEFORE the block, not a hardcoded value —
-    // a session that had AQE disabled must not leave with it re-enabled
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // AQE off for the mid-plan Observations; withConfs restores whatever
+    // was set BEFORE the block, not a hardcoded value
+    Harness.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, dir)
       val o16 = Observation(s"rehearsal_q16_${runTag.incrementAndGet()}")
       graft.ext.Dedup.ngramJaccardPairs(docs, dropObs = Some(o16))
@@ -292,43 +290,36 @@ object ScaleRehearsal {
       val o14 = Observation(s"rehearsal_q14_${runTag.incrementAndGet()}")
       graft.ext.Dedup.minhashPairs(docs, dropObs = Some(o14))
         .write.format("noop").mode("overwrite").save()
-      if (!withEmbeddings) {
-        val drops = Map(
-          "q16_dropped_shingles" -> o16.get("dropped_shingles").asInstanceOf[Long],
-          "q16_dropped_postings" -> o16.get("dropped_postings").asInstanceOf[Long],
-          "q14_dropped_buckets" -> o14.get("dropped_buckets").asInstanceOf[Long],
-          "q14_dropped_docs" -> o14.get("dropped_docs").asInstanceOf[Long])
-        require(drops.values.exists(_ > 0),
-          s"skew caps never engaged on the skewed fixture: $drops")
-        return drops
-      }
-      // q24's banded rewrite under a cap TIGHTER than the fixture's hot
-      // clone-family buckets (avg bucket at bands=4/bits=9 on the 10x
-      // corpus is ~100 postings): the pathological-bucket path must
-      // DROP observably instead of expanding m² pairs. The uncapped
-      // rewrite timing stays in mitigated_quadratic — this run only
-      // proves the degradation is bounded and visible.
-      val o24 = Observation("rehearsal_q24")
-      graft.ext.Similarity.bandedNearDupPairs(
-        graft.ext.Similarity.withLshBands(
-          Tables.embeddings(spark, dir), bands = 4, bandBits = 9),
-        graft.ext.Similarity.NearDupThreshold,
-        maxBucket = 64, dropObs = Some(o24))
-        .write.format("noop").mode("overwrite").save()
-      val drops = Map(
+      val textDrops = Map(
         "q16_dropped_shingles" -> o16.get("dropped_shingles").asInstanceOf[Long],
         "q16_dropped_postings" -> o16.get("dropped_postings").asInstanceOf[Long],
         "q14_dropped_buckets" -> o14.get("dropped_buckets").asInstanceOf[Long],
-        "q14_dropped_docs" -> o14.get("dropped_docs").asInstanceOf[Long],
-        "q24_dropped_buckets" -> o24.get("dropped_buckets").asInstanceOf[Long],
-        "q24_dropped_pairs" -> o24.get("dropped_pairs").asInstanceOf[Long])
+        "q14_dropped_docs" -> o14.get("dropped_docs").asInstanceOf[Long])
+      val drops = if (!withEmbeddings) textDrops else {
+        // q24's banded rewrite under a cap TIGHTER than the fixture's hot
+        // clone-family buckets (avg bucket at bands=4/bits=9 on the 10x
+        // corpus is ~100 postings): the pathological-bucket path must
+        // DROP observably instead of expanding m² pairs. The uncapped
+        // rewrite timing stays in mitigated_quadratic — this run only
+        // proves the degradation is bounded and visible.
+        val o24 = Observation("rehearsal_q24")
+        graft.ext.Similarity.bandedNearDupPairs(
+          graft.ext.Similarity.withLshBands(
+            Tables.embeddings(spark, dir), bands = 4, bandBits = 9),
+          graft.ext.Similarity.NearDupThreshold,
+          maxBucket = 64, dropObs = Some(o24))
+          .write.format("noop").mode("overwrite").save()
+        textDrops ++ Map(
+          "q24_dropped_buckets" -> o24.get("dropped_buckets").asInstanceOf[Long],
+          "q24_dropped_pairs" -> o24.get("dropped_pairs").asInstanceOf[Long])
+      }
       // the property this harness exists to prove: under the injected
       // hot key, the caps ENGAGE (observable truncation) instead of the
       // buckets going quadratic — fail loudly if they never fired
       require(drops.values.exists(_ > 0),
         s"skew caps never engaged on the skewed fixture: $drops")
       drops
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -438,10 +429,8 @@ object ScaleRehearsal {
     // AQE off (mid-plan metrics, round-3 lesson), so the base point
     // runs AQE-off too — otherwise the ratio conflates data scale with
     // a planner-config change
-    val prevAqe188 = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (q188BaseSec, q188X10Sec, q188Cands, q188Pairs, q188N) =
-      try {
+      Harness.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
         val tb = System.nanoTime()
         graft.ext.Dedup.ppjoinPairs(docsBase).count()
         val baseSec = (System.nanoTime() - tb) / 1e9
@@ -452,7 +441,7 @@ object ScaleRehearsal {
         val sec = (System.nanoTime() - t0) / 1e9
         (baseSec, sec, oCand.get("candidates").asInstanceOf[Long], nPairs,
           docs10p.count())
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe188)
+      }
     // sanity floor, not the measurement: the dup-saturated synthetic
     // fixture (10 near-copies per doc + 30% boilerplate) is close to a
     // worst case for candidate generation, and the measured ratio —
@@ -469,10 +458,8 @@ object ScaleRehearsal {
     // emitted-pair counts observed, so the wall ratio splits into
     // candidate machinery vs result volume. AQE off for the mid-plan
     // Observation, both decades alike.
-    val prevAqe24 = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val (q24Base, q24X10, q24BaseN, q24X10N) =
-      try {
+      Harness.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
         def run(df: DataFrame): (Double, Long, Long) = {
           val o = Observation(s"rehearsal_q24s_${runTag.incrementAndGet()}")
           val pairs = sim.bandedNearDupPairs(
@@ -484,7 +471,7 @@ object ScaleRehearsal {
             o.get("candidates").asInstanceOf[Long], n)
         }
         (run(embBase), run(emb10), embBase.count(), emb10.count())
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe24)
+      }
 
     // Collocation-bound demo: at a bound the 10x corpus EXCEEDS, the
     // exact path must refuse loudly and the sampled path must answer —

@@ -211,20 +211,15 @@ object SpillRehearsal {
     * the action (AQE reads the broadcast thresholds at execution, not
     * plan-build), restoring the previous values after — both passes go
     * through this one path so their plans are forced identical. */
-  private def runRow(spark: SparkSession, q: SpillQuery, dir: String): String = {
-    val saved = q.confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    q.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+  private def runRow(spark: SparkSession, q: SpillQuery, dir: String): String =
+    Harness.withConfs(spark, q.confs.toSeq: _*) {
       val df = q.name match {
         case "sort_payload" => sortPayload(spark, dir)
         case "q06_join5_smj" => SparkEntry.queries("q06_join5")(spark, dir)
         case n => SparkEntry.queries(n)(spark, dir)
       }
       q.sortKey.fold(Harness.resultDigest(df))(sortedDigest(df, _))
-    } finally saved.foreach { case (k, prev) =>
-      prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
-  }
 
   /** Shuffle partitions for BOTH passes. Identical partitioning is what
     * lets the digest compare isolate the memory squeeze (a partition-

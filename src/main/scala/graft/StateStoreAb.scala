@@ -85,15 +85,13 @@ object StateStoreAb {
     val gates = graft.streaming.StreamingGate.queries.keys.toSeq.sorted
 
     case class Cell(digest: String, medianSec: Double, reps: Seq[Double])
-    def timedDigest(g: String, provider: String): (String, Double) = {
-      spark.conf.set(ProviderKey, provider)
-      try {
+    def timedDigest(g: String, provider: String): (String, Double) =
+      Harness.withConfs(spark, ProviderKey -> provider) {
         val t0 = System.nanoTime()
         val d = Harness.resultDigest(
           graft.streaming.StreamingGate.queries(g)(spark, sfDir))
         (d, (System.nanoTime() - t0) / 1e9)
-      } finally spark.conf.unset(ProviderKey)
-    }
+      }
 
     if (roundClose) {
       // cheap per-round provider guard: warmup, then one digest per

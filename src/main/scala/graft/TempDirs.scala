@@ -25,8 +25,10 @@ object TempDirs {
   def create(prefix: String): Path =
     register(Files.createTempDirectory(prefix))
 
-  /** Immediate recursive delete (the q142 vacuum path) — same
-    * best-effort semantics as the exit hook. */
+  /** Immediate recursive delete (the q142 vacuum path, a finished
+    * stream's checkpoint) — same best-effort semantics as the exit
+    * hook. The path stays registered, so a tree that something
+    * re-creates after this call still goes at exit. */
   def deleteTree(p: Path): Unit = deleteRecursively(p)
 
   /** Never descends through a symlink: a link to a directory (a staged

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps
@@ -43,6 +43,19 @@ object Similarity {
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
 
   private def duckNorm2(a: String): String = duckDot(a, a)
+
+  /** Left-fold squared L2 distance (oracle side of
+    * [[graft.functions.VecDist2]]). */
+  private def duckDist2(a: String, b: String): String =
+    s"list_reduce(list_transform(generate_series(1, len($a)), " +
+      s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
+      s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"
+
+  /** BIGINT-exact left-fold dot for int lists (SQL twin of vec_dot_int). */
+  private def duckIntDot(a: String, b: String) =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
+      s"list_transform(generate_series(1, len($a)), " +
+      s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
 
   val TopK = 5
   val QueryMod = 25          // queries = vec_id % 25 == 0
@@ -164,9 +177,17 @@ object Similarity {
     val q = v.filter(col("vec_id") % QueryMod === 0).select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
       col("norm2").as("q_norm2"))
-    val topk = graft.functions.BoundedTopK.topK(TopK)
-    spread(v).join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
+    cosineRank(spread(v).join(broadcast(q), col("vec_id") =!= col("q_id")), TopK)
+  }
+
+  /** The cosine rank tail q17, q18 and q179 share: score each
+    * (query, candidate) row of `pairs` (columns q_id, q_emb, q_norm2,
+    * vec_id, embedding, norm2), keep the `k` best per query in the
+    * bounded-heap [[graft.functions.BoundedTopK]] aggregator, and
+    * posexplode them to ranks 1..k with 6-decimal cosines. */
+  private def cosineRank(pairs: DataFrame, k: Int): DataFrame = {
+    val topk = graft.functions.BoundedTopK.topK(k)
+    pairs.select(col("q_id"), col("vec_id").as("cand_id"),
         (expr("vec_dot(q_emb, embedding)") /
           (sqrt(col("q_norm2")) * sqrt(col("norm2")))).as("cos_raw"))
       .groupBy(col("q_id"))
@@ -229,10 +250,20 @@ object Similarity {
     // diagnostic/rehearsal configs
     val cmod = if (centroidMod > 0) centroidMod
                else derivedCentroidMod(corpusCount(emb))
+    ivfSearch(emb, nprobe, cmod, live = None)
+  }
+
+  /** The IVF search body behind [[ivfTopK]] and [[ivfTopKTombstoned]].
+    * Centroids always come from the full corpus; `live`, when given,
+    * restricts the rows that are assigned to cells and that issue
+    * queries (q179's tombstone filter). */
+  private def ivfSearch(emb: DataFrame, nprobe: Int, cmod: Long,
+                        live: Option[Column]): DataFrame = {
     val v = withNorm2(emb)
     val cents = v.filter(col("vec_id") % cmod === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
-    val assigned = v.crossJoin(broadcast(cents))
+    val pool = live.fold(v)(p => v.filter(p))
+    val assigned = pool.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("norm2"), col("cent_id"),
         expr("vec_dist2(embedding, cent_emb)").as("d2"))
       .groupBy(col("vec_id"))
@@ -244,7 +275,7 @@ object Similarity {
     // P nearest cells per query: bounded heap on -d2 (exact negation —
     // float-deterministic), tie-break on cent_id inside the aggregator
     val topP = graft.functions.BoundedTopK.topK(nprobe)
-    val q = v.filter(col("vec_id") % QueryMod === 0)
+    val q = pool.filter(col("vec_id") % QueryMod === 0)
       .crossJoin(broadcast(cents))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm2").as("q_norm2"), col("cent_id"),
@@ -255,26 +286,11 @@ object Similarity {
            first(col("q_norm2")).as("q_norm2"))
       .select(col("q_id"), col("q_emb"), col("q_norm2"),
         explode(col("probes.id")).as("cell"))
-    val topk = graft.functions.BoundedTopK.topK(IvfTopK)
-    assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
-        (expr("vec_dot(q_emb, embedding)") /
-          (sqrt(col("q_norm2")) * sqrt(col("norm2")))).as("cos_raw"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos_raw"), col("cand_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-              col("col.id").as("cand_id"),
-              round(col("col.cos"), 6).as("cos_sim"))
-      .orderBy("q_id", "rank")
+    cosineRank(assigned.join(broadcast(q), Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id")), IvfTopK)
   }
 
-  val ivfTopKSql: String = {
-    def duckDist2(a: String, b: String): String =
-      s"list_reduce(list_transform(generate_series(1, len($a)), " +
-        s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
-        s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"
+  val ivfTopKSql: String =
     s"""WITH v AS (
        |  SELECT vec_id, embedding, ${duckNorm2("embedding")} AS norm2
        |  FROM embeddings),
@@ -307,7 +323,6 @@ object Similarity {
        |SELECT q_id, rank, cand_id, round(cos_raw, 6) AS cos_sim
        |FROM ranked WHERE rank <= $IvfTopK
        |ORDER BY q_id, rank""".stripMargin
-  }
 
   // ---------------------------------------- incremental IVF index (q155)
   /** Split: three quarters of vec_ids are the indexed BASE, the last
@@ -389,11 +404,7 @@ object Similarity {
       .orderBy("cell")
   }
 
-  val incrementalIvfSql: String = {
-    def duckDist2(a: String, b: String): String =
-      s"list_reduce(list_transform(generate_series(1, len($a)), " +
-        s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
-        s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"
+  val incrementalIvfSql: String =
     s"""WITH cents AS (
        |  SELECT vec_id AS cent_id, embedding AS cent_emb FROM embeddings
        |  WHERE vec_id % $IvfDeltaMod <> ${IvfDeltaMod - 1}
@@ -414,7 +425,6 @@ object Similarity {
        |FROM assigned
        |GROUP BY cell
        |ORDER BY cell""".stripMargin
-  }
 
   // ------------------------------------- prototype classifier (q156)
   /** Prototype fixed-point scale (e3 — chosen so the 64-dim squared
@@ -439,15 +449,7 @@ object Similarity {
     * At 100 TB this is the same plan: prototypes are a tiny aggregate,
     * classification rides the scan. */
   def prototypeConfusion(emb: DataFrame): DataFrame = {
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val q = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), col("label"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val q = quantized(emb).select(col("vec_id"), col("label"), col("qemb"))
     val protos = q.select(col("label"), posexplode(col("qemb")).as(Seq("i", "v")))
       .groupBy("label", "i")
       .agg(sum(col("v").cast("long")).as("s"), count(lit(1)).as("n"))
@@ -473,16 +475,10 @@ object Similarity {
   // and an eager val would interpolate the still-uninitialized 0 into
   // the SQL at object-init time (silent in Scala — caught by the
   // sf0.01 gate as an every-row-predicts-0 oracle)
-  lazy val prototypeConfusionSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
+  lazy val prototypeConfusionSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |q AS (SELECT vec_id, label, $quant AS qemb
+       |  $duckMaxAbs),
+       |q AS (SELECT vec_id, label, ${duckQuant()} AS qemb
        |      FROM embeddings CROSS JOIN m),
        |qd AS (SELECT vec_id, label,
        |    unnest(generate_series(1, len(qemb))) AS ix, unnest(qemb) AS v
@@ -507,7 +503,6 @@ object Similarity {
        |FROM pred WHERE rn = 1
        |GROUP BY 1, 2
        |ORDER BY true_label, pred_label""".stripMargin
-  }
 
   // ------------------------------------------------- embedding near-dup
   val NearDupThreshold = 0.45
@@ -524,42 +519,8 @@ object Similarity {
     * Scale path past broadcastable corpora: sign-LSH bucketing first
     * ([[signLshNearDups]], q31 — random-hyperplane signatures, the vector
     * analogue of minhashPairs), with this exact kernel per bucket. */
-  /** usePrune=true scores each pair with the Cauchy-Schwarz-pruned dot
-    * ([[graft.functions.VecDotPrune]]): precomputed suffix norms bound
-    * the remaining mass, and a pair provably below the threshold aborts
-    * mid-loop with -Infinity (filtered like any sub-threshold cosine).
-    * Kept pairs run the identical left-to-right fold, so results are
-    * bit-for-bit the plain kernel's — asserted by spec AND by the
-    * unchanged exact oracle.
-    *
-    * Default is the PLAIN kernel: at dim=64 the suffix-norm arrays
-    * (65 doubles per row — wider than the embedding itself, carried on
-    * BOTH join sides) cost more than the aborted tail multiplies save —
-    * the round-3 bench measured the pruned path at 2.1x the plain one.
-    * The prune is the opt-in scale variant for long vectors (dim in the
-    * hundreds-plus) and tight thresholds, where the tail bound fires
-    * early enough to amortize its own payload. */
-  def embeddingNearDups(emb: DataFrame, usePrune: Boolean = false): DataFrame = {
-    val v0 = withNorm2(emb)
-    val v = if (usePrune) v0.withColumn("sn", expr("vec_suffix_norms(embedding)"))
-            else v0
-    val snCols = if (usePrune) Seq(col("sn")) else Seq.empty
-    val a = v.select(Seq(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-                     col("norm2").as("norm2_a")) ++ snCols.map(_.as("sn_a")): _*)
-    val b = v.select(Seq(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-                     col("norm2").as("norm2_b")) ++ snCols.map(_.as("sn_b")): _*)
-    val dotExpr =
-      if (usePrune)
-        expr(s"vec_dot_prune(emb_a, emb_b, sn_a, sn_b, " +
-             s"$NearDupThreshold * sqrt(norm2_a) * sqrt(norm2_b))")
-      else expr("vec_dot(emb_a, emb_b)")
-    spread(a).join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (dotExpr / (sqrt(col("norm2_a")) * sqrt(col("norm2_b")))).as("cos_raw"))
-      .filter(col("cos_raw") >= NearDupThreshold)
-      .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
-      .orderBy("id_a", "id_b")
-  }
+  def embeddingNearDups(emb: DataFrame): DataFrame =
+    exactNearDupPairs(emb, NearDupThreshold).orderBy("id_a", "id_b")
 
   /** Unordered exact all-pairs plan (the rule-spliceable form of q24:
     * [[RewriteCosineNearDups]] splices this under the caller's plan, so
@@ -738,10 +699,19 @@ object Similarity {
     * bit for bit). Plane components are LCG steps over the flattened
     * index, scaled to [-0.5, 0.5) — pure integer arithmetic + one
     * divide, expressible identically in both engines, which is what
-    * makes the bucketing oracle-checkable. */
-  private def planeSpark(j: String, i: String): String =
+    * makes the bucketing oracle-checkable: the same text serves the
+    * Spark reference below and the oracles' [[duckProj]]. */
+  private def planeSql(j: String, i: String): String =
     s"(CAST((CAST(1103515245 AS BIGINT) * (($j) * 4096 + ($i)) + 12345) % 2147483648 AS DOUBLE)" +
       s" / 2147483648.0 - 0.5)"
+
+  /** Oracle-side projection of `embedding` onto plane `p` (left fold,
+    * the oracle twin of one plane of [[graft.functions.SignLshSig]]). */
+  private def duckProj(p: Int): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
+      s"list_transform(generate_series(1, len(embedding)), " +
+      s"i -> CAST(embedding[i] AS DOUBLE) * ${planeSql(p.toString, "(i - 1)")})), " +
+      s"(x, y) -> x + y)"
 
   /** Sign-LSH near-dup: the sub-quadratic scale path for q24. Each vector
     * gets an [[LshBits]]-bit signature (bit j = sign of the projection
@@ -761,7 +731,7 @@ object Similarity {
     def proj(j: Int): String =
       s"aggregate(sequence(0, size(embedding) - 1), CAST(0.0 AS DOUBLE), " +
         s"(acc, i) -> acc + CAST(element_at(embedding, i + 1) AS DOUBLE) * " +
-        planeSpark(j.toString, "i") + ")"
+        planeSql(j.toString, "i") + ")"
     (0 until LshBits).map { j =>
       when(expr(proj(j)) >= 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
@@ -793,16 +763,8 @@ object Similarity {
   }
 
   val signLshNearDupsSql: String = {
-    def planeDuck(j: String, i: String): String =
-      s"(CAST((CAST(1103515245 AS BIGINT) * (($j) * 4096 + ($i)) + 12345) % 2147483648 AS DOUBLE)" +
-        s" / 2147483648.0 - 0.5)"
-    def projDuck(j: Int): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(generate_series(1, len(embedding)), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * ${planeDuck(j.toString, "(i - 1)")})), " +
-        s"(x, y) -> x + y)"
     val bucket = (0 until LshBits).map { j =>
-      s"CASE WHEN ${projDuck(j)} >= 0 THEN ${1L << j} ELSE 0 END"
+      s"CASE WHEN ${duckProj(j)} >= 0 THEN ${1L << j} ELSE 0 END"
     }.mkString(" + ")
     s"""WITH v AS (
        |  SELECT vec_id, embedding, ${duckNorm2("embedding")} AS norm2,
@@ -876,17 +838,9 @@ object Similarity {
   }
 
   val signLshMultiBandSql: String = {
-    def planeDuck(j: String, i: String): String =
-      s"(CAST((CAST(1103515245 AS BIGINT) * (($j) * 4096 + ($i)) + 12345) % 2147483648 AS DOUBLE)" +
-        s" / 2147483648.0 - 0.5)"
-    def projDuck(p: Int): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(generate_series(1, len(embedding)), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * ${planeDuck(p.toString, "(i - 1)")})), " +
-        s"(x, y) -> x + y)"
     // band j's key: r sign bits from planes j*r .. j*r+r-1
     def bandKey(j: Int): String = (0 until LshBits).map { bit =>
-      s"CASE WHEN ${projDuck(j * LshBits + bit)} >= 0 THEN ${1L << bit} ELSE 0 END"
+      s"CASE WHEN ${duckProj(j * LshBits + bit)} >= 0 THEN ${1L << bit} ELSE 0 END"
     }.mkString("(", " + ", ")")
     val bandCols = (0 until LshBands)
       .map(j => s"${bandKey(j)} AS band$j").mkString(",\n    ")
@@ -909,6 +863,65 @@ object Similarity {
   /** Symmetric int8 range for quantized search. */
   val QuantRange = 127
 
+  /** `emb`'s columns plus `qemb`, q69's int8 quantization: ONE GLOBAL
+    * symmetric scale s = 127 / corpus max |x| (a 1-row aggregate,
+    * broadcast in — no driver collect), floor(x·s + 0.5) clamped to
+    * ±[[QuantRange]]. The 1e-30 floor keeps an all-zero corpus at
+    * qemb = 0 rather than NaN. Every int8 operator quantizes here;
+    * [[duckMaxAbs]] and [[duckQuant]] are the oracle twins. */
+  private[graft] def quantized(emb: DataFrame): DataFrame = {
+    val r = QuantRange
+    val mx = emb.select(max(expr(
+      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
+        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
+    emb.crossJoin(broadcast(mx))
+      .withColumn("qemb", expr(
+        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
+          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))"))
+      .drop("mx")
+  }
+
+  /** The body of the `m` CTE every int8 oracle opens with: the corpus
+    * max |x| as `mx`. */
+  private def duckMaxAbs: String =
+    """SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+      |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
+      |    (x, y) -> greatest(x, y))) AS mx
+      |  FROM embeddings""".stripMargin
+
+  /** Oracle twin of [[quantized]]'s `qemb` over `m`'s `mx`; `sep` is the
+    * whitespace before `floor` (q153's oracle breaks the line there). */
+  private def duckQuant(sep: String = " "): String = {
+    val r = QuantRange
+    s"list_transform(embedding, e -> CAST(greatest(-$r, least($r,$sep" +
+      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
+  }
+
+  /** q73's exact-integer cell assignment, shared by q80, q83 and q73:
+    * the quantized corpus with `self` = q·q, scored against the int8
+    * centroids (vec_id % cmod == 0) as d² = a·a − 2a·c + c·c from three
+    * `vec_dot_int` kernels. Returns that scored relation and each
+    * vector's nearest cell (struct-min argmin, ties to the smaller
+    * centroid id, map-side combined — no window). */
+  private def intCells(emb: DataFrame, cmod: Long): (DataFrame, DataFrame) = {
+    VectorOps.register(emb.sparkSession)
+    val v = quantized(emb).select(col("vec_id"), col("qemb"))
+      .withColumn("self", expr("vec_dot_int(qemb, qemb)"))
+    val cents = v.filter(col("vec_id") % cmod === 0)
+      .select(col("vec_id").as("cent_id"), col("qemb").as("cent_q"),
+              col("self").as("cent_self"))
+    val scored = v.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("qemb"), col("self"), col("cent_id"),
+        col("cent_self"),
+        (col("self") - expr("2 * vec_dot_int(qemb, cent_q)") +
+          col("cent_self")).as("d2"))
+    val assigned = scored.groupBy("vec_id")
+      .agg(min(struct(col("d2"), col("cent_id"))).as("m"),
+           first(col("qemb")).as("qemb"), first(col("self")).as("self"))
+      .select(col("vec_id"), col("qemb"), col("self"), col("m.cent_id").as("cell"))
+    (scored, assigned)
+  }
+
   /** Int8-quantized max-inner-product top-k — the memory/bandwidth scale
     * path for ANN: every embedding is quantized to int8 with ONE GLOBAL
     * symmetric scale (s = 127 / corpus max |x|, a 1-row broadcast — a
@@ -930,17 +943,7 @@ object Similarity {
     * vs the exact float ranking is spec-measured, not assumed. */
   def quantizedTopK(emb: DataFrame, queryMod: Long = QueryMod): DataFrame = {
     VectorOps.register(emb.sparkSession)
-    val r = QuantRange
-    // corpus max |x|: tiny aggregate, broadcast in (no driver collect);
-    // the 1e-30 floor keeps an all-zero corpus at qemb = 0 (not NaN)
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val v = quantized(emb).select(col("vec_id"), col("qemb"))
     val q = v.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("qemb").as("q_qemb"))
     val topk = graft.functions.BoundedTopK.topK(TopK)
@@ -955,22 +958,12 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  val quantizedTopKSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
-    val intDot =
-      "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(generate_series(1, len(a.qemb)), " +
-        "i -> CAST(a.qemb[i] AS BIGINT) * CAST(b.qemb[i] AS BIGINT))), (x, y) -> x + y)"
+  val quantizedTopKSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
+       |  $duckMaxAbs),
+       |v AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
        |scored AS (
-       |  SELECT a.vec_id AS q_id, b.vec_id AS cand_id, $intDot AS qdot
+       |  SELECT a.vec_id AS q_id, b.vec_id AS cand_id, ${duckIntDot("a.qemb", "b.qemb")} AS qdot
        |  FROM v a JOIN v b ON a.vec_id % $QueryMod = 0 AND a.vec_id <> b.vec_id),
        |ranked AS (
        |  SELECT q_id, cand_id, qdot,
@@ -979,7 +972,6 @@ object Similarity {
        |SELECT q_id, CAST(rank AS INT) AS rank, cand_id, CAST(qdot AS BIGINT) AS qdot
        |FROM ranked WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
-  }
 
   // ------------------------------------------- covariance matrix (q147)
   /** Exact-integer bound for the covariance numerator: |n·gram − s_i·s_j|
@@ -1015,17 +1007,9 @@ object Similarity {
   def covarianceMatrix(emb: DataFrame): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
     // fixed corpus dimension (schema-level fact; one-row driver read)
     val d = emb.select(expr("size(embedding)")).head.getInt(0)
-    val v = emb.crossJoin(broadcast(mx))
-      .select(expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val v = quantized(emb).select(col("qemb"))
     // ONE scan, one buffer per partition through the shuffle — the
     // [[graft.functions.GramMatrix]] layout (n, sums, upper triangle);
     // replaced the per-row d²/2-struct generator, measured in BASELINE.md
@@ -1052,16 +1036,10 @@ object Similarity {
       .orderBy("i", "j")
   }
 
-  val covarianceMatrixSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
+  val covarianceMatrixSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
+       |  $duckMaxAbs),
+       |v AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
        |nn AS (SELECT COUNT(*) AS n FROM v),
        |qd AS (
        |  SELECT vec_id, unnest(generate_series(1, len(qemb))) AS ix,
@@ -1077,7 +1055,6 @@ object Similarity {
        |  CAST(nn.n * g.gram - si.s * sj.s AS BIGINT) AS cov_num
        |FROM g JOIN s si ON si.ix = g.i1 JOIN s sj ON sj.ix = g.j1 CROSS JOIN nn
        |ORDER BY i, j""".stripMargin
-  }
 
   // --------------------------------------------- PCA projection (q153)
   /** Power-iteration rounds for the dominant eigenvector (pinned, like
@@ -1139,15 +1116,7 @@ object Similarity {
           expr(s"($PcaVecScale * m) div greatest(mx, cast(1 as bigint))").as("v"))
         .localCheckpoint(true)
     }
-    val r = QuantRange
-    val mxe = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val q = emb.crossJoin(broadcast(mxe))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val q = quantized(emb).select(col("vec_id"), col("qemb"))
     val vArr = broadcast(v.groupBy().agg(
       expr("transform(array_sort(collect_list(struct(vi, v))), s -> s.v)").as("vs")))
     q.crossJoin(vArr)
@@ -1158,7 +1127,6 @@ object Similarity {
   }
 
   val pcaProjectionSql: String = {
-    val r = QuantRange
     def round(prev: String, curM: String, cur: String) =
       s"""$curM AS (
          |  SELECT af.i, SUM(af.a * p.v) AS m
@@ -1176,13 +1144,9 @@ object Similarity {
        |${round("v0", "m1", "v1")},
        |${round("v1", "m2", "v2")},
        |${round("v2", "m3", "v3")},
-       |m AS (SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
+       |m AS ($duckMaxAbs),
        |q AS (SELECT vec_id,
-       |    list_transform(embedding, e -> CAST(greatest(-$r, least($r,
-       |      floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT)) AS qemb
+       |    ${duckQuant("\n      ")} AS qemb
        |  FROM embeddings CROSS JOIN m),
        |qd AS (SELECT vec_id, unnest(generate_series(1, len(qemb))) AS ix,
        |    unnest(qemb) AS qv FROM q)
@@ -1243,29 +1207,7 @@ object Similarity {
     // fixed-cell d²-probed diagnostic config
     val cmod = if (centroidMod > 0) centroidMod
                else derivedCentroidMod(corpusCount(emb))
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
-      .withColumn("self", expr("vec_dot_int(qemb, qemb)"))
-    val cents = v.filter(col("vec_id") % cmod === 0)
-      .select(col("vec_id").as("cent_id"), col("qemb").as("cent_q"),
-              col("self").as("cent_self"))
-    val scoredCents = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("qemb"), col("self"), col("cent_id"),
-        col("cent_self"),
-        (col("self") - expr("2 * vec_dot_int(qemb, cent_q)") +
-          col("cent_self")).as("d2"))
-    val assigned = scoredCents
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cent_id"))).as("m"),
-           first(col("qemb")).as("qemb"))
-      .select(col("vec_id"), col("qemb"), col("m.cent_id").as("cell"))
+    val (scoredCents, assigned) = intCells(emb, cmod)
     // nprobe nearest cells per query: integer d² is exact in the heap's
     // Double key (bounded by dims·(2r)² ≪ 2^53); probeByDot swaps the
     // key for 2·q·c = self + cent_self − d2 (same bound, same exactness)
@@ -1291,26 +1233,16 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  val quantizedIvfTopKSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
-    def intDot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(generate_series(1, len($a)), " +
-        s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
+  val quantizedIvfTopKSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v0 AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
-       |v AS (SELECT vec_id, qemb, ${intDot("qemb", "qemb")} AS self FROM v0),
+       |  $duckMaxAbs),
+       |v0 AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
+       |v AS (SELECT vec_id, qemb, ${duckIntDot("qemb", "qemb")} AS self FROM v0),
        |cents AS (SELECT vec_id AS cent_id, qemb AS cent_q, self AS cent_self
        |          FROM v WHERE vec_id % ${derivedCmodSql("embeddings")} = 0),
        |sc AS (
        |  SELECT v.vec_id, v.qemb, v.self, c.cent_id, c.cent_self,
-       |    v.self - 2 * ${intDot("v.qemb", "c.cent_q")} + c.cent_self AS d2
+       |    v.self - 2 * ${duckIntDot("v.qemb", "c.cent_q")} + c.cent_self AS d2
        |  FROM v CROSS JOIN cents c),
        |assigned AS (
        |  SELECT vec_id, qemb, cell FROM (
@@ -1327,7 +1259,7 @@ object Similarity {
        |    FROM sc WHERE vec_id % $QueryMod = 0)
        |  WHERE prn <= $IvfNProbe),
        |scored AS (
-       |  SELECT p.q_id, c.vec_id AS cand_id, ${intDot("q.qemb", "c.qemb")} AS qdot
+       |  SELECT p.q_id, c.vec_id AS cand_id, ${duckIntDot("q.qemb", "c.qemb")} AS qdot
        |  FROM probes p
        |  JOIN v q ON q.vec_id = p.q_id
        |  JOIN assigned c ON c.cell = p.cell AND c.vec_id <> p.q_id),
@@ -1338,7 +1270,6 @@ object Similarity {
        |SELECT q_id, CAST(rank AS INT) AS rank, cand_id, CAST(qdot AS BIGINT) AS qdot
        |FROM ranked WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
-  }
 
   // ------------------------------------------------- product quantization
   /** PQ geometry: the 64-dim fixture vectors split into [[PqSub]]
@@ -1378,15 +1309,7 @@ object Similarity {
   private def pqQuantSubs(emb: DataFrame, centroidMod: Long)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     VectorOps.register(emb.sparkSession)
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val v = quantized(emb).select(col("vec_id"), col("qemb"))
     // one pass explodes each vector into its PqSub subvectors
     val subStructs = (0 until PqSub).map { m =>
       struct(lit(m).as("m"),
@@ -1446,25 +1369,13 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  /** BIGINT-exact left-fold dot for int lists (SQL twin of vec_dot_int). */
-  private def duckIntDot(a: String, b: String) =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(generate_series(1, len($a)), " +
-      s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
-
   /** SQL twin of [[pqQuantSubs]] — the CTE prefix (quantize → subvectors
     * → codebook → pair scores → argmin codes) both q125 and q222 open
     * with. ONE text, so the assignment definition cannot drift. */
   private def pqCommonSqlCtes: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
+       |  $duckMaxAbs),
+       |v AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
        |subs AS (
        |  SELECT vec_id, g.m AS m,
        |    qemb[g.m * $PqSubDim + 1 : g.m * $PqSubDim + $PqSubDim] AS sub
@@ -1484,7 +1395,7 @@ object Similarity {
        |    FROM sc) WHERE rn = 1)""".stripMargin
   }
 
-  val pqTopKSql: String = {
+  val pqTopKSql: String =
     s"""$pqCommonSqlCtes,
        |lut AS (SELECT vec_id AS q_id, m, cw_id, d2 AS d2q
        |        FROM sc WHERE vec_id % $QueryMod = 0),
@@ -1510,7 +1421,6 @@ object Similarity {
        |SELECT q_id, CAST(rank AS INT) AS rank, cand_id, CAST(qdot AS BIGINT) AS qdot
        |FROM ranked WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
-  }
 
   // ------------------------------------------------ PQ codebook training
   /** Offset keeping hash-fold terms positive (|cent| ≤ 127·ProtoScale). */
@@ -1727,28 +1637,7 @@ object Similarity {
     * count, and the best evidence partner (highest cos, ties to the
     * smaller id via the bounded-heap total order). */
   def semanticDedup(emb: DataFrame, centroidMod: Long = CentroidMod): DataFrame = {
-    VectorOps.register(emb.sparkSession)
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
-      .withColumn("self", expr("vec_dot_int(qemb, qemb)"))
-    val cents = v.filter(col("vec_id") % centroidMod === 0)
-      .select(col("vec_id").as("cent_id"), col("qemb").as("cent_q"),
-              col("self").as("cent_self"))
-    val assigned = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("qemb"), col("self"),
-        (col("self") - expr("2 * vec_dot_int(qemb, cent_q)") +
-          col("cent_self")).as("d2"), col("cent_id"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cent_id"))).as("m"),
-           first(col("qemb")).as("qemb"), first(col("self")).as("self"))
-      .select(col("vec_id"), col("qemb"), col("self"), col("m.cent_id").as("cell"))
+    val (_, assigned) = intCells(emb, centroidMod)
     val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("qemb").as("qa"), col("self").as("sa"))
     val b = assigned.select(col("cell"), col("vec_id").as("id_b"),
@@ -1777,34 +1666,24 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  val semanticDedupSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
-    def intDot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(generate_series(1, len($a)), " +
-        s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
+  val semanticDedupSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v0 AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
-       |v AS (SELECT vec_id, qemb, ${intDot("qemb", "qemb")} AS self FROM v0),
+       |  $duckMaxAbs),
+       |v0 AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
+       |v AS (SELECT vec_id, qemb, ${duckIntDot("qemb", "qemb")} AS self FROM v0),
        |cents AS (SELECT vec_id AS cent_id, qemb AS cent_q, self AS cent_self
        |          FROM v WHERE vec_id % $CentroidMod = 0),
        |assigned AS (
        |  SELECT vec_id, qemb, self, cell FROM (
        |    SELECT v.vec_id, v.qemb, v.self, c.cent_id AS cell,
        |      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |        ORDER BY v.self - 2 * ${intDot("v.qemb", "c.cent_q")} + c.cent_self,
+       |        ORDER BY v.self - 2 * ${duckIntDot("v.qemb", "c.cent_q")} + c.cent_self,
        |                 c.cent_id) AS arn
        |    FROM v CROSS JOIN cents c) WHERE arn = 1),
        |hits AS (
        |  SELECT * FROM (
        |    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |      ${intDot("a.qemb", "b.qemb")} /
+       |      ${duckIntDot("a.qemb", "b.qemb")} /
         (sqrt(greatest(a.self, 1)) * sqrt(greatest(b.self, 1))) AS cos_q
        |    FROM assigned a JOIN assigned b
        |      ON a.cell = b.cell AND a.vec_id < b.vec_id)
@@ -1822,7 +1701,6 @@ object Similarity {
        |LEFT JOIN dups d ON d.vec_id = s.vec_id
        |LEFT JOIN best b ON b.vec_id = s.vec_id
        |ORDER BY s.vec_id""".stripMargin
-  }
 
   // ------------------------------------------- embedding outlier pruning
   /** q104: embedding-space OUTLIER pruning — flag documents whose
@@ -1851,15 +1729,7 @@ object Similarity {
     * q83's pairwise dedup. */
   def embeddingOutliers(emb: DataFrame, docs: DataFrame): DataFrame = {
     VectorOps.register(emb.sparkSession)
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id").as("doc_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val v = quantized(emb).select(col("vec_id").as("doc_id"), col("qemb"))
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
     val cents = v
       .select(col("source"), posexplode(col("qemb")).as(Seq("dim", "qv")))
@@ -1893,21 +1763,11 @@ object Similarity {
       .orderBy("doc_id")
   }
 
-  val embeddingOutliersSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
-    def intDot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(generate_series(1, len($a)), " +
-        s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
+  val embeddingOutliersSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
+       |  $duckMaxAbs),
        |v AS (
-       |  SELECT d.doc_id, d.source, $quant AS qemb
+       |  SELECT d.doc_id, d.source, ${duckQuant()} AS qemb
        |  FROM embeddings e CROSS JOIN m
        |  JOIN documents d ON d.doc_id = e.vec_id),
        |flat AS (
@@ -1921,11 +1781,11 @@ object Similarity {
        |  SELECT source, list(CAST(cd AS INT) ORDER BY dim) AS cent
        |  FROM cd GROUP BY source),
        |cself AS (
-       |  SELECT source, cent, ${intDot("cent", "cent")} AS cent_self FROM cents),
+       |  SELECT source, cent, ${duckIntDot("cent", "cent")} AS cent_self FROM cents),
        |scored AS (
        |  SELECT v.doc_id, v.source,
-       |    CAST(floor(${intDot("v.qemb", "c.cent")} /
-       |      (sqrt(greatest(${intDot("v.qemb", "v.qemb")}, 1)) *
+       |    CAST(floor(${duckIntDot("v.qemb", "c.cent")} /
+       |      (sqrt(greatest(${duckIntDot("v.qemb", "v.qemb")}, 1)) *
        |       sqrt(greatest(c.cent_self, 1))) * 1e6) AS BIGINT) AS cos_e6
        |  FROM v JOIN cself c ON c.source = v.source),
        |hist AS (
@@ -1942,7 +1802,6 @@ object Similarity {
        |  CASE WHEN s.cos_e6 < t.p10_e6 THEN 1 ELSE 0 END AS outlier
        |FROM scored s JOIN thresholds t ON t.source = s.source
        |ORDER BY s.doc_id""".stripMargin
-  }
 
   // ---------------------------------------------- quantized k-means step
   /** One k-means/IVF TRAINING iteration over the int8-quantized corpus —
@@ -1969,28 +1828,7 @@ object Similarity {
     * aggregate shape: one corpus scan, one (cells × dims)-wide
     * exchange, no sort anywhere. */
   def kmeansStep(emb: DataFrame, centroidMod: Long = CentroidMod): DataFrame = {
-    VectorOps.register(emb.sparkSession)
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
-      .withColumn("self", expr("vec_dot_int(qemb, qemb)"))
-    val cents = v.filter(col("vec_id") % centroidMod === 0)
-      .select(col("vec_id").as("cent_id"), col("qemb").as("cent_q"),
-              col("self").as("cent_self"))
-    val assigned = v.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("qemb"),
-        (col("self") - expr("2 * vec_dot_int(qemb, cent_q)") +
-          col("cent_self")).as("d2"), col("cent_id"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cent_id"))).as("m"),
-           first(col("qemb")).as("qemb"))
-      .select(col("vec_id"), col("qemb"), col("m.cent_id").as("cell"))
+    val (_, assigned) = intCells(emb, centroidMod)
     assigned
       .select(col("cell"), posexplode(col("qemb")).as(Seq("dim", "val")))
       .groupBy("cell", "dim")
@@ -2002,28 +1840,18 @@ object Similarity {
       .orderBy("cell", "dim")
   }
 
-  val kmeansStepSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
-    def intDot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        s"list_transform(generate_series(1, len($a)), " +
-        s"i -> CAST($a[i] AS BIGINT) * CAST($b[i] AS BIGINT))), (x, y) -> x + y)"
+  val kmeansStepSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v0 AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
-       |v AS (SELECT vec_id, qemb, ${intDot("qemb", "qemb")} AS self FROM v0),
+       |  $duckMaxAbs),
+       |v0 AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
+       |v AS (SELECT vec_id, qemb, ${duckIntDot("qemb", "qemb")} AS self FROM v0),
        |cents AS (SELECT vec_id AS cent_id, qemb AS cent_q, self AS cent_self
        |          FROM v WHERE vec_id % $CentroidMod = 0),
        |assigned AS (
        |  SELECT vec_id, qemb, cell FROM (
        |    SELECT v.vec_id, v.qemb, c.cent_id AS cell,
        |      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |        ORDER BY v.self - 2 * ${intDot("v.qemb", "c.cent_q")} + c.cent_self,
+       |        ORDER BY v.self - 2 * ${duckIntDot("v.qemb", "c.cent_q")} + c.cent_self,
        |                 c.cent_id) AS arn
        |    FROM v CROSS JOIN cents c) WHERE arn = 1),
        |flat AS (
@@ -2035,7 +1863,6 @@ object Similarity {
        |  CAST(SUM(val) // COUNT(*) AS BIGINT) AS mean_q
        |FROM flat GROUP BY cell, dim
        |ORDER BY cell, dim""".stripMargin
-  }
 
   // ------------------------------------------------------------ wiring
   // --------------------------------------- JL random projection (q170)
@@ -2079,19 +1906,12 @@ object Similarity {
     * The spec asserts the concentration; the oracle replays the
     * identical integers. */
   def jlProjectionAudit(emb: DataFrame): DataFrame = {
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val q = emb.crossJoin(broadcast(mx))
+    val q = quantized(emb)
       .select(col("vec_id"),
         when(expr(s"size(embedding) != $JlInDim"),
           raise_error(concat(lit(s"jl projection is pinned to d=$JlInDim, got "),
             expr("cast(size(embedding) as string)"))))
-          .otherwise(expr(
-            s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-              s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))"))
-          .as("qemb"))
+          .otherwise(col("qemb")).as("qemb"))
     val projCols = (0 until JlOutDim).map { j =>
       val signs = jlMatrix(j).mkString("array(", "L, ", "L)")
       expr(s"aggregate(zip_with(qemb, $signs, (q, s) -> CAST(q AS BIGINT) * s), " +
@@ -2117,17 +1937,11 @@ object Similarity {
   }
 
   val jlProjectionAuditSql: String = {
-    val r = QuantRange
     val matLit = jlMatrix.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
+       |  $duckMaxAbs),
        |sgn AS (SELECT $matLit AS s),
-       |v AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
+       |v AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
        |p AS (
        |  SELECT vec_id, qemb,
        |    list_transform(generate_series(1, $JlOutDim), j ->
@@ -2177,15 +1991,8 @@ object Similarity {
     * dims are then whatever |delta_num| ranks highest; the gate pins
     * all 64 rationals. */
   def embeddingDrift(emb: DataFrame): DataFrame = {
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val q = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), (col("vec_id") % 2).as("cohort"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val q = quantized(emb)
+      .select(col("vec_id"), (col("vec_id") % 2).as("cohort"), col("qemb"))
     q.select(col("cohort"), posexplode(col("qemb")).as(Seq("dim", "qv")))
       .groupBy("dim")
       .agg(
@@ -2201,16 +2008,10 @@ object Similarity {
       .orderBy("dim")
   }
 
-  val embeddingDriftSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
+  val embeddingDriftSql: String =
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v AS (SELECT vec_id, vec_id % 2 AS cohort, $quant AS qemb
+       |  $duckMaxAbs),
+       |v AS (SELECT vec_id, vec_id % 2 AS cohort, ${duckQuant()} AS qemb
        |      FROM embeddings CROSS JOIN m),
        |x AS (
        |  SELECT cohort, i - 1 AS dim, CAST(qemb[i] AS BIGINT) AS qv
@@ -2228,7 +2029,6 @@ object Similarity {
        |       * SUM(CASE WHEN cohort = 1 THEN 1 ELSE 0 END) AS BIGINT) AS den
        |FROM x GROUP BY dim
        |ORDER BY dim""".stripMargin
-  }
 
   // ---------------------------------------- IVF tombstone deletes (q179)
   /** Tombstone rule: every 7th-mod-3 vector is deleted — EXCEPT centroid
@@ -2262,51 +2062,10 @@ object Similarity {
     // the navigation structure); deriving from the survivor count
     // would be a silent re-train on every delete batch
     val cmod = derivedCentroidMod(corpusCount(emb))
-    val v = withNorm2(emb)
-    val cents = v.filter(col("vec_id") % cmod === 0)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
-    val assigned = v.filter(!tombstonedPred(cmod))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("norm2"), col("cent_id"),
-        expr("vec_dist2(embedding, cent_emb)").as("d2"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cent_id"))).as("m"),
-           first(col("embedding")).as("embedding"),
-           first(col("norm2")).as("norm2"))
-      .select(col("vec_id"), col("embedding"), col("norm2"),
-              col("m.cent_id").as("cell"))
-    val topP = graft.functions.BoundedTopK.topK(IvfNProbe)
-    val q = v.filter(col("vec_id") % QueryMod === 0 && !tombstonedPred(cmod))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("norm2").as("q_norm2"), col("cent_id"),
-        expr("vec_dist2(embedding, cent_emb)").as("d2"))
-      .groupBy(col("q_id"))
-      .agg(topP(-col("d2"), col("cent_id")).as("probes"),
-           first(col("q_emb")).as("q_emb"),
-           first(col("q_norm2")).as("q_norm2"))
-      .select(col("q_id"), col("q_emb"), col("q_norm2"),
-        explode(col("probes.id")).as("cell"))
-    val topk = graft.functions.BoundedTopK.topK(IvfTopK)
-    assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"),
-        (expr("vec_dot(q_emb, embedding)") /
-          (sqrt(col("q_norm2")) * sqrt(col("norm2")))).as("cos_raw"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos_raw"), col("cand_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-              col("col.id").as("cand_id"),
-              round(col("col.cos"), 6).as("cos_sim"))
-      .orderBy("q_id", "rank")
+    ivfSearch(emb, IvfNProbe, cmod, live = Some(!tombstonedPred(cmod)))
   }
 
   val ivfTopKTombstonedSql: String = {
-    def duckDist2(a: String, b: String): String =
-      s"list_reduce(list_transform(generate_series(1, len($a)), " +
-        s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
-        s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"
     val cmodSql = derivedCmodSql("embeddings")
     val dead = s"(vec_id % $TombMod = $TombResidue AND vec_id % $cmodSql <> 0)"
     s"""WITH v AS (
@@ -2368,15 +2127,7 @@ object Similarity {
     * plus a TakeOrderedAndProject(1) argmax — k rounds total, k·O(n)
     * work, localCheckpoint cutting the growing lineage each round. */
   def kcenterCoreset(emb: DataFrame): DataFrame = {
-    val r = QuantRange
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val q = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val q = quantized(emb).select(col("vec_id"), col("qemb"))
       .localCheckpoint(true)
     val d2 = "aggregate(zip_with(qemb, c_emb, (x, y) -> CAST(x - y AS BIGINT) * (x - y)), " +
       "0L, (acc, v) -> acc + v)"
@@ -2413,9 +2164,6 @@ object Similarity {
   }
 
   val kcenterCoresetSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
     def dist(a: String, b: String) =
       s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
         s"list_transform(generate_series(1, len($a)), " +
@@ -2435,11 +2183,8 @@ object Similarity {
       .map(i => s"SELECT $i AS pick_order, c_id, r2 FROM c$i")
       .mkString("\n  UNION ALL ")
     s"""WITH m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |v AS (SELECT vec_id, $quant AS qemb FROM embeddings CROSS JOIN m),
+       |  $duckMaxAbs),
+       |v AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings CROSS JOIN m),
        |c1 AS (SELECT vec_id AS c_id, qemb AS c_emb FROM v ORDER BY vec_id LIMIT 1),
        |d1 AS (
        |  SELECT v.vec_id, v.qemb, ${dist("v.qemb", "c.c_emb")} AS d2min
@@ -2480,7 +2225,6 @@ object Similarity {
     * integer, order-independent, hash-exact. */
   def cascadeRerank(docs: DataFrame, emb: DataFrame): DataFrame = {
     VectorOps.register(docs.sparkSession)
-    val r = QuantRange
     val qterms = graft.ext.TextAnalysis.bm25QueryTerms(docs)
     val deepW = org.apache.spark.sql.expressions.Window
       .orderBy(col("score_e6").desc, col("doc_id"))
@@ -2488,14 +2232,7 @@ object Similarity {
       .orderBy(col("score_e6").desc, col("doc_id")).limit(CascadeShortlist)
       .withColumn("bm25_rank", row_number().over(deepW).cast("long"))
       .select("doc_id", "bm25_rank")
-    val mx = emb.select(max(expr(
-      "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-        "(acc, e) -> greatest(acc, abs(CAST(e AS DOUBLE))))")).as("mx"))
-    val v = emb.crossJoin(broadcast(mx))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-          s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30d)) + 0.5d))) AS INT))")
-        .as("qemb"))
+    val v = quantized(emb).select(col("vec_id"), col("qemb"))
     val rel = graft.ext.TextAnalysis.relevantDocs(docs, qterms)
       .withColumnRenamed("doc_id", "vec_id")
     val qvec = v.join(broadcast(rel), "vec_id")
@@ -2524,21 +2261,15 @@ object Similarity {
       .orderBy("rerank")
   }
 
-  val cascadeRerankSql: String = {
-    val r = QuantRange
-    val quant = s"list_transform(embedding, e -> CAST(greatest(-$r, least($r, " +
-      s"floor(CAST(e AS DOUBLE) * ($r.0 / greatest(mx, 1e-30)) + 0.5))) AS INT))"
+  val cascadeRerankSql: String =
     s"""WITH ${graft.ext.TextAnalysis.bmCascadeCtesSql},
        |short AS (
        |  SELECT doc_id,
        |    CAST(ROW_NUMBER() OVER (ORDER BY score_e6 DESC, doc_id) AS BIGINT) AS bm25_rank
        |  FROM scored ORDER BY score_e6 DESC, doc_id LIMIT $CascadeShortlist),
        |m AS (
-       |  SELECT MAX(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |    list_transform(embedding, e -> abs(CAST(e AS DOUBLE)))),
-       |    (x, y) -> greatest(x, y))) AS mx
-       |  FROM embeddings),
-       |qt AS (SELECT vec_id, $quant AS qemb FROM embeddings, m),
+       |  $duckMaxAbs),
+       |qt AS (SELECT vec_id, ${duckQuant()} AS qemb FROM embeddings, m),
        |qr AS (SELECT qemb FROM qt JOIN rel ON rel.doc_id = qt.vec_id),
        |pe AS (SELECT unnest(generate_series(1, len(qemb))) AS i, qemb FROM qr),
        |qd AS (SELECT i, CAST(sum(qemb[i]) AS BIGINT) AS s FROM pe GROUP BY i),
@@ -2554,7 +2285,6 @@ object Similarity {
        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY dot DESC, doc_id) AS INT) AS rerank,
        |  doc_id, bm25_rank, CAST(dot AS BIGINT) AS dot
        |FROM scoredc ORDER BY rerank""".stripMargin
-  }
 
   // --------------------------------------- dimension-truncation recall
   /** Dimensions kept by the truncated index (embedding[1..32] of 64). */

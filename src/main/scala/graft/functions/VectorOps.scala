@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expressions for embedding arithmetic over
   * Array[Float] columns: `vec_dot(a, b)` and `vec_dist2(a, b)`.
@@ -120,106 +120,6 @@ case class SignLshSig(child: Expression, bits: Int)
     copy(child = newChild)
 }
 
-/** Suffix norms of an Array[Float]: out[i] = sqrt(sum_{k>=i} a[k]^2),
-  * length n+1 (out[n] = 0). Computed once per vector as a projection;
-  * powers the Cauchy-Schwarz tail bound in [[VecDotPrune]]. */
-case class VecSuffixNorms(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vec_suffix_norms"
-
-  override protected def nullSafeEval(a: Any): Any =
-    VectorOps.suffixNorms(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"graft.functions.VectorOps$$.MODULE$$.suffixNorms($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): VecSuffixNorms =
-    copy(child = newChild)
-}
-
-/** Threshold-pruned dot product: returns the EXACT left-to-right double
-  * fold of a*b (bit-identical to [[VecDot]]) when the result can reach
-  * `minDot`, and -Infinity as soon as the Cauchy-Schwarz tail bound
-  * proves it cannot: partial + |tail_a|*|tail_b| < minDot (checked every
-  * 8 elements, with a 1e-9 relative margin so float rounding in the
-  * precomputed suffix norms can never prune a borderline pair). Callers
-  * filter on a threshold anyway, so -Infinity and the true sub-threshold
-  * value are interchangeable — kept pairs see the identical dot. */
-case class VecDotPrune(children: Seq[Expression]) extends Expression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "vec_dot_prune"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val expected: Seq[DataType] = Seq(
-      ArrayType(FloatType, containsNull = false),
-      ArrayType(FloatType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      DoubleType)
-    if (children.length != expected.length)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires exactly ${expected.length} arguments " +
-          s"(a array<float>, b array<float>, suffix_norms_a array<double>, " +
-          s"suffix_norms_b array<double>, min_dot double); got ${children.length}")
-    else {
-      val bad = children.zip(expected).zipWithIndex.collectFirst {
-        // accept containsNull variants — eval reads primitives and is
-        // null-guarded at the row level
-        case ((c, ArrayType(et, _)), i) if (c.dataType match {
-              case ArrayType(actual, _) => actual != et
-              case _                    => true
-            }) => (i, c.dataType, s"array<${et.simpleString}>")
-        case ((c, DoubleType), i) if c.dataType != DoubleType =>
-          (i, c.dataType, "double")
-      }
-      bad match {
-        case Some((i, actual, want)) =>
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName argument ${i + 1} must be $want, got ${actual.simpleString}")
-        case None => TypeCheckResult.TypeCheckSuccess
-      }
-    }
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else VectorOps.dotPrune(
-      vs(0).asInstanceOf[ArrayData], vs(1).asInstanceOf[ArrayData],
-      vs(2).asInstanceOf[ArrayData], vs(3).asInstanceOf[ArrayData],
-      vs(4).asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val inputs = evs.map(_.code).reduce(_ + _)
-    val anyNull =
-      org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.isNullExpression(
-        evs.map(_.isNull.code).mkString(" || "))
-    ev.copy(code =
-      code"""
-         |$inputs
-         |boolean ${ev.isNull} = $anyNull;
-         |double ${ev.value} = 0.0;
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = graft.functions.VectorOps$$.MODULE$$.dotPrune(
-         |    ${evs(0).value}, ${evs(1).value}, ${evs(2).value},
-         |    ${evs(3).value}, ${evs(4).value});
-         |}
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): VecDotPrune =
-    copy(children = newChildren)
-}
-
 object VectorOps {
   /** Left-to-right double fold of elementwise products (== the oracle's
     * list_reduce over CAST(a[i] AS DOUBLE) * CAST(b[i] AS DOUBLE)). */
@@ -277,42 +177,6 @@ object VectorOps {
     out
   }
 
-  /** out[i] = sqrt(sum_{k>=i} a[k]^2), length n+1, out[n] = 0. */
-  def suffixNorms(a: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = a.numElements()
-    val out = new Array[Double](n + 1)
-    var s = 0.0
-    var i = n - 1
-    while (i >= 0) {
-      val v = a.getFloat(i).toDouble
-      s += v * v
-      out(i) = math.sqrt(s)
-      i -= 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Exact dot (same fold as [[dot]]) with Cauchy-Schwarz tail pruning:
-    * once partial + suffixNorm_a[i] * suffixNorm_b[i] < minDot (with a
-    * 1e-9 relative margin), the true dot provably cannot reach minDot —
-    * return -Infinity. Checked every 8 elements to keep the bound
-    * overhead off the hot loop. */
-  def dotPrune(a: ArrayData, b: ArrayData, sa: ArrayData, sb: ArrayData,
-               minDot: Double): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    val cut = minDot - math.abs(minDot) * 1e-9
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-      if ((i & 7) == 0 && i < n &&
-          s + sa.getDouble(i) * sb.getDouble(i) < cut)
-        return Double.NegativeInfinity
-    }
-    s
-  }
-
   /** Register `vec_dot(a, b)` / `vec_dist2(a, b)` /
     * `sign_lsh_sig(a, bits)` for expr()/SQL use. `sign_lsh_sig` takes
     * its bit width as an explicit literal second argument — the SAME
@@ -334,9 +198,5 @@ object VectorOps {
           s"sign_lsh_sig(embedding, bits) requires exactly 2 arguments, got ${exprs.length}")
         SignLshSig(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
       }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_suffix_norms", exprs => VecSuffixNorms(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_prune", exprs => VecDotPrune(exprs), "built-in")
   }
 }

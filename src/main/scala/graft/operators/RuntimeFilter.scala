@@ -49,15 +49,8 @@ object RuntimeFilter {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
 
   /** Run `body` with [[BloomDemoConfs]] applied, restoring prior values. */
-  private[graft] def withBloomConfs[T](spark: SparkSession)(body: => T): T = {
-    val prev = BloomDemoConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    BloomDemoConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private[graft] def withBloomConfs[T](spark: SparkSession)(body: => T): T =
+    graft.Harness.withConfs(spark, BloomDemoConfs: _*)(body)
 
   /** The join itself, LAZY (caller owns the confs): high-value orders'
     * lineitems rolled up per priority class. Semantically a plain

@@ -108,15 +108,8 @@ object Skew {
     "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
 
   /** Run `body` with [[SkewDemoConfs]] applied, restoring prior values. */
-  private[graft] def withSkewConfs[T](spark: SparkSession)(body: => T): T = {
-    val prev = SkewDemoConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    SkewDemoConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private[graft] def withSkewConfs[T](spark: SparkSession)(body: => T): T =
+    graft.Harness.withConfs(spark, SkewDemoConfs: _*)(body)
 
   /** One output DIR per fixture — but the join itself re-executes on
     * EVERY call, overwriting that dir. Caching the result instead would

@@ -36,6 +36,9 @@ object DynamicOverwrite {
   /** The partition whose ingest is re-run. */
   val BackfillSource = "src3"
 
+  /** Scopes an overwrite to the partitions present in the job's output. */
+  private val DynamicMode = "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
+
   def tableRoot(spark: SparkSession, dir: String): Path =
     backfilled(spark, dir)._1
 
@@ -56,15 +59,11 @@ object DynamicOverwrite {
       // Keep predicate: even row-index WITHIN the source ((doc_id div
       // 20) % 2 — the fixture assigns source = doc_id % 20, so a plain
       // doc_id parity would select all-or-nothing per source)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try docs.filter(col("source") === BackfillSource &&
-          expr("(doc_id div 20) % 2 = 0"))
-        .write.partitionBy("source").mode("overwrite")
-        .parquet(root.toString)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      graft.Harness.withConfs(spark, DynamicMode) {
+        docs.filter(col("source") === BackfillSource &&
+            expr("(doc_id div 20) % 2 = 0"))
+          .write.partitionBy("source").mode("overwrite")
+          .parquet(root.toString)
       }
       (root, stamps)
     }
@@ -98,15 +97,11 @@ object DynamicOverwrite {
     * again. */
   private[graft] def rerunBackfill(spark: SparkSession, dir: String): Unit = {
     val root = tableRoot(spark, dir)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try Tables.documents(spark, dir)
-      .filter(col("source") === BackfillSource && expr("(doc_id div 20) % 2 = 0"))
-      .write.partitionBy("source").mode("overwrite")
-      .parquet(root.toString)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    graft.Harness.withConfs(spark, DynamicMode) {
+      Tables.documents(spark, dir)
+        .filter(col("source") === BackfillSource && expr("(doc_id div 20) % 2 = 0"))
+        .write.partitionBy("source").mode("overwrite")
+        .parquet(root.toString)
     }
   }
 

@@ -247,8 +247,10 @@ object StreamingGate {
     val ckpt = graft.TempDirs.create("graft-stream-ckpt")
     // Gate-scoped confs (state partitions + checkpoint sidecar policy):
     // see [[withGateConfs]]. Safe per run because both are pinned at
-    // stream start against each run's FRESH checkpoint.
-    withGateConfs(spark) {
+    // stream start against each run's FRESH checkpoint. The checkpoint
+    // is dropped once the query has terminated: the memory sink already
+    // holds every row, and nothing restarts from it.
+    try withGateConfs(spark) {
       val q = transform(stream(spark, staged, filesPerTrigger)).writeStream
         .format("memory")
         .queryName(name)
@@ -258,7 +260,7 @@ object StreamingGate {
         .start()
       q.awaitTermination()
       lastRunProgress.set(q.recentProgress.toSeq)
-    }
+    } finally graft.TempDirs.deleteTree(ckpt)
     spark.table(name)
   }
 
@@ -662,17 +664,9 @@ object StreamingGate {
     * HDFS-backed default doesn't implement the v2 column families);
     * scoped to the one query, restored after — provider class is read
     * at stream START, so per-run scoping is safe. */
-  private def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[A](spark: SparkSession)(body: => A): A =
+    graft.Harness.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Gate-scoped streaming session confs, applied for one engine run
     * and restored after (same per-run-scoping argument as
@@ -698,8 +692,8 @@ object StreamingGate {
     *    oracle-hash-gated end-to-end and q82 proves restart recovery
     *    directly (guide §1.2: config after algorithm — this is an
     *    I/O-op-count change, measured per batch). */
-  private def withGateConfs[A](spark: SparkSession)(body: => A): A = {
-    val wanted = Seq(
+  private def withGateConfs[A](spark: SparkSession)(body: => A): A =
+    graft.Harness.withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       // q214's dataTriggers/lastProcTimeRun counters read
@@ -708,15 +702,7 @@ object StreamingGate {
       // first data-carrying trigger and fail the gate spuriously
       // (round-15 ADVICE). Progress objects are small; 10k entries
       // covers minutes of triggers.
-      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")
-    val prevs = wanted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    wanted.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prevs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")(body)
 
   /** q76: ARBITRARY STATE V2 (transformWithState) through the
     * micro-batch engine, two-copy staged replay — the q65 proof applied
@@ -1368,25 +1354,11 @@ object StreamingGate {
     * the incremental state machine is indistinguishable from the
     * full-history window build, per interval, per count, per flag. */
   def q135StreamScd2(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageEventsTimeSplit(spark, dir)
-    val name = s"graft_stream_gate_${runCounter.incrementAndGet()}"
-    val ckpt = graft.TempDirs.create("graft-stream-ckpt")
-    withGateConfs(spark) {
-      val q = EventsStreaming.scdIntervals(
-          stream(spark, staged, filesPerTrigger = Some(1)))
-        .toDF()
-        .filter(col("user_id") >= 0) // sentinel's own group is inert
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastRunProgress.set(q.recentProgress.toSeq)
-    }
-    spark.table(name).orderBy("user_id", "valid_from_us")
+    runStagedToMemory(spark, stageEventsTimeSplit(spark, dir),
+        s => EventsStreaming.scdIntervals(s).toDF()
+          .filter(col("user_id") >= 0), // sentinel's own group is inert
+        filesPerTrigger = Some(1))
+      .orderBy("user_id", "valid_from_us")
   }
 
   // ------------------------------------------------ q126 streaming dedup

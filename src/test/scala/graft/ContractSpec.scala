@@ -72,4 +72,27 @@ class ContractSpec extends SparkSpec {
     } finally it.close()
     assert(offenders.isEmpty, s"stage through graft.TempDirs.memo/staged: $offenders")
   }
+
+  test("int8 quantization has one Spark and one oracle definition; the pruned dot is gone") {
+    def sources(root: String): Seq[(java.nio.file.Path, String)] = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try it.iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "ContractSpec.scala")
+        .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      finally it.close()
+    }
+    def count(files: Seq[(java.nio.file.Path, String)], s: String): Int =
+      files.map { case (_, text) => text.sliding(s.length).count(_ == s) }.sum
+    val main = sources("src/main")
+    assert(count(main, "greatest(mx, 1e-30d)") == 1,
+      "quantize through Similarity.quantized")
+    assert(count(main, "greatest(mx, 1e-30))") == 1,
+      "quantize oracles through Similarity.duckQuant")
+    val all = sources("src")
+    Seq("vec_dot_prune", "vec_suffix_norms", "usePrune").foreach { s =>
+      val hits = all.collect { case (p, text) if text.contains(s) => p }
+      assert(hits.isEmpty, s"$s is deleted but named in $hits")
+    }
+  }
 }

@@ -66,6 +66,29 @@ class HarnessSpec extends SparkSpec {
       Harness.resultDigest(orig))
   }
 
+  test("withConfs restores a set key, unsets an unset one, also when the body throws") {
+    val (setKey, unsetKey) = ("graft.test.withconfs.set", "graft.test.withconfs.unset")
+    spark.conf.set(setKey, "before")
+    spark.conf.unset(unsetKey)
+    try {
+      def check(): Unit = {
+        assert(spark.conf.get(setKey) == "before")
+        assert(!spark.conf.getAll.contains(unsetKey))
+      }
+      val seen = Harness.withConfs(spark, setKey -> "inside", unsetKey -> "inside") {
+        (spark.conf.get(setKey), spark.conf.get(unsetKey))
+      }
+      assert(seen == ("inside", "inside"))
+      check()
+      intercept[IllegalStateException] {
+        Harness.withConfs(spark, setKey -> "inside", unsetKey -> "inside") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      check()
+    } finally spark.conf.unset(setKey)
+  }
+
   test("jsonString escapes quote, backslash and control chars") {
     assert(Harness.jsonString("a\"b\\c\nd\te\u0001f") ==
       "\"a\\\"b\\\\c\\nd\\te\\u0001f\"")

@@ -177,6 +177,24 @@ class LmSpec extends SparkSpec {
     assert(r.forall(_.getAs[Long]("qdot") == 0L))
   }
 
+  test("quantized: all-zero corpus, exact ±127 at the max |x|, a one-vector corpus") {
+    import spark.implicits._
+    def qembs(rows: Seq[(Long, Array[Float])]): Seq[Seq[Int]] =
+      Similarity.quantized(rows.toDF("vec_id", "embedding"))
+        .orderBy("vec_id").select("qemb").as[Seq[Int]].collect().toSeq
+    // the 1e-30 floor: 0/0 would be NaN, and a NaN cast is 0 only by luck
+    val zeros = qembs((0L to 3L).map(i => (i, Array.fill(4)(0.0f))))
+    assert(zeros.forall(_ == Seq(0, 0, 0, 0)), s"all-zero corpus: $zeros")
+    val mixed = qembs(Seq(
+      (1L, Array(0.5f, -2.0f, 0.0f)), (2L, Array(1.0f, 0.25f, -0.5f))))
+    assert(mixed.head(1) == -127, s"the max |x| element must map to -127: $mixed")
+    assert(mixed.flatten.forall(q => q >= -127 && q <= 127))
+    assert(qembs(Seq((1L, Array(0.3f, -0.1f)))).flatten.max == 127,
+      "the max |x| element must map to +127")
+    val one = qembs(Seq((7L, Array(2.0f, -1.0f, 0.0f))))
+    assert(one == Seq(Seq(127, -63, 0)), s"one-vector corpus: $one")
+  }
+
   test("vec_dot_int: codegen kernel equals a hand computation; type-checked") {
     import spark.implicits._
     graft.functions.VectorOps.register(spark)

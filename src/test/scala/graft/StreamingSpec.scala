@@ -53,6 +53,19 @@ class StreamingSpec extends SparkSpec {
     assert(got == want, "append-mode emission must reproduce the batch relation")
   }
 
+  test("a gate run leaves no checkpoint tree behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def ckpts(): Int = {
+      import scala.jdk.CollectionConverters._
+      val it = java.nio.file.Files.list(tmp)
+      try it.iterator().asScala.count(_.getFileName.toString.startsWith("graft-stream-ckpt"))
+      finally it.close()
+    }
+    val before = ckpts()
+    (1 to 2).foreach(_ => graft.streaming.StreamingGate.q40StreamTumbling(spark, sf).collect())
+    assert(ckpts() == before, "every q40 run must delete its checkpoint tree")
+  }
+
   test("q41 gate: APPEND-mode session windows equal batch q12 exactly") {
     val got = graft.streaming.StreamingGate.q41StreamSessions(spark, sf)
       .collect().map(_.toSeq).toSeq

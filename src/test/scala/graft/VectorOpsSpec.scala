@@ -58,47 +58,6 @@ class VectorOpsSpec extends SparkSpec {
       "fused signature must be IEEE754-identical to the HOF reference"))
   }
 
-  test("vec_dot_prune: identical to vec_dot above threshold, -Inf only when provably below") {
-    import spark.implicits._
-    VectorOps.register(spark)
-    val rnd = new scala.util.Random(17)
-    // random pairs, plus engineered near-threshold pairs (scaled copies
-    // with noise so cosines cluster around the cut)
-    val dim = 32
-    def vec() = Array.fill(dim)(rnd.nextFloat() - 0.5f)
-    val pairs = (1 to 300).map { i =>
-      val a = vec()
-      val b =
-        if (i % 3 == 0) Array.tabulate(dim)(k => a(k) * 0.8f + (rnd.nextFloat() - 0.5f) * 0.9f)
-        else vec()
-      (a, b)
-    }
-    val thr = 0.45
-    val df = pairs.toDF("a", "b").selectExpr(
-      "vec_dot(a, b) AS plain",
-      "vec_dot(a, a) AS na2", "vec_dot(b, b) AS nb2",
-      s"vec_dot_prune(a, b, vec_suffix_norms(a), vec_suffix_norms(b), " +
-        s"$thr * sqrt(vec_dot(a, a)) * sqrt(vec_dot(b, b))) AS pruned")
-      .collect()
-    df.foreach { r =>
-      val (plain, na2, nb2, pruned) =
-        (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-      val minDot = thr * math.sqrt(na2) * math.sqrt(nb2)
-      if (plain >= minDot)
-        assert(pruned == plain, "above-threshold pair must be bit-identical")
-      else
-        assert(pruned == plain || pruned.isNegInfinity,
-          "below-threshold pair may abort but never change value")
-    }
-    // the full near-dup query: pruned and plain plans agree exactly
-    val emb = Tables.embeddings(spark, sf)
-    val p = graft.ext.Similarity.embeddingNearDups(emb, usePrune = true)
-      .collect().map(_.toSeq).toSeq
-    val q = graft.ext.Similarity.embeddingNearDups(emb, usePrune = false)
-      .collect().map(_.toSeq).toSeq
-    assert(p == q, "pruning changed the q24 answer")
-  }
-
   test("TopKByScore: any partial grouping merges to the same bounded top-k") {
     import graft.functions.{ScoredCand, TopKByScore}
     val agg = new TopKByScore(5)
