@@ -27,8 +27,6 @@ object Curation {
   val MinStopCount = 2   // minimum stopword occurrences
   val MaxDupE4 = 300     // duplicate-3-gram ratio ceiling, e4
 
-  private val stopwords = Seq(" the ", " a ", " of ", " and ", " is ")
-
   /** Gopher/C4-style composite quality gate: every rule evaluated from
     * the integer signals of q20/q47, verdict = the FIRST failing rule
     * (rule order is part of the contract — a doc failing several rules
@@ -47,17 +45,14 @@ object Curation {
   def filterVerdicts(docs: DataFrame): DataFrame = {
     graft.functions.ShingleHashes.register(docs.sparkSession, 3,
       Dedup.HashBase, Dedup.HashMod)
-    val padded = "concat(' ', text, ' ')"
-    val stopCnt = stopwords
-      .map(w => s"(${TextAnalysis.sparkCount(padded, w)})").mkString(" + ")
     val sig = docs.select(
       col("doc_id"),
-      expr("size(split(text, ' '))").as("n_tokens"),
-      expr("(100 * (length(text) - size(split(text, ' ')) + 1)) div greatest(size(split(text, ' ')), 1)")
+      size(Text.tokens).as("n_tokens"),
+      expr(s"(100 * (length(text) - ${Text.sparkTokenCount} + 1)) div greatest(${Text.sparkTokenCount}, 1)")
         .as("mwl_c"),
       expr("(10000 * length(regexp_replace(text, '[A-Za-z0-9 ]', ''))) div greatest(length(text), 1)")
         .as("symbol_bp"),
-      expr(s"$stopCnt").as("stop_cnt"),
+      expr(Text.sparkStopCount).as("stop_cnt"),
       expr("shingle_hashes(text)").as("hs"))
       .withColumn("dup_e4",
         expr("(10000 * (size(hs) - size(array_distinct(hs)))) div greatest(size(hs), 1)"))
@@ -75,17 +70,14 @@ object Curation {
       .orderBy("doc_id")
   }
 
-  val filterVerdictsSql: String = {
-    val padded = "concat(' ', text, ' ')"
-    val stopCnt = stopwords
-      .map(w => s"(${TextAnalysis.duckCount(padded, w)})").mkString(" + ")
+  val filterVerdictsSql: String =
     s"""WITH sig AS (
        |  SELECT doc_id,
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    (100 * (length(text) - len(string_split(text, ' ')) + 1)) // greatest(len(string_split(text, ' ')), 1) AS mwl_c,
+       |    len(${Text.duckTokens}) AS n_tokens,
+       |    (100 * (length(text) - len(${Text.duckTokens}) + 1)) // greatest(len(${Text.duckTokens}), 1) AS mwl_c,
        |    (10000 * length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))) // greatest(length(text), 1) AS symbol_bp,
-       |    ($stopCnt) AS stop_cnt,
-       |    list_transform(${Dedup.duckShingles}, s -> ${Dedup.duckH("s")}) AS hs
+       |    (${Text.duckStopCount}) AS stop_cnt,
+       |    ${Dedup.duckShingleHashes} AS hs
        |  FROM documents),
        |v AS (
        |  SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -101,7 +93,6 @@ object Curation {
        |SELECT doc_id, n_tokens, verdict,
        |  CASE WHEN verdict = 'pass' THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS passed
        |FROM v ORDER BY doc_id""".stripMargin
-  }
 
   // --------------------------------------------------- token rarity
   /** Fixed-point scale for the rarity score. e4 (not e6) keeps the
@@ -127,9 +118,7 @@ object Curation {
     * same plan degrades to a shuffle join on token — the declarative
     * form survives the scale-up either way. */
   def tokenRarity(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val toks = Text.words(docs, "token", "doc_id")
     val vocab = toks.groupBy("token").agg(count(lit(1)).as("tf"))
     val total = vocab.agg(sum(col("tf")).as("corpus_n"))
     toks
@@ -145,7 +134,7 @@ object Curation {
 
   val tokenRaritySql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+       |  SELECT doc_id, unnest(${Text.duckTokens}) AS token FROM documents),
        |t AS (SELECT doc_id, token FROM toks WHERE length(token) > 0),
        |vocab AS (SELECT token, COUNT(*) AS tf FROM t GROUP BY token),
        |total AS (SELECT SUM(tf) AS corpus_n FROM vocab)
@@ -190,23 +179,9 @@ object Curation {
       .orderBy("doc_id")
   }
 
-  def incrementalDedupSql: String = {
-    val sigCols = (0 until Dedup.NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${Dedup.coefA(i)} * h + ${Dedup.coefB(i)}) % ${Dedup.P})) AS h$i"
-    }
-    val bandSelects = (0 until Dedup.NumBands).map { b =>
-      val key = (0 until Dedup.BandRows)
-        .map(r => s"CAST(h${b * Dedup.BandRows + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, source, $b AS band, $key AS band_key FROM sig"
-    }
-    s"""WITH hashed AS (
-       |  SELECT doc_id, source,
-       |    list_transform(${Dedup.duckShingles}, s -> ${Dedup.duckH("s")}) AS hs
-       |  FROM documents),
-       |sig AS (SELECT doc_id, source, ${sigCols.mkString(", ")} FROM hashed),
-       |bands AS (${bandSelects.mkString(" UNION ALL ")})
+  def incrementalDedupSql: String =
+    s"""WITH ${Dedup.duckSigCtes("documents", "doc_id, source")},
+       |${Dedup.duckBandsCte("doc_id, source")}
        |SELECT a.doc_id, COUNT(DISTINCT a.band) AS n_hit_bands
        |FROM bands a
        |WHERE a.source = '$IncomingSource'
@@ -214,7 +189,6 @@ object Curation {
        |              WHERE e.source <> '$IncomingSource'
        |                AND e.band = a.band AND e.band_key = a.band_key)
        |GROUP BY a.doc_id ORDER BY doc_id""".stripMargin
-  }
 
   // ------------------------------------------------------ shard plan
   val ShardTokens = 1000L
@@ -238,7 +212,7 @@ object Curation {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     docs.select(col("source"), col("doc_id"),
-        expr("size(split(text, ' '))").cast("long").as("n_tokens"))
+        size(Text.tokens).cast("long").as("n_tokens"))
       .withColumn("tokens_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .select(col("source"), col("doc_id"), col("n_tokens"),
         expr(s"tokens_before div $ShardTokens").as("shard"))
@@ -247,8 +221,8 @@ object Curation {
 
   val shardPlanSql: String =
     s"""SELECT source, doc_id,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |  CAST(COALESCE(SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
+       |  CAST(len(${Text.duckTokens}) AS BIGINT) AS n_tokens,
+       |  CAST(COALESCE(SUM(CAST(len(${Text.duckTokens}) AS BIGINT))
        |    OVER (PARTITION BY source ORDER BY doc_id
        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |    // $ShardTokens AS shard
@@ -287,7 +261,7 @@ object Curation {
   def packedSpans(docs: DataFrame, seqTokens: Long = SeqTokens): DataFrame =
     packedSpansFromCounts(
       docs.select(col("source"), col("doc_id"),
-        expr("size(split(text, ' '))").cast("long").as("n_tokens")),
+        size(Text.tokens).cast("long").as("n_tokens")),
       seqTokens)
 
   /** The packing core over any (source, doc_id, n_tokens) relation —
@@ -313,15 +287,11 @@ object Curation {
       .orderBy("source", "seq", "seq_off")
   }
 
-  val packedSpansSql: String =
-    s"""WITH t AS (
-       |  SELECT source, doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(COALESCE(SUM(CAST(len(string_split(text, ' ')) AS BIGINT))
-       |      OVER (PARTITION BY source ORDER BY doc_id
-       |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-       |      AS before FROM documents),
-       |s AS (
+  /** Oracle tail of the span packing: the `s` CTE and the final SELECT
+    * over a `t` CTE of (source, doc_id, n_tokens, before), `before`
+    * being the source's token total ahead of the doc. */
+  private def duckSpans: String =
+    s"""s AS (
        |  SELECT source, doc_id, n_tokens, before,
        |    unnest(generate_series(before // $SeqTokens,
        |                           (before + n_tokens - 1) // $SeqTokens)) AS seq
@@ -332,6 +302,16 @@ object Curation {
        |    - greatest(before, seq * $SeqTokens) AS tok_len,
        |  greatest(before, seq * $SeqTokens) - seq * $SeqTokens AS seq_off
        |FROM s ORDER BY source, seq, seq_off""".stripMargin
+
+  val packedSpansSql: String =
+    s"""WITH t AS (
+       |  SELECT source, doc_id,
+       |    CAST(len(${Text.duckTokens}) AS BIGINT) AS n_tokens,
+       |    CAST(COALESCE(SUM(CAST(len(${Text.duckTokens}) AS BIGINT))
+       |      OVER (PARTITION BY source ORDER BY doc_id
+       |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+       |      AS before FROM documents),
+       |$duckSpans""".stripMargin
 
   // ------------------------------------------ deterministic shuffle (q111)
   /** Shard count for [[corpusShuffle]] — production sizes this to the
@@ -528,7 +508,7 @@ object Curation {
     * no-drifted-copies discipline: the two queries are comparable only
     * while they tokenize identically). */
   private[ext] def docBigrams(docs: DataFrame, keyCol: String): DataFrame =
-    docs.select(col(keyCol), split(col("text"), " ").as("t"))
+    docs.select(col(keyCol), Text.tokens.as("t"))
       .where(size(col("t")) >= 2)
       .select(col(keyCol), explode(expr(
         "array_distinct(transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i + 1])))")).as("bg"))
@@ -536,8 +516,8 @@ object Curation {
   /** The matching oracle CTE pair (`t`, `b`) keyed by `key` — shared by
     * greedyCoverageSql and sourceAblationSql for the same reason. */
   private def bigramCtesSql(key: String): String =
-    s"""t AS (SELECT $key, string_split(text, ' ') AS toks FROM documents
-       |      WHERE len(string_split(text, ' ')) >= 2),
+    s"""t AS (SELECT $key, ${Text.duckTokens} AS toks FROM documents
+       |      WHERE len(${Text.duckTokens}) >= 2),
        |b AS (SELECT DISTINCT $key, bg FROM (
        |  SELECT $key, unnest(list_transform(generate_series(1, len(toks) - 1),
        |    i -> toks[i] || ' ' || toks[i + 1])) AS bg FROM t))""".stripMargin
@@ -711,7 +691,7 @@ object Curation {
       .groupBy("source").agg(count(lit(1)).as("uniq_bigrams"))
     val mass = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(expr("size(split(text, ' '))")).as("toks"))
+        sum(size(Text.tokens)).as("toks"))
     val nVocab = nSrc.agg(count(lit(1)).as("n_vocab"))
     val totToks = mass.agg(sum("toks").as("total_toks"))
     mass.join(uniq, Seq("source"), "left_outer")
@@ -731,7 +711,7 @@ object Curation {
        |uniq AS (SELECT s.source, count(*) AS uniq_bigrams
        |         FROM b s JOIN nb ON nb.bg = s.bg AND nb.n_src = 1 GROUP BY 1),
        |mass AS (SELECT source, count(*) AS n_docs,
-       |           sum(len(string_split(text, ' '))) AS toks
+       |           sum(len(${Text.duckTokens})) AS toks
        |         FROM documents GROUP BY 1),
        |tot AS (SELECT (SELECT count(*) FROM nb) AS n_vocab,
        |               (SELECT sum(toks) FROM mass) AS total_toks)
@@ -779,20 +759,7 @@ object Curation {
           .otherwise("test"))
 
   val clusterAwareSplitSql: String =
-    s"""WITH RECURSIVE pairs AS (SELECT * FROM (${Dedup.minhashPairsSql})),
-       |edges(a, b) AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(src, dst) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-       |clusters AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN min(r.dst) IS NULL OR d.doc_id < min(r.dst)
-       |         THEN d.doc_id ELSE min(r.dst) END AS cluster_id
-       |  FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
-       |  GROUP BY d.doc_id),
+    s"""${Dedup.duckClusterCtes(Dedup.minhashPairsSql)},
        |lab AS (
        |  SELECT doc_id, cluster_id,
        |    ${splitCaseSql("cluster_id")} AS split
@@ -831,20 +798,7 @@ object Curation {
   }
 
   def canonicalDocsSql: String =
-    s"""WITH RECURSIVE pairs AS (SELECT * FROM (${Dedup.minhashPairsSql})),
-       |edges(a, b) AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(src, dst) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-       |clusters AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN min(r.dst) IS NULL OR d.doc_id < min(r.dst)
-       |         THEN d.doc_id ELSE min(r.dst) END AS cluster_id
-       |  FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
-       |  GROUP BY d.doc_id),
+    s"""${Dedup.duckClusterCtes(Dedup.minhashPairsSql)},
        |ranked AS (
        |  SELECT c.cluster_id, d.doc_id, d.n_chars,
        |    ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -866,18 +820,22 @@ object Curation {
     * TakeOrderedAndProject — per-partition heaps, never a global sort
     * of the pair vocabulary. Ties break on the pair text. */
   def bpePairs(docs: DataFrame): DataFrame =
-    docs.select(split(col("text"), " ").as("toks"))
+    adjacentPairs(docs)
+      .groupBy("pair").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("pair"))
+      .limit(BpeTopK)
+
+  /** Every adjacent token pair of every doc, "left right", as `pair`. */
+  private def adjacentPairs(docs: DataFrame): DataFrame =
+    docs.select(Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(explode(expr(
         """transform(sequence(1, size(toks) - 1),
           |  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"""
           .stripMargin)).as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("pair"))
-      .limit(BpeTopK)
 
   val bpePairsSql: String =
-    s"""WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT ${Text.duckTokens} AS toks FROM documents),
        |p AS (
        |  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
        |    i -> toks[i] || ' ' || toks[i + 1])) AS pair
@@ -921,12 +879,7 @@ object Curation {
     val spark = docs.sparkSession
     import spark.implicits._
     val merges: Array[(String, String)] =
-      docs.select(split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(toks) - 1),
-            |  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"""
-            .stripMargin)).as("pair"))
+      adjacentPairs(docs)
         .filter(!col("pair").startsWith(" ") && !col("pair").endsWith(" "))
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair"))
@@ -952,7 +905,9 @@ object Curation {
     // + per-group sort into one stateless projection. md5 stays a
     // COLUMN expression over the joined id string — same builtin, same
     // bytes, engine parity untouched.
-    val encoded = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    // a doc with no tokens (null text) has no row, as in the unnest oracle
+    val encoded = docs.select(col("doc_id"), Text.tokens.as("toks"))
+      .filter(col("toks").isNotNull && size(col("toks")) > 0)
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val ms = bc.value
@@ -1022,7 +977,7 @@ object Curation {
     * exactly: a just-merged symbol ends "… y", never "… x", so it can
     * not re-merge in the same pass. */
   private def bpeChainSql: String =
-    s"""tk AS (SELECT string_split(text, ' ') AS toks FROM documents),
+    s"""tk AS (SELECT ${Text.duckTokens} AS toks FROM documents),
        |pr AS (
        |  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
        |    i -> toks[i] || ' ' || toks[i + 1])) AS pair
@@ -1036,7 +991,7 @@ object Curation {
        |        GROUP BY pair ORDER BY n DESC, pair LIMIT $BpeTopK)),
        |enc AS (
        |  SELECT 0 AS r, doc_id,
-       |    array_to_string(string_split(text, ' '), chr(31)) AS s
+       |    array_to_string(${Text.duckTokens}, chr(31)) AS s
        |  FROM documents
        |  UNION ALL
        |  SELECT e.r + 1, e.doc_id,
@@ -1091,17 +1046,7 @@ object Curation {
        |      OVER (PARTITION BY source ORDER BY doc_id
        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |      AS before FROM counts),
-       |s AS (
-       |  SELECT source, doc_id, n_tokens, before,
-       |    unnest(generate_series(before // $SeqTokens,
-       |                           (before + n_tokens - 1) // $SeqTokens)) AS seq
-       |  FROM t)
-       |SELECT source, seq, doc_id,
-       |  greatest(before, seq * $SeqTokens) - before AS tok_start,
-       |  least(before + n_tokens, (seq + 1) * $SeqTokens)
-       |    - greatest(before, seq * $SeqTokens) AS tok_len,
-       |  greatest(before, seq * $SeqTokens) - seq * $SeqTokens AS seq_off
-       |FROM s ORDER BY source, seq, seq_off""".stripMargin
+       |$duckSpans""".stripMargin
 
   // --------------------------------- tokenizer fertility audit (q200)
   /** q200: TOKENIZER FERTILITY AUDIT — chars-per-token and
@@ -1121,7 +1066,7 @@ object Curation {
   def tokenizerFertility(docs: DataFrame): DataFrame = {
     val enc = bpeEncode(docs).select(col("doc_id"), col("n_tokens").as("bpe_tokens"))
     docs.select(col("doc_id"), col("lang"), col("n_chars"),
-        expr("size(split(text, ' '))").cast("long").as("ws_tokens"))
+        size(Text.tokens).cast("long").as("ws_tokens"))
       .join(enc, "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"),
@@ -1308,7 +1253,7 @@ object Curation {
     docs.filter(col("n_chars") > 0)
       .select(col("doc_id"),
         (length(expr("bin(n_chars)")) - 1).cast("long").as("bin"),
-        expr("size(split(text, ' '))").cast("long").as("nt"),
+        size(Text.tokens).cast("long").as("nt"),
         expr(lcgKeySql("doc_id", BatchSeed)).as("key"))
       .withColumn("before", coalesce(sum("nt").over(byBin), lit(0L)))
       .withColumn("batch", expr(s"before div $BatchTokens"))
@@ -1321,7 +1266,7 @@ object Curation {
   val bucketedBatchingSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, length(bin(n_chars)) - 1 AS bin,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
+       |    CAST(len(${Text.duckTokens}) AS BIGINT) AS nt,
        |    ${lcgKeySql("doc_id", BatchSeed)} AS key
        |  FROM documents WHERE n_chars > 0),
        |c AS (
@@ -1356,9 +1301,7 @@ object Curation {
     * everything downstream is algebra on that tiny relation. */
   def splitBalance(docs: DataFrame): DataFrame = {
     val toks = splitLabels(docs).select("doc_id", "split")
-      .join(docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("w")), "doc_id")
-      .filter(length(col("w")) > 0)
+      .join(Text.words(docs, "w", "doc_id"), "doc_id")
       .withColumn("bkt",
         expr(s"cast(conv(substr(md5(w), 1, 6), 16, 10) as bigint) % $BalanceBuckets"))
     val perSplit = toks.groupBy("split", "bkt").agg(count(lit(1)).as("c"))
@@ -1388,7 +1331,7 @@ object Curation {
        |toks AS (
        |  SELECT l.split,
        |    ('0x' || substr(md5(w), 1, 6))::BIGINT % $BalanceBuckets AS bkt
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) t
+       |  FROM (SELECT doc_id, unnest(${Text.duckTokens}) AS w FROM documents) t
        |  JOIN lab l USING (doc_id) WHERE length(w) > 0),
        |ps AS (SELECT split, bkt, count(*) AS c FROM toks GROUP BY 1, 2),
        |st AS (SELECT split, sum(c) AS tot FROM ps GROUP BY 1),
@@ -1429,9 +1372,8 @@ object Curation {
     * evaluated where the pair is born; only docs sharing a prefix
     * fingerprint ever carry their text into a bucket list. */
   def prefixContained(docs: DataFrame): DataFrame = {
-    val norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
     docs
-      .select(col("doc_id"), expr(norm).as("t"))
+      .select(col("doc_id"), Text.norm.as("t"))
       .withColumn("ntok", size(split(col("t"), " ")))
       .filter(col("ntok") >= ContainPrefixWords)
       .select(col("doc_id"), col("t"), length(col("t")).as("n"),
@@ -1454,11 +1396,10 @@ object Curation {
       .orderBy("short_doc", "long_doc")
   }
 
-  val prefixContainedSql: String = {
-    val norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
+  val prefixContainedSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, $norm AS t FROM documents
-       |  WHERE len(string_split($norm, ' ')) >= $ContainPrefixWords)
+       |  SELECT doc_id, ${Text.duckNorm} AS t FROM documents
+       |  WHERE len(string_split(${Text.duckNorm}, ' ')) >= $ContainPrefixWords)
        |SELECT a.doc_id AS short_doc, b.doc_id AS long_doc,
        |  CAST(length(a.t) AS BIGINT) AS short_chars,
        |  CAST(length(b.t) AS BIGINT) AS long_chars
@@ -1466,7 +1407,6 @@ object Curation {
        |  ON length(a.t) < length(b.t)
        | AND substr(b.t, 1, length(a.t)) = a.t
        |ORDER BY short_doc, long_doc""".stripMargin
-  }
 
   // ------------------------------------------------- alignment audit
   /** Multimodal alignment audit: per source, how many docs lack a row in
@@ -1508,28 +1448,26 @@ object Curation {
     * again — k-row partials map-side, |sources|·k rows through the
     * shuffle, no window sort of the corpus (q44's argument applied to
     * sampling). */
-  def stratifiedSample(docs: DataFrame): DataFrame = {
+  def stratifiedSample(docs: DataFrame): DataFrame =
+    topByContentHash(docs, StratumK).orderBy("source", "rank")
+
+  /** Per source, the `k` docs of largest [[Text.sparkContentHash]] as
+    * (source, rank, doc_id, h), through the bounded-heap aggregator. */
+  private def topByContentHash(docs: DataFrame, k: Int): DataFrame = {
     graft.functions.PolyHash.register(docs.sparkSession)
-    val norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
-    val topk = graft.functions.BoundedTopK.topK(StratumK)
+    val topk = graft.functions.BoundedTopK.topK(k)
     docs.select(col("source"), col("doc_id"),
-        expr(s"poly_hash(substring(md5(cast($norm as binary)), 1, 8), 31, 1000000007)")
-          .cast("double").as("h"))
+        expr(Text.sparkContentHash).cast("double").as("h"))
       .groupBy("source")
       .agg(topk(col("h"), col("doc_id")).as("top"))
       .select(col("source"), posexplode(col("top")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"), col("col.cos").cast("long").as("h"))
-      .orderBy("source", "rank")
   }
 
-  val stratifiedSampleSql: String = {
-    val norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
-    val h = s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(" +
-      s"generate_series(1, 8), i -> CAST(ord(substr(md5($norm), i, 1)) AS BIGINT)))," +
-      s" (acc, c) -> (acc * 31 + c) % 1000000007)"
+  val stratifiedSampleSql: String =
     s"""WITH scored AS (
-       |  SELECT source, doc_id, $h AS h FROM documents),
+       |  SELECT source, doc_id, ${Text.duckContentHash} AS h FROM documents),
        |ranked AS (
        |  SELECT source, doc_id, h,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY h DESC, doc_id) AS rank
@@ -1537,7 +1475,6 @@ object Curation {
        |SELECT source, CAST(rank AS INT) AS rank, doc_id, h
        |FROM ranked WHERE rank <= $StratumK
        |ORDER BY source, rank""".stripMargin
-  }
 
   // ------------------------------------------------------- domain mix
   val MixBudget = 1000L
@@ -1558,37 +1495,22 @@ object Curation {
     * k-row partials map-side, |sources|*k rows through the shuffle,
     * rank > quota trimmed after the broadcast quota join. */
   def domainMix(docs: DataFrame): DataFrame = {
-    graft.functions.PolyHash.register(docs.sparkSession)
-    val norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
     val quotas = docs.groupBy("source")
-      .agg(sum(expr("size(split(text, ' '))")).as("src_tokens"))
+      .agg(sum(size(Text.tokens)).as("src_tokens"))
       .withColumn("w",
         expr("cast(floor(sqrt(cast(src_tokens as double))) as bigint)"))
       .withColumn("quota",
         expr(s"($MixBudget * w) div (sum(w) over ())"))
       .select("source", "quota")
-    val topk = graft.functions.BoundedTopK.topK(MixBudget.toInt)
-    val picked = docs.select(col("source"), col("doc_id"),
-        expr(s"poly_hash(substring(md5(cast($norm as binary)), 1, 8), 31, 1000000007)")
-          .cast("double").as("h"))
-      .groupBy("source")
-      .agg(topk(col("h"), col("doc_id")).as("top"))
-      .select(col("source"), posexplode(col("top")))
-      .select(col("source"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("doc_id"))
-    picked.join(broadcast(quotas), "source")
+    topByContentHash(docs, MixBudget.toInt).join(broadcast(quotas), "source")
       .filter(col("rank") <= col("quota"))
       .select(col("source"), col("quota"), col("rank"), col("doc_id"))
       .orderBy("source", "rank")
   }
 
-  val domainMixSql: String = {
-    val norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
-    val h = s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(" +
-      s"generate_series(1, 8), i -> CAST(ord(substr(md5($norm), i, 1)) AS BIGINT)))," +
-      s" (acc, c) -> (acc * 31 + c) % 1000000007)"
+  val domainMixSql: String =
     s"""WITH s AS (
-       |  SELECT source, SUM(len(string_split(text, ' '))) AS src_tokens
+       |  SELECT source, SUM(len(${Text.duckTokens})) AS src_tokens
        |  FROM documents GROUP BY source),
        |w AS (SELECT source,
        |        CAST(floor(sqrt(CAST(src_tokens AS DOUBLE))) AS BIGINT) AS w
@@ -1596,7 +1518,7 @@ object Curation {
        |q AS (SELECT source,
        |        CAST(($MixBudget * w) // (SUM(w) OVER ()) AS BIGINT) AS quota
        |      FROM w),
-       |scored AS (SELECT source, doc_id, $h AS h FROM documents),
+       |scored AS (SELECT source, doc_id, ${Text.duckContentHash} AS h FROM documents),
        |ranked AS (
        |  SELECT source, doc_id,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY h DESC, doc_id) AS rank
@@ -1605,7 +1527,6 @@ object Curation {
        |FROM ranked r JOIN q USING (source)
        |WHERE r.rank <= q.quota
        |ORDER BY source, rank""".stripMargin
-  }
 
   // ----------------------------------------------------- doc stitching
   val StitchTokens = 3
@@ -1619,7 +1540,7 @@ object Curation {
   def docStitches(docs: DataFrame): DataFrame = {
     val k = StitchTokens
     val t = docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), Text.tokens.as("toks"))
       .filter(size(col("toks")) >= k)
     val pre = t.select(col("doc_id").as("b_doc"),
       array_join(expr(s"slice(toks, 1, $k)"), " ").as("boundary"))
@@ -1633,8 +1554,8 @@ object Curation {
 
   val docStitchesSql: String = {
     val k = StitchTokens
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |           FROM documents WHERE len(string_split(text, ' ')) >= $k),
+    s"""WITH t AS (SELECT doc_id, ${Text.duckTokens} AS toks
+       |           FROM documents WHERE len(${Text.duckTokens}) >= $k),
        |pre AS (SELECT doc_id AS b_doc,
        |          array_to_string(toks[1 : $k], ' ') AS boundary FROM t),
        |suf AS (SELECT doc_id AS a_doc,
@@ -1668,7 +1589,7 @@ object Curation {
     * thresholds, hash-groupBy keeper join, broadcast anti-join. */
   def curationPipeline(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"), col("source"), col("text"),
-      expr("size(split(text, ' '))").cast("long").as("n_tokens"))
+      size(Text.tokens).cast("long").as("n_tokens"))
     // stage 1: per-source discrete-p25 floor
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("n_tokens")
@@ -1683,7 +1604,7 @@ object Curation {
       .filter(col("n_tokens") >= col("p25"))
     // stage 2: exact dedup among survivors (min-id keeper)
     val hashed = quality.withColumn("text_hash",
-      md5(regexp_replace(lower(col("text")), "\\s+", " ").cast("binary")))
+      Text.normTextHash)
     val keepers = hashed.groupBy("text_hash")
       .agg(min(col("doc_id")).as("keep_id"))
     val deduped = hashed.join(keepers, "text_hash")
@@ -1709,11 +1630,10 @@ object Curation {
       .orderBy("source")
   }
 
-  val curationPipelineSql: String = {
-    val fp = s"md5(array_to_string(list_slice(string_split(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), 1, ${Dedup.PrefixWords}), ' '))"
+  val curationPipelineSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, source, text,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+       |    CAST(len(${Text.duckTokens}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |hist AS (
        |  SELECT source, n_tokens, COUNT(*) AS c FROM scored GROUP BY 1, 2),
@@ -1729,7 +1649,7 @@ object Curation {
        |  SELECT s.* FROM scored s JOIN thresholds t ON t.source = s.source
        |  WHERE s.n_tokens >= t.p25),
        |hashed AS (
-       |  SELECT *, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS text_hash
+       |  SELECT *, ${Text.normTextHashSql} AS text_hash
        |  FROM quality),
        |keepers AS (
        |  SELECT text_hash, MIN(doc_id) AS keep_id FROM hashed GROUP BY 1),
@@ -1737,12 +1657,12 @@ object Curation {
        |  SELECT h.* FROM hashed h JOIN keepers k
        |  ON k.text_hash = h.text_hash AND h.doc_id = k.keep_id),
        |evalfp AS (
-       |  SELECT DISTINCT $fp AS fp FROM documents
+       |  SELECT DISTINCT ${Dedup.prefixFpDuck} AS fp FROM documents
        |  WHERE doc_id % ${Dedup.EvalMod} = 0),
        |fin AS (
        |  SELECT d.* FROM deduped d
        |  WHERE d.doc_id % ${Dedup.EvalMod} <> 0
-       |    AND NOT EXISTS (SELECT 1 FROM evalfp e WHERE e.fp = $fp))
+       |    AND NOT EXISTS (SELECT 1 FROM evalfp e WHERE e.fp = ${Dedup.prefixFpDuck}))
        |SELECT s.source,
        |  COUNT(*) AS n_input,
        |  CAST(coalesce(q.nq, 0) AS BIGINT) AS n_quality,
@@ -1757,7 +1677,6 @@ object Curation {
        |  ON f.source = s.source
        |GROUP BY s.source, q.nq, dd.nd, f.nf
        |ORDER BY s.source""".stripMargin
-  }
 
   // ------------------------------------------ q131 global row numbers
   /** Target bucket count for the distributed global numbering. */
@@ -1853,7 +1772,7 @@ object Curation {
       .select(col("doc_id"), col("keep").as("clf"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("text_hash")
     val uniq = docs
-      .withColumn("text_hash", graft.ext.Dedup.normTextHash(col("text")))
+      .withColumn("text_hash", Text.normTextHash)
       .select(col("doc_id"),
         when(col("doc_id") === min(col("doc_id")).over(w), 1L).otherwise(0L)
           .as("uniq"))
@@ -1872,7 +1791,7 @@ object Curation {
        |uniq AS (
        |  SELECT doc_id,
        |    CASE WHEN doc_id = MIN(doc_id) OVER (
-       |      PARTITION BY ${graft.ext.Dedup.normTextHashSql("text")})
+       |      PARTITION BY ${Text.normTextHashSql})
        |    THEN 1 ELSE 0 END AS uniq
        |  FROM documents)
        |SELECT g.gopher, ga.gate, c.clf, u.uniq,
@@ -1924,8 +1843,7 @@ object Curation {
         sum(col("n_chars")).as("total_chars")),
       Seq("n_docs", "n_sources", "n_langs", "total_chars"))
     val tokStats = stackMetrics(
-      docs.select(explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
+      Text.words(docs, "w")
         .groupBy("w").agg(count(lit(1)).as("c"))
         // coalesce: an empty token relation must yield 0, not NULL —
         // exactly what the pre-fusion count(lit(1)) aggregate returned
@@ -1957,10 +1875,10 @@ object Curation {
 
   val corpusDatasheetSql: String =
     s"""WITH tok AS (
-       |  SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+       |  SELECT unnest(${Text.duckTokens}) AS w FROM documents),
        |tk AS (SELECT w FROM tok WHERE length(w) > 0),
        |dup AS (
-       |  SELECT md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS h,
+       |  SELECT ${Text.normTextHashSql} AS h,
        |    COUNT(*) AS n FROM documents GROUP BY 1)
        |SELECT metric, CAST(value AS BIGINT) AS value FROM (
        |  SELECT 'n_docs' AS metric, COUNT(*) AS value FROM documents
@@ -2058,14 +1976,9 @@ object Curation {
     * totals, kept counts, and the keep rate in ppm, plus the threshold
     * for audit. */
   def conformalGate(docs: DataFrame): DataFrame = {
-    val scoreExpr = {
-      val padded = "concat(' ', text, ' ')"
-      val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-        .map(w => s"(${TextAnalysis.sparkCount(padded, w)})").mkString(" + ")
-      s"(10000 * ($stopCount)) div greatest(size(split(text, ' ')), 1)"
-    }
     val scored = docs.select(col("doc_id"), col("source"),
-      expr(scoreExpr).as("score"))
+      expr(s"(10000 * (${Text.sparkStopCount})) div greatest(${Text.sparkTokenCount}, 1)")
+        .as("score"))
     val calib = scored.filter(pmod(col("doc_id"), lit(ConformalCalibMod)) === 0)
     val app = scored.filter(pmod(col("doc_id"), lit(ConformalCalibMod)) =!= 0)
     val threshold = OrderStats.boundedOrderStats(calib, "score",
@@ -2094,13 +2007,10 @@ object Curation {
       .orderBy("source")
   }
 
-  val conformalGateSql: String = {
-    val padded = "concat(' ', text, ' ')"
-    val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-      .map(w => s"(${TextAnalysis.duckCount(padded, w)})").mkString(" + ")
+  val conformalGateSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, source,
-       |    (10000 * ($stopCount)) // greatest(len(string_split(text, ' ')), 1) AS score
+       |    (10000 * (${Text.duckStopCount})) // greatest(len(${Text.duckTokens}), 1) AS score
        |  FROM documents),
        |vc AS (SELECT score, COUNT(*) AS c FROM scored
        |       WHERE doc_id % $ConformalCalibMod = 0 GROUP BY score),
@@ -2124,7 +2034,6 @@ object Curation {
        |FROM scored CROSS JOIN th
        |WHERE doc_id % $ConformalCalibMod <> 0
        |GROUP BY source ORDER BY source""".stripMargin
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q227_conformal_gate" -> ((s, d) => conformalGate(Tables.documents(s, d))),

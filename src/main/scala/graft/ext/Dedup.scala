@@ -35,30 +35,18 @@ object Dedup {
   def coefB(i: Int): Long = 7L * i + 1
 
   // ---------------------------------------------------------------- exact
-  /** THE normalized-text fingerprint for exact duplicates — md5 over
-    * lowercased, whitespace-collapsed text. q13 defines it; q187's
-    * uniq bit and q209's canonical set DERIVE from this one helper (and
-    * its SQL twin [[normTextHashSql]]) so a change to the
-    * normalization rule can never silently drift a consumer. */
-  def normTextHash(text: Column): Column =
-    md5(regexp_replace(lower(text), "\\s+", " ").cast("binary"))
-
-  /** SQL twin of [[normTextHash]] (DuckDB). */
-  def normTextHashSql(textExpr: String): String =
-    s"md5(regexp_replace(lower($textExpr), '\\s+', ' ', 'g'))"
-
   /** Exact dedup: md5 over normalized text (lowercase, collapsed
     * whitespace). One hash-groupBy; the canonical representative is the
     * min doc_id (deterministic at any parallelism). */
   def exactDedup(docs: DataFrame): DataFrame =
     docs
-      .withColumn("text_hash", normTextHash(col("text")))
+      .withColumn("text_hash", Text.normTextHash)
       .groupBy("text_hash")
       .agg(min("doc_id").as("canonical_doc_id"), count(lit(1)).as("n_docs"))
       .orderBy("text_hash")
 
   def exactDedupSql: String =
-    s"""SELECT ${normTextHashSql("text")} AS text_hash,
+    s"""SELECT ${Text.normTextHashSql} AS text_hash,
        |  MIN(doc_id) AS canonical_doc_id, COUNT(*) AS n_docs
        |FROM documents
        |GROUP BY 1
@@ -75,18 +63,12 @@ object Dedup {
   val HashMod = 268435399L
   private def sparkH(sExpr: String): String =
     s"poly_hash($sExpr, $HashBase, $HashMod)"
-  private[graft] def duckH(sExpr: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(generate_series(1, length($sExpr)), " +
-      s"i -> CAST(ord(substr($sExpr, i, 1)) AS BIGINT))), " +
-      s"(a, c) -> (a * $HashBase + c) % $HashMod)"
 
-  /** 3-word shingles of the whitespace-tokenized text (oracle side; the
-    * Spark side computes the hashed form directly via the fused
-    * ShingleHashes expression — equivalence is spec-tested). */
-  private[graft] val duckShingles =
-    "list_transform(generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1))," +
-      " i -> array_to_string(string_split(text, ' ')[i:i+2], ' '))"
+  /** Oracle twin of `shingle_hashes(text)`: the hashed 3-word shingles
+    * (the Spark side fuses both steps in ShingleHashes — equivalence is
+    * spec-tested). */
+  private[graft] val duckShingleHashes =
+    s"list_transform(${Text.duckShingles}, s -> ${Text.duckPolyHash("s", HashBase, HashMod)})"
 
   /** doc_id + NumHashes minhash columns h0..h{n-1}:
     * h_i = min over shingles of (a_i * H(s) + b_i) mod P.
@@ -95,27 +77,47 @@ object Dedup {
     * it — 16x fewer md5 evaluations than the naive form (this dominates
     * the sketch cost at corpus scale). */
   def minhashSignatures(docs: DataFrame): DataFrame = {
+    val sigCols = (0 until NumHashes).map { i =>
+      element_at(col("sig"), i + 1).as(s"h$i")
+    }
+    withSig(docs).select((col("doc_id") +: sigCols): _*)
+  }
+
+  /** `docs` plus `sig`: the NumHashes-long MinHash signature array of
+    * its text, from the fused ShingleHashes and MinHashSignature kernels. */
+  private def withSig(docs: DataFrame): DataFrame = {
     graft.functions.ShingleHashes.register(docs.sparkSession, 3, HashBase, HashMod)
     graft.functions.MinHashSignature.register(docs.sparkSession,
       (0 until NumHashes).map(coefA).toArray,
       (0 until NumHashes).map(coefB).toArray, P)
-    val sigCols = (0 until NumHashes).map { i =>
-      element_at(col("sig"), i + 1).as(s"h$i")
-    }
-    docs
-      .withColumn("sig", expr("minhash_sig(shingle_hashes(text))"))
-      .select((col("doc_id") +: sigCols): _*)
+    docs.withColumn("sig", expr("minhash_sig(shingle_hashes(text))"))
   }
 
-  def minhashSignaturesSql: String = {
+  def minhashSignaturesSql: String =
+    s"""WITH ${duckSigCtes("documents")}
+       |SELECT * FROM sig ORDER BY doc_id""".stripMargin
+
+  /** Oracle MinHash over `rel`: the `hashed` and `sig` CTEs (no leading
+    * WITH), each row carrying the `keys` columns then h0..h{n-1}. */
+  private[graft] def duckSigCtes(rel: String, keys: String = "doc_id"): String = {
     val sigCols = (0 until NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
+      s"list_min(list_transform(hs, h -> (${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
     }
-    s"""WITH hashed AS (
-       |  SELECT doc_id, list_transform($duckShingles, s -> ${duckH("s")}) AS hs
-       |  FROM documents)
-       |SELECT doc_id, ${sigCols.mkString(", ")} FROM hashed ORDER BY doc_id""".stripMargin
+    s"""hashed AS (
+       |  SELECT $keys, $duckShingleHashes AS hs
+       |  FROM $rel),
+       |sig AS (SELECT $keys, ${sigCols.mkString(", ")} FROM hashed)""".stripMargin
+  }
+
+  /** Oracle twin of [[minhashBands]] over [[duckSigCtes]]' `sig`: the
+    * `bands` CTE, one (keys, band, band_key) row per doc and band. */
+  private[graft] def duckBandsCte(keys: String = "doc_id"): String = {
+    val bandSelects = (0 until NumBands).map { b =>
+      val key = (0 until BandRows).map(r => s"CAST(h${b * BandRows + r} AS VARCHAR)")
+        .mkString(" || '-' || ")
+      s"SELECT $keys, $b AS band, $key AS band_key FROM sig"
+    }
+    s"bands AS (${bandSelects.mkString(" UNION ALL ")})"
   }
 
   /** LSH band keys: NumBands rows per doc, key = '-'-joined band slice.
@@ -180,34 +182,27 @@ object Dedup {
         .otherwise(0L)).as("dropped_docs")))
     watched
       .filter(size(col("ids")) > 1 && size(col("ids")) <= maxLshBucket)
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1),
-          |  i -> transform(sequence(i + 1, size(ids)),
-          |    j -> named_struct('doc_a', element_at(ids, i),
-          |                      'doc_b', element_at(ids, j)))))""".stripMargin)).as("p"))
+      .select(inBucketPairs("doc_a", "doc_b"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
   }
+
+  /** In-bucket pair expansion over a sorted `ids` array: every (i < j)
+    * pair as struct `p` with fields `a` and `b`, in list order. */
+  private def inBucketPairs(a: String, b: String): Column =
+    explode(expr(
+      s"""flatten(transform(sequence(1, size(ids) - 1),
+         |  i -> transform(sequence(i + 1, size(ids)),
+         |    j -> named_struct('$a', element_at(ids, i), '$b', element_at(ids, j)))))""".stripMargin))
+      .as("p")
 
   def minhashPairsSql: String = minhashPairsSqlFrom("documents")
 
   /** [[minhashPairsSql]] over an arbitrary source relation — q221's
     * audit runs the SAME oracle text over the sampled corpus, so the
     * predictor definition cannot drift between the gate and the audit. */
-  def minhashPairsSqlFrom(rel: String): String = {
-    val sigCols = (0 until NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
-    }
-    val bandSelects = (0 until NumBands).map { b =>
-      val key = (0 until BandRows).map(r => s"CAST(h${b * BandRows + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, $b AS band, $key AS band_key FROM sig"
-    }
-    s"""WITH hashed AS (
-       |  SELECT doc_id, list_transform($duckShingles, s -> ${duckH("s")}) AS hs
-       |  FROM $rel),
-       |sig AS (SELECT doc_id, ${sigCols.mkString(", ")} FROM hashed),
-       |bands AS (${bandSelects.mkString(" UNION ALL ")}),
+  def minhashPairsSqlFrom(rel: String): String =
+    s"""WITH ${duckSigCtes(rel)},
+       |${duckBandsCte()},
        |kept AS (
        |  SELECT band, band_key FROM bands
        |  GROUP BY 1, 2 HAVING COUNT(*) BETWEEN 2 AND $MaxLshBucket)
@@ -216,7 +211,6 @@ object Dedup {
        |  ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
        |JOIN kept k ON k.band = a.band AND k.band_key = a.band_key
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // -------------------------------------------------- mergeable sketches
   /** Typed Aggregator merging MinHash signatures elementwise-min. The
@@ -248,16 +242,11 @@ object Dedup {
     * signatures (a union sketch — Jaccard between sources is estimable
     * from two sketches without touching the documents again). */
   def sourceSketches(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession, 3, HashBase, HashMod)
-    graft.functions.MinHashSignature.register(docs.sparkSession,
-      (0 until NumHashes).map(coefA).toArray,
-      (0 until NumHashes).map(coefB).toArray, P)
     val agg = org.apache.spark.sql.functions.udaf(MinHashMergeAgg)
     val sketchCols = (0 until NumHashes).map { i =>
       element_at(col("sketch"), i + 1).as(s"h$i")
     }
-    docs
-      .withColumn("sig", expr("minhash_sig(shingle_hashes(text))"))
+    withSig(docs)
       .groupBy(col("source"))
       .agg(agg(col("sig")).as("sketch"))
       .select((col("source") +: sketchCols): _*)
@@ -265,15 +254,8 @@ object Dedup {
   }
 
   def sourceSketchesSql: String = {
-    val sigCols = (0 until NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
-    }
     val mins = (0 until NumHashes).map(i => s"MIN(h$i) AS h$i")
-    s"""WITH hashed AS (
-       |  SELECT doc_id, source, list_transform($duckShingles, s -> ${duckH("s")}) AS hs
-       |  FROM documents),
-       |sig AS (SELECT doc_id, source, ${sigCols.mkString(", ")} FROM hashed)
+    s"""WITH ${duckSigCtes("documents", "doc_id, source")}
        |SELECT source, ${mins.mkString(", ")}
        |FROM sig GROUP BY source ORDER BY source""".stripMargin
   }
@@ -327,8 +309,7 @@ object Dedup {
     * aggregations a wasted range exchange + sort). */
   def simhashCore(docs: DataFrame): DataFrame = {
     graft.functions.PolyHash.register(docs.sparkSession)
-    val tokens = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
+    val tokens = docs.select(col("doc_id"), explode(Text.tokens).as("tok"))
       .withColumn("th", expr(sparkH("tok")))
     val bitSums = (0 until SimhashBits).map { j =>
       sum(when(expr(s"shiftright(th, $j) & 1") === 1, 1).otherwise(-1)).as(s"s$j")
@@ -344,20 +325,27 @@ object Dedup {
   def simhash(docs: DataFrame): DataFrame =
     simhashCore(docs).orderBy("doc_id")
 
-  def simhashSql: String = {
+  def simhashSql: String =
+    s"""WITH $duckSimhashCtes
+       |SELECT * FROM sh ORDER BY doc_id""".stripMargin
+
+  /** Oracle twin of [[simhashCore]]: the `toks`, `sums` and `sh` CTEs
+    * (no leading WITH); `sh` is (doc_id, simhash, bucket). */
+  private def duckSimhashCtes: String = {
     val bitSums = (0 until SimhashBits).map { j =>
       s"SUM(CASE WHEN (th >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
     }
     val fp = (0 until SimhashBits).map { j =>
       s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END"
     }.mkString(" + ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, ${duckH("t.tok")} AS th
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) t),
-       |sums AS (SELECT doc_id, ${bitSums.mkString(", ")} FROM toks GROUP BY doc_id)
-       |SELECT doc_id, CAST($fp AS BIGINT) AS simhash,
-       |  CAST($fp AS BIGINT) >> ${SimhashBits - 8} AS bucket
-       |FROM sums ORDER BY doc_id""".stripMargin
+    s"""toks AS (
+       |  SELECT doc_id, ${Text.duckPolyHash("t.tok", HashBase, HashMod)} AS th
+       |  FROM (SELECT doc_id, unnest(${Text.duckTokens}) AS tok FROM documents) t),
+       |sums AS (SELECT doc_id, ${bitSums.mkString(", ")} FROM toks GROUP BY doc_id),
+       |sh AS (
+       |  SELECT doc_id, CAST($fp AS BIGINT) AS simhash,
+       |    CAST($fp AS BIGINT) >> ${SimhashBits - SimhashBucketBits} AS bucket
+       |  FROM sums)""".stripMargin
   }
 
   /** SimHash near-dup distance cap: pairs within this Hamming distance
@@ -386,32 +374,15 @@ object Dedup {
       .groupBy("bucket")
       .agg(sort_array(collect_list(col("packed"))).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1),
-          |  i -> transform(sequence(i + 1, size(ids)),
-          |    j -> named_struct('a', element_at(ids, i),
-          |                      'b', element_at(ids, j)))))""".stripMargin)).as("p"))
+      .select(inBucketPairs("a", "b"))
       .select(expr(s"p.a div $c").as("doc_a"), expr(s"p.b div $c").as("doc_b"),
         expr(s"cast(bit_count((p.a % $c) ^ (p.b % $c)) as bigint)").as("hamming"))
       .filter(col("hamming") <= HammingMax)
       .orderBy("doc_a", "doc_b")
   }
 
-  def simhashPairsSql: String = {
-    val bitSums = (0 until SimhashBits).map { j =>
-      s"SUM(CASE WHEN (th >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
-    }
-    val fp = (0 until SimhashBits).map { j =>
-      s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END"
-    }.mkString(" + ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, ${duckH("t.tok")} AS th
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) t),
-       |sums AS (SELECT doc_id, ${bitSums.mkString(", ")} FROM toks GROUP BY doc_id),
-       |sh AS (
-       |  SELECT doc_id, CAST($fp AS BIGINT) AS simhash,
-       |    CAST($fp AS BIGINT) >> ${SimhashBits - 8} AS bucket
-       |  FROM sums),
+  def simhashPairsSql: String =
+    s"""WITH $duckSimhashCtes,
        |kept AS (
        |  SELECT bucket FROM sh
        |  GROUP BY bucket HAVING COUNT(*) BETWEEN 2 AND $MaxLshBucket)
@@ -421,7 +392,6 @@ object Dedup {
        |JOIN kept k ON k.bucket = a.bucket
        |WHERE bit_count(xor(a.simhash, b.simhash)) <= $HammingMax
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   /** Bucket-prefix width for simhash LSH (the fingerprint's top bits). */
   val SimhashBucketBits = 8
@@ -478,21 +448,8 @@ object Dedup {
   }
 
   def simhashPairsMultiProbeSql: String = {
-    val bitSums = (0 until SimhashBits).map { j =>
-      s"SUM(CASE WHEN (th >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS s$j"
-    }
-    val fp = (0 until SimhashBits).map { j =>
-      s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END"
-    }.mkString(" + ")
     val cap = MaxLshBucket * (SimhashBucketBits + 1)
-    s"""WITH toks AS (
-       |  SELECT doc_id, ${duckH("t.tok")} AS th
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) t),
-       |sums AS (SELECT doc_id, ${bitSums.mkString(", ")} FROM toks GROUP BY doc_id),
-       |sh AS (
-       |  SELECT doc_id, CAST($fp AS BIGINT) AS simhash,
-       |    CAST($fp AS BIGINT) >> ${SimhashBits - SimhashBucketBits} AS bucket
-       |  FROM sums),
+    s"""WITH $duckSimhashCtes,
        |probes AS (
        |  SELECT doc_id, simhash, bucket, 1 AS native FROM sh
        |  UNION ALL
@@ -532,7 +489,7 @@ object Dedup {
 
   def repetitionScoreSql: String =
     s"""WITH hashed AS (
-       |  SELECT doc_id, list_transform($duckShingles, s -> ${duckH("s")}) AS hs
+       |  SELECT doc_id, $duckShingleHashes AS hs
        |  FROM documents)
        |SELECT doc_id, CAST(len(hs) AS BIGINT) AS n_shingles,
        |  CAST(len(list_distinct(hs)) AS BIGINT) AS n_distinct,
@@ -549,8 +506,11 @@ object Dedup {
     * normalized prefix catches what whole-document equality misses. */
   val PrefixWords = 8
 
+  /** md5 of the normalized text's first [[PrefixWords]] tokens. */
   private[graft] val prefixFpSpark =
-    s"md5(cast(array_join(slice(split(regexp_replace(lower(text), '\\\\s+', ' '), ' '), 1, $PrefixWords), ' ') as binary))"
+    s"md5(cast(array_join(slice(split(${Text.sparkNorm}, ' '), 1, $PrefixWords), ' ') as binary))"
+  private[graft] val prefixFpDuck =
+    s"md5(array_to_string(list_slice(string_split(${Text.duckNorm}, ' '), 1, $PrefixWords), ' '))"
 
   /** Benchmark-contamination check: training docs whose normalized
     * [[PrefixWords]]-word prefix fingerprint appears in the eval set.
@@ -594,16 +554,14 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  val evalContaminationSql: String = {
-    val fp = s"md5(array_to_string(list_slice(string_split(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), 1, $PrefixWords), ' '))"
-    s"""WITH fp AS (SELECT doc_id, $fp AS prefix_fp FROM documents)
+  val evalContaminationSql: String =
+    s"""WITH fp AS (SELECT doc_id, $prefixFpDuck AS prefix_fp FROM documents)
        |SELECT t.doc_id, t.prefix_fp
        |FROM fp t
        |WHERE t.doc_id % $EvalMod <> 0
        |  AND EXISTS (SELECT 1 FROM fp e
        |              WHERE e.doc_id % $EvalMod = 0 AND e.prefix_fp = t.prefix_fp)
        |ORDER BY t.doc_id""".stripMargin
-  }
 
   // --------------------------------------------- bloom FPR audit (q232)
   /** Portable Bloom geometry: 3 hash positions of 12 bits each (4096-bit
@@ -675,10 +633,9 @@ object Dedup {
   }
 
   val bloomFprAuditSql: String = {
-    val fpExpr = s"md5(array_to_string(list_slice(string_split(regexp_replace(lower(text), '\\s+', ' ', 'g'), ' '), 1, $PrefixWords), ' '))"
     def pos(j: Int) = s"CAST(('0x' || substr(fp, ${1 + 3 * j}, 3)) AS INTEGER)"
     val posList = (0 until BloomAuditHashes).map(pos).mkString("[", ", ", "]")
-    s"""WITH fp AS (SELECT doc_id, source, $fpExpr AS fp FROM documents),
+    s"""WITH fp AS (SELECT doc_id, source, $prefixFpDuck AS fp FROM documents),
        |ev AS (SELECT DISTINCT fp FROM fp WHERE doc_id % $EvalMod = 0),
        |evpos AS (SELECT DISTINCT unnest($posList) AS pos FROM ev),
        |tr AS (SELECT doc_id, source, fp FROM fp WHERE doc_id % $EvalMod <> 0),
@@ -805,7 +762,7 @@ object Dedup {
 
   def ngramJaccardSql: String =
     s"""WITH shingled AS (
-       |  SELECT DISTINCT doc_id, unnest(list_transform($duckShingles, s -> ${duckH("s")})) AS shingle
+       |  SELECT DISTINCT doc_id, unnest($duckShingleHashes) AS shingle
        |  FROM documents),
        |sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM shingled GROUP BY doc_id),
        |kept AS (
@@ -979,23 +936,28 @@ object Dedup {
   def minhashClusters(docs: DataFrame): DataFrame =
     dedupClusters(docs, candidatePairs(docs))
 
-  /** Oracle: transitive closure by recursive CTE over the same pair
-    * relation (min reachable id, self included). */
-  def minhashClustersSql: String =
-    s"""WITH RECURSIVE pairs AS (SELECT * FROM ($minhashPairsSql)),
+  /** Oracle twin of [[dedupClusters]]: `WITH RECURSIVE` and the CTEs up
+    * to `clusters` (doc_id, cluster_id) — transitive closure over the
+    * pairs `pairsSql` returns, cluster = min reachable id, self included. */
+  private[graft] def duckClusterCtes(pairsSql: String): String =
+    s"""WITH RECURSIVE pairs AS (SELECT * FROM ($pairsSql)),
        |edges(a, b) AS (
        |  SELECT doc_a, doc_b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs),
        |reach(src, dst) AS (
        |  SELECT a, b FROM edges
        |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a)
-       |SELECT d.doc_id,
-       |  CASE WHEN min(r.dst) IS NULL OR d.doc_id < min(r.dst)
-       |       THEN d.doc_id ELSE min(r.dst) END AS cluster_id
-       |FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
-       |GROUP BY d.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
+       |clusters AS (
+       |  SELECT d.doc_id,
+       |    CASE WHEN min(r.dst) IS NULL OR d.doc_id < min(r.dst)
+       |         THEN d.doc_id ELSE min(r.dst) END AS cluster_id
+       |  FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
+       |  GROUP BY d.doc_id)""".stripMargin
+
+  def minhashClustersSql: String =
+    s"""${duckClusterCtes(minhashPairsSql)}
+       |SELECT * FROM clusters ORDER BY doc_id""".stripMargin
 
   /** Cross-source contamination report: near-dup clusters whose members
     * span MULTIPLE sources — the check that catches eval/benchmark text
@@ -1018,20 +980,7 @@ object Dedup {
   }
 
   def crossSourceClustersSql: String =
-    s"""WITH RECURSIVE pairs AS (SELECT * FROM ($minhashPairsSql)),
-       |edges(a, b) AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(src, dst) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-       |clusters AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN min(r.dst) IS NULL OR d.doc_id < min(r.dst)
-       |         THEN d.doc_id ELSE min(r.dst) END AS cluster_id
-       |  FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
-       |  GROUP BY d.doc_id)
+    s"""${duckClusterCtes(minhashPairsSql)}
        |SELECT c.cluster_id, COUNT(*) AS n_docs,
        |  COUNT(DISTINCT d.source) AS n_sources,
        |  array_to_string(list_sort(list(DISTINCT d.source)), ',') AS sources
@@ -1211,7 +1160,7 @@ object Dedup {
   def blockDedup(docs: DataFrame): DataFrame = {
     val bt = BlockTokens
     val blocks = docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), Text.tokens.as("toks"))
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, (size(toks) - 1) div $bt), " +
           s"i -> slice(toks, i * $bt + 1, $bt))")).as(Seq("block_idx", "barr")))
@@ -1234,7 +1183,7 @@ object Dedup {
   }
 
   val blockDedupSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.duckTokens} AS toks FROM documents),
        |b AS (SELECT doc_id,
        |        unnest(generate_series(0, (len(toks) - 1) // $BlockTokens)) AS block_idx,
        |        toks
@@ -1382,10 +1331,7 @@ object Dedup {
     * bytes; the fixed [[PrIters]] budget makes total cost 3·|E| —
     * never a convergence gamble on a pathological graph. */
   def nearDupPageRank(docs: DataFrame): DataFrame = {
-    val pairs = minhashPairs(docs).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(true)
+    val edges = nearDupEdges(docs)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     var r = deg.select(col("src").as("id"), lit(PrSeedPpm).as("r"))
@@ -1403,6 +1349,14 @@ object Dedup {
     r.join(deg.select(col("src").as("id"), col("deg")), "id")
       .select(col("id").as("doc_id"), col("deg"), col("r").as("rank_ppm"))
       .orderBy("doc_id")
+  }
+
+  /** Both directions (src, dst) of every [[minhashPairs]] pair, cut. */
+  private def nearDupEdges(docs: DataFrame): DataFrame = {
+    val pairs = minhashPairs(docs).select("doc_a", "doc_b")
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .localCheckpoint(true)
   }
 
   def nearDupPageRankSql: String = {
@@ -1534,10 +1488,7 @@ object Dedup {
     * join + a dst aggregate — O(|E|) shuffled bytes, induced subgraph
     * only, localCheckpoint lineage cuts. */
   def labelPropagation(docs: DataFrame): DataFrame = {
-    val pairs = minhashPairs(docs).select("doc_a", "doc_b")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(true)
+    val edges = nearDupEdges(docs)
     val seeds = graft.ext.TextAnalysis.classifierScores(docs)
       .filter(col("doc_id") % LpSeedMod === 0)
       .select(col("doc_id").as("id"),
@@ -1662,11 +1613,7 @@ object Dedup {
     members.groupBy("band", "band_key")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxLshBucket)
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(ids) - 1),
-          |  i -> transform(sequence(i + 1, size(ids)),
-          |    j -> named_struct('doc_a', element_at(ids, i),
-          |                      'doc_b', element_at(ids, j)))))""".stripMargin)).as("p"))
+      .select(inBucketPairs("doc_a", "doc_b"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .filter(col("doc_a") % LshDeltaMod === (LshDeltaMod - 1) ||
         col("doc_b") % LshDeltaMod === (LshDeltaMod - 1))
@@ -1787,7 +1734,7 @@ object Dedup {
   val ppjoinPairsSql: String =
     s"""WITH dt AS (
        |  SELECT DISTINCT doc_id,
-       |    unnest(list_transform($duckShingles, s -> ${duckH("s")})) AS h
+       |    unnest($duckShingleHashes) AS h
        |  FROM documents),
        |sz AS (SELECT doc_id, COUNT(*) AS n FROM dt GROUP BY doc_id),
        |p AS (
@@ -1849,7 +1796,7 @@ object Dedup {
     // per-doc selection: gram hashes -> sliding-window packed minima ->
     // distinct selected hashes, all inside one generator-free projection
     val fps = docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), Text.tokens.as("toks"))
       .where(size(col("toks")) >= minToks)
       .withColumn("enc", expr(
         s"""transform(sequence(0, size(toks) - $WinnowK), p ->
@@ -1883,8 +1830,8 @@ object Dedup {
   }
 
   val winnowedPairsSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-       |           WHERE len(string_split(text, ' ')) >= ${WinnowK + WinnowW - 1}),
+    s"""WITH t AS (SELECT doc_id, ${Text.duckTokens} AS toks FROM documents
+       |           WHERE len(${Text.duckTokens}) >= ${WinnowK + WinnowW - 1}),
        |g AS (SELECT doc_id, unnest(generate_series(0, len(toks) - $WinnowK)) AS p, toks FROM t),
        |h AS (SELECT doc_id, p,
        |        ('0x' || substr(md5(array_to_string(toks[p + 1 : p + $WinnowK], ' ')), 1, 10))::BIGINT * ${1L << WinnowPosBits}
@@ -1979,8 +1926,8 @@ object Dedup {
     * and the canonical set is ids-only through the join. */
   def effectiveTokens(docs: DataFrame): DataFrame = {
     val base = docs.select(col("source"), col("doc_id"),
-      expr("size(split(text, ' '))").cast("long").as("nt"),
-      normTextHash(col("text")).as("text_hash"))
+      size(Text.tokens).cast("long").as("nt"),
+      Text.normTextHash.as("text_hash"))
     val canon = base.groupBy("text_hash").agg(min("doc_id").as("doc_id"))
       .select("doc_id")
     val raw = base.groupBy("source")
@@ -2000,8 +1947,8 @@ object Dedup {
   def effectiveTokensSql: String =
     s"""WITH base AS (
       |  SELECT source, doc_id,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-      |    ${normTextHashSql("text")} AS text_hash
+      |    CAST(len(${Text.duckTokens}) AS BIGINT) AS nt,
+      |    ${Text.normTextHashSql} AS text_hash
       |  FROM documents),
       |canon AS (SELECT min(doc_id) AS doc_id FROM base GROUP BY text_hash),
       |raw AS (SELECT source, count(*) AS raw_docs, sum(nt) AS raw_tokens
@@ -2117,7 +2064,7 @@ object Dedup {
     * caps) has for free.
     *
     * Key design: block = the first two tokens of the NORMALIZED text
-    * ([[normTextHash]]'s normalization — one shared rule), sort within
+    * ([[Text.norm]]'s normalization — one shared rule), sort within
     * block by full normalized text then doc_id. The window partitions by
     * block, so at scale no global single-partition sort exists (the
     * blocks hash-partition; pairs across block boundaries are missed BY
@@ -2127,8 +2074,7 @@ object Dedup {
     * window spec (one WindowExec computes all [[SnmWindow]] leads), so
     * the corpus shuffles ONCE on block and nothing self-joins. */
   def sortedNeighborhoodPairs(docs: DataFrame): DataFrame = {
-    val norm = regexp_replace(lower(col("text")), "\\s+", " ")
-    val base = docs.select(col("doc_id"), norm.as("norm"))
+    val base = docs.select(col("doc_id"), Text.norm.as("norm"))
       .withColumn("block", substring_index(col("norm"), " ", 2))
       .withColumn("toks", array_distinct(split(col("norm"), " ")))
     val w = org.apache.spark.sql.expressions.Window
@@ -2163,12 +2109,11 @@ object Dedup {
     * rn+SnmWindow) — same pairs as the engine's lead() formulation;
     * token-set intersection via list_filter/list_contains (DuckDB 1.0
     * has no list_intersect). */
-  val sortedNeighborhoodSql: String = {
-    val normSql = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
+  val sortedNeighborhoodSql: String =
     s"""WITH base AS (
-       |  SELECT doc_id, $normSql AS norm,
-       |    array_to_string(string_split($normSql, ' ')[1:2], ' ') AS block,
-       |    list_distinct(string_split($normSql, ' ')) AS toks
+       |  SELECT doc_id, ${Text.duckNorm} AS norm,
+       |    array_to_string(string_split(${Text.duckNorm}, ' ')[1:2], ' ') AS block,
+       |    list_distinct(string_split(${Text.duckNorm}, ' ')) AS toks
        |  FROM documents),
        |ranked AS (
        |  SELECT doc_id, block, toks,
@@ -2185,7 +2130,6 @@ object Dedup {
        |FROM pairs
        |WHERE (10000 * n_common) // (na + nb - n_common) >= $SnmTauE4
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   // ------------------------------------------------------- canary scan
   /** Canary selection: one canary per doc with doc_id %% [[CanaryMod]]
@@ -2314,7 +2258,7 @@ object Dedup {
     s"""WITH truth AS (
        |  SELECT doc_a, doc_b, 1 AS t FROM (
        |    WITH shingled AS (
-       |      SELECT DISTINCT doc_id, unnest(list_transform($duckShingles, s -> ${duckH("s")})) AS shingle
+       |      SELECT DISTINCT doc_id, unnest($duckShingleHashes) AS shingle
        |      FROM $sampleRel),
        |    sizes AS (SELECT doc_id, COUNT(*) AS n_shingles FROM shingled GROUP BY doc_id),
        |    common AS (

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -36,7 +35,7 @@ object Lm {
     * `gram` keeps the two tokens joined so the model join has one key;
     * `w1` carries the left-context key for the unigram-marginal join. */
   private def bigramStream(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(toks) - 2), " +
@@ -44,12 +43,19 @@ object Lm {
         .as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.gram").as("gram"))
 
-  private val duckBigrams =
-    """SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS gram
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks,
-      |               unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-      |        FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 2)""".stripMargin
+  /** Oracle twin of [[bigramStream]] over the relation `rel`. */
+  private def duckBigrams(rel: String): String =
+    s"""SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS gram
+      |  FROM (SELECT doc_id, ${Text.duckTokens} AS toks,
+      |               unnest(generate_series(1, len(${Text.duckTokens}) - 1)) AS i
+      |        FROM $rel
+      |        WHERE len(${Text.duckTokens}) >= 2)""".stripMargin
+
+  /** The `g` bigram CTE over `rel` and `bc`, its (w1, w2, c12) counts. */
+  private def duckBigramCounts(rel: String = "documents"): String =
+    s"""g AS (${duckBigrams(rel)}),
+       |bc AS (SELECT w1, gram[len(w1) + 2:] AS w2, COUNT(*) AS c12
+       |       FROM g GROUP BY 1, 2)""".stripMargin
 
   // --------------------------------------------------------- bigram LM
   /** Per-document add-1-smoothed bigram-LM likelihood score — the
@@ -95,7 +101,7 @@ object Lm {
     val gramCounts = docGrams.groupBy("gram")
       .agg(sum(col("n_occ")).as("c12"))
     val unigramCounts = docs
-      .select(explode(split(col("text"), " ")).as("w1"))
+      .select(explode(Text.tokens).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocabSize = unigramCounts.agg(count(lit(1)).as("v"))
     val model = gramCounts
@@ -115,13 +121,13 @@ object Lm {
   }
 
   val bigramLmScoresSql: String =
-    s"""WITH g AS ($duckBigrams),
+    s"""WITH g AS (${duckBigrams("documents")}),
        |bc AS (SELECT gram, COUNT(*) AS c12 FROM g GROUP BY gram),
        |uc AS (SELECT w1, COUNT(*) AS c1 FROM
-       |         (SELECT unnest(string_split(text, ' ')) AS w1 FROM documents)
+       |         (SELECT unnest(${Text.duckTokens}) AS w1 FROM documents)
        |       GROUP BY w1),
        |v AS (SELECT COUNT(DISTINCT t) AS v FROM
-       |        (SELECT unnest(string_split(text, ' ')) AS t FROM documents))
+       |        (SELECT unnest(${Text.duckTokens}) AS t FROM documents))
        |SELECT doc_id, COUNT(*) AS n_bigrams,
        |  CAST(SUM((1000000 * (c12 + $SmoothAdd)) // (c1 + v)) // COUNT(*) AS BIGINT) AS lm_ppm
        |FROM g JOIN bc USING (gram) JOIN uc USING (w1) CROSS JOIN v
@@ -154,27 +160,34 @@ object Lm {
     * and the e6 scale shift to sampled counts (the CMS q57 path). The
     * bound is ENFORCED (raise_error past [[CollocMaxN]]), never silently
     * wrapped — the q16/q32 packGuard discipline. */
-  def collocations(docs: DataFrame, maxN: Long = CollocMaxN): DataFrame = {
-    val grams = bigramStream(docs)
-      .select(col("w1"), col("gram"),
-        expr("substring(gram, length(w1) + 2)").as("w2"))
-    val bc = grams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val left = bc.groupBy("w1").agg(sum(col("c12")).as("cl"))
-    val right = bc.groupBy("w2").agg(sum(col("c12")).as("cr"))
-    val total = bc.agg(
-      when(sum(col("c12")) > maxN,
-        raise_error(concat(
-          lit(s"collocations: corpus bigram total exceeds the exact-lift BIGINT bound $maxN "),
-          lit("(switch to sampled counts, the q57 CMS path): "),
-          sum(col("c12")).cast("string"))))
-        .otherwise(sum(col("c12"))).as("n"))
-    bc.filter(col("c12") >= CollocMinCount)
-      .join(left, "w1").join(right, "w2")
-      .crossJoin(broadcast(total))
+  def collocations(docs: DataFrame, maxN: Long = CollocMaxN): DataFrame =
+    liftCounts(bigramStream(docs), CollocMinCount, maxN,
+        s"collocations: corpus bigram total exceeds the exact-lift BIGINT bound $maxN ",
+        "(switch to sampled counts, the q57 CMS path): ")
       .select(col("w1"), col("w2"), col("c12"),
         expr("(1000000 * n * c12) div (cl * cr)").as("lift_e6"))
       .orderBy(col("lift_e6").desc, col("w1"), col("w2"))
       .limit(CollocTopK)
+
+  /** The lift inputs over a [[bigramStream]]: each (w1, w2) seen at
+    * least `minC` times with its count c12, the marginals cl and cr,
+    * and the bigram total n, which raise_errors past `maxN` with the
+    * message `tooBig` (its parts, then the total). */
+  private def liftCounts(grams: DataFrame, minC: Long, maxN: Long,
+                         tooBig: String*): DataFrame = {
+    val bc = grams
+      .select(col("w1"), col("gram"),
+        expr("substring(gram, length(w1) + 2)").as("w2"))
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    val left = bc.groupBy("w1").agg(sum(col("c12")).as("cl"))
+    val right = bc.groupBy("w2").agg(sum(col("c12")).as("cr"))
+    val total = bc.agg(
+      when(sum(col("c12")) > maxN,
+        raise_error(concat(tooBig.map(lit) :+ sum(col("c12")).cast("string"): _*)))
+        .otherwise(sum(col("c12"))).as("n"))
+    bc.filter(col("c12") >= minC)
+      .join(left, "w1").join(right, "w2")
+      .crossJoin(broadcast(total))
   }
 
   /** Fixture-gate sampling modulus for [[collocationsSampled]]. */
@@ -209,22 +222,10 @@ object Lm {
                           maxN: Long = CollocMaxN): DataFrame = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
     val minC = math.max(2L, (CollocMinCount + sampleMod - 1) / sampleMod)
-    val grams = bigramStream(docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0))
-      .select(col("w1"), col("gram"),
-        expr("substring(gram, length(w1) + 2)").as("w2"))
-    val bc = grams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val left = bc.groupBy("w1").agg(sum(col("c12")).as("cl"))
-    val right = bc.groupBy("w2").agg(sum(col("c12")).as("cr"))
-    val total = bc.agg(
-      when(sum(col("c12")) > maxN,
-        raise_error(concat(
-          lit(s"collocationsSampled: SAMPLED bigram total exceeds the exact-lift bound $maxN "),
-          lit(s"(raise sampleMod above $sampleMod): "),
-          sum(col("c12")).cast("string"))))
-        .otherwise(sum(col("c12"))).as("n"))
-    bc.filter(col("c12") >= minC)
-      .join(left, "w1").join(right, "w2")
-      .crossJoin(broadcast(total))
+    liftCounts(bigramStream(docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)),
+        minC, maxN,
+        s"collocationsSampled: SAMPLED bigram total exceeds the exact-lift bound $maxN ",
+        s"(raise sampleMod above $sampleMod): ")
       .select(col("w1"), col("w2"),
         (col("c12") * sampleMod).as("c12_est"),
         expr("(1000000 * n * c12) div (cl * cr)").as("lift_e6"))
@@ -235,13 +236,7 @@ object Lm {
   def collocationsSampledSql(sampleMod: Long = CollocSampleMod): String = {
     val minC = math.max(2L, (CollocMinCount + sampleMod - 1) / sampleMod)
     s"""WITH sdocs AS (SELECT * FROM documents WHERE doc_id % $sampleMod = 0),
-       |g AS (SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS gram
-       |      FROM (SELECT doc_id, string_split(text, ' ') AS toks,
-       |                   unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-       |            FROM sdocs
-       |            WHERE len(string_split(text, ' ')) >= 2)),
-       |bc AS (SELECT w1, gram[len(w1) + 2:] AS w2, COUNT(*) AS c12
-       |       FROM g GROUP BY 1, 2),
+       |${duckBigramCounts("sdocs")},
        |l AS (SELECT w1, SUM(c12) AS cl FROM bc GROUP BY w1),
        |r AS (SELECT w2, SUM(c12) AS cr FROM bc GROUP BY w2),
        |t AS (SELECT SUM(c12) AS n FROM bc)
@@ -254,9 +249,7 @@ object Lm {
   }
 
   val collocationsSql: String =
-    s"""WITH g AS ($duckBigrams),
-       |bc AS (SELECT w1, gram[len(w1) + 2:] AS w2, COUNT(*) AS c12
-       |       FROM g GROUP BY 1, 2),
+    s"""WITH ${duckBigramCounts()},
        |l AS (SELECT w1, SUM(c12) AS cl FROM bc GROUP BY w1),
        |r AS (SELECT w2, SUM(c12) AS cr FROM bc GROUP BY w2),
        |t AS (SELECT SUM(c12) AS n FROM bc)
@@ -308,9 +301,7 @@ object Lm {
   def sourceDrift(docs: DataFrame,
                   hotObs: Option[org.apache.spark.sql.Observation] = None)
       : DataFrame = {
-    val toks = docs.select(col("source"),
-      explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val toks = Text.words(docs, "token", "source")
     val bySrc = toks.groupBy("source", "token").agg(count(lit(1)).as("o"))
     val srcMass = bySrc.groupBy("source").agg(sum(col("o")).as("s_mass"))
     val corpus = bySrc.groupBy("token").agg(sum(col("o")).as("c"))
@@ -343,8 +334,8 @@ object Lm {
   }
 
   val sourceDriftSql: String =
-    """WITH toks AS (
-      |  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
+    s"""WITH toks AS (
+      |  SELECT source, unnest(${Text.duckTokens}) AS token FROM documents),
       |o AS (SELECT source, token, COUNT(*) AS o FROM toks
       |      WHERE length(token) > 0 GROUP BY source, token),
       |sm AS (SELECT source, SUM(o) AS s_mass FROM o GROUP BY source),
@@ -413,11 +404,11 @@ object Lm {
     val refGrams = bigramStream(ref)
       .groupBy("gram").agg(count(lit(1)).as("c12"))
     val refUni = ref
-      .select(explode(split(col("text"), " ")).as("w1"))
+      .select(explode(Text.tokens).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("c1"))
     val refV = refUni.agg(count(lit(1)).as("v"))
     val appGrams = app
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), col("source"), Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), col("source"), explode(expr(
         "transform(sequence(0, size(toks) - 2), " +
@@ -463,18 +454,18 @@ object Lm {
     s"""WITH ref AS (SELECT * FROM documents WHERE doc_id % $PplRefMod = 0),
        |app AS (SELECT * FROM documents WHERE doc_id % $PplRefMod <> 0),
        |rg AS (SELECT toks[i] || ' ' || toks[i + 1] AS gram
-       |       FROM (SELECT string_split(text, ' ') AS toks,
-       |                    unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-       |             FROM ref WHERE len(string_split(text, ' ')) >= 2)),
+       |       FROM (SELECT ${Text.duckTokens} AS toks,
+       |                    unnest(generate_series(1, len(${Text.duckTokens}) - 1)) AS i
+       |             FROM ref WHERE len(${Text.duckTokens}) >= 2)),
        |rbc AS (SELECT gram, COUNT(*) AS c12 FROM rg GROUP BY gram),
        |ruc AS (SELECT w1, COUNT(*) AS c1 FROM
-       |          (SELECT unnest(string_split(text, ' ')) AS w1 FROM ref)
+       |          (SELECT unnest(${Text.duckTokens}) AS w1 FROM ref)
        |        GROUP BY w1),
        |rv AS (SELECT COUNT(*) AS v FROM ruc),
        |ag AS (SELECT doc_id, toks[i] AS w1, toks[i] || ' ' || toks[i + 1] AS gram
-       |       FROM (SELECT doc_id, string_split(text, ' ') AS toks,
-       |                    unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-       |             FROM app WHERE len(string_split(text, ' ')) >= 2)),
+       |       FROM (SELECT doc_id, ${Text.duckTokens} AS toks,
+       |                    unnest(generate_series(1, len(${Text.duckTokens}) - 1)) AS i
+       |             FROM app WHERE len(${Text.duckTokens}) >= 2)),
        |agg AS (SELECT doc_id, w1, gram, COUNT(*) AS n_occ
        |        FROM ag GROUP BY doc_id, w1, gram),
        |sc AS (SELECT doc_id, SUM(n_occ) AS n_bigrams,
@@ -555,9 +546,7 @@ object Lm {
   }
 
   val knBigramSql: String =
-    s"""WITH g AS ($duckBigrams),
-       |bc AS (SELECT w1, gram[len(w1) + 2:] AS w2, COUNT(*) AS c12
-       |       FROM g GROUP BY 1, 2),
+    s"""WITH ${duckBigramCounts()},
        |l AS (SELECT w1, SUM(c12) AS c1, COUNT(*) AS n1_fan FROM bc GROUP BY w1),
        |ct AS (SELECT w2, COUNT(*) AS n1_cont FROM bc GROUP BY w2),
        |t AS (SELECT COUNT(*) AS b_types FROM bc)

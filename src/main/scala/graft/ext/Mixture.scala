@@ -56,6 +56,25 @@ object Mixture {
       .orderBy("source")
   }
 
+  /** Oracle twin of [[planFromMasses]] over the relation `masses`: the
+    * `s` and `t` CTEs and the final SELECT. */
+  private def duckPlanFromMasses(masses: String): String =
+    s"""s AS (SELECT source, n_docs, token_mass,
+       |        ${isqrt("token_mass")} AS sqrt_mass FROM $masses),
+       |t AS (SELECT SUM(sqrt_mass) AS sqrt_total FROM s)
+       |SELECT source, n_docs, CAST(token_mass AS BIGINT) AS token_mass,
+       |  CAST(sqrt_mass AS BIGINT) AS sqrt_mass,
+       |  CAST((1000000 * sqrt_mass) // sqrt_total AS BIGINT) AS weight_ppm,
+       |  CAST(($DocBudget * sqrt_mass) // sqrt_total AS BIGINT) AS quota_docs
+       |FROM s CROSS JOIN t ORDER BY source""".stripMargin
+
+  /** The `m` CTE: per-source doc count and whitespace-token mass. */
+  private def duckMasses: String =
+    s"""m AS (
+       |  SELECT source, COUNT(*) AS n_docs,
+       |    SUM(len(${Text.duckTokens})) AS token_mass
+       |  FROM documents GROUP BY source)""".stripMargin
+
   /** q116: the per-source mixture plan at temperature T = 2 —
     * (source, n_docs, token_mass, sqrt_mass, weight_ppm, quota_docs)
     * with weight ∝ isqrt(token_mass), normalized in ppm, and the doc
@@ -63,7 +82,7 @@ object Mixture {
     * remainder docs are the caller's largest-remainder choice). */
   def mixturePlan(docs: DataFrame): DataFrame =
     planFromMasses(docs
-      .select(col("source"), size(split(col("text"), " ")).cast("long").as("toks"))
+      .select(col("source"), size(Text.tokens).cast("long").as("toks"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("token_mass")))
 
@@ -87,28 +106,11 @@ object Mixture {
     s"""WITH eff AS (
        |  SELECT source, dedup_docs AS n_docs, dedup_tokens AS token_mass
        |  FROM (${graft.ext.Dedup.effectiveTokensSql})),
-       |s AS (SELECT source, n_docs, token_mass,
-       |        ${isqrt("token_mass")} AS sqrt_mass FROM eff),
-       |t AS (SELECT SUM(sqrt_mass) AS sqrt_total FROM s)
-       |SELECT source, n_docs, CAST(token_mass AS BIGINT) AS token_mass,
-       |  CAST(sqrt_mass AS BIGINT) AS sqrt_mass,
-       |  CAST((1000000 * sqrt_mass) // sqrt_total AS BIGINT) AS weight_ppm,
-       |  CAST(($DocBudget * sqrt_mass) // sqrt_total AS BIGINT) AS quota_docs
-       |FROM s CROSS JOIN t ORDER BY source""".stripMargin
+       |${duckPlanFromMasses("eff")}""".stripMargin
 
   val mixturePlanSql: String =
-    s"""WITH m AS (
-       |  SELECT source, COUNT(*) AS n_docs,
-       |    SUM(len(string_split(text, ' '))) AS token_mass
-       |  FROM documents GROUP BY source),
-       |s AS (SELECT source, n_docs, token_mass,
-       |        ${isqrt("token_mass")} AS sqrt_mass FROM m),
-       |t AS (SELECT SUM(sqrt_mass) AS sqrt_total FROM s)
-       |SELECT source, n_docs, CAST(token_mass AS BIGINT) AS token_mass,
-       |  CAST(sqrt_mass AS BIGINT) AS sqrt_mass,
-       |  CAST((1000000 * sqrt_mass) // sqrt_total AS BIGINT) AS weight_ppm,
-       |  CAST(($DocBudget * sqrt_mass) // sqrt_total AS BIGINT) AS quota_docs
-       |FROM s CROSS JOIN t ORDER BY source""".stripMargin
+    s"""WITH $duckMasses,
+       |${duckPlanFromMasses("m")}""".stripMargin
 
   /** q117: the epoch manifest the mixture plan implies — per document,
     * how many times this epoch samples it. quota_s spread over the
@@ -141,10 +143,7 @@ object Mixture {
   }
 
   def epochManifestSql(seed: Long = 12345L): String =
-    s"""WITH m AS (
-       |  SELECT source, COUNT(*) AS n_docs,
-       |    SUM(len(string_split(text, ' '))) AS token_mass
-       |  FROM documents GROUP BY source),
+    s"""WITH $duckMasses,
        |s AS (SELECT source, n_docs, token_mass,
        |        ${isqrt("token_mass")} AS sqrt_mass FROM m),
        |t AS (SELECT SUM(sqrt_mass) AS sqrt_total FROM s),
@@ -193,7 +192,7 @@ object Mixture {
     * all allocation algebra runs on the k-row relation. */
   def waterFillAllocation(docs: DataFrame): DataFrame = {
     val bySrc = docs
-      .select(col("source"), size(split(col("text"), " ")).cast("long").as("toks"))
+      .select(col("source"), size(Text.tokens).cast("long").as("toks"))
       .groupBy("source").agg(sum(col("toks")).as("s"))
     val tot = bySrc.agg(sum(col("s")).as("total"),
       count(lit(1)).as("k"), max(col("s")).as("max_s"))
@@ -228,7 +227,7 @@ object Mixture {
 
   val waterFillAllocationSql: String =
     s"""WITH m AS (
-       |  SELECT source, SUM(len(string_split(text, ' '))) AS s
+       |  SELECT source, SUM(len(${Text.duckTokens})) AS s
        |  FROM documents GROUP BY source),
        |t AS (SELECT SUM(s) AS total, COUNT(*) AS k, MAX(s) AS max_s,
        |        SUM(s) // $WaterBudgetDiv AS b FROM m),
@@ -297,7 +296,7 @@ object Mixture {
     * filter. */
   def systematicSample(docs: DataFrame, seed: Long = 12345L): DataFrame = {
     val weighted = docs.select(col("source"), col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("toks"),
+      size(Text.tokens).cast("long").as("toks"),
       expr(Curation.lcgKeySql(s"(doc_id % ${Curation.ShuffleMod}) + $seed", 0L))
         .as("key"))
     val bySrc = weighted.groupBy("source")
@@ -319,7 +318,7 @@ object Mixture {
   def systematicSampleSql(seed: Long = 12345L): String =
     s"""WITH weighted AS (
        |  SELECT source, doc_id,
-       |    len(string_split(text, ' ')) AS toks,
+       |    len(${Text.duckTokens}) AS toks,
        |    ${Curation.lcgKeySql(s"(doc_id % ${Curation.ShuffleMod}) + $seed", 0L)} AS key
        |  FROM documents),
        |s AS (SELECT source,

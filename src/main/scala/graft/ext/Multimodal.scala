@@ -232,6 +232,11 @@ object Multimodal {
   private def byteAt(i: String): String =
     s"(${hexNib(s"2*($i) - 1")} * 16 + ${hexNib(s"2*($i)")})"
 
+  /** The stub decoder's base-31 byte hash: over each `i` of the list
+    * `idx`, the byte at index expression `at`. */
+  private def hash31(idx: String, at: String): String =
+    Text.duckPolyFold(s"list_transform($idx, i -> CAST(${byteAt(at)} AS BIGINT))", 31, 1000000007)
+
   /** Attach a binary payload + metadata to each document. The payload is
     * the utf-8 text bytes standing in for media bytes; metadata is
     * derived deterministically. */
@@ -291,10 +296,7 @@ object Multimodal {
        |  CASE WHEN s.n_bytes = 0 THEN 0 ELSE s.byte_sum * 100 // s.n_bytes END AS mean_byte_x100,
        |  s.max_byte, s.n_frames, s.frame_sample_sum,
        |  CASE WHEN s.n_bytes = 0 THEN 0 ELSE
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |      generate_series(0, 15),
-       |      i -> CAST(${byteAt("CAST((i * s.n_bytes) // 16 AS INT) + 1")} AS BIGINT))),
-       |      (a, c) -> (a * 31 + c) % 1000000007) END AS thumb_hash,
+       |    ${hash31("generate_series(0, 15)", "CAST((i * s.n_bytes) // 16 AS INT) + 1")} END AS thumb_hash,
        |  (['jpeg','png','webm'])[CAST(s.doc_id % 3 AS INT) + 1] AS media_format,
        |  CAST(320 * ((s.doc_id % 4) + 1) AS INT) AS media_width
        |FROM stats s JOIN b ON b.doc_id = s.doc_id
@@ -328,10 +330,7 @@ object Multimodal {
        |SELECT doc_id, CAST((off1 - 1) // 256 AS INT) AS frame_idx,
        |  CAST(off1 - 1 AS BIGINT) AS frame_off,
        |  ${byteAt("off1")} AS frame_byte,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |    generate_series(off1, least(off1 + 15, n)),
-       |    i -> CAST(${byteAt("i")} AS BIGINT))),
-       |    (a, c) -> (a * 31 + c) % 1000000007) AS window_hash
+       |  ${hash31("generate_series(off1, least(off1 + 15, n))", "i")} AS window_hash
        |FROM f ORDER BY doc_id, frame_idx""".stripMargin
 
   // ------------------------------------------------ perceptual near-dup

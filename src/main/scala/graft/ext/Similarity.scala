@@ -1565,23 +1565,9 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  val hardNegativesSql: String = {
-    import graft.ext.Dedup.{NumHashes, NumBands, BandRows, coefA, coefB, P,
-      duckShingles, duckH}
-    val sigCols = (0 until NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
-    }
-    val bandSelects = (0 until NumBands).map { b =>
-      val key = (0 until BandRows).map(r => s"CAST(h${b * BandRows + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, $b AS band, $key AS band_key FROM sig"
-    }
-    s"""WITH hashed AS (
-       |  SELECT doc_id, list_transform($duckShingles, s -> ${duckH("s")}) AS hs
-       |  FROM documents),
-       |sig AS (SELECT doc_id, ${sigCols.mkString(", ")} FROM hashed),
-       |bands AS (${bandSelects.mkString(" UNION ALL ")}),
+  val hardNegativesSql: String =
+    s"""WITH ${Dedup.duckSigCtes("documents")},
+       |${Dedup.duckBandsCte()},
        |banned AS (
        |  SELECT q.doc_id AS b_q, c.doc_id AS b_cand
        |  FROM bands q JOIN bands c
@@ -1608,7 +1594,6 @@ object Similarity {
        |FROM ranked r LEFT JOIN banned_counts bc ON bc.b_q = r.q_id
        |WHERE r.rank <= $TopK
        |ORDER BY r.q_id, r.rank""".stripMargin
-  }
 
   // ------------------------------------------------- semantic dedup
   /** Within-cell quantized cosine threshold for q83. Fixture similarity

@@ -61,16 +61,36 @@ object Sketches {
     * after this is at most m rows per key. */
   private def registerTable(tok: DataFrame, key: String = "source",
                             value: String = "w"): DataFrame =
-    tok
-      .withColumn("hx", md5(col(value)))
+    withRho(tok, col(value))
+      .groupBy(col(key), col("reg"))
+      .agg(max(col("rho")).as("m"))
+
+  /** `df` plus hx = md5(value), its register index `reg` and its
+    * trailing-zero rank `rho` (with the `v` chunk it is read from). */
+  private[graft] def withRho(df: DataFrame, value: org.apache.spark.sql.Column): DataFrame =
+    df
+      .withColumn("hx", md5(value))
       .withColumn("reg",
         expr(s"cast(conv(substr(hx, 1, 6), 16, 10) as bigint) % $Registers"))
       .withColumn("v", expr("cast(conv(substr(hx, 7, 6), 16, 10) as bigint)"))
       .withColumn("rho", expr(
         s"CASE WHEN v = 0 THEN $RhoCap " +
         s"ELSE CAST(round(log2(v & -v)) AS INT) + 1 END"))
-      .groupBy(col(key), col("reg"))
-      .agg(max(col("rho")).as("m"))
+
+  /** Oracle twin of [[registerTable]]: the `rho` CTE and the register CTE
+    * `regs` (keys, reg, m), no leading WITH, over `from` — a relation
+    * of the `keys` columns (comma-separated) and hx = md5(value). */
+  private[graft] def duckRegs(keys: String, from: String, regs: String = "regs"): String =
+    s"""rho AS (
+       |  SELECT $keys,
+       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
+       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
+       |  FROM $from),
+       |$regs AS (
+       |  SELECT $keys, reg,
+       |    MAX(CASE WHEN v = 0 THEN $RhoCap
+       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
+       |  FROM rho GROUP BY $keys, reg)""".stripMargin
 
   /** Registers -> (keys..., regs_hit, estName): the fixed-point
     * harmonic-mean estimate, grouped by any key set (q118 groups by
@@ -93,16 +113,33 @@ object Sketches {
              s" ELSE raw_est END").as(estName)): _*)
   }
 
+  /** Oracle twin of [[estimateBy]]: the `raw` and `ests` CTEs (no
+    * leading WITH) over the register relation `regs`; `ests` is (keys,
+    * regs_hit, estName). */
+  private[graft] def duckEstimate(keys: String, regs: String, estName: String): String =
+    s"""raw AS (
+       |  SELECT $keys, COUNT(*) AS regs_hit,
+       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
+       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
+       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
+       |      AS raw_est
+       |  FROM $regs GROUP BY $keys),
+       |ests AS (
+       |  SELECT $keys, regs_hit,
+       |    CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
+       |      THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
+       |                                      $Registers - regs_hit))
+       |           // (CAST(1 AS BIGINT) << $LnScale)
+       |      ELSE raw_est END AS $estName
+       |  FROM raw)""".stripMargin
+
   /** q118: per-source distinct-token cardinality by HLL sketch, plus
     * the '__all__' row computed by MERGING the per-source register
     * tables (element-wise max) — the merge path IS the query, proving
     * the sketch composes the way a 100 TB per-shard rollup needs.
     * Columns: (source, regs_hit, est_tokens, exact_tokens, err_pct). */
   def hllTokenSketch(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .distinct()
+    val tok = Text.words(docs, "w", "source").distinct()
     val perSrcRegs = registerTable(tok)
     val mergedRegs = perSrcRegs
       .groupBy(col("reg")).agg(max(col("m")).as("m"))
@@ -128,40 +165,17 @@ object Sketches {
   val hllTokenSketchSql: String =
     s"""WITH tok AS (
        |  SELECT DISTINCT source, w
-       |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
+       |  FROM (SELECT source, unnest(${Text.duckTokens}) AS w
        |        FROM documents)
        |  WHERE length(w) > 0),
        |hashed AS (
        |  SELECT source, md5(w) AS hx FROM tok),
-       |rho AS (
-       |  SELECT source,
-       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
-       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
-       |  FROM hashed),
-       |regs AS (
-       |  SELECT source, reg,
-       |    MAX(CASE WHEN v = 0 THEN $RhoCap
-       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
-       |  FROM rho GROUP BY source, reg),
+       |${duckRegs("source", "hashed")},
        |allregs AS (
        |  SELECT * FROM regs
        |  UNION ALL
        |  SELECT '__all__' AS source, reg, MAX(m) AS m FROM regs GROUP BY reg),
-       |raw AS (
-       |  SELECT source, COUNT(*) AS regs_hit,
-       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
-       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
-       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
-       |      AS raw_est
-       |  FROM allregs GROUP BY source),
-       |ests AS (
-       |  SELECT source, regs_hit,
-       |    CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
-       |      THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
-       |                                      $Registers - regs_hit))
-       |           // (CAST(1 AS BIGINT) << $LnScale)
-       |      ELSE raw_est END AS est_tokens
-       |  FROM raw),
+       |${duckEstimate("source", "allregs", "est_tokens")},
        |exact AS (
        |  SELECT source, COUNT(DISTINCT w) AS exact_tokens FROM tok GROUP BY source
        |  UNION ALL
@@ -279,31 +293,8 @@ object Sketches {
        |tok AS (SELECT DISTINCT col_name, CAST(v AS VARCHAR) AS w
        |        FROM stacked WHERE v IS NOT NULL),
        |hashed AS (SELECT col_name, md5(w) AS hx FROM tok),
-       |rho AS (
-       |  SELECT col_name,
-       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
-       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
-       |  FROM hashed),
-       |regs AS (
-       |  SELECT col_name, reg,
-       |    MAX(CASE WHEN v = 0 THEN $RhoCap
-       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
-       |  FROM rho GROUP BY col_name, reg),
-       |raw AS (
-       |  SELECT col_name, COUNT(*) AS regs_hit,
-       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
-       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
-       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
-       |      AS raw_est
-       |  FROM regs GROUP BY col_name),
-       |ests AS (
-       |  SELECT col_name,
-       |    CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
-       |      THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
-       |                                      $Registers - regs_hit))
-       |           // (CAST(1 AS BIGINT) << $LnScale)
-       |      ELSE raw_est END AS ndv_est
-       |  FROM raw),
+       |${duckRegs("col_name", "hashed")},
+       |${duckEstimate("col_name", "regs", "ndv_est")},
        |exact AS (
        |  SELECT col_name, COUNT(DISTINCT v) AS ndv_exact
        |  FROM stacked WHERE v IS NOT NULL GROUP BY 1)
@@ -415,27 +406,8 @@ object Sketches {
        |keyed AS (SELECT join_name, side, CAST(k AS VARCHAR) AS w FROM sides),
        |ns AS (SELECT join_name, side, COUNT(*) AS n FROM keyed GROUP BY 1, 2),
        |hashed AS (SELECT DISTINCT join_name, side, md5(w) AS hx FROM keyed),
-       |rho AS (SELECT join_name, side,
-       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
-       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
-       |  FROM hashed),
-       |regs AS (SELECT join_name, side, reg,
-       |    MAX(CASE WHEN v = 0 THEN $RhoCap
-       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
-       |  FROM rho GROUP BY 1, 2, 3),
-       |raw AS (SELECT join_name, side, COUNT(*) AS regs_hit,
-       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
-       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
-       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
-       |      AS raw_est
-       |  FROM regs GROUP BY 1, 2),
-       |ests AS (SELECT join_name, side,
-       |    CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
-       |      THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
-       |                                      $Registers - regs_hit))
-       |           // (CAST(1 AS BIGINT) << $LnScale)
-       |      ELSE raw_est END AS ndv
-       |  FROM raw),
+       |${duckRegs("join_name, side", "hashed")},
+       |${duckEstimate("join_name, side", "regs", "ndv")},
        |per AS (SELECT n.join_name, n.side, n.n, e.ndv
        |  FROM ns n JOIN ests e ON n.join_name = e.join_name AND n.side = e.side),
        |wide AS (SELECT join_name,
@@ -494,16 +466,7 @@ object Sketches {
        |  SELECT epoch_us(ts) // 86400000000 AS day,
        |         md5(CAST(user_id AS VARCHAR)) AS hx
        |  FROM events),
-       |rho AS (
-       |  SELECT day,
-       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
-       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
-       |  FROM e),
-       |daily AS (
-       |  SELECT day, reg,
-       |    MAX(CASE WHEN v = 0 THEN $RhoCap
-       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
-       |  FROM rho GROUP BY day, reg),
+       |${duckRegs("day", "e", "daily")},
        |days AS (SELECT DISTINCT day FROM daily),
        |merged AS (
        |  SELECT w.win_day, w.reg, MAX(w.m) AS m
@@ -512,20 +475,10 @@ object Sketches {
        |          (SELECT unnest(generate_series(0, ${SlidingDays - 1})) AS off) o) w
        |  JOIN days dd ON dd.day = w.win_day
        |  GROUP BY w.win_day, w.reg),
-       |raw AS (
-       |  SELECT win_day, COUNT(*) AS regs_hit,
-       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
-       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
-       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
-       |      AS raw_est
-       |  FROM merged GROUP BY win_day)
+       |${duckEstimate("win_day", "merged", "est_users")}
        |SELECT win_day, CAST(regs_hit AS BIGINT) AS regs_hit,
-       |  CAST(CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
-       |    THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
-       |                                    $Registers - regs_hit))
-       |         // (CAST(1 AS BIGINT) << $LnScale)
-       |    ELSE raw_est END AS BIGINT) AS est_users
-       |FROM raw
+       |  CAST(est_users AS BIGINT) AS est_users
+       |FROM ests
        |ORDER BY win_day""".stripMargin
 
   // --------------------------------------------- q166 Misra-Gries
@@ -552,8 +505,7 @@ object Sketches {
   def misraGriesTokens(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val tok = docs.select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
+    val tok = Text.words(docs, "w")
     // the stream total rides the SUMMARY pass as an observe() metric —
     // a separate count aggregate would be a third corpus scan
     // (code-review fix: two passes is the MG contract, not three)
@@ -574,7 +526,7 @@ object Sketches {
   /** Oracle: the exact tokens above the 1/(k+1) support threshold — the
     * guarantee says the sketch path must reproduce them precisely. */
   val misraGriesTokensSql: String =
-    s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+    s"""WITH t AS (SELECT unnest(${Text.duckTokens}) AS w FROM documents),
        |c AS (SELECT w AS token, COUNT(*) AS n FROM t
        |      WHERE length(w) > 0 GROUP BY w),
        |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total FROM c)
@@ -624,12 +576,7 @@ object Sketches {
           lit("(raise the fixed-point scale): "),
           sum(col("n_chars")).cast("string"))))
         .otherwise(sum(col("n_chars")))
-    val sample = docs.filter(expr(s"($EstKey) % $EstSampleMod") === 0)
-      .groupBy("source")
-      .agg(count(lit(1)).as("sample_docs"),
-        sum(col("n_chars")).as("s_chars"),
-        sum(size(split(col("text"), " ")).cast("long")).as("s_toks"))
-      .withColumn("cpt_ppm", expr("(1000000 * s_chars) div s_toks"))
+    val sample = charsPerToken(docs.filter(expr(s"($EstKey) % $EstSampleMod") === 0))
     val full = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), guardedChars.as("t_chars"))
     // LEFT join + loud guard: a source with no doc in the 1/mod sample
@@ -648,7 +595,7 @@ object Sketches {
       return est.select(col("source"), col("n_docs"), col("sample_docs"),
         col("cpt_ppm"), col("est_tokens")).orderBy("source")
     val exact = docs.groupBy("source")
-      .agg(sum(size(split(col("text"), " ")).cast("long")).as("exact_tokens"))
+      .agg(sum(size(Text.tokens).cast("long")).as("exact_tokens"))
     est.join(exact, "source")
       .select(col("source"), col("n_docs"), col("sample_docs"),
         col("cpt_ppm"), col("est_tokens"), col("exact_tokens"),
@@ -657,18 +604,27 @@ object Sketches {
       .orderBy("source")
   }
 
+  /** Per source of the sampled `docs`: sample_docs, the char and token
+    * sums, and cpt_ppm, chars per whitespace token in ppm. */
+  private def charsPerToken(sampled: DataFrame): DataFrame =
+    sampled.groupBy("source")
+      .agg(count(lit(1)).as("sample_docs"),
+        sum(col("n_chars")).as("s_chars"),
+        sum(size(Text.tokens).cast("long")).as("s_toks"))
+      .withColumn("cpt_ppm", expr("(1000000 * s_chars) div s_toks"))
+
   val tokenCostEstimateSql: String =
     s"""WITH sample AS (
        |  SELECT source, COUNT(*) AS sample_docs,
        |    SUM(n_chars) AS s_chars,
-       |    SUM(len(string_split(text, ' '))) AS s_toks
+       |    SUM(len(${Text.duckTokens})) AS s_toks
        |  FROM documents WHERE (($EstKey)) % $EstSampleMod = 0
        |  GROUP BY source),
        |full_side AS (
        |  SELECT source, COUNT(*) AS n_docs, SUM(n_chars) AS t_chars
        |  FROM documents GROUP BY source),
        |exact AS (
-       |  SELECT source, SUM(len(string_split(text, ' '))) AS exact_tokens
+       |  SELECT source, SUM(len(${Text.duckTokens})) AS exact_tokens
        |  FROM documents GROUP BY source),
        |joined AS (
        |  SELECT f.source, f.n_docs, f.t_chars, s.sample_docs,
@@ -713,7 +669,7 @@ object Sketches {
   def histQuantiles(docs: DataFrame): DataFrame = {
     val hist = docs
       .select(col("source"),
-        expr("greatest(size(split(text, ' ')), 1)").as("v"))
+        expr(s"greatest(${Text.sparkTokenCount}, 1)").as("v"))
       .select(col("source"), expr("length(bin(v)) - 1").as("b"))
       .groupBy("source", "b").agg(count(lit(1)).as("c"))
     val w = Window.partitionBy("source").orderBy("b")
@@ -738,7 +694,7 @@ object Sketches {
         s" THEN b END) + 1)) - 1 AS BIGINT) AS p${p}_est"
     s"""WITH hist AS (
        |  SELECT source,
-       |    length(bin(greatest(len(string_split(text, ' ')), 1))) - 1 AS b,
+       |    length(bin(greatest(len(${Text.duckTokens}), 1))) - 1 AS b,
        |    COUNT(*) AS c
        |  FROM documents GROUP BY 1, 2),
        |cum AS (
@@ -772,16 +728,11 @@ object Sketches {
   def stratifiedTokenEstimate(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("key", "doc_id")
-    val sample = docs
+    val sample = charsPerToken(docs
       .select(col("source"), col("doc_id"), col("n_chars"), col("text"),
         expr(s"($EstKey)").as("key"))
       .withColumn("rk", row_number().over(w))
-      .filter(pmod(col("rk") - 1, lit(StratMod)) === 0)
-      .groupBy("source")
-      .agg(count(lit(1)).as("sample_docs"),
-        sum(col("n_chars")).as("s_chars"),
-        sum(size(split(col("text"), " ")).cast("long")).as("s_toks"))
-      .withColumn("cpt_ppm", expr("(1000000 * s_chars) div s_toks"))
+      .filter(pmod(col("rk") - 1, lit(StratMod)) === 0))
     val full = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("t_chars"))
     full.join(sample, "source")
@@ -800,7 +751,7 @@ object Sketches {
        |sample AS (
        |  SELECT source, COUNT(*) AS sample_docs,
        |    SUM(n_chars) AS s_chars,
-       |    SUM(len(string_split(text, ' '))) AS s_toks
+       |    SUM(len(${Text.duckTokens})) AS s_toks
        |  FROM ranked WHERE (rk - 1) % $StratMod = 0
        |  GROUP BY source),
        |full_side AS (

@@ -18,13 +18,6 @@ import graft.Tables
   */
 object TextAnalysis {
 
-  /** Occurrences of `needle` via replace-length arithmetic (portable,
-    * no regex dialect involved). */
-  private[ext] def sparkCount(textExpr: String, needle: String): String =
-    s"(length($textExpr) - length(replace($textExpr, '$needle', ''))) div ${needle.length}"
-  private[ext] def duckCount(textExpr: String, needle: String): String =
-    s"(length($textExpr) - length(replace($textExpr, '$needle', ''))) // ${needle.length}"
-
   /** Language marker words (space-padded to match whole tokens; text is
     * padded with one leading/trailing space first). Heuristic n-gram
     * lang-id in its simplest portable form. */
@@ -37,9 +30,8 @@ object TextAnalysis {
 
   // ------------------------------------------------------------- lang id
   def langId(docs: DataFrame): DataFrame = {
-    val padded = "concat(' ', text, ' ')"
     val scoreCols = markers.map { case (lang, ws) =>
-      expr(ws.map(w => s"(${sparkCount(padded, w)})").mkString(" + "))
+      expr(ws.map(w => s"(${Text.sparkCount(Text.padded, w)})").mkString(" + "))
         .as(s"score_$lang")
     }
     val scored = docs.select((col("doc_id") +: col("lang") +: scoreCols): _*)
@@ -55,9 +47,8 @@ object TextAnalysis {
   }
 
   val langIdSql: String = {
-    val padded = "concat(' ', text, ' ')"
     val scores = markers.map { case (lang, ws) =>
-      s"(${ws.map(w => s"(${duckCount(padded, w)})").mkString(" + ")}) AS score_$lang"
+      s"(${ws.map(w => s"(${Text.duckCount(Text.padded, w)})").mkString(" + ")}) AS score_$lang"
     }
     // same fold, right-to-left: first lang (in declaration order) whose
     // score is >= all others and > 0 wins; otherwise 'und'
@@ -104,34 +95,26 @@ object TextAnalysis {
   // ------------------------------------------------------------- quality
   /** Integer quality metrics: char/token counts, punctuation count,
     * stopword basis points, mean word length in centichars. */
-  def quality(docs: DataFrame): DataFrame = {
-    val padded = "concat(' ', text, ' ')"
-    val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-      .map(w => s"(${sparkCount(padded, w)})").mkString(" + ")
+  def quality(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       length(col("text")).as("n_chars_m"),
-      expr("size(split(text, ' '))").as("n_tokens"),
+      size(Text.tokens).as("n_tokens"),
       expr("length(regexp_replace(text, '[A-Za-z0-9 ]', ''))").as("n_punct"),
-      expr(s"(10000 * ($stopCount)) div greatest(size(split(text, ' ')), 1)")
+      expr(s"(10000 * (${Text.sparkStopCount})) div greatest(${Text.sparkTokenCount}, 1)")
         .as("stopword_bp"),
-      expr("(100 * (length(text) - size(split(text, ' ')) + 1)) div greatest(size(split(text, ' ')), 1)")
+      expr(s"(100 * (length(text) - ${Text.sparkTokenCount} + 1)) div greatest(${Text.sparkTokenCount}, 1)")
         .as("mean_wordlen_c"))
       .orderBy("doc_id")
-  }
 
-  val qualitySql: String = {
-    val padded = "concat(' ', text, ' ')"
-    val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-      .map(w => s"(${duckCount(padded, w)})").mkString(" + ")
+  val qualitySql: String =
     s"""SELECT doc_id,
        |  length(text) AS n_chars_m,
-       |  len(string_split(text, ' ')) AS n_tokens,
+       |  len(${Text.duckTokens}) AS n_tokens,
        |  length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS n_punct,
-       |  (10000 * ($stopCount)) // greatest(len(string_split(text, ' ')), 1) AS stopword_bp,
-       |  (100 * (length(text) - len(string_split(text, ' ')) + 1)) // greatest(len(string_split(text, ' ')), 1) AS mean_wordlen_c
+       |  (10000 * (${Text.duckStopCount})) // greatest(len(${Text.duckTokens}), 1) AS stopword_bp,
+       |  (100 * (length(text) - len(${Text.duckTokens}) + 1)) // greatest(len(${Text.duckTokens}), 1) AS mean_wordlen_c
        |FROM documents ORDER BY doc_id""".stripMargin
-  }
 
   // -------------------------------------------------------------- tokens
   /** Token counting: whitespace tokens + BPE-ish regex tokens (alnum runs
@@ -144,14 +127,14 @@ object TextAnalysis {
   def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      expr("size(split(text, ' '))").as("ws_tokens"),
+      size(Text.tokens).as("ws_tokens"),
       expr(s"size(regexp_extract_all(text, '$TokenRegexSpark', 0))").as("re_tokens"),
       expr("length(regexp_replace(text, '[^A-Za-z0-9]', ''))").as("alnum_chars"))
       .orderBy("doc_id")
 
   val tokenCountsSql: String =
     s"""SELECT doc_id,
-       |  len(string_split(text, ' ')) AS ws_tokens,
+       |  len(${Text.duckTokens}) AS ws_tokens,
        |  len(regexp_extract_all(text, '$TokenRegexDuck')) AS re_tokens,
        |  length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS alnum_chars
        |FROM documents ORDER BY doc_id""".stripMargin
@@ -164,23 +147,18 @@ object TextAnalysis {
     * fold is O(n^2) and benched 40x slower on the sf0.1 corpus. */
   def fingerprints(docs: DataFrame): DataFrame = {
     graft.functions.PolyHash.register(docs.sparkSession)
-    val norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
     docs.select(
       col("doc_id"),
-      expr(s"md5(cast($norm as binary))").as("md5_fp"),
-      expr(s"poly_hash($norm, 31, 1000000007)").as("roll_hash"))
+      Text.normTextHash.as("md5_fp"),
+      expr(s"poly_hash(${Text.sparkNorm}, 31, 1000000007)").as("roll_hash"))
       .orderBy("doc_id")
   }
 
-  val fingerprintsSql: String = {
-    val norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
+  val fingerprintsSql: String =
     s"""SELECT doc_id,
-       |  md5($norm) AS md5_fp,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |    generate_series(1, length($norm)), i -> CAST(ord(substr($norm, i, 1)) AS BIGINT))),
-       |    (acc, c) -> (acc * 31 + c) % 1000000007) AS roll_hash
+       |  ${Text.normTextHashSql} AS md5_fp,
+       |  ${Text.duckPolyHash(Text.duckNorm, 31, 1000000007)} AS roll_hash
        |FROM documents ORDER BY doc_id""".stripMargin
-  }
 
   // ----------------------------------------------- top docs per source
   val TopDocsK = 3
@@ -196,7 +174,7 @@ object TextAnalysis {
   def topDocsPerSource(docs: DataFrame): DataFrame = {
     val topk = graft.functions.BoundedTopK.topK(TopDocsK)
     docs.select(col("source"), col("doc_id"),
-        expr("size(split(text, ' '))").cast("double").as("score"))
+        size(Text.tokens).cast("double").as("score"))
       .groupBy(col("source"))
       .agg(topk(col("score"), col("doc_id")).as("top"))
       .select(col("source"), posexplode(col("top")))
@@ -208,9 +186,9 @@ object TextAnalysis {
   val topDocsPerSourceSql: String =
     s"""SELECT source, CAST(rank AS INT) AS rank, doc_id, n_tokens FROM (
        |  SELECT source, doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+       |    CAST(len(${Text.duckTokens}) AS BIGINT) AS n_tokens,
        |    ROW_NUMBER() OVER (PARTITION BY source
-       |      ORDER BY len(string_split(text, ' ')) DESC, doc_id) AS rank
+       |      ORDER BY len(${Text.duckTokens}) DESC, doc_id) AS rank
        |  FROM documents)
        |WHERE rank <= $TopDocsK
        |ORDER BY source, rank""".stripMargin
@@ -233,7 +211,7 @@ object TextAnalysis {
     * chunking any corpus is embarrassingly parallel, and the chunk
     * count per doc (~n_tokens/stride) bounds the fan-out. */
   def chunkDocs(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), Text.tokens.as("toks"))
       .select(col("doc_id"), col("toks"),
         explode(expr(s"sequence(0, (size(toks) - 1) div $ChunkStride)"))
           .as("chunk_idx"))
@@ -245,7 +223,7 @@ object TextAnalysis {
       .orderBy("doc_id", "chunk_idx")
 
   val chunkDocsSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.duckTokens} AS toks FROM documents),
        |c AS (SELECT doc_id,
        |        unnest(generate_series(0, (len(toks) - 1) // $ChunkStride)) AS chunk_idx,
        |        toks
@@ -266,8 +244,7 @@ object TextAnalysis {
     * partials; at corpus scale this is THE canonical two-phase count.
     * Ties broken on the token text so the cut is deterministic. */
   def vocab(docs: DataFrame): DataFrame =
-    docs.select(explode(split(col("text"), " ")).as("token"), col("doc_id"))
-      .filter(length(col("token")) > 0)
+    Text.words(docs, "token", "doc_id")
       .groupBy("token")
       .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
       .orderBy(col("tf").desc, col("token"))
@@ -275,7 +252,7 @@ object TextAnalysis {
 
   val vocabSql: String =
     s"""SELECT token, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-       |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
+       |FROM (SELECT doc_id, unnest(${Text.duckTokens}) AS token FROM documents)
        |WHERE length(token) > 0
        |GROUP BY token
        |ORDER BY tf DESC, token
@@ -297,38 +274,23 @@ object TextAnalysis {
     * train/eval-leak guard. */
   def qualitySample(docs: DataFrame): DataFrame = {
     graft.functions.PolyHash.register(docs.sparkSession)
-    val norm = "regexp_replace(lower(text), '\\\\s+', ' ')"
-    val padded = "concat(' ', text, ' ')"
-    val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-      .map(w => s"(${sparkCount(padded, w)})").mkString(" + ")
     docs.select(col("doc_id"), col("text"))
       .filter(length(col("text")) >= MinChars)
-      .filter(expr(s"(10000 * ($stopCount)) div greatest(size(split(text, ' ')), 1)")
+      .filter(expr(s"(10000 * (${Text.sparkStopCount})) div greatest(${Text.sparkTokenCount}, 1)")
         <= MaxStopwordBp)
-      .withColumn("bucket_pc",
-        expr(s"poly_hash(substring(md5(cast($norm as binary)), 1, 8), 31, 1000000007) % 100"))
+      .withColumn("bucket_pc", expr(s"${Text.sparkContentHash} % 100"))
       .filter(col("bucket_pc") < SamplePct)
       .select(col("doc_id"), col("bucket_pc"))
       .orderBy("doc_id")
   }
 
-  val qualitySampleSql: String = {
-    val norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
-    val padded = "concat(' ', text, ' ')"
-    val stopCount = Seq(" the ", " a ", " of ", " and ", " is ")
-      .map(w => s"(${duckCount(padded, w)})").mkString(" + ")
-    s"""SELECT doc_id,
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |    generate_series(1, 8), i -> CAST(ord(substr(md5($norm), i, 1)) AS BIGINT))),
-       |    (acc, c) -> (acc * 31 + c) % 1000000007) % 100 AS bucket_pc
+  val qualitySampleSql: String =
+    s"""SELECT doc_id, ${Text.duckContentHash} % 100 AS bucket_pc
        |FROM documents
        |WHERE length(text) >= $MinChars
-       |  AND (10000 * ($stopCount)) // greatest(len(string_split(text, ' ')), 1) <= $MaxStopwordBp
-       |  AND list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |    generate_series(1, 8), i -> CAST(ord(substr(md5($norm), i, 1)) AS BIGINT))),
-       |    (acc, c) -> (acc * 31 + c) % 1000000007) % 100 < $SamplePct
+       |  AND (10000 * (${Text.duckStopCount})) // greatest(len(${Text.duckTokens}), 1) <= $MaxStopwordBp
+       |  AND ${Text.duckContentHash} % 100 < $SamplePct
        |ORDER BY doc_id""".stripMargin
-  }
 
   // ------------------------------------------------- histogram quantiles
   val QuantileBinWidth = 8
@@ -349,7 +311,7 @@ object TextAnalysis {
   def lengthQuantiles(docs: DataFrame): DataFrame = {
     val w = QuantileBinWidth
     val bins = docs
-      .select(col("source"), expr(s"size(split(text, ' ')) div $w").as("bin"))
+      .select(col("source"), expr(s"${Text.sparkTokenCount} div $w").as("bin"))
       .groupBy("source", "bin").agg(count(lit(1)).as("c"))
     val cumW = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("bin")
@@ -370,7 +332,7 @@ object TextAnalysis {
       s"MIN(CASE WHEN cum * 100 >= total * $p THEN bin * $w END) AS p${p}_tokens"
     }
     s"""WITH bins AS (
-       |  SELECT source, len(string_split(text, ' ')) // $w AS bin, COUNT(*) AS c
+       |  SELECT source, len(${Text.duckTokens}) // $w AS bin, COUNT(*) AS c
        |  FROM documents GROUP BY 1, 2),
        |cum AS (
        |  SELECT source, bin, c,
@@ -461,35 +423,24 @@ object TextAnalysis {
   val HhWidth = 8192
   val HhThreshold = 5
 
-  /** The ONE Spark-side gram expression (1-based `i` over `toks`) —
-    * shared by the positional and gram-only relations below so q57,
-    * q61, q85, and q202 can never tokenize differently (the
-    * no-drifted-copies discipline: the measure-then-repair pairing
-    * only holds while all consumers agree on the gram universe). */
-  private val TriGramSpark =
-    "concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))"
-
   /** Positional trigram relation (doc_id, i, gram) — q202's excision
     * needs the positions. */
   private[ext] def trigramsWithPos(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
         s"""transform(sequence(1, size(toks) - 2),
-           |  i -> named_struct('i', i, 'gram', $TriGramSpark))""".stripMargin)).as("g"))
+           |  i -> named_struct('i', i, 'gram', ${Text.TriGramSpark}))""".stripMargin)).as("g"))
       .select(col("doc_id"), col("g.i").as("i"), col("g.gram").as("gram"))
 
-  /** The matching oracle gram expression (1-based `i` over `toks`). */
-  private[ext] val TriGramDuck = "toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]"
-
   /** All word 3-grams of the corpus, one row per occurrence — the
-    * gram-only projection of the same [[TriGramSpark]] expression
+    * gram-only projection of the same [[Text.TriGramSpark]] expression
     * (no struct boxing on the hot q57/q85 scans). */
   private def trigrams(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(toks) - 2), i -> $TriGramSpark)")).as("gram"))
+        s"transform(sequence(1, size(toks) - 2), i -> ${Text.TriGramSpark})")).as("gram"))
 
   /** Heavy-hitter 3-grams via a two-pass count-min sketch — boilerplate
     * mining (nav bars, license headers, template sentences) over a
@@ -524,9 +475,9 @@ object TextAnalysis {
 
   /** Oracle: the exact heavy hitters (the sketch path must agree). */
   val heavyHitterGramsSql: String =
-    s"""WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT ${Text.duckTokens} AS toks FROM documents),
        |g AS (SELECT unnest(list_transform(generate_series(1, len(toks) - 2),
-       |        i -> $TriGramDuck)) AS gram
+       |        i -> ${Text.TriGramDuck})) AS gram
        |      FROM t WHERE len(toks) >= 3)
        |SELECT gram, COUNT(*) AS n FROM g GROUP BY gram
        |HAVING COUNT(*) >= $HhThreshold
@@ -558,12 +509,17 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** Oracle twin of `trigrams(docs).distinct()`: the `t` and `g` CTEs
+    * (no leading WITH), `g` being the distinct (doc_id, gram) pairs. */
+  private def duckDistinctTrigrams: String =
+    s"""t AS (SELECT doc_id, ${Text.duckTokens} AS toks FROM documents),
+       |g AS (SELECT DISTINCT doc_id, gram FROM (
+       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
+       |    i -> ${Text.TriGramDuck})) AS gram
+       |  FROM t WHERE len(toks) >= 3))""".stripMargin
+
   val noveltyScoresSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |g AS (SELECT DISTINCT doc_id, gram FROM (
-      |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-      |    i -> $TriGramDuck)) AS gram
-      |  FROM t WHERE len(toks) >= 3)),
+    s"""WITH $duckDistinctTrigrams,
       |d AS (SELECT gram, COUNT(*) AS df FROM g GROUP BY gram)
       |SELECT doc_id, COUNT(*) AS n_grams,
       |  CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
@@ -606,9 +562,7 @@ object TextAnalysis {
     * (trimmed df vocabulary broadcast onto the tf relation), which
     * trades a second corpus scan for not shuffling tf by token. */
   def tfIdfTopTerms(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val tf = Text.words(docs, "token", "doc_id")
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val byToken = org.apache.spark.sql.expressions.Window.partitionBy("token")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -634,7 +588,7 @@ object TextAnalysis {
   val tfIdfTopTermsSql: String =
     s"""WITH tf AS (
        |  SELECT doc_id, token, COUNT(*) AS tf FROM
-       |    (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
+       |    (SELECT doc_id, unnest(${Text.duckTokens}) AS token FROM documents)
        |  WHERE length(token) > 0 GROUP BY doc_id, token),
        |d AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -694,14 +648,13 @@ object TextAnalysis {
     * them); the blocklist engages corpus-wide, so the md5 column proves
     * the rewrite path end to end. */
   def piiScrub(docs: DataFrame): DataFrame = {
-    val padded = "concat(' ', text, ' ')"
     val counts = PiiPatterns.map { case (name, re) =>
       expr(s"size(regexp_extract_all(text, '$re', 0))").cast("long").as(s"n_$name")
     } ++ Seq(
-      expr(BlockTerms.map(t => s"(${sparkCount(padded, s" $t ")})").mkString(" + "))
+      expr(BlockTerms.map(t => s"(${Text.sparkCount(Text.padded, s" $t ")})").mkString(" + "))
         .cast("long").as("n_blocked"))
     val scrubbed = BlockTerms.foldLeft(
-      PiiPatterns.foldLeft(s"concat(' ', text, ' ')") { case (acc, (name, re)) =>
+      PiiPatterns.foldLeft(Text.padded) { case (acc, (name, re)) =>
         s"regexp_replace($acc, '$re', '<${name.toUpperCase}>')"
       }) { case (acc, t) => s"replace($acc, ' $t ', ' <TERM> ')" }
     docs.select(col("doc_id") +: counts :+
@@ -710,13 +663,12 @@ object TextAnalysis {
   }
 
   val piiScrubSql: String = {
-    val padded = "concat(' ', text, ' ')"
     val counts = PiiPatterns.map { case (name, re) =>
       s"CAST(len(regexp_extract_all(text, '$re')) AS BIGINT) AS n_$name"
     } ++ Seq(
-      s"CAST(${BlockTerms.map(t => s"(${duckCount(padded, s" $t ")})").mkString(" + ")} AS BIGINT) AS n_blocked")
+      s"CAST(${BlockTerms.map(t => s"(${Text.duckCount(Text.padded, s" $t ")})").mkString(" + ")} AS BIGINT) AS n_blocked")
     val scrubbed = BlockTerms.foldLeft(
-      PiiPatterns.foldLeft("concat(' ', text, ' ')") { case (acc, (name, re)) =>
+      PiiPatterns.foldLeft(Text.padded) { case (acc, (name, re)) =>
         s"regexp_replace($acc, '$re', '<${name.toUpperCase}>', 'g')"
       }) { case (acc, t) => s"replace($acc, ' $t ', ' <TERM> ')" }
     s"""SELECT doc_id, ${counts.mkString(", ")},
@@ -745,7 +697,7 @@ object TextAnalysis {
     * kept iff score ≥ threshold. */
   def qualityGate(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"), col("source"),
-      expr("size(split(text, ' '))").cast("long").as("n_tokens"))
+      size(Text.tokens).cast("long").as("n_tokens"))
     val hist = scored.groupBy("source", "n_tokens")
       .agg(count(lit(1)).as("c"))
     val w = org.apache.spark.sql.expressions.Window
@@ -766,7 +718,7 @@ object TextAnalysis {
   val qualityGateSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+       |    CAST(len(${Text.duckTokens}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |hist AS (
        |  SELECT source, n_tokens, COUNT(*) AS c
@@ -814,11 +766,7 @@ object TextAnalysis {
   }
 
   val contaminationOverlapSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |g AS (SELECT DISTINCT doc_id, gram FROM (
-       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
-       |    i -> $TriGramDuck)) AS gram
-       |  FROM t WHERE len(toks) >= 3)),
+    s"""WITH $duckDistinctTrigrams,
        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % $OverlapEvalMod = 0)
        |SELECT g.doc_id, COUNT(*) AS n_grams,
        |  CAST(SUM(CASE WHEN ev.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
@@ -862,7 +810,7 @@ object TextAnalysis {
       .join(evalGrams, "gram")
       .select(col("doc_id"), explode(expr("array(i, i + 1, i + 2)")).as("p"))
       .groupBy("doc_id").agg(collect_set("p").as("cov"))
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), Text.tokens.as("toks"))
       .where(size(col("toks")) >= 3)
       .filter(col("doc_id") % OverlapEvalMod =!= 0)
       .join(cov, Seq("doc_id"), "left_outer")
@@ -879,11 +827,11 @@ object TextAnalysis {
   }
 
   val spanExcisionSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.duckTokens} AS toks FROM documents),
        |tri AS (
        |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 2),
        |    i -> struct_pack(i := i,
-       |      gram := $TriGramDuck))) AS u
+       |      gram := ${Text.TriGramDuck}))) AS u
        |  FROM t WHERE len(toks) >= 3),
        |g AS (SELECT doc_id, u.i AS i, u.gram AS gram FROM tri),
        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % $OverlapEvalMod = 0),
@@ -932,9 +880,7 @@ object TextAnalysis {
       .select(col("id").as("bucket"),
         (expr("cast(conv(substr(md5(concat('w', cast(id as string))), 1, 6), 16, 10) as bigint)")
           % (2 * WeightRange + 1) - WeightRange).as("weight")))
-    val toks = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
+    val toks = Text.words(docs, "w", "doc_id")
       .repartition(col("doc_id"))
     toks
       .withColumn("bucket",
@@ -949,21 +895,34 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val classifierScoresSql: String =
-    s"""WITH weights AS (
+  /** Oracle twin of the [[classifierScores]] model: the `weights`,
+    * `toks` and per-(doc, bucket) `counts` CTEs (no leading WITH). */
+  private def classifierCtes: String =
+    s"""weights AS (
        |  SELECT bucket,
        |    ('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 6))::BIGINT
        |      % ${2 * WeightRange + 1} - $WeightRange AS weight
        |  FROM (SELECT unnest(generate_series(0, ${ClassifierBuckets - 1})) AS bucket)),
        |toks AS (
        |  SELECT doc_id, w
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+       |  FROM (SELECT doc_id, unnest(${Text.duckTokens}) AS w FROM documents)
        |  WHERE length(w) > 0),
        |counts AS (
        |  SELECT doc_id,
        |    ('0x' || substr(md5(w), 1, 6))::BIGINT % $ClassifierBuckets AS bucket,
        |    COUNT(*) AS cnt
-       |  FROM toks GROUP BY doc_id, bucket)
+       |  FROM toks GROUP BY doc_id, bucket)""".stripMargin
+
+  /** [[classifierCtes]] plus `scored` (doc_id, score). */
+  private def classifierScoredCtes: String =
+    s"""$classifierCtes,
+       |scored AS (
+       |  SELECT c.doc_id, CAST(SUM(c.cnt * wt.weight) AS BIGINT) AS score
+       |  FROM counts c JOIN weights wt ON wt.bucket = c.bucket
+       |  GROUP BY c.doc_id)""".stripMargin
+
+  val classifierScoresSql: String =
+    s"""WITH $classifierCtes
        |SELECT c.doc_id, CAST(SUM(c.cnt * wt.weight) AS BIGINT) AS score,
        |  CAST(CASE WHEN SUM(c.cnt * wt.weight) >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
        |FROM counts c JOIN weights wt ON wt.bucket = c.bucket
@@ -1004,24 +963,7 @@ object TextAnalysis {
       .orderBy("doc_id")
 
   val weightedSampleSql: String =
-    s"""WITH weights AS (
-       |  SELECT bucket,
-       |    ('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 6))::BIGINT
-       |      % ${2 * WeightRange + 1} - $WeightRange AS weight
-       |  FROM (SELECT unnest(generate_series(0, ${ClassifierBuckets - 1})) AS bucket)),
-       |toks AS (
-       |  SELECT doc_id, w
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0),
-       |counts AS (
-       |  SELECT doc_id,
-       |    ('0x' || substr(md5(w), 1, 6))::BIGINT % $ClassifierBuckets AS bucket,
-       |    COUNT(*) AS cnt
-       |  FROM toks GROUP BY doc_id, bucket),
-       |scored AS (
-       |  SELECT c.doc_id, CAST(SUM(c.cnt * wt.weight) AS BIGINT) AS score
-       |  FROM counts c JOIN weights wt ON wt.bucket = c.bucket
-       |  GROUP BY c.doc_id),
+    s"""WITH $classifierScoredCtes,
        |coin AS (
        |  SELECT doc_id, score,
        |    greatest(0, least(10000,
@@ -1113,24 +1055,7 @@ object TextAnalysis {
   }
 
   val curriculumBucketsSql: String =
-    s"""WITH weights AS (
-       |  SELECT bucket,
-       |    ('0x' || substr(md5('w' || CAST(bucket AS VARCHAR)), 1, 6))::BIGINT
-       |      % ${2 * WeightRange + 1} - $WeightRange AS weight
-       |  FROM (SELECT unnest(generate_series(0, ${ClassifierBuckets - 1})) AS bucket)),
-       |toks AS (
-       |  SELECT doc_id, w
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0),
-       |counts AS (
-       |  SELECT doc_id,
-       |    ('0x' || substr(md5(w), 1, 6))::BIGINT % $ClassifierBuckets AS bucket,
-       |    COUNT(*) AS cnt
-       |  FROM toks GROUP BY doc_id, bucket),
-       |scored AS (
-       |  SELECT c.doc_id, CAST(SUM(c.cnt * wt.weight) AS BIGINT) AS score
-       |  FROM counts c JOIN weights wt ON wt.bucket = c.bucket
-       |  GROUP BY c.doc_id),
+    s"""WITH $classifierScoredCtes,
        |n AS (SELECT COUNT(*) AS c FROM scored),
        |ranked AS (
        |  SELECT score, ROW_NUMBER() OVER (ORDER BY score, doc_id) AS rn
@@ -1148,12 +1073,6 @@ object TextAnalysis {
        |FROM scored s JOIN documents d ON d.doc_id = s.doc_id CROSS JOIN t
        |GROUP BY stage, d.source
        |ORDER BY stage, d.source""".stripMargin
-
-  /** One row per token occurrence (empty tokens from repeated spaces
-    * dropped — mirrored by the oracle's length filter). */
-  private def toksAll(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
 
   // ------------------------------------------------------- BM25 retrieval
   /** Query-term count, discovery order: rarest first (df asc, token asc)
@@ -1226,7 +1145,7 @@ object TextAnalysis {
     * different query than the ranking ran (production: user-supplied
     * terms — this pass wouldn't exist). */
   private[graft] def bm25QueryTerms(docs: DataFrame): Seq[(String, Long)] =
-    toksAll(docs).select("doc_id", "token").distinct()
+    Text.words(docs, "token", "doc_id").select("doc_id", "token").distinct()
       .groupBy("token").agg(count(lit(1)).as("df"))
       .orderBy(col("df"), col("token")).limit(BmQTerms)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -1244,14 +1163,12 @@ object TextAnalysis {
     * most expensive part of the whole family. */
   private[graft] def bm25ScoredDocs(docs: DataFrame,
                                     qterms: Seq[(String, Long)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     if (qterms.isEmpty)
       // empty-corpus discovery ⇒ nothing can score (the old inner join
       // against an empty tf side returned the same zero rows)
       return docs.select(col("doc_id")).limit(0)
         .select(col("doc_id"), lit(0L).as("score_e6"), lit(0L).as("n_terms"))
-    val t = toksAll(docs)
+    val t = Text.words(docs, "token", "doc_id")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     // ONE corpus pass for lengths AND query-term tfs (r16, guide §2.4):
     // the old shape exploded the corpus twice — once for the per-doc
@@ -1318,7 +1235,7 @@ object TextAnalysis {
     * Also defines `td`/`q` for the relevance rule below. */
   private val bmScoredCtesSql: String =
     s"""tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+       |  SELECT doc_id, unnest(${Text.duckTokens}) AS token FROM documents),
        |t2 AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
        |td AS (SELECT DISTINCT doc_id, token FROM t2),
        |d AS (SELECT token, COUNT(*) AS df FROM td GROUP BY token),
@@ -1391,10 +1308,7 @@ object TextAnalysis {
     * aggregate. rp ≤ 1e6 by target ⊆ corpus, so sums stay far from
     * Long range at any doc length. */
   def dsirAffinity(docs: DataFrame): DataFrame = {
-    val db = docs
-      .select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
+    val db = Text.words(docs, "w", "doc_id", "source")
       .withColumn("bkt",
         expr(s"cast(conv(substr(md5(w), 1, 6), 16, 10) as bigint) % $DsirBuckets"))
       .groupBy("doc_id", "source", "bkt").agg(count(lit(1)).as("cnt"))
@@ -1421,7 +1335,7 @@ object TextAnalysis {
 
   val dsirAffinitySql: String =
     s"""WITH tok AS (
-       |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS w FROM documents),
+       |  SELECT doc_id, source, unnest(${Text.duckTokens}) AS w FROM documents),
        |t2 AS (SELECT doc_id, source, w FROM tok WHERE length(w) > 0),
        |db AS (SELECT doc_id, source,
        |         ('0x' || substr(md5(w), 1, 6))::BIGINT % $DsirBuckets AS bkt,
@@ -1531,7 +1445,7 @@ object TextAnalysis {
     val cumW = bySrc.orderBy("nt", "doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val t = docs.select(col("source"), col("doc_id"),
-        expr("size(split(text, ' '))").cast("long").as("nt"))
+        size(Text.tokens).cast("long").as("nt"))
       .withColumn("cum", sum("nt").over(cumW))
       .withColumn("total", sum("nt").over(bySrc))
       .withColumn("n_docs", count(lit(1)).over(bySrc))
@@ -1547,8 +1461,8 @@ object TextAnalysis {
   }
 
   val weightedMedianLengthSql: String =
-    """WITH t AS (
-      |  SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
+    s"""WITH t AS (
+      |  SELECT source, doc_id, CAST(len(${Text.duckTokens}) AS BIGINT) AS nt
       |  FROM documents),
       |w AS (
       |  SELECT source, doc_id, nt,
@@ -1903,9 +1817,7 @@ object TextAnalysis {
   val LiftE6Bound = 9223372036854L
 
   def cooccurrenceLift(docs: DataFrame): DataFrame = {
-    val dt = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
+    val dt = Text.words(docs, "w", "doc_id")
       .distinct()
     val total = dt.select(countDistinct(col("doc_id")).as("n_docs"))
     val df0 = dt.groupBy("w").agg(count(lit(1)).as("df"))
@@ -1934,7 +1846,7 @@ object TextAnalysis {
   val cooccurrenceLiftSql: String =
     s"""WITH dt AS (
        |  SELECT DISTINCT doc_id, w FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+       |    SELECT doc_id, unnest(${Text.duckTokens}) AS w FROM documents)
        |  WHERE length(w) > 0),
        |total AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM dt),
        |df0 AS (SELECT w, COUNT(*) AS df FROM dt GROUP BY w),
@@ -1987,7 +1899,7 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     val qdf = qterms.toDF("token", "df").select("token")
-    toksAll(docs).select("doc_id", "token").distinct()
+    Text.words(docs, "token", "doc_id").select("doc_id", "token").distinct()
       .join(broadcast(qdf), "token")
       .groupBy("doc_id").agg(count(lit(1)).as("n_match"))
       .filter(col("n_match") >= RelMinTerms)
@@ -1995,8 +1907,6 @@ object TextAnalysis {
   }
 
   def retrievalEval(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // ONE term-discovery pass feeds both the ranking and the labels
     val qterms = bm25QueryTerms(docs)
     val rel = relevantDocs(docs, qterms).select(col("doc_id"), lit(1L).as("rel"))
@@ -2166,8 +2076,8 @@ object TextAnalysis {
     * arithmetic. Nothing corpus-sized self-joins. */
   def phraseSearch(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-    val tri = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
+      posexplode(Text.tokens).as(Seq("pos", "w")))
+    val tri = docs.select(col("doc_id"), Text.tokens.as("t"))
       .filter(size(col("t")) >= 3)
       .select(explode(expr(
         """transform(sequence(0, size(t) - 3),
@@ -2213,15 +2123,15 @@ object TextAnalysis {
   val phraseSearchSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, i - 1 AS pos, t[i] AS w
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS t,
-       |               unnest(generate_series(1, len(string_split(text, ' ')))) AS i
+       |  FROM (SELECT doc_id, ${Text.duckTokens} AS t,
+       |               unnest(generate_series(1, len(${Text.duckTokens}))) AS i
        |        FROM documents)),
        |tri AS (
        |  SELECT t[i] AS w1, t[i + 1] AS w2, t[i + 2] AS w3, COUNT(*) AS n
-       |  FROM (SELECT string_split(text, ' ') AS t,
-       |               unnest(generate_series(1, len(string_split(text, ' ')) - 2)) AS i
+       |  FROM (SELECT ${Text.duckTokens} AS t,
+       |               unnest(generate_series(1, len(${Text.duckTokens}) - 2)) AS i
        |        FROM documents
-       |        WHERE len(string_split(text, ' ')) >= 3)
+       |        WHERE len(${Text.duckTokens}) >= 3)
        |  GROUP BY 1, 2, 3
        |  ORDER BY n DESC, w1, w2, w3 LIMIT $PhraseTopK),
        |phrases AS (
@@ -2263,9 +2173,7 @@ object TextAnalysis {
     // probe side; lazily checkpoint it (q188/q225 pattern) so the
     // corpus token explode runs once — what both consumers re-read is
     // the vocab-sized relation
-    val bySrc = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("token"))
-      .filter(length(col("token")) > 0)
+    val bySrc = Text.words(docs, "token", "source")
       .groupBy("source", "token").agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
     val topV = bySrc.groupBy("token").agg(sum(col("n")).as("tn"))
@@ -2281,7 +2189,7 @@ object TextAnalysis {
 
   val oovRateSql: String =
     s"""WITH t AS (
-       |  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
+       |  SELECT source, unnest(${Text.duckTokens}) AS token FROM documents),
        |bysrc AS (
        |  SELECT source, token, COUNT(*) AS n FROM t
        |  WHERE length(token) > 0 GROUP BY 1, 2),
@@ -2318,9 +2226,7 @@ object TextAnalysis {
     * strictly above total/K preserves every possible top-K member
     * and caps the ranked relation). */
   def headMass(docs: DataFrame): DataFrame = {
-    val counts = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("t"))
-      .filter(length(col("t")) > 0)
+    val counts = Text.words(docs, "t", "source")
       .groupBy("source", "t").agg(count(lit(1)).as("c"))
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy(col("c").desc, col("t"))
@@ -2339,7 +2245,7 @@ object TextAnalysis {
       s"CAST((1000000 * SUM(CASE WHEN rk <= $k THEN c ELSE 0 END)) // SUM(c) AS BIGINT) AS top${k}_ppm")
       .mkString(",\n       |  ")
     s"""WITH tok AS (
-       |  SELECT source, unnest(string_split(text, ' ')) AS t FROM documents),
+       |  SELECT source, unnest(${Text.duckTokens}) AS t FROM documents),
        |counts AS (SELECT source, t, COUNT(*) AS c FROM tok
        |           WHERE length(t) > 0 GROUP BY source, t),
        |ranked AS (SELECT source, c,

@@ -51,7 +51,7 @@ object Partitioned {
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
            sum(col("n_chars")).as("sum_chars"),
-           sum(expr("size(split(text, ' '))")).as("sum_tokens"))
+           sum(size(graft.ext.Text.tokens)).as("sum_tokens"))
       .orderBy("source", "lang")
   }
 
@@ -59,7 +59,7 @@ object Partitioned {
     val keep = KeepSources.map(s => s"'$s'").mkString(", ")
     s"""SELECT source, lang, COUNT(*) AS n_docs,
        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       |  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens
+       |  CAST(SUM(len(${graft.ext.Text.duckTokens})) AS BIGINT) AS sum_tokens
        |FROM documents
        |WHERE source IN ($keep)
        |GROUP BY source, lang

@@ -43,7 +43,7 @@ object TokenIndex {
 
   /** Distinct (doc_id, gram) word-trigram pairs — q57's gram stream. */
   private def grams(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+    docs.select(col("doc_id"), graft.ext.Text.tokens.as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(toks) - 3), " +
@@ -145,7 +145,7 @@ object TokenIndex {
   }
 
   val probedLookupSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${graft.ext.Text.duckTokens} AS toks FROM documents),
        |g AS (SELECT DISTINCT doc_id,
        |        unnest(list_transform(generate_series(1, len(toks) - 2),
        |          i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])) AS gram

@@ -107,22 +107,13 @@ object EventsStreaming {
     * windows in append mode: a day's registers emit once the watermark
     * passes its end. Same md5-chunk hash as the batch sketch, so the
     * q118 arithmetic applies verbatim at read time. */
-  def dailyHllRegisters(events: DataFrame): DataFrame = {
-    import graft.ext.Sketches.{Registers, RhoCap}
-    events
-      .withWatermark("ts", "30 minutes")
-      .withColumn("hx", md5(col("user_id").cast("string")))
-      .withColumn("reg",
-        expr(s"cast(conv(substr(hx, 1, 6), 16, 10) as bigint) % $Registers"))
-      .withColumn("v", expr("cast(conv(substr(hx, 7, 6), 16, 10) as bigint)"))
-      .withColumn("rho", expr(
-        s"CASE WHEN v = 0 THEN $RhoCap " +
-        s"ELSE CAST(round(log2(v & -v)) AS INT) + 1 END"))
+  def dailyHllRegisters(events: DataFrame): DataFrame =
+    graft.ext.Sketches.withRho(events.withWatermark("ts", "30 minutes"),
+        col("user_id").cast("string"))
       .groupBy(window(col("ts"), "1 day"), col("reg"))
       .agg(max(col("rho")).as("m"))
       .select(unix_micros(col("window.start")).as("day_us"),
         col("reg"), col("m"))
-  }
 
   /** q145 sketch dimensions: depth x width counters = the ENTIRE state
     * footprint (256 rows), however many events or distinct users the

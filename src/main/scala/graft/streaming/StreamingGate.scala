@@ -295,35 +295,16 @@ object StreamingGate {
   }
 
   val q122Sql: String = {
-    import graft.ext.Sketches.{Registers, RhoCap, AlphaPermille, LnScale, LnTable}
+    import graft.ext.Sketches.{duckRegs, duckEstimate}
     s"""WITH e AS (
        |  SELECT epoch_us(date_trunc('day', ts)) AS day_us,
        |         md5(CAST(user_id AS VARCHAR)) AS hx
        |  FROM events),
-       |rho AS (
-       |  SELECT day_us,
-       |    ('0x' || substr(hx, 1, 6))::BIGINT % $Registers AS reg,
-       |    ('0x' || substr(hx, 7, 6))::BIGINT AS v
-       |  FROM e),
-       |regs AS (
-       |  SELECT day_us, reg,
-       |    MAX(CASE WHEN v = 0 THEN $RhoCap
-       |        ELSE CAST(round(log2(v & -v)) AS INT) + 1 END) AS m
-       |  FROM rho GROUP BY day_us, reg),
-       |raw AS (
-       |  SELECT day_us, COUNT(*) AS regs_hit,
-       |    (($AlphaPermille * $Registers * $Registers) * (CAST(1 AS BIGINT) << $RhoCap))
-       |      // (1000 * (SUM(CAST(1 AS BIGINT) << ($RhoCap - m))
-       |                  + ($Registers - COUNT(*)) * (CAST(1 AS BIGINT) << $RhoCap)))
-       |      AS raw_est
-       |  FROM regs GROUP BY day_us)
+       |${duckRegs("day_us", "e")},
+       |${duckEstimate("day_us", "regs", "est_users")}
        |SELECT day_us, CAST(regs_hit AS BIGINT) AS regs_hit,
-       |  CAST(CASE WHEN raw_est <= 5 * $Registers // 2 AND regs_hit < $Registers
-       |    THEN ($Registers * list_extract(${LnTable.mkString("[", ", ", "]")},
-       |                                    $Registers - regs_hit))
-       |         // (CAST(1 AS BIGINT) << $LnScale)
-       |    ELSE raw_est END AS BIGINT) AS est_users
-       |FROM raw
+       |  CAST(est_users AS BIGINT) AS est_users
+       |FROM ests
        |ORDER BY day_us""".stripMargin
   }
 
@@ -1458,7 +1439,7 @@ object StreamingGate {
     val schema = docsAll.schema
     val name = s"graft_stream_gate_${runCounter.incrementAndGet()}"
     val ckpt = graft.TempDirs.create("graft-stream-ckpt")
-    withGateConfs(spark) {
+    try withGateConfs(spark) {
       val docs = spark.readStream.schema(schema)
         .option("latestFirst", false)
         .option("maxFilesPerTrigger", 1)
@@ -1491,7 +1472,7 @@ object StreamingGate {
         .start()
       q.awaitTermination()
       lastRunProgress.set(q.recentProgress.toSeq)
-    }
+    } finally graft.TempDirs.deleteTree(ckpt)
 
     // base verdicts: the SAME register arithmetic relationally — the
     // prefix-min window over each bucket in id (= arrival) order; a
@@ -1514,23 +1495,9 @@ object StreamingGate {
 
   /** Arrival order = id order, so "earliest prior bucket-mate" is pure
     * batch SQL: the min smaller doc_id sharing any LSH band. */
-  val q126Sql: String = {
-    import graft.ext.Dedup.{NumHashes, NumBands, BandRows, coefA, coefB, P}
-    val sigCols = (0 until NumHashes).map { i =>
-      s"list_min(list_transform(hs, h -> " +
-        s"(${coefA(i)} * h + ${coefB(i)}) % $P)) AS h$i"
-    }
-    val bandSelects = (0 until NumBands).map { b =>
-      val key = (0 until BandRows).map(r => s"CAST(h${b * BandRows + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, $b AS band, $key AS band_key FROM sig"
-    }
-    s"""WITH hashed AS (
-       |  SELECT doc_id, list_transform(${graft.ext.Dedup.duckShingles},
-       |    s -> ${graft.ext.Dedup.duckH("s")}) AS hs
-       |  FROM documents),
-       |sig AS (SELECT doc_id, ${sigCols.mkString(", ")} FROM hashed),
-       |bands AS (${bandSelects.mkString(" UNION ALL ")}),
+  val q126Sql: String =
+    s"""WITH ${graft.ext.Dedup.duckSigCtes("documents")},
+       |${graft.ext.Dedup.duckBandsCte()},
        |earlier AS (
        |  SELECT a.doc_id, MIN(b.doc_id) AS first_partner
        |  FROM bands a JOIN bands b
@@ -1540,7 +1507,6 @@ object StreamingGate {
        |SELECT d.doc_id, e.first_partner IS NOT NULL AS is_dup, e.first_partner
        |FROM documents d LEFT JOIN earlier e ON e.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   /** q93: STREAM-STATIC join through the micro-batch engine — every
     * event enriched with the customer dimension's market segment. What

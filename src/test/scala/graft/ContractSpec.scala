@@ -5,6 +5,20 @@ import scala.jdk.CollectionConverters._
 /** Driver-contract guards: wiring mistakes here would zero a round. */
 class ContractSpec extends SparkSpec {
 
+  /** Every .scala file under `root` but this one (which names the
+    * strings the source cases ban), with its text. */
+  private def sources(root: String): Seq[(java.nio.file.Path, String)] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try it.iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "ContractSpec.scala")
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    finally it.close()
+  }
+
+  private def count(files: Seq[(java.nio.file.Path, String)], s: String): Int =
+    files.map { case (_, text) => text.sliding(s.length).count(_ == s) }.sum
+
   test("every oracle key has a query; no orphans") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
@@ -74,16 +88,6 @@ class ContractSpec extends SparkSpec {
   }
 
   test("int8 quantization has one Spark and one oracle definition; the pruned dot is gone") {
-    def sources(root: String): Seq[(java.nio.file.Path, String)] = {
-      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try it.iterator().asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "ContractSpec.scala")
-        .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      finally it.close()
-    }
-    def count(files: Seq[(java.nio.file.Path, String)], s: String): Int =
-      files.map { case (_, text) => text.sliding(s.length).count(_ == s) }.sum
     val main = sources("src/main")
     assert(count(main, "greatest(mx, 1e-30d)") == 1,
       "quantize through Similarity.quantized")
@@ -94,5 +98,17 @@ class ContractSpec extends SparkSpec {
       val hits = all.collect { case (p, text) if text.contains(s) => p }
       assert(hits.isEmpty, s"$s is deleted but named in $hits")
     }
+  }
+
+  test("the text family spells its tokenizer, normalizer and sketch oracles once") {
+    val main = sources("src/main")
+    val outsideText = main.filter(_._1.getFileName.toString != "Text.scala")
+    // "split(text, ' ')" also matches the oracle's string_split(text, ' ')
+    Seq("split(col(\"text\"), \" \")", "split(text, ' ')",
+        "regexp_replace(lower(", "Seq(\" the \", \" a \", \" of \", \" and \"").foreach { s =>
+      assert(count(outsideText, s) == 0, s"$s: use graft.ext.Text")
+    }
+    Seq("MAX(CASE WHEN v = 0 THEN", "reach(src, dst)", "list_min(list_transform(hs")
+      .foreach(s => assert(count(main, s) == 1, s"$s must have one oracle builder"))
   }
 }

@@ -130,6 +130,15 @@ class CurationSpec extends SparkSpec {
     assert(am(Seq("p", "q"), ("z", "z")) == Seq("p", "q"))
   }
 
+  test("q113 bpeEncode: a null-text doc has no row, every other row is unchanged") {
+    val base = Seq((1L, "a b a b c"), (2L, "a b c d"), (3L, "c d c d a b"))
+    val plain = Curation.bpeEncode(base.toDF("doc_id", "text")).collect().toSeq
+    val withNull = (base :+ ((4L, null: String))).toDF("doc_id", "text")
+    val got = Curation.bpeEncode(withNull).collect().toSeq
+    assert(plain.map(_.getLong(0)) == Seq(1L, 2L, 3L))
+    assert(got == plain)
+  }
+
   test("q113/q114: fixture invariants — compression, partition-invariance, span conservation") {
     val docs = Tables.documents(spark, sf)
     val enc = Curation.bpeEncode(docs)

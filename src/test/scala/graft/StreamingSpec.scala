@@ -61,9 +61,15 @@ class StreamingSpec extends SparkSpec {
       try it.iterator().asScala.count(_.getFileName.toString.startsWith("graft-stream-ckpt"))
       finally it.close()
     }
-    val before = ckpts()
-    (1 to 2).foreach(_ => graft.streaming.StreamingGate.q40StreamTumbling(spark, sf).collect())
-    assert(ckpts() == before, "every q40 run must delete its checkpoint tree")
+    val gates = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "q40" -> graft.streaming.StreamingGate.q40StreamTumbling,
+      "q126" -> graft.streaming.StreamingGate.q126StreamNearDup)
+    gates.foreach { case (name, gate) =>
+      val before = ckpts()
+      (1 to 2).foreach(_ => gate(spark, sf).collect())
+      assert(ckpts() == before, s"every $name run must delete its checkpoint tree")
+    }
   }
 
   test("q41 gate: APPEND-mode session windows equal batch q12 exactly") {
