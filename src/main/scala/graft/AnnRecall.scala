@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
+import Measure.{Fixed, obj, timed}
 
 /** ANN recall artifact (round-8 VERDICT item 2): the approximate kernels
   * are oracle-gated as EXACT because their parameters are pinned, but
@@ -131,17 +132,10 @@ object AnnRecall {
     df.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Harness.session(s"local[$cpus]", "graft-ann-recall", cpus.toInt)
+    val spark = Measure.session("graft-ann-recall")
 
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
@@ -169,35 +163,26 @@ object AnnRecall {
     // near-uniform vectors make the hold point (first np with recall >=
     // HoldTarget) land high, and the curve should SHOW that, not stop
     // at 8 and leave the base hold undefined
-    for (np <- Seq(1, 2, 4, 8, 16, 32, nCells).distinct.sorted.filter(_ <= nCells)) {
-      val (got, sec) = timed(topkSets(Similarity.ivfTopK(emb, np)))
-      rows += Row("q18_ivf_topk", "nprobe", np, meanRecall(ivfTruth, got),
-        sec, np == Similarity.IvfNProbe)
+    /** One row per knob value; `sec` times the operator and its recall. */
+    def sweep(op: String, knob: String, values: Seq[Int], gated: Int)(
+        recallAt: Int => Double): Unit = values.foreach { v =>
+      val (recall, sec) = timed(recallAt(v))
+      rows += Row(op, knob, v, recall, sec, v == gated)
     }
-    for (np <- Seq(1, 2, 4, 8, 16, 32, nCells).distinct.sorted.filter(_ <= nCells)) {
-      val (got, sec) = timed(topkSets(Similarity.quantizedIvfTopK(emb, np)))
-      rows += Row("q80_quantized_ivf", "nprobe", np, meanRecall(qTruth, got),
-        sec, np == Similarity.IvfNProbe)
-    }
-    for (bits <- Seq(2, 3, 4, 6)) {
-      val (got, sec) = timed(pairSet(Similarity.signLshNearDups(emb, bits)))
-      rows += Row("q31_signlsh", "bits", bits,
-        (got & pairTruth).size.toDouble / pairTruth.size, sec,
-        bits == Similarity.LshBits)
-    }
-    for (bb <- Seq(1, 2, 3)) {
-      val (got, sec) = timed(pairSet(Similarity.signLshMultiBand(emb, bb)))
-      rows += Row("q42_signlsh_multiband", "band_bits", bb,
-        (got & pairTruth).size.toDouble / pairTruth.size, sec,
-        bb == Similarity.LshBits)
-    }
+    def pairRecall(df: DataFrame) = (pairSet(df) & pairTruth).size.toDouble / pairTruth.size
+    val probes = Seq(1, 2, 4, 8, 16, 32, nCells).distinct.sorted.filter(_ <= nCells)
+    sweep("q18_ivf_topk", "nprobe", probes, Similarity.IvfNProbe)(np =>
+      meanRecall(ivfTruth, topkSets(Similarity.ivfTopK(emb, np))))
+    sweep("q80_quantized_ivf", "nprobe", probes, Similarity.IvfNProbe)(np =>
+      meanRecall(qTruth, topkSets(Similarity.quantizedIvfTopK(emb, np))))
+    sweep("q31_signlsh", "bits", Seq(2, 3, 4, 6), Similarity.LshBits)(bits =>
+      pairRecall(Similarity.signLshNearDups(emb, bits)))
+    sweep("q42_signlsh_multiband", "band_bits", Seq(1, 2, 3), Similarity.LshBits)(bb =>
+      pairRecall(Similarity.signLshMultiBand(emb, bb)))
     // q125 PQ: recall is bought by re-rank depth; truth is the exact
     // int8 ranking (q69) — same isolation argument as q80's sweep
-    for (c <- (Seq(8, 16, 32, 64) :+ n.toInt).distinct.sorted) {
-      val (got, sec) = timed(topkSets(Similarity.pqTopK(emb, c)))
-      rows += Row("q125_pq_topk", "rerank", c, meanRecall(qTruth, got),
-        sec, c == Similarity.PqRerank)
-    }
+    sweep("q125_pq_topk", "rerank", (Seq(8, 16, 32, 64) :+ n.toInt).distinct.sorted,
+      Similarity.PqRerank)(c => meanRecall(qTruth, topkSets(Similarity.pqTopK(emb, c))))
 
     // ---- invariants the sweep itself must satisfy ----
     def series(op: String): Seq[Row] = rows.filter(_.op == op).toSeq
@@ -276,33 +261,25 @@ object AnnRecall {
       val embD = Tables.embeddings(spark, dir)
       val nD = embD.count()
       val cmod = Similarity.CentroidMod.toLong * stride
-      val (truthD, tTr) = timed(topkSets(
-        Similarity.cosineTopK(embD).filter(col("rank") <= Similarity.IvfTopK)))
-      val (got18, t18) = timed(topkSets(
-        Similarity.ivfTopK(embD, Similarity.IvfNProbe, centroidMod = cmod)))
-      decadeRows += DecadeRow(tag, "q18_ivf_topk", nD,
-        meanRecall(truthD, got18), t18, tTr, IvfDecadeFloor)
-      val (qTruthD, tQt) = timed(topkSets(Similarity.quantizedTopK(embD)))
-      // probeByDot = false: these decade rows RECORD the legacy
-      // fixed-k d²-probed config (their floors were measured under it);
-      // the promoted production config is the density series below
-      val (got80, t80) = timed(topkSets(
-        Similarity.quantizedIvfTopK(embD, Similarity.IvfNProbe,
-          centroidMod = cmod, probeByDot = false)))
-      decadeRows += DecadeRow(tag, "q80_quantized_ivf", nD,
-        meanRecall(qTruthD, got80), t80, tQt, QIvfDecadeFloor)
-
-      // knob curve at this density: the already-measured gated point
-      // (the decade row above) is seeded instead of re-executed
-      holdSweep(tag, "q18_ivf_topk", truthD,
-        Map(Similarity.IvfNProbe -> (meanRecall(truthD, got18), t18)),
-        nCells, gated = true,
-        np => Similarity.ivfTopK(embD, np, centroidMod = cmod))
-      holdSweep(tag, "q80_quantized_ivf", qTruthD,
-        Map(Similarity.IvfNProbe -> (meanRecall(qTruthD, got80), t80)),
-        nCells, gated = true,
-        np => Similarity.quantizedIvfTopK(embD, np, centroidMod = cmod,
-          probeByDot = false))
+      // probeByDot = false: q80's decade rows RECORD the legacy fixed-k
+      // d²-probed config (their floors were measured under it); the
+      // promoted production config is the density series below
+      for ((op, truth, floor, run) <- Seq[(String, () => DataFrame, Double, Int => DataFrame)](
+          ("q18_ivf_topk", () => Similarity.cosineTopK(embD)
+            .filter(col("rank") <= Similarity.IvfTopK), IvfDecadeFloor,
+            np => Similarity.ivfTopK(embD, np, centroidMod = cmod)),
+          ("q80_quantized_ivf", () => Similarity.quantizedTopK(embD), QIvfDecadeFloor,
+            np => Similarity.quantizedIvfTopK(embD, np, centroidMod = cmod,
+              probeByDot = false)))) {
+        val (truthD, tTruth) = timed(topkSets(truth()))
+        val (got, sec) = timed(topkSets(run(Similarity.IvfNProbe)))
+        val recall = meanRecall(truthD, got)
+        decadeRows += DecadeRow(tag, op, nD, recall, sec, tTruth, floor)
+        // knob curve at this density: the already-measured gated point
+        // (the decade row) is seeded instead of re-executed
+        holdSweep(tag, op, truthD, Map(Similarity.IvfNProbe -> (recall, sec)),
+          nCells, gated = true, run)
+      }
     }
     val decadeMisses = decadeRows.filter(r => r.recall < r.floor)
 
@@ -454,36 +431,29 @@ object AnnRecall {
     } yield (base, top)
 
     // ---- artifacts ----
-    val decadeJson = decadeRows.map { r =>
-      s"""{"decade":"${r.decade}","op":"${r.op}","n_vectors":${r.nVec},""" +
-      s""""recall":${f"${r.recall}%.4f"},"sec":${f"${r.sec}%.2f"},""" +
-      s""""truth_sec":${f"${r.truthSec}%.2f"},"floor":${r.floor}}"""
-    }.mkString("[", ",", "]")
-    def holdJson(hs: Seq[HoldPoint]) = hs.map { h =>
-      s"""{"decade":"${h.decade}","op":"${h.op}","nprobe":${h.nprobe},""" +
-      s""""recall":${f"${h.recall}%.4f"},"sec":${f"${h.sec}%.2f"},""" +
-      s""""gated":${h.gated}}"""
-    }.mkString("[", ",", "]")
-    val json = rows.map { r =>
-      s"""{"op":"${r.op}","${r.knob}":${r.value},"recall":${f"${r.recall}%.4f"},""" +
-      s""""sec":${f"${r.sec}%.2f"},"gated":${r.gated}}"""
-    }.mkString(
-      s"""{"sf":"$sfDir","n_vectors":$n,"n_cells":$nCells,""" +
-      s""""n_queries":${ivfTruth.size},"n_true_pairs":${pairTruth.size},""" +
-      s""""truth_sec":{"topk":${f"$tExactTopk%.2f"},"quantized":${f"$tExactQTopk%.2f"},""" +
-      s""""pairs":${f"$tExactPairs%.2f"}},"decades":$decadeJson,""" +
-      s""""hold_target":$HoldTarget,"nprobe_hold_ceil":$NprobeHoldCeil,""" +
-      s""""density_series":${seriesMeta.map { m =>
-        s"""{"tag":"${m.tag}","n_vectors":${m.nVec},"n_queries":${m.nQueries},""" +
-        s""""truth_sec":${f"${m.truthSec}%.2f"},"fixed_cells":${m.fixedCells},""" +
-        s""""scaled_cells":${m.scaledCells},"pert_div":${m.pertDiv},""" +
-        s""""query_mod":${m.qmod}}"""
-      }.mkString("[", ",", "]")},""" +
-      s""""nprobe_to_hold":${holdJson(holdRows.toSeq)},""" +
-      s""""hold_curve":${holdJson(holdCurve.toSeq)},"rows":[""",
-      ",", "]}\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get("ann_recall.json"),
-      json.getBytes("UTF-8"))
+    def holdJson(hs: Seq[HoldPoint]) = hs.map(h => obj("decade" -> h.decade,
+      "op" -> h.op, "nprobe" -> h.nprobe, "recall" -> Fixed(h.recall, 4),
+      "sec" -> Fixed(h.sec, 2), "gated" -> h.gated))
+    val json = Measure.artifact("ann_recall.json", obj(
+      "sf" -> sfDir, "n_vectors" -> n, "n_cells" -> nCells,
+      "n_queries" -> ivfTruth.size, "n_true_pairs" -> pairTruth.size,
+      "truth_sec" -> obj("topk" -> Fixed(tExactTopk, 2),
+        "quantized" -> Fixed(tExactQTopk, 2), "pairs" -> Fixed(tExactPairs, 2)),
+      "decades" -> decadeRows.map(r => obj("decade" -> r.decade, "op" -> r.op,
+        "n_vectors" -> r.nVec, "recall" -> Fixed(r.recall, 4),
+        "sec" -> Fixed(r.sec, 2), "truth_sec" -> Fixed(r.truthSec, 2),
+        "floor" -> r.floor)),
+      "hold_target" -> HoldTarget, "nprobe_hold_ceil" -> NprobeHoldCeil,
+      "density_series" -> seriesMeta.map(m => obj("tag" -> m.tag,
+        "n_vectors" -> m.nVec, "n_queries" -> m.nQueries,
+        "truth_sec" -> Fixed(m.truthSec, 2), "fixed_cells" -> m.fixedCells,
+        "scaled_cells" -> m.scaledCells, "pert_div" -> m.pertDiv,
+        "query_mod" -> m.qmod)),
+      "nprobe_to_hold" -> holdJson(holdRows.toSeq),
+      "hold_curve" -> holdJson(holdCurve.toSeq),
+      "rows" -> rows.map(r => obj("op" -> r.op, r.knob -> r.value,
+        "recall" -> Fixed(r.recall, 4), "sec" -> Fixed(r.sec, 2),
+        "gated" -> r.gated))))
 
     val md = new StringBuilder
     md ++= s"# ANN recall vs brute-force truth\n\n"
@@ -612,25 +582,19 @@ object AnnRecall {
     md ++= "back, q42's pair set being a structural superset of q31's at\n"
     md ++= s"band_bits = ${Similarity.LshBits}. At 100 TB the knobs move the same way; only the\n"
     md ++= "bucket-occupancy curve shifts (size bits ~ log2(n / target bucket)).\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get("ANN_RECALL.md"),
-      md.toString.getBytes("UTF-8"))
+    Measure.write("ANN_RECALL.md", md.toString)
     println(json)
 
     spark.stop()
-    if (gatedMisses.nonEmpty || decadeMisses.nonEmpty || holdMisses.nonEmpty ||
-        densityInversion.nonEmpty) {
-      densityInversion.foreach { case (base, top) => System.err.println(
-        s"[ann-recall] DENSITY INVERSION: x1000d scaled hold $top > x1 base " +
-          s"$base — density RAISED the knob") }
-      gatedMisses.foreach(r => System.err.println(
-        f"[ann-recall] GATED MISS ${r.op} ${r.knob}=${r.value}: " +
-        f"${r.recall}%.4f < ${floors(r.op)}%.2f"))
-      decadeMisses.foreach(r => System.err.println(
-        f"[ann-recall] DECADE MISS ${r.decade} ${r.op}: " +
-        f"${r.recall}%.4f < ${r.floor}%.2f"))
-      holdMisses.foreach(h => System.err.println(
-        f"[ann-recall] HOLD MISS ${h.decade} ${h.op}: nprobe_to_hold=" +
-        f"${h.nprobe} exceeds ceil $NprobeHoldCeil (or never holds ${HoldTarget}%.2f)"))
+    val misses = densityInversion.toSeq.map { case (base, top) => s"DENSITY INVERSION: " +
+        s"x1000d scaled hold $top > x1 base $base — density RAISED the knob" } ++
+      gatedMisses.map(r => f"GATED MISS ${r.op} ${r.knob}=${r.value}: " +
+        f"${r.recall}%.4f < ${floors(r.op)}%.2f") ++
+      decadeMisses.map(r => f"DECADE MISS ${r.decade} ${r.op}: ${r.recall}%.4f < ${r.floor}%.2f") ++
+      holdMisses.map(h => f"HOLD MISS ${h.decade} ${h.op}: nprobe_to_hold=" +
+        f"${h.nprobe} exceeds ceil $NprobeHoldCeil (or never holds ${HoldTarget}%.2f)")
+    if (misses.nonEmpty) {
+      misses.foreach(m => System.err.println(s"[ann-recall] $m"))
       sys.exit(1)
     }
   }

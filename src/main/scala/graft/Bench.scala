@@ -1,28 +1,19 @@
 package graft
 
+import Measure.{Fixed, Obj, obj}
+
 /** Benchmark main (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line.
   *
   * Methodology: each query is fully materialized with a noop-format write
-  * (count() would let Catalyst prune the projections being measured). One
-  * untimed warmup query heats the session (codegen cache, parquet footer
-  * cache, JIT). Each query then runs [[Reps]] times back-to-back and
-  * reports the MEDIAN — single-shot numbers on a shared container
-  * fabricated a phantom 50% suite regression in round 2 (one loaded
-  * minute inflated untouched queries 8x); the median of three absorbs
-  * isolated noise spikes while staying cheap. The total is the sum of
-  * per-query medians.
+  * ([[Measure.noop]]). One untimed warmup query heats the session
+  * (codegen cache, parquet footer cache, JIT). Each query then runs
+  * [[Measure.Reps]] times back-to-back and reports the MEDIAN — single-shot
+  * numbers on a shared container fabricated a phantom 50% suite
+  * regression in round 2 (one loaded minute inflated untouched queries
+  * 8x). The total is the sum of per-query medians.
   */
 object Bench {
-  // SPARK_GRAFT_REPS overrides for isolated measurements (e.g. the
-  // round-9 q72 median-of-5 load-band pin); the driver never sets it.
-  // The effective value is recorded in the bench artifact ("reps" key)
-  // so a nonstandard run can't masquerade as the default methodology.
-  val Reps = sys.env.get("SPARK_GRAFT_REPS") match {
-    case None => 3
-    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
-      sys.error(s"SPARK_GRAFT_REPS must be a positive int, got '$v'"))
-  }
   /** Load-provenance probe: a fixed 2e8-step LCG chain on ONE core —
     * pure sequential ALU work, so its wall time is a direct co-tenancy
     * signal (a quiet core here runs it in a stable ~0.28 s band; a loaded
@@ -31,84 +22,45 @@ object Bench {
     * against the calibration delta instead of costing a judge an hour —
     * BENCH_r10's load-skewed driver pass manufactured four phantom
     * regressions exactly this field would have dismissed. */
-  private def calibrateSec(): Double = {
+  private def calibrateSec(): Double = Measure.secs {
     var x = 123456789L
     var i = 0L
-    val t0 = System.nanoTime()
     while (i < 200000000L) {
       x = x * 6364136223846793005L + 1442695040888963407L
       i += 1
     }
     if (x == 42L) System.err.print("") // keep the chain live
-    (System.nanoTime() - t0) / 1e9
   }
 
-  /** Bit-coherence field (round-11 verdict blemish 1): the commit the
-    * bench actually measured, read from .git at run time so "is the
-    * committed bench the committed code?" is a mechanical field
-    * comparison instead of a BASELINE.md paragraph. `+dirty` marks a
-    * working tree whose tracked files differ from HEAD. Read via plain
-    * file IO + one git exec (no library dep); "unknown" when the cwd
-    * is not a repo or git is unavailable — never a crash. */
-  private def gitHead(): String =
-    try {
-      import scala.sys.process._
-      val sha = Seq("git", "rev-parse", "HEAD").!!.trim
-      val dirty = Seq("git", "status", "--porcelain",
-        "--untracked-files=no").!!.trim.nonEmpty
-      if (dirty) s"$sha+dirty" else sha
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
+  /** The stdout contract line's fields, in the order its consumers
+    * parse them under a size-limited tail capture: the contract fields and
+    * each query's median seconds, nothing else (per-row attribution
+    * lives only in bench_result.json). `cal` is the calibration probe
+    * (pre, post LCG seconds) and the load average (pre, post). */
+  def contract(total: Double, reps: Int, witness: Boolean, gitHead: String,
+               cal: (Double, Double, Double, Double),
+               queries: Seq[(String, Double)], sf: String): Obj =
+    obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "reps" -> reps, "witness" -> witness, "git_head" -> gitHead,
+      "calibration" -> obj("pre_lcg_sec" -> Fixed(cal._1, 3),
+        "post_lcg_sec" -> Fixed(cal._2, 3), "loadavg_pre" -> Fixed(cal._3, 2),
+        "loadavg_post" -> Fixed(cal._4, 2)),
+      "queries" -> Obj(queries), "sf" -> sf)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Bench times the PRODUCTION plan: fixture-scale quality-witness
     // columns (q118 exact_tokens, q129 ndv_exact) stay in verify runs
     // but are dropped here unless SPARK_GRAFT_WITNESS=on (A/B hatch).
     Witness.enabled = sys.env.get("SPARK_GRAFT_WITNESS").contains("on")
-    // the JVM's spark.* properties are the run's only conf overrides
-    // (Harness applies its defaults under them); recorded in the
-    // artifact so a non-default run can't masquerade as the default
-    val sparkProps = sys.props.toSeq.filter(_._1.startsWith("spark.")).sorted
-      .map { case (k, v) => Harness.jsonString(k) + ":" + Harness.jsonString(v) }
-      .mkString("{", ",", "}")
-    val spark = Harness.session(s"local[$cpus]", "graft-bench", cpus.toInt)
+    val spark = Measure.session("graft-bench")
 
-    def materialize(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def materialize(name: String): Double =
+      try Measure.secs(Measure.noop(SparkEntry.queries(name)(spark, sfDir)))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // SPARK_GRAFT_PER_REP=on → one stderr line per rep with the rep's
-    // own /proc window attribution (ProcStat.window's CPU shares, -1
-    // when procfs is unreadable): the isolated-forensics mode the
-    // q155 round-14 investigation standardized (a median hides whether
-    // rep 1's index build or a steady-state cost moved the row; the
-    // driver never sets it).
-    val perRep = sys.env.get("SPARK_GRAFT_PER_REP").contains("on")
-    def median3(name: String): Double = {
-      val ts = Seq.tabulate(Reps) { i =>
-        if (!perRep) materialize(name)
-        else {
-          val c0 = ProcStat.counters()
-          val wall0 = System.nanoTime()
-          val sec = materialize(name)
-          val wallUs = math.max(1L, (System.nanoTime() - wall0) / 1000L).toDouble
-          val w = ProcStat.window(c0, ProcStat.counters(), wallUs, ProcStat.loadAvg(),
-            stallFrac = 0.0, stallSite = "")
-          System.err.println(f"[bench-rep] $name rep=$i sec=$sec%.3f " +
-            f"other_cpu=${w.otherCpu}%.3f own_cpu=${w.ownCpu}%.3f io_wait=${w.ioWait}%.3f")
-          sec
-        }
-      }
-      if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(Reps / 2)
-    }
 
     val loadPre = ProcStat.loadAvg()
     // one untimed warm-up so pre and post time the SAME compiled code:
@@ -124,12 +76,6 @@ object Bench {
     materialize("q05_pricing")
     materialize("q01_build")
 
-    // SPARK_GRAFT_ONLY=q24_embedding_neardup,q17_cosine_topk — subset
-    // runs for local perf iteration; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // ROW-WISE QUIET (round-14 verdict item 2): a row whose own /proc
     // window shows co-tenant CPU > 0.05 or io_wait > 0.02 impeaches
     // itself — three rounds running such rows were published, then
@@ -141,68 +87,28 @@ object Bench {
     // can never carry a window its own sidecar impeaches without
     // also carrying the evidence that quieter attempts were tried.
     val MaxRowAttempts = 3
-    val results = names.map { n =>
-      def attempt(): (Double, ProcStat.Window) = ProcStat.windowed(median3(n))
-      def impeached(sec: Double, w: ProcStat.Window): Boolean =
-        sec >= 0 && w.impeached
-      var (sec, w) = attempt()
-      var tries = 1
-      while (impeached(sec, w) && tries < MaxRowAttempts) {
-        val (nSec, nW) = attempt()
-        tries += 1
-        // cleaner window wins; both contaminated -> the quieter one
-        if (!impeached(nSec, nW) ||
-            nW.otherCpu + nW.ioWait < w.otherCpu + w.ioWait) {
-          sec = nSec; w = nW
-        }
+    val results = Measure.selected(SparkEntry.queries.keys).map { n =>
+      n -> Measure.quiet(MaxRowAttempts) {
+        val (reps, w) = ProcStat.windowed(Seq.fill(Measure.Reps)(materialize(n)))
+        Measure.Reading(reps, w)
       }
-      (n, sec, w, tries - 1)
     }
-    val qs = results.map { case (k, sec, _, _) => "\"" + k + "\":" + sec }
-      .mkString("{", ",", "}")
-    // the attribution sidecar: same keys, window-scoped cpu shares +
-    // the round-16 wait-attribution columns (PSI stall shares and the
-    // parked-task sampler — the r15 verdict's idle-CPU anti-scaling
-    // tail was invisible to the cpu trichotomy because a parked thread
-    // burns nothing in any of its columns). Lives ONLY in the artifact
-    // file since round 16: BENCH_r14's stdout line grew past the
-    // driver's tail capture and killed a round of PERF comparability,
-    // so the contract line carries the contract fields + the sec map
-    // and nothing else; the sidecars stay committed via
-    // bench_result.json.
-    val loadMap = results.map { case (k, _, w, retries) =>
-      "\"" + k + "\":{\"other_cpu\":" + f"${w.otherCpu}%.3f" +
-        ",\"own_cpu\":" + f"${w.ownCpu}%.3f" +
-        ",\"io_wait\":" + f"${w.ioWait}%.3f" +
-        ",\"loadavg\":" + f"${w.load}%.2f" +
-        ",\"psi_cpu\":" + f"${w.psiCpu}%.3f" +
-        ",\"psi_io\":" + f"${w.psiIo}%.3f" +
-        ",\"psi_io_full\":" + f"${w.psiIoFull}%.3f" +
-        ",\"psi_mem\":" + f"${w.psiMem}%.3f" +
-        ",\"stall_frac\":" + f"${w.stallFrac}%.3f" +
-        ",\"stall_site\":" + Harness.jsonString(w.stallSite) +
-        ",\"retries\":" + retries + "}"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_._2.sec).filter(_ >= 0).sum
     val calPost = calibrateSec()
     val loadPost = ProcStat.loadAvg()
-    // reps + witness recorded so a nonstandard run can't masquerade as
-    // the default methodology when the artifact is read later;
-    // calibration = the co-tenancy probe (see calibrateSec) so a
-    // cross-round per-query delta can be attributed to load in one line
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,""" +
-      s""""witness":${Witness.enabled},"git_head":"${gitHead()}",""" +
-      s""""calibration":{"pre_lcg_sec":${f"$calPre%.3f"},"post_lcg_sec":${f"$calPost%.3f"},""" +
-      s""""loadavg_pre":${f"$loadPre%.2f"},"loadavg_post":${f"$loadPost%.2f"}},""" +
-      s""""queries":$qs,"sf":"$sfDir"}"""
-    println(line)
-    // The full artifact (stdout contract line's fields + the
-    // attribution sidecar map) — committed at round close; consumers
-    // that need per-query wait attribution read THIS, never stdout.
-    val artifact = line.dropRight(1) +
-      s""","query_load":$loadMap,"spark_props":$sparkProps}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
-      (artifact + "\n").getBytes("UTF-8"))
+    val line = contract(total, Measure.Reps, Witness.enabled, Measure.gitHead,
+      (calPre, calPost, loadPre, loadPost),
+      results.map { case (n, r) => n -> r.sec }, sfDir)
+    println(Measure.json(line))
+    // the attribution sidecar: same keys, window-scoped cpu shares +
+    // the round-16 wait-attribution columns (PSI stall shares and the
+    // parked-task sampler — a parked thread burns nothing in any cpu
+    // column), retries and each rep's seconds. Lives ONLY in the
+    // artifact file: BENCH_r14's stdout line grew past the consumer's
+    // tail capture and killed a round of PERF comparability.
+    Measure.artifact("bench_result.json", line ++ Seq("query_load" ->
+      Obj(results.map { case (n, r) => n -> Obj(r.window.fields ++ Seq(
+        "retries" -> r.retries, "rep_sec" -> r.reps.map(Fixed(_, 3)))) })))
     spark.stop()
   }
 }

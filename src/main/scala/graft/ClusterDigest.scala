@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import Measure.obj
+
 /** MULTI-JVM DIGEST PASS — the round-11 verdict's item 2, and the last
   * never-exercised seam in the 100 TB story: every artifact so far
   * (verify, bench, scale/spill rehearsals, the spec suite) ran in ONE
@@ -9,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * codegen shipping, and broadcast exchange all short-circuit
   * in-process. A 1000-executor cluster crosses a process boundary on
   * every one of those paths. This main runs one custom-machinery-heavy
-  * query per family twice — `local[32]` (the measured baseline world)
+  * query per family twice — `local[N]`, N = SPARK_GRAFT_CPUS (default
+  * 32; the measured baseline world)
   * and `local-cluster[2,16,4096]` (real Master/Worker with executors as
   * SEPARATE JVMs, launched from $SPARK_HOME, user classes shipped via
   * `spark.executor.extraClassPath`) — and requires the
@@ -73,11 +76,8 @@ object ClusterDigest {
     * so a change to the digest or timing logic can never drift into
     * only one of them. */
   private def runPass(spark: SparkSession, sfDir: String): Seq[(String, (String, Double))] =
-    Subset.map { q =>
-      val t0 = System.nanoTime()
-      val d = Harness.resultDigest(SparkEntry.queries(q)(spark, sfDir))
-      q -> (d, (System.nanoTime() - t0) / 1e9)
-    }
+    Subset.map(q => q -> Measure.timed(
+      Harness.resultDigest(SparkEntry.queries(q)(spark, sfDir))))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -90,56 +90,41 @@ object ClusterDigest {
     val sparkHome = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
     val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
     val executorCp = s"$classesDir:$sparkHome/jars/*"
+    val mode = "local-cluster[2,16,4096]"
 
     // ---- pass 1: single JVM (the baseline every artifact measured) ----
-    val spark1 = Harness.session("local[32]", "graft-cluster-digest", 32)
-    val local = runPass(spark1, sfDir)
-    spark1.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    val local = Measure.pass(Measure.session("graft-cluster-digest"))(runPass(_, sfDir))
 
     // ---- pass 2: real executor processes ----
-    val spark2 = Harness.session("local-cluster[2,16,4096]",
-      "graft-cluster-digest", 32, extra = Map(
+    val (executorCount, cluster) = Measure.pass(Measure.session(
+        "graft-cluster-digest", master = mode, partitions = 32, extra = Map(
       "spark.executor.extraClassPath" -> executorCp,
       // the x100-style overload knobs stay OFF: this pass isolates the
       // process boundary, nothing else
-      "spark.executor.memory" -> "4g"))
-    // Wait for BOTH workers' executors to register BEFORE running (and
-    // timing) anything: digests are correct regardless, but an
-    // unsettled cluster would bill executor-JVM startup to the first
-    // query's sec, and a post-run executor sample could miss an
-    // executor that exited after finishing its work. executorInfos
-    // includes the driver row; a real two-worker cluster shows 3+.
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    var executorCount = spark2.sparkContext.statusTracker.getExecutorInfos.length
-    while (executorCount < 3 && System.nanoTime() < deadline) {
-      Thread.sleep(200)
-      executorCount = spark2.sparkContext.statusTracker.getExecutorInfos.length
+      "spark.executor.memory" -> "4g"))) { spark2 =>
+      // Wait for BOTH workers' executors to register BEFORE running (and
+      // timing) anything: digests are correct regardless, but an
+      // unsettled cluster would bill executor-JVM startup to the first
+      // query's sec, and a post-run executor sample could miss an
+      // executor that exited after finishing its work. executorInfos
+      // includes the driver row; a real two-worker cluster shows 3+.
+      def executors = spark2.sparkContext.statusTracker.getExecutorInfos.length
+      val deadline = System.currentTimeMillis + 120000
+      while (executors < 3 && System.currentTimeMillis < deadline) Thread.sleep(200)
+      (executors, runPass(spark2, sfDir))
     }
-    val cluster = runPass(spark2, sfDir)
-    spark2.stop()
 
-    val localM = local.toMap
-    val clusterM = cluster.toMap
-    val mismatches = Subset.filter(q => localM(q)._1 != clusterM(q)._1)
+    val mismatches = local.zip(cluster)
+      .collect { case ((q, (a, _)), (_, (b, _))) if a != b => q }
+
+    println(Measure.artifact("cluster_digest.json", obj(
+      "sf" -> sfDir, "mode" -> mode, "executors_seen" -> executorCount,
+      "digests_identical" -> mismatches.isEmpty,
+      "local" -> Measure.digestRows(local), "cluster" -> Measure.digestRows(cluster))))
     // <3 after the registration wait means the pass would have run
     // driver-only and proven nothing — fail loudly rather than record
     // a vacuous green.
-    val realCluster = executorCount >= 3
-
-    def fmt(p: Seq[(String, (String, Double))]) = p.map { case (k, (d, s)) =>
-      s""""$k":{"digest":"$d","sec":${f"$s%.2f"}}"""
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"sf":"$sfDir","mode":"local-cluster[2,16,4096]",""" +
-      s""""executors_seen":$executorCount,""" +
-      s""""digests_identical":${mismatches.isEmpty},""" +
-      s""""local":${fmt(local)},"cluster":${fmt(cluster)}}"""
-    println(line)
-    java.nio.file.Files.write(java.nio.file.Paths.get("cluster_digest.json"),
-      (line + "\n").getBytes("UTF-8"))
-    require(realCluster,
+    require(executorCount >= 3,
       s"local-cluster pass saw only $executorCount executor rows — the " +
         "workers never launched real executor JVMs; nothing was proven")
     require(mismatches.isEmpty,

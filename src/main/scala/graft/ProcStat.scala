@@ -60,20 +60,11 @@ object ProcStat {
     * (PSI needs CONFIG_PSI; the driver sandbox has it). */
   def psiTotals(): (Long, Long, Long, Long) =
     try {
-      def total(path: String, kind: String): Long = {
-        val ls = java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path))
-        var i = 0
-        while (i < ls.size) {
-          val l = ls.get(i)
-          if (l.startsWith(kind)) {
-            val m = l.substring(l.indexOf("total=") + 6).trim
-            return m.toLong
-          }
-          i += 1
-        }
-        -1L
-      }
+      import scala.jdk.CollectionConverters._
+      def total(path: String, kind: String): Long =
+        java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala
+          .find(_.startsWith(kind))
+          .fold(-1L)(l => l.substring(l.indexOf("total=") + 6).trim.toLong)
       (total("/proc/pressure/cpu", "some"),
        total("/proc/pressure/io", "some"),
        total("/proc/pressure/io", "full"),
@@ -184,6 +175,16 @@ object ProcStat {
       * impeached — there is nothing to retry against. */
     def impeached: Boolean =
       otherCpu > ImpeachOtherCpu || ioWait > ImpeachIoWait
+
+    /** The window as an artifact's sidecar fields. */
+    def fields: Seq[(String, Any)] = {
+      import Measure.Fixed
+      Seq("other_cpu" -> Fixed(otherCpu, 3), "own_cpu" -> Fixed(ownCpu, 3),
+        "io_wait" -> Fixed(ioWait, 3), "loadavg" -> Fixed(load, 2),
+        "psi_cpu" -> Fixed(psiCpu, 3), "psi_io" -> Fixed(psiIo, 3),
+        "psi_io_full" -> Fixed(psiIoFull, 3), "psi_mem" -> Fixed(psiMem, 3),
+        "stall_frac" -> Fixed(stallFrac, 3), "stall_site" -> stallSite)
+    }
   }
 
   /** Impeachment thresholds (round-14 verdict "Next round" #2): chosen

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Measure.{Fixed, Obj, obj}
+
 /** Scale rehearsal: synthesize a ~10x, deliberately SKEWED
   * documents/embeddings fixture from a base scale factor, run the
   * LLM-data-pipeline operator suite on both, and report the scaling
@@ -193,87 +195,59 @@ object ScaleRehearsal {
     * shape. */
   val FixedKCentroidMod: Long = graft.ext.Similarity.CentroidMod.toLong * IdStride
 
-  /** Recursive delete that never follows symlinks (a fixture dir holds
-    * links into the base testdata — deleting THROUGH one would destroy
-    * the source). */
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path, FileVisitResult, SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
-        Files.delete(f); FileVisitResult.CONTINUE
-      }
-      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
-        Files.delete(d); FileVisitResult.CONTINUE
-      }
-    })
-  }
-
   def synthesize(spark: SparkSession, baseDir: String, outDir: String,
                  copies: Int = Copies, stride: Int = IdStride,
                  withEmbeddings: Boolean = true,
                  withDocuments: Boolean = true,
                  pertDiv: Double = 1024.0): Unit = {
-    val fs = java.nio.file.Paths.get(outDir)
-    // completeness + provenance marker, written LAST: a fixture is only
-    // reused when it was fully synthesized from THIS base with THIS
-    // config — a leftover dir from a different base (or a crashed
-    // synth) regenerates instead of silently gating artifacts on the
-    // wrong data (round-11 review finding)
-    val marker = fs.resolve("_graft_fixture.json")
-    val want = s"""{"base":"$baseDir","copies":$copies,"stride":$stride,""" +
-      s""""embeddings":$withEmbeddings,"documents":$withDocuments,""" +
-      s""""pert_div":$pertDiv}"""
-    if (java.nio.file.Files.isRegularFile(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == want)
-      return
-    if (java.nio.file.Files.exists(fs)) deleteTree(fs)
-    java.nio.file.Files.createDirectories(fs)
-    val reps = explode(sequence(lit(0), lit(copies - 1))).as("rep")
-    if (withDocuments) Tables.documents(spark, baseDir)
-      .select(col("doc_id"), col("text"), col("lang"), col("source"), reps)
-      .select(
-        (col("doc_id") * stride + col("rep")).as("doc_id"),
-        // perturbed copy + hot boilerplate on 30% of base docs
-        concat(col("text"), lit(" copytail"), col("rep"),
-          expr(s"CASE WHEN doc_id % 10 < 3 THEN ' $Boilerplate' ELSE '' END"))
-          .as("text"),
-        col("lang"), col("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    if (withEmbeddings)
-      Tables.embeddings(spark, baseDir)
-        .select(col("vec_id"), col("embedding"), reps)
-        .select((col("vec_id") * stride + col("rep")).as("vec_id"),
-          expr(s"transform(embedding, x -> cast(x + rep / $pertDiv as float))")
-            .as("embedding"))
+    Measure.fixture(outDir, obj("base" -> baseDir, "copies" -> copies,
+        "stride" -> stride, "embeddings" -> withEmbeddings,
+        "documents" -> withDocuments, "pert_div" -> pertDiv)) { _ =>
+      val reps = explode(sequence(lit(0), lit(copies - 1))).as("rep")
+      if (withDocuments) Tables.documents(spark, baseDir)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"), reps)
+        .select(
+          (col("doc_id") * stride + col("rep")).as("doc_id"),
+          // perturbed copy + hot boilerplate on 30% of base docs
+          concat(col("text"), lit(" copytail"), col("rep"),
+            expr(s"CASE WHEN doc_id % 10 < 3 THEN ' $Boilerplate' ELSE '' END"))
+            .as("text"),
+          col("lang"), col("source"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    java.nio.file.Files.write(marker, want.getBytes("UTF-8"))
+        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+      if (withEmbeddings)
+        Tables.embeddings(spark, baseDir)
+          .select(col("vec_id"), col("embedding"), reps)
+          .select((col("vec_id") * stride + col("rep")).as("vec_id"),
+            expr(s"transform(embedding, x -> cast(x + rep / $pertDiv as float))")
+              .as("embedding"))
+          .repartition(32)
+          .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    }
+    linkBaseTables(baseDir, outDir)
   }
 
   /** events/lineitem/etc. are not synthesized: the rehearsal surface is
-    * the documents/embeddings pipeline; point the other loaders at base. */
+    * the documents/embeddings pipeline; point the other loaders at base
+    * (every [[synthesize]]d fixture gets these links). */
   def linkBaseTables(baseDir: String, outDir: String): Unit =
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events")) {
       val link = java.nio.file.Paths.get(s"$outDir/$t.parquet")
       if (!java.nio.file.Files.exists(link))
         java.nio.file.Files.createSymbolicLink(link,
-          java.nio.file.Paths.get(s"$baseDir/$t.parquet"))
+          java.nio.file.Paths.get(s"$baseDir/$t.parquet").toAbsolutePath)
     }
 
   private val runTag = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Wall seconds to build and materialize `df`. */
+  private def timed(df: => DataFrame): Double = Measure.secs(Measure.noop(df))
+
   private def timeAll(spark: SparkSession, dir: String,
                       names: Seq[String] = RehearsalQueries): Map[String, Double] =
-    names.map { name =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
+    names.map(name => name -> timed(SparkEntry.queries(name)(spark, dir))).toMap
 
   /** Run the capped pair generators with their drop Observations and
     * return the metrics (AQE off — Spark 4.1 AQE drops mid-plan observed
@@ -285,16 +259,13 @@ object ScaleRehearsal {
     Harness.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, dir)
       val o16 = Observation(s"rehearsal_q16_${runTag.incrementAndGet()}")
-      graft.ext.Dedup.ngramJaccardPairs(docs, dropObs = Some(o16))
-        .write.format("noop").mode("overwrite").save()
+      Measure.noop(graft.ext.Dedup.ngramJaccardPairs(docs, dropObs = Some(o16)))
       val o14 = Observation(s"rehearsal_q14_${runTag.incrementAndGet()}")
-      graft.ext.Dedup.minhashPairs(docs, dropObs = Some(o14))
-        .write.format("noop").mode("overwrite").save()
-      val textDrops = Map(
-        "q16_dropped_shingles" -> o16.get("dropped_shingles").asInstanceOf[Long],
-        "q16_dropped_postings" -> o16.get("dropped_postings").asInstanceOf[Long],
-        "q14_dropped_buckets" -> o14.get("dropped_buckets").asInstanceOf[Long],
-        "q14_dropped_docs" -> o14.get("dropped_docs").asInstanceOf[Long])
+      Measure.noop(graft.ext.Dedup.minhashPairs(docs, dropObs = Some(o14)))
+      // each Observation's metrics, keyed by query: dropped_* counts
+      def metrics(q: String, o: Observation) =
+        o.get.map { case (k, v) => s"${q}_$k" -> v.asInstanceOf[Long] }
+      val textDrops = metrics("q16", o16) ++ metrics("q14", o14)
       val drops = if (!withEmbeddings) textDrops else {
         // q24's banded rewrite under a cap TIGHTER than the fixture's hot
         // clone-family buckets (avg bucket at bands=4/bits=9 on the 10x
@@ -303,15 +274,12 @@ object ScaleRehearsal {
         // rewrite timing stays in mitigated_quadratic — this run only
         // proves the degradation is bounded and visible.
         val o24 = Observation("rehearsal_q24")
-        graft.ext.Similarity.bandedNearDupPairs(
+        Measure.noop(graft.ext.Similarity.bandedNearDupPairs(
           graft.ext.Similarity.withLshBands(
             Tables.embeddings(spark, dir), bands = 4, bandBits = 9),
           graft.ext.Similarity.NearDupThreshold,
-          maxBucket = 64, dropObs = Some(o24))
-          .write.format("noop").mode("overwrite").save()
-        textDrops ++ Map(
-          "q24_dropped_buckets" -> o24.get("dropped_buckets").asInstanceOf[Long],
-          "q24_dropped_pairs" -> o24.get("dropped_pairs").asInstanceOf[Long])
+          maxBucket = 64, dropObs = Some(o24)))
+        textDrops ++ metrics("q24", o24)
       }
       // the property this harness exists to prove: under the injected
       // hot key, the caps ENGAGE (observable truncation) instead of the
@@ -329,11 +297,9 @@ object ScaleRehearsal {
       args.headOption.getOrElse("/root/testdata/sf0.1"))
       .toAbsolutePath.normalize.toString
     val outDir = args.lift(1).getOrElse("/tmp/graft-sf1-rehearsal")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Harness.session(s"local[$cpus]", "graft-scale-rehearsal", cpus.toInt)
+    val spark = Measure.session("graft-scale-rehearsal")
 
     synthesize(spark, baseDir, outDir)
-    linkBaseTables(baseDir, outDir)
 
     timeAll(spark, baseDir) // warmup (codegen + JIT), untimed
     val baseTimes = timeAll(spark, baseDir)
@@ -344,9 +310,7 @@ object ScaleRehearsal {
 
     // ---- second measured decade: 100x documents, corpus-linear subset
     val out100 = args.lift(2).getOrElse("/tmp/graft-sf100-rehearsal")
-    synthesize(spark, baseDir, out100, copies = Copies100,
-      stride = IdStride100)
-    linkBaseTables(baseDir, out100)
+    synthesize(spark, baseDir, out100, copies = Copies100, stride = IdStride100)
     val x100Times0 = timeAll(spark, out100, Rehearsal100Queries)
     val drops100 = dropMetrics(spark, out100, withEmbeddings = false)
     // the vector-family member of the second decade: fixed-k IVF (q18's
@@ -354,19 +318,14 @@ object ScaleRehearsal {
     // rep-0 copies) over 100x embeddings; assignment is n x k, linear
     // in n at fixed k, so its decade ratio completes the ANN-side
     // amortization argument the x10 mitigated entry started
-    val sim0 = graft.ext.Similarity
-    def timed0(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val sim = graft.ext.Similarity
     // warmup (codegen + JIT for the IVF plan shape), untimed — the
     // rehearsal suite excludes q17/q18, so nothing else has heated it
     // and a cold base denominator would flatter the decade ratio
-    timed0(sim0.ivfTopK(Tables.embeddings(spark, baseDir), nprobe = 2))
-    val ivfBase = timed0(sim0.ivfTopK(Tables.embeddings(spark, baseDir), nprobe = 2))
-    val ivf100 = timed0(sim0.ivfTopK(Tables.embeddings(spark, out100), nprobe = 2,
-      centroidMod = sim0.CentroidMod.toLong * IdStride100))
+    timed(sim.ivfTopK(Tables.embeddings(spark, baseDir), nprobe = 2))
+    val ivfBase = timed(sim.ivfTopK(Tables.embeddings(spark, baseDir), nprobe = 2))
+    val ivf100 = timed(sim.ivfTopK(Tables.embeddings(spark, out100), nprobe = 2,
+      centroidMod = sim.CentroidMod.toLong * IdStride100))
     val x100Times = x100Times0 + ("q18_ivf_fixedk" -> ivf100)
     val base100 = Rehearsal100Queries.map(baseTimes).sum + ivfBase
     val x100Total = x100Times.values.sum
@@ -376,17 +335,10 @@ object ScaleRehearsal {
     // it). The production knob is bits ~ log2(n / target_bucket): +3
     // bits per 10x data (next power of two of 10) keeps per-bucket work
     // flat. Measure both vector-LSH kernels with the rescaled width.
-    def timed(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     val emb10 = Tables.embeddings(spark, outDir)
     val scaledBits = Map(
-      "q31_bits+3" -> timed(graft.ext.Similarity.signLshNearDups(
-        emb10, bits = graft.ext.Similarity.LshBits + 3)),
-      "q42_bits+3" -> timed(graft.ext.Similarity.signLshMultiBand(
-        emb10, bandBits = graft.ext.Similarity.LshBits + 3)))
+      "q31_bits+3" -> timed(sim.signLshNearDups(emb10, bits = sim.LshBits + 3)),
+      "q42_bits+3" -> timed(sim.signLshMultiBand(emb10, bandBits = sim.LshBits + 3)))
 
     // Mitigated-quadratic rehearsal: each excluded kernel's DOCUMENTED
     // scale path, measured on the 10x fixture (base-scale twin alongside
@@ -396,7 +348,6 @@ object ScaleRehearsal {
     // banded/LSH family (sign-LSH over the quantized space) — covered
     // by the q42 row above, not re-measured separately.
     val embBase = Tables.embeddings(spark, baseDir)
-    val sim = graft.ext.Similarity
     val mitigated = Map(
       "q17_ivf_nprobe2_base" -> ivfBase, // measured warm in the x100 block
       "q17_ivf_nprobe2_x10_fixedk" -> timed(
@@ -424,23 +375,19 @@ object ScaleRehearsal {
     // candidates vs the n^2/2 all-pairs bound — not an assertion.
     // AQE off around the observe (mid-plan metrics, round-3 lesson).
     val docsBase = Tables.documents(spark, baseDir)
-    val docs10p = Tables.documents(spark, outDir)
+    val docs10 = Tables.documents(spark, outDir)
     // both decades under the SAME planner config: the Observation needs
     // AQE off (mid-plan metrics, round-3 lesson), so the base point
     // runs AQE-off too — otherwise the ratio conflates data scale with
     // a planner-config change
     val (q188BaseSec, q188X10Sec, q188Cands, q188Pairs, q188N) =
       Harness.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
-        val tb = System.nanoTime()
-        graft.ext.Dedup.ppjoinPairs(docsBase).count()
-        val baseSec = (System.nanoTime() - tb) / 1e9
+        val baseSec = Measure.secs(graft.ext.Dedup.ppjoinPairs(docsBase).count())
         val oCand = Observation(s"rehearsal_q188_${runTag.incrementAndGet()}")
-        val out = graft.ext.Dedup.ppjoinPairs(docs10p, candObs = Some(oCand))
-        val t0 = System.nanoTime()
-        val nPairs = out.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val out = graft.ext.Dedup.ppjoinPairs(docs10, candObs = Some(oCand))
+        val (nPairs, sec) = Measure.timed(out.count())
         (baseSec, sec, oCand.get("candidates").asInstanceOf[Long], nPairs,
-          docs10p.count())
+          docs10.count())
       }
     // sanity floor, not the measurement: the dup-saturated synthetic
     // fixture (10 near-copies per doc + 30% boilerplate) is close to a
@@ -465,10 +412,8 @@ object ScaleRehearsal {
           val pairs = sim.bandedNearDupPairs(
             sim.withLshBands(df, bands = 4, bandBits = 9),
             sim.NearDupThreshold, candObs = Some(o))
-          val t0 = System.nanoTime()
-          val n = pairs.count()
-          ((System.nanoTime() - t0) / 1e9,
-            o.get("candidates").asInstanceOf[Long], n)
+          val (n, sec) = Measure.timed(pairs.count())
+          (sec, o.get("candidates").asInstanceOf[Long], n)
         }
         (run(embBase), run(emb10), embBase.count(), emb10.count())
       }
@@ -477,11 +422,9 @@ object ScaleRehearsal {
     // exact path must refuse loudly and the sampled path must answer —
     // the q67 -> q77 scale handoff, demonstrated rather than narrated.
     val collocBound = 2000000L
-    val docs10 = Tables.documents(spark, outDir)
     val exactTripped =
       try {
-        graft.ext.Lm.collocations(docs10, maxN = collocBound)
-          .write.format("noop").mode("overwrite").save()
+        Measure.noop(graft.ext.Lm.collocations(docs10, maxN = collocBound))
         false
       } catch {
         case e: Throwable if String.valueOf(e.getMessage).contains("exact-lift") ||
@@ -493,38 +436,32 @@ object ScaleRehearsal {
     val sampledSec = timed(graft.ext.Lm.collocationsSampled(
       docs10, sampleMod = 16, maxN = collocBound))
 
-    def jmap(m: Map[String, Double]) = m.toSeq.sorted
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val line =
-      s"""{"base_dir":"$baseDir","copies":$Copies,""" +
-      s""""base_total_sec":${f"$baseTotal%.2f"},"x10_total_sec":${f"$bigTotal%.2f"},""" +
-      s""""scaling_ratio":${f"${bigTotal / baseTotal}%.2f"},""" +
-      drops.toSeq.sorted.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",") + "," +
-      s""""excluded_quadratic":${ExcludedQuadratic.mkString("[\"", "\",\"", "\"]")},""" +
-      s""""x10_scaled_bits":${jmap(scaledBits)},""" +
-      s""""mitigated_quadratic":${jmap(mitigated)},""" +
-      s""""q188_scale":{"base_sec":${f"$q188BaseSec%.3f"},"x10_sec":${f"$q188X10Sec%.3f"},""" +
-      s""""x10_docs":$q188N,"x10_candidates":$q188Cands,"x10_pairs":$q188Pairs,""" +
-      s""""x10_allpairs_bound":${q188N * (q188N - 1) / 2}},""" +
-      s""""q24_scale":{"bands":4,"band_bits":9,""" +
-      s""""base_sec":${f"${q24Base._1}%.3f"},"x10_sec":${f"${q24X10._1}%.3f"},""" +
-      s""""base_candidates":${q24Base._2},"x10_candidates":${q24X10._2},""" +
-      s""""base_pairs":${q24Base._3},"x10_pairs":${q24X10._3},""" +
-      s""""base_vecs":$q24BaseN,"x10_vecs":$q24X10N,""" +
-      s""""base_allpairs_bound":${q24BaseN * (q24BaseN - 1) / 2},""" +
-      s""""x10_allpairs_bound":${q24X10N * (q24X10N - 1) / 2}},""" +
-      s""""colloc_bound_demo":{"bound":$collocBound,"exact_raised":$exactTripped,""" +
-      s""""sampled_mod16_sec":${f"$sampledSec%.3f"}},""" +
-      s""""x100":{"copies":$Copies100,""" +
-      s""""base_subset_sec":${f"$base100%.2f"},""" +
-      s""""x100_total_sec":${f"$x100Total%.2f"},""" +
-      s""""scaling_ratio":${f"${x100Total / base100}%.2f"},""" +
-      s""""drops":{${drops100.toSeq.sorted.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")}},""" +
-      s""""queries":${jmap(x100Times)}},""" +
-      s""""base_queries":${jmap(baseTimes)},"x10_queries":${jmap(bigTimes)}}"""
-    println(line)
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_rehearsal.json"),
-      (line + "\n").getBytes("UTF-8"))
+    def jmap(m: Map[String, Double]) = Obj(m.toSeq.sorted.map { case (k, v) => k -> Fixed(v, 3) })
+    println(Measure.artifact("scale_rehearsal.json", Obj(Seq(
+      "base_dir" -> baseDir, "copies" -> Copies,
+      "base_total_sec" -> Fixed(baseTotal, 2), "x10_total_sec" -> Fixed(bigTotal, 2),
+      "scaling_ratio" -> Fixed(bigTotal / baseTotal, 2)) ++ drops.toSeq.sorted ++ Seq(
+      "excluded_quadratic" -> ExcludedQuadratic,
+      "x10_scaled_bits" -> jmap(scaledBits),
+      "mitigated_quadratic" -> jmap(mitigated),
+      "q188_scale" -> obj("base_sec" -> Fixed(q188BaseSec, 3),
+        "x10_sec" -> Fixed(q188X10Sec, 3), "x10_docs" -> q188N,
+        "x10_candidates" -> q188Cands, "x10_pairs" -> q188Pairs,
+        "x10_allpairs_bound" -> q188N * (q188N - 1) / 2),
+      "q24_scale" -> obj("bands" -> 4, "band_bits" -> 9,
+        "base_sec" -> Fixed(q24Base._1, 3), "x10_sec" -> Fixed(q24X10._1, 3),
+        "base_candidates" -> q24Base._2, "x10_candidates" -> q24X10._2,
+        "base_pairs" -> q24Base._3, "x10_pairs" -> q24X10._3,
+        "base_vecs" -> q24BaseN, "x10_vecs" -> q24X10N,
+        "base_allpairs_bound" -> q24BaseN * (q24BaseN - 1) / 2,
+        "x10_allpairs_bound" -> q24X10N * (q24X10N - 1) / 2),
+      "colloc_bound_demo" -> obj("bound" -> collocBound,
+        "exact_raised" -> exactTripped, "sampled_mod16_sec" -> Fixed(sampledSec, 3)),
+      "x100" -> obj("copies" -> Copies100,
+        "base_subset_sec" -> Fixed(base100, 2), "x100_total_sec" -> Fixed(x100Total, 2),
+        "scaling_ratio" -> Fixed(x100Total / base100, 2),
+        "drops" -> Obj(drops100.toSeq.sorted), "queries" -> jmap(x100Times)),
+      "base_queries" -> jmap(baseTimes), "x10_queries" -> jmap(bigTimes)))))
     spark.stop()
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Measure.obj
+
 /** OUT-OF-CORE (SPILL) REHEARSAL — the 100 TB claim's remaining leg.
   * Every other scale artifact (sf0.1 verify, 10x/100x rehearsal) ran
   * with the working set comfortably inside RAM, so nothing yet
@@ -127,16 +129,8 @@ object SpillRehearsal {
   val FactsCopies = 10
   val FactsStride = 16
   private def synthesizeFacts(spark: SparkSession, baseDir: String,
-                              outDir: String): Unit = {
-    val p = java.nio.file.Paths.get(outDir)
-    val marker = p.resolve("_graft_facts.json")
-    val want =
-      s"""{"base":"$baseDir","copies":$FactsCopies,"stride":$FactsStride}"""
-    if (java.nio.file.Files.isRegularFile(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == want)
-      return
-    if (java.nio.file.Files.exists(p)) ScaleRehearsal.deleteTree(p)
-    java.nio.file.Files.createDirectories(p)
+                              outDir: String): Unit = Measure.fixture(outDir,
+      obj("base" -> baseDir, "copies" -> FactsCopies, "stride" -> FactsStride)) { _ =>
     val reps = explode(sequence(lit(0), lit(FactsCopies - 1))).as("rep")
     graft.Tables.lineitem(spark, baseDir)
       .select(col("*"), reps)
@@ -153,7 +147,6 @@ object SpillRehearsal {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
     ScaleRehearsal.linkBaseTables(baseDir, outDir) // dims + the rest
-    java.nio.file.Files.write(marker, want.getBytes("UTF-8"))
   }
 
   /** Unified-pool fraction for the constrained pass: 1% of an 8 GiB
@@ -234,13 +227,6 @@ object SpillRehearsal {
     * externalizes. */
   val SpillPartitions = 8
 
-  private def session(constrained: Boolean, cpus: String): SparkSession =
-    Harness.session(s"local[$cpus]",
-      s"graft-spill-${if (constrained) "constrained" else "base"}",
-      SpillPartitions, extra =
-        if (constrained) Map("spark.memory.fraction" -> ConstrainedFraction.toString)
-        else Map.empty)
-
   def main(args: Array[String]): Unit = {
     val baseDir = java.nio.file.Paths.get(
       args.headOption.getOrElse("/root/testdata/sf0.1"))
@@ -248,57 +234,46 @@ object SpillRehearsal {
     val outDir = args.lift(1).getOrElse("/tmp/graft-sf1-rehearsal")
     val out100 = args.lift(2).getOrElse("/tmp/graft-sf100-rehearsal")
     val factsDir = args.lift(3).getOrElse("/tmp/graft-facts-rehearsal")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def fixtureOf(key: String) = key match {
-      case "x100" => out100
-      case "factsx10" => factsDir
-      case _ => outDir
-    }
+    val fixtureOf = Map("x10" -> outDir, "x100" -> out100, "factsx10" -> factsDir)
 
     // ---- pass 1: unconstrained (the plans' normal environment) ----
-    val spark1 = session(constrained = false, cpus)
-    ScaleRehearsal.synthesize(spark1, baseDir, outDir)
-    ScaleRehearsal.linkBaseTables(baseDir, outDir)
-    ScaleRehearsal.synthesize(spark1, baseDir, out100,
-      copies = ScaleRehearsal.Copies100, stride = ScaleRehearsal.IdStride100)
-    ScaleRehearsal.linkBaseTables(baseDir, out100)
-    synthesizeFacts(spark1, baseDir, factsDir)
-    val spillBase = new AtomicLong(0)
-    spark1.sparkContext.addSparkListener(spillListener(spillBase))
-    val basePass = Queries.map { q =>
-      val t0 = System.nanoTime()
-      val d = runRow(spark1, q, fixtureOf(q.fixture))
-      q.name -> (d, (System.nanoTime() - t0) / 1e9)
+    // (each pass gets a fresh context: memory confs are read at start)
+    val (basePass, baseSpilled) = Measure.pass(
+        Measure.session("graft-spill-base", partitions = SpillPartitions)) { spark1 =>
+      ScaleRehearsal.synthesize(spark1, baseDir, outDir)
+      ScaleRehearsal.synthesize(spark1, baseDir, out100,
+        copies = ScaleRehearsal.Copies100, stride = ScaleRehearsal.IdStride100)
+      synthesizeFacts(spark1, baseDir, factsDir)
+      val spillBase = new AtomicLong(0)
+      spark1.sparkContext.addSparkListener(spillListener(spillBase))
+      val pass = Queries.map(q =>
+        q.name -> Measure.timed(runRow(spark1, q, fixtureOf(q.fixture))))
+      // deterministic listener-bus drain (task-end events are enqueued
+      // before the action returns; this flushes them race-free)
+      org.apache.spark.GraftListenerBridge.drain(spark1.sparkContext)
+      (pass, spillBase.get())
     }
-    // deterministic listener-bus drain (task-end events are enqueued
-    // before the action returns; this flushes them race-free)
-    org.apache.spark.GraftListenerBridge.drain(spark1.sparkContext)
-    val baseSpilled = spillBase.get()
-    spark1.stop()
-    // a fresh context must re-read static memory confs
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
 
     // ---- pass 2: constrained pool, same fixture, same plans ----
-    val spark2 = session(constrained = true, cpus)
     val perQuerySpill = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     val mem = new AtomicLong(0)
     val disk = new AtomicLong(0)
-    spark2.sparkContext.addSparkListener(spillListener(mem, disk))
-    val conPass = Queries.map { q =>
-      val (m0, d0) = (mem.get(), disk.get())
-      val t0 = System.nanoTime()
-      val d = runRow(spark2, q, fixtureOf(q.fixture))
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftListenerBridge.drain(spark2.sparkContext)
-      perQuerySpill(q.name) = (mem.get() - m0, disk.get() - d0)
-      q.name -> (d, sec)
+    val conPass = Measure.pass(Measure.session("graft-spill-constrained",
+        Map("spark.memory.fraction" -> ConstrainedFraction.toString),
+        partitions = SpillPartitions)) { spark2 =>
+      spark2.sparkContext.addSparkListener(spillListener(mem, disk))
+      Queries.map { q =>
+        val (m0, d0) = (mem.get(), disk.get())
+        val r = Measure.timed(runRow(spark2, q, fixtureOf(q.fixture)))
+        org.apache.spark.GraftListenerBridge.drain(spark2.sparkContext)
+        perQuerySpill(q.name) = (mem.get() - m0, disk.get() - d0)
+        q.name -> r
+      }
     }
-    spark2.stop()
 
     // ---- the assertions this artifact exists for ----
-    val mismatches = Queries.map(_.name).filter(q =>
-      basePass.toMap.apply(q)._1 != conPass.toMap.apply(q)._1)
+    val mismatches = basePass.zip(conPass)
+      .collect { case ((q, (a, _)), (_, (b, _))) if a != b => q }
     require(mismatches.isEmpty,
       s"SPILL CHANGED RESULTS for $mismatches — the out-of-core path is " +
         "not value-identical to the in-memory path")
@@ -317,26 +292,18 @@ object SpillRehearsal {
         s"the constrained pool (total=${mem.get()}) — the out-of-core " +
         "path did not engage where the working set exceeds the pool; " +
         "tighten ConstrainedFraction or grow the fixture")
-    val spilledQueries = perQuerySpill.count(_._2._1 > 0)
 
-    def fmtPass(p: Seq[(String, (String, Double))]) = p.map { case (k, (d, s)) =>
-      s""""$k":{"digest":"$d","sec":${f"$s%.2f"}}"""
-    }.mkString("{", ",", "}")
-    val spillJson = perQuerySpill.map { case (k, (m, dk)) =>
-      s""""$k":{"memory_bytes":$m,"disk_bytes":$dk}"""
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"fixture":"$outDir","constrained_fraction":$ConstrainedFraction,""" +
-      s""""base_spilled_bytes":$baseSpilled,""" +
-      s""""constrained_memory_spilled_bytes":${mem.get()},""" +
-      s""""constrained_disk_spilled_bytes":${disk.get()},""" +
-      s""""queries_spilled":$spilledQueries,"queries_total":${Queries.size},""" +
-      s""""hashes_identical":true,""" +
-      s""""base":${fmtPass(basePass)},"constrained":${fmtPass(conPass)},""" +
-      s""""constrained_per_query_spill":$spillJson}"""
-    println(line)
-    java.nio.file.Files.write(java.nio.file.Paths.get("spill_rehearsal.json"),
-      (line + "\n").getBytes("UTF-8"))
+    println(Measure.artifact("spill_rehearsal.json", obj(
+      "fixture" -> outDir, "constrained_fraction" -> ConstrainedFraction,
+      "base_spilled_bytes" -> baseSpilled,
+      "constrained_memory_spilled_bytes" -> mem.get(),
+      "constrained_disk_spilled_bytes" -> disk.get(),
+      "queries_spilled" -> perQuerySpill.count(_._2._1 > 0),
+      "queries_total" -> Queries.size, "hashes_identical" -> true,
+      "base" -> Measure.digestRows(basePass),
+      "constrained" -> Measure.digestRows(conPass),
+      "constrained_per_query_spill" -> Measure.Obj(perQuerySpill.toSeq.map {
+        case (k, (m, dk)) => k -> obj("memory_bytes" -> m, "disk_bytes" -> dk) }))))
   }
 
   private def spillListener(mem: AtomicLong, disk: AtomicLong = new AtomicLong(0)) =

@@ -15,7 +15,7 @@ package graft
   *     local disk, changelog/snapshot uploaded to the checkpoint FS;
   *     heap pressure moves to native memory and local IO.
   *
-  * — median-of-[[Reps]] each, SAME session, SAME staged inputs (the
+  * — median-of-[[Measure.Reps]] each, SAME session, SAME staged inputs (the
   * staging caches are per-dir and provider-independent), and digests
   * every result with [[Harness.resultDigest]] so the A/B also
   * proves the two providers land on the IDENTICAL relation (a provider
@@ -62,7 +62,6 @@ object StateStoreAb {
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
   val Rocks =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  val Reps = 3
 
   /** Gates that force RocksDB regardless of the session default
     * (transformWithState v2 — the HDFS provider lacks column
@@ -78,50 +77,21 @@ object StateStoreAb {
     // sized from the host like the other mains: every stateful
     // operator opens one state store per shuffle partition, so the
     // partition count is part of what each provider is timed on
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Measure.cpus
     val master = s"local[$cpus]"
-    val spark = Harness.session(master, "graft-state-store-ab", cpus.toInt)
+    val spark = Measure.session("graft-state-store-ab")
 
-    val gates = graft.streaming.StreamingGate.queries.keys.toSeq.sorted
+    // round close: the big-state gates, one timed run per provider
+    val (gates, reps) =
+      if (roundClose) (BigStateGates, 1)
+      else (graft.streaming.StreamingGate.queries.keys.toSeq.sorted, Measure.Reps)
 
     case class Cell(digest: String, medianSec: Double, reps: Seq[Double])
     def timedDigest(g: String, provider: String): (String, Double) =
       Harness.withConfs(spark, ProviderKey -> provider) {
-        val t0 = System.nanoTime()
-        val d = Harness.resultDigest(
-          graft.streaming.StreamingGate.queries(g)(spark, sfDir))
-        (d, (System.nanoTime() - t0) / 1e9)
+        Measure.timed(Harness.resultDigest(
+          graft.streaming.StreamingGate.queries(g)(spark, sfDir)))
       }
-
-    if (roundClose) {
-      // cheap per-round provider guard: warmup, then one digest per
-      // provider for each big-state gate; one COVERAGE.md line out
-      Harness.resultDigest(
-        graft.streaming.StreamingGate.queries(BigStateGates.head)(spark, sfDir))
-      val cells = BigStateGates.map { g =>
-        // untimed PER-GATE warmup (round-14 ADVICE): the full A/B path
-        // warms each gate before its timed pair for exactly this
-        // reason — without it the first timed HDFS run bills
-        // gate-local staging/codegen and skews the printed ratio low
-        // (digests were never affected)
-        timedDigest(g, Hdfs)
-        val (dh, th) = timedDigest(g, Hdfs)
-        val (dr, tr) = timedDigest(g, Rocks)
-        (g, dh, dr, th, tr)
-      }
-      val bad = cells.filter(c => c._2 != c._3)
-      val line = s"rocksdb-roundclose sf=$sfDir master=$master partitions=$cpus " +
-        s"gates=${cells.size} " +
-        s"identical=${bad.isEmpty}" +
-        (if (bad.isEmpty) "" else s" MISMATCH=${bad.map(_._1).mkString(",")}") +
-        " " + cells.map(c => f"${c._1}=${c._5 / math.max(1e-9, c._4)}%.2fx")
-          .mkString(" ")
-      println(line)
-      spark.stop()
-      require(bad.isEmpty,
-        s"ROUND-CLOSE PROVIDER DIGEST MISMATCH: ${bad.map(_._1)}")
-      return
-    }
 
     // warmup (untimed): heat codegen/staging caches so the first gate
     // doesn't bill session startup
@@ -132,50 +102,57 @@ object StateStoreAb {
     // warmer — even provider-pinned gates read 0.7-0.9x); adjacent
     // alternation gives both providers the same thermal context, plus
     // one untimed same-gate warmup so neither provider's first rep
-    // bills gate-local staging
-    val hdfsM = scala.collection.mutable.Map.empty[String, Cell]
-    val rocksM = scala.collection.mutable.Map.empty[String, Cell]
+    // bills gate-local staging/codegen (without it the first timed HDFS
+    // run skews the ratio low — round-14 ADVICE)
     // per-rep digest instability is a FINDING, not an abort: it lands
     // in the artifact as a labeled row (like the cross-provider
     // mismatch list) and fails the run AFTER the JSON is written, so
     // one flaky gate can't discard every completed measurement
     // (round-13 ADVICE)
     val unstable = scala.collection.mutable.ListBuffer.empty[String]
-    for (g <- gates) {
+    val cells = gates.flatMap { g =>
       timedDigest(g, Hdfs) // untimed gate-local warmup
-      val runs = (0 until Reps).flatMap { _ =>
+      val runs = (0 until reps).flatMap { _ =>
         Seq(Hdfs -> timedDigest(g, Hdfs), Rocks -> timedDigest(g, Rocks))
       }
-      for ((prov, m) <- Seq(Hdfs -> hdfsM, Rocks -> rocksM)) {
+      Seq(Hdfs, Rocks).map { prov =>
         val rs = runs.collect { case (p, r) if p == prov => r }
         if (rs.map(_._1).distinct.size != 1) unstable += s"$g/$prov"
-        val secs = rs.map(_._2).sorted
-        m(g) = Cell(rs.head._1, secs(Reps / 2), rs.map(_._2))
+        (g, prov) -> Cell(rs.head._1, Measure.median(rs.map(_._2)), rs.map(_._2))
       }
-    }
-    val hdfs = hdfsM.toMap
-    val rocks = rocksM.toMap
+    }.toMap
+    def hdfs(g: String) = cells((g, Hdfs))
+    def rocks(g: String) = cells((g, Rocks))
 
     val mismatches = gates.filter(g => hdfs(g).digest != rocks(g).digest)
-    def fmt(m: Map[String, Cell]) = gates.map { g =>
-      val c = m(g)
-      s""""$g":{"digest":"${c.digest}","median_sec":${f"${c.medianSec}%.2f"},""" +
-        s""""reps":[${c.reps.map(s => f"$s%.2f").mkString(",")}]}"""
-    }.mkString("{", ",", "}")
-    val totalH = gates.map(hdfs(_).medianSec).sum
-    val totalR = gates.map(rocks(_).medianSec).sum
-    val line =
-      s"""{"sf":"$sfDir","reps":$Reps,"pinned_rocksdb":[${
-        PinnedRocks.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""master":"$master","partitions":$cpus,""" +
-      s""""digests_identical":${mismatches.isEmpty},""" +
-      s""""digests_unstable":[${
-        unstable.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}],""" +
-      s""""total_median_sec":{"hdfs":${f"$totalH%.2f"},"rocksdb":${f"$totalR%.2f"}},""" +
-      s""""hdfs":${fmt(hdfs)},"rocksdb":${fmt(rocks)}}"""
-    println(line)
-    java.nio.file.Files.write(java.nio.file.Paths.get("state_store_ab.json"),
-      (line + "\n").getBytes("UTF-8"))
+    if (roundClose) {
+      // one COVERAGE.md line out
+      println(s"rocksdb-roundclose sf=$sfDir master=$master partitions=$cpus " +
+        s"gates=${gates.size} identical=${mismatches.isEmpty}" +
+        (if (mismatches.isEmpty) "" else s" MISMATCH=${mismatches.mkString(",")}") +
+        " " + gates.map(g =>
+          f"$g=${rocks(g).medianSec / math.max(1e-9, hdfs(g).medianSec)}%.2fx")
+          .mkString(" "))
+      spark.stop()
+      require(mismatches.isEmpty, s"ROUND-CLOSE PROVIDER DIGEST MISMATCH: $mismatches")
+      return
+    }
+    import Measure.{Fixed, Obj, obj}
+    def fmt(cell: String => Cell) = Obj(gates.map { g =>
+      val c = cell(g)
+      g -> obj("digest" -> c.digest, "median_sec" -> Fixed(c.medianSec, 2),
+        "reps" -> c.reps.map(Fixed(_, 2)))
+    })
+    println(Measure.artifact("state_store_ab.json", obj(
+      "sf" -> sfDir, "reps" -> Measure.Reps,
+      "pinned_rocksdb" -> PinnedRocks.toSeq.sorted,
+      "master" -> master, "partitions" -> cpus,
+      "digests_identical" -> mismatches.isEmpty,
+      "digests_unstable" -> unstable.toSeq.sorted,
+      "total_median_sec" -> obj(
+        "hdfs" -> Fixed(gates.map(hdfs(_).medianSec).sum, 2),
+        "rocksdb" -> Fixed(gates.map(rocks(_).medianSec).sum, 2)),
+      "hdfs" -> fmt(hdfs), "rocksdb" -> fmt(rocks))))
     spark.stop()
     require(unstable.isEmpty,
       s"DIGEST UNSTABLE ACROSS REPS for $unstable — timings for those " +

@@ -1087,7 +1087,6 @@ object Similarity {
     * the fixed point must drop to e3 as an explicit decision);
     * |p| ≤ d·127·1e6 is always safe. */
   def pcaProjection(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
     val cov = covarianceMatrix(emb) // (i, j, gram, cov_num), i <= j
     val nRows = emb.agg(count(lit(1)).as("n"))
     // loud bound: d * (n * QuantRange^2) * PcaVecScale must fit a Long

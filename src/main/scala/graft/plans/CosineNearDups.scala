@@ -71,7 +71,7 @@ object CosineNearDups {
   */
 case class RewriteCosineNearDups(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case nd @ CosineNearDups(child, threshold, out) if child.resolved =>
+    case CosineNearDups(child, threshold, out) if child.resolved =>
       val childDf = GraftPlanBridge.ofRows(spark, child)
       val hasIndex = child.output.exists(_.name == CosineNearDups.LshBandsCol)
       val rewritten: DataFrame =

@@ -87,6 +87,15 @@ class ContractSpec extends SparkSpec {
     assert(offenders.isEmpty, s"stage through graft.TempDirs.memo/staged: $offenders")
   }
 
+  test("the measurement mains time and write artifacts through graft.Measure") {
+    val outside = sources("src/main").filterNot(f =>
+      Set("Measure.scala", "ProcStat.scala")(f._1.getFileName.toString))
+    Seq("System.nanoTime", "Files.write(java.nio.file.Paths.get(").foreach { s =>
+      val hits = outside.collect { case (p, text) if text.contains(s) => p }
+      assert(hits.isEmpty, s"$s: use graft.Measure, not $hits")
+    }
+  }
+
   test("int8 quantization has one Spark and one oracle definition; the pruned dot is gone") {
     val main = sources("src/main")
     assert(count(main, "greatest(mx, 1e-30d)") == 1,

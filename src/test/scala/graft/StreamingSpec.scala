@@ -54,21 +54,31 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a gate run leaves no checkpoint tree behind") {
+    // every graft-* tree a gate creates per call must be gone when the
+    // call returns; the first, untimed call builds the per-JVM staging
+    // memos (stream-gate, events-canon, proctime-thirds), which stay
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def ckpts(): Int = {
+    def trees(): Int = {
       import scala.jdk.CollectionConverters._
       val it = java.nio.file.Files.list(tmp)
-      try it.iterator().asScala.count(_.getFileName.toString.startsWith("graft-stream-ckpt"))
+      try it.iterator().asScala.count(_.getFileName.toString.startsWith("graft-"))
       finally it.close()
     }
-    val gates = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)](
-      "q40" -> graft.streaming.StreamingGate.q40StreamTumbling,
-      "q126" -> graft.streaming.StreamingGate.q126StreamNearDup)
+    import graft.streaming.StreamingGate
+    val gates = Seq[(String, () => Any)](
+      "q40" -> (() => StreamingGate.q40StreamTumbling(spark, sf).collect()),
+      "q126" -> (() => StreamingGate.q126StreamNearDup(spark, sf).collect()),
+      "q82" -> (() => StreamingGate.q82StreamRestart(spark, sf).collect()),
+      "q165" -> (() => StreamingGate.q165IncrementalIngest(spark, sf).collect()),
+      "q98" -> (() => StreamingGate.q98StreamUpsertSink(spark, sf).collect()),
+      "q235" -> (() => StreamingGate.q235SnapshotVacuum(spark, sf).collect()),
+      "ttl-probe" -> (() => StreamingGate.ttlProbeMaxCount(spark, sf)),
+      "q214" -> (() => StreamingGate.q214StreamProcTime(spark, sf).collect()))
     gates.foreach { case (name, gate) =>
-      val before = ckpts()
-      (1 to 2).foreach(_ => gate(spark, sf).collect())
-      assert(ckpts() == before, s"every $name run must delete its checkpoint tree")
+      gate()
+      val before = trees()
+      (1 to 2).foreach(_ => gate())
+      assert(trees() == before, s"every $name run must delete the graft-* trees it creates")
     }
   }
 
