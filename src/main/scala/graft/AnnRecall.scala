@@ -264,22 +264,25 @@ object AnnRecall {
       // probeByDot = false: q80's decade rows RECORD the legacy fixed-k
       // d²-probed config (their floors were measured under it); the
       // promoted production config is the density series below
-      for ((op, truth, floor, run) <- Seq[(String, () => DataFrame, Double, Int => DataFrame)](
-          ("q18_ivf_topk", () => Similarity.cosineTopK(embD)
-            .filter(col("rank") <= Similarity.IvfTopK), IvfDecadeFloor,
-            np => Similarity.ivfTopK(embD, np, centroidMod = cmod)),
-          ("q80_quantized_ivf", () => Similarity.quantizedTopK(embD), QIvfDecadeFloor,
-            np => Similarity.quantizedIvfTopK(embD, np, centroidMod = cmod,
-              probeByDot = false)))) {
+      val measured = Seq[(String, () => DataFrame, Double, Int => DataFrame)](
+        ("q18_ivf_topk", () => Similarity.cosineTopK(embD)
+          .filter(col("rank") <= Similarity.IvfTopK), IvfDecadeFloor,
+          np => Similarity.ivfTopK(embD, np, centroidMod = cmod)),
+        ("q80_quantized_ivf", () => Similarity.quantizedTopK(embD), QIvfDecadeFloor,
+          np => Similarity.quantizedIvfTopK(embD, np, centroidMod = cmod,
+            probeByDot = false))).map { case (op, truth, floor, run) =>
         val (truthD, tTruth) = timed(topkSets(truth()))
         val (got, sec) = timed(topkSets(run(Similarity.IvfNProbe)))
         val recall = meanRecall(truthD, got)
         decadeRows += DecadeRow(tag, op, nD, recall, sec, tTruth, floor)
-        // knob curve at this density: the already-measured gated point
-        // (the decade row) is seeded instead of re-executed
+        (op, truthD, recall, sec, run)
+      }
+      // knob curves at this density, after both decade rows are timed:
+      // the already-measured gated point (the decade row) is seeded
+      // instead of re-executed
+      for ((op, truthD, recall, sec, run) <- measured)
         holdSweep(tag, op, truthD, Map(Similarity.IvfNProbe -> (recall, sec)),
           nCells, gated = true, run)
-      }
     }
     val decadeMisses = decadeRows.filter(r => r.recall < r.floor)
 

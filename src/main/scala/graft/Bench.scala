@@ -108,7 +108,8 @@ object Bench {
     // tail capture and killed a round of PERF comparability.
     Measure.artifact("bench_result.json", line ++ Seq("query_load" ->
       Obj(results.map { case (n, r) => n -> Obj(r.window.fields ++ Seq(
-        "retries" -> r.retries, "rep_sec" -> r.reps.map(Fixed(_, 3)))) })))
+        "retries" -> r.retries, "rep_sec" -> r.reps.map(Fixed(_, 3)))) }),
+      Measure.onlyField))
     spark.stop()
   }
 }

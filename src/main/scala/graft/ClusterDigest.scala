@@ -11,8 +11,7 @@ import Measure.obj
   * codegen shipping, and broadcast exchange all short-circuit
   * in-process. A 1000-executor cluster crosses a process boundary on
   * every one of those paths. This main runs one custom-machinery-heavy
-  * query per family twice — `local[N]`, N = SPARK_GRAFT_CPUS (default
-  * 32; the measured baseline world)
+  * query per family twice — `local[32]` (the measured baseline world)
   * and `local-cluster[2,16,4096]` (real Master/Worker with executors as
   * SEPARATE JVMs, launched from $SPARK_HOME, user classes shipped via
   * `spark.executor.extraClassPath`) — and requires the
@@ -93,7 +92,8 @@ object ClusterDigest {
     val mode = "local-cluster[2,16,4096]"
 
     // ---- pass 1: single JVM (the baseline every artifact measured) ----
-    val local = Measure.pass(Measure.session("graft-cluster-digest"))(runPass(_, sfDir))
+    val local = Measure.pass(Measure.session("graft-cluster-digest",
+      master = "local[32]", partitions = 32))(runPass(_, sfDir))
 
     // ---- pass 2: real executor processes ----
     val (executorCount, cluster) = Measure.pass(Measure.session(
@@ -118,7 +118,7 @@ object ClusterDigest {
       .collect { case ((q, (a, _)), (_, (b, _))) if a != b => q }
 
     println(Measure.artifact("cluster_digest.json", obj(
-      "sf" -> sfDir, "mode" -> mode, "executors_seen" -> executorCount,
+      "sf" -> sfDir, "mode" -> mode, "cpus" -> 32, "executors_seen" -> executorCount,
       "digests_identical" -> mismatches.isEmpty,
       "local" -> Measure.digestRows(local), "cluster" -> Measure.digestRows(cluster))))
     // <3 after the registration wait means the pass would have run

@@ -99,7 +99,7 @@ object GateFloor {
       "floors" -> Obj(floors.toSeq.map { case (g, r) => g -> Fixed(r.sec, 3) }),
       "load" -> Obj(floors.toSeq.map { case (g, r) =>
         g -> Obj(r.window.fields.take(4) :+ ("retries" -> r.retries)) }),
-      "suspect" -> suspect, "errors" -> Obj(errors.toSeq))))
+      "suspect" -> suspect, "errors" -> Obj(errors.toSeq), Measure.onlyField)))
     spark.stop()
     if (suspect.nonEmpty) {
       System.err.println(s"[gate-floor] SUSPECT (floor > own gate's " +

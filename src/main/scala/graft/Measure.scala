@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every artifact is stamped with the provenance a reader needs to say
   * why a number moved without rerunning anything: the commit measured
   * (`git_head`), the JVM's `spark.*` properties (`spark_props`, the run's
-  * only conf overrides — see [[Harness]]), and the knobs read here
-  * (`cpus`, `reps`, `only`).
+  * only conf overrides — see [[Harness]]) and `cpus`. A main that reads
+  * `reps` or `only` writes that field itself, so an artifact never
+  * names a knob its numbers did not follow.
   */
 object Measure {
 
@@ -38,6 +39,9 @@ object Measure {
     * gates a local iteration runs. */
   val only: Option[Set[String]] =
     sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  /** The `only` field of an artifact whose rows [[only]] cut. */
+  def onlyField: (String, Any) = "only" -> only.map(_.toSeq.sorted)
 
   /** `names` sorted, cut to [[only]]. */
   def selected(names: Iterable[String]): Seq[String] =
@@ -184,8 +188,7 @@ object Measure {
 
   /** The provenance fields every artifact carries. */
   private def provenance: Seq[(String, Any)] = Seq(
-    "git_head" -> gitHead, "spark_props" -> sparkProps, "cpus" -> cpus,
-    "reps" -> Reps, "only" -> only.map(_.toSeq.sorted))
+    "git_head" -> gitHead, "spark_props" -> sparkProps, "cpus" -> cpus)
 
   /** `fields`, plus each provenance field it does not already carry, as
     * one JSON line written to `file` in the cwd; returns the line. */

@@ -121,15 +121,19 @@ class MeasureSpec extends AnyFunSuite {
     try {
       val file = dir.resolve("a.json").toString
       val w = ProcStat.Window(-1.0, 0.25, 0.0, 1.5, stallSite = "a.B\tpark\r\u0001")
-      val line = Measure.artifact(file, obj("metric" -> "x", "reps" -> 9,
+      val line = Measure.artifact(file, obj("metric" -> "x", "cpus" -> 99,
         "load" -> obj("q1" -> Measure.Obj(w.fields :+ ("rep_sec" -> Seq(Fixed(0.1, 3)))))))
       val fromFile = new String(Files.readAllBytes(java.nio.file.Paths.get(file)), "UTF-8")
       assert(fromFile == line + "\n")
       val node = parse(fromFile)
-      Seq("git_head", "spark_props", "cpus", "reps", "only").foreach(k =>
+      Seq("git_head", "spark_props", "cpus").foreach(k =>
         assert(node.has(k), s"artifact lacks $k"))
-      assert(node.get("reps").asInt == 9, "a field the caller set wins over the stamp")
-      assert(node.get("cpus").asInt == Measure.cpus)
+      assert(node.get("cpus").asInt == 99, "a field the caller set wins over the stamp")
+      Seq("reps", "only").foreach(k =>
+        assert(!node.has(k), s"$k stamped on an artifact whose main did not read it"))
+      val cut = parse(Measure.artifact(file, obj("reps" -> Measure.Reps, Measure.onlyField)))
+      assert(cut.get("reps").asInt == Measure.Reps && cut.has("only"))
+      assert(cut.get("cpus").asInt == Measure.cpus)
       assert(node.get("spark_props").isObject)
       assert(node.at("/load/q1/stall_site").asText == "a.B\tpark\r\u0001")
       assert(node.at("/load/q1/other_cpu").asDouble == -1.0)
